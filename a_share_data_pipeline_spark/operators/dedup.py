@@ -50,11 +50,6 @@ def word_shingles_col(text_col: str = "text", n: int = 3) -> "F.Column":
     )
 
 
-def with_word_shingles(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
-    """Add `shingles: array<string>` of distinct word n-grams."""
-    return df.withColumn("shingles", word_shingles_col(text_col, n))
-
-
 def exploded_shingles(
     df: DataFrame, id_col: str = "doc_id", spread: bool = True
 ) -> DataFrame:

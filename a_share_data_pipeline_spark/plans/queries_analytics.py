@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
 from ..operators import dedup as D
+from ..session import clone_session, set_width, volume_width
 from ..sources import load_table
 from .catalog import register
 
@@ -4506,19 +4507,13 @@ def cc_incremental_labels(
     pinning the min-label composition argument at EVERY split, not one
     (VERDICT r6 item 8).
 
-    Width sizing (VERDICT r12 item 5, measured A/B in SCALE.md): the
-    per-round CC frames are pair-graph-sized, far below the session's
-    CPU-sized shuffle width at bench SFs, so late rounds are
-    task-scheduling-floor-bound. The whole pipeline runs in a cloned
-    session (the stream_incremental_dedup conf sandbox — the caller's
-    width is never touched) whose width is sized from the MEASURED
-    edge count after the one full-width ingest shuffle:
-    min(session_width, max(8, ceil(edges/64Ki))). Volume-not-CPU and
-    scale-safe — at 100 TB the edge count dominates and the clone
-    keeps the session's full width."""
+    The per-round CC frames are pair-graph-sized, so the pipeline runs
+    on a clone sized by ``session.volume_width`` from the edge
+    count measured after the one full-width ingest shuffle (measured
+    A/B in SCALE.md). The result is read on the clone."""
     from ..operators.graph import connected_components
 
-    work = spark.newSession()
+    work = clone_session(spark)
     o = load_table(work, sf_dir, "orders")
     li = load_table(work, sf_dir, "lineitem")
     edges_all = (
@@ -4536,13 +4531,9 @@ def cc_incremental_labels(
         .localCheckpoint(eager=True)  # consumers: base CC, delta remap,
         # node frame
     )
-    # edges_all is pinned, so this count is a metadata-cheap read; the
-    # ingest shuffle above already ran at the clone's inherited full
-    # width — only the label-frame rounds below run trimmed
-    pkey = "spark.sql.shuffle.partitions"
-    session_width = int(work.conf.get(pkey))
-    width = min(session_width, max(8, -(-edges_all.count() // 65536)))
-    work.conf.set(pkey, str(width))
+    # edges_all is pinned, so this count is a metadata-cheap read; only
+    # the label-frame rounds below run at the narrowed width
+    set_width(work, volume_width(work, edges_all.count()))
     base_e = edges_all.filter(F.col("is_base")).select("a", "b")
     delta_e = edges_all.filter(~F.col("is_base")).select("a", "b")
     base_nodes = (

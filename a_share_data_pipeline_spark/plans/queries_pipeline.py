@@ -14,6 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.asof import as_of_join
+from ..session import clone_session, set_width, volume_width
 from ..sources import load_table
 from ..streaming.incremental import delta_slice, merge_increment
 from ..functions.rounding import dround
@@ -1511,21 +1512,16 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # queries_analytics (purchase_iedges/decode_purchase_node): the
     # output decodes back to the same 'c…'/'s…' ids with identical pr
     # values, so the string-edge oracle is unchanged.
-    # Width sizing (round 13, the graph_label_propagation device —
-    # interleaved A/B in OPTIMIZATION_r13.md: 8-wide won 3/4 pairs,
-    # medians 3.41 -> 2.85s): the 3 rank rounds shuffle O(E) frames,
-    # task-scheduling-floor-bound at bench SFs. Cloned session (caller
-    # width untouched), width from the MEASURED edge count after the
-    # full-width ingest (purchase_iedges is eagerly checkpointed, so
-    # the count is metadata-cheap); at scale the count dominates and
-    # the clone keeps the session's full width.
+    # The 3 rank rounds shuffle O(E) frames: they run on a clone sized
+    # from the edge count measured after the full-width ingest
+    # (purchase_iedges is eagerly checkpointed, so the count is
+    # metadata-cheap). Interleaved A/B in OPTIMIZATION_r13.md: 8-wide
+    # won 3/4 pairs, medians 3.41 -> 2.85s.
     from .queries_analytics import decode_purchase_node, purchase_iedges
 
-    work = spark.newSession()
+    work = clone_session(spark)
     ie = purchase_iedges(work, sf_dir)
-    pkey = "spark.sql.shuffle.partitions"
-    session_width = int(work.conf.get(pkey))
-    work.conf.set(pkey, str(min(session_width, max(8, -(-ie.count() // 65536)))))
+    set_width(work, volume_width(work, ie.count()))
     pr = pagerank(ie, damping=0.85, iters=3)
     return pr.select(
         decode_purchase_node("node").alias("node"), F.col("rank").alias("pr")

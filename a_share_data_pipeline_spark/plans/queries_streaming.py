@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import clone_session, set_width
 from ..sources.readers import load_table
 from ..streaming import structured as ST
 from .catalog import register
@@ -37,53 +38,24 @@ def _land_events(spark: SparkSession, sf_dir: str) -> tuple[str, "DataFrame"]:
     return path, ev
 
 
-def _run_to_table(
-    spark: SparkSession,
-    result: DataFrame,
-    mode: str,
-    *,
-    finalize_watermark: bool = True,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Run one AvailableNow cycle into a memory table.
+def _run_to_table(result: DataFrame, mode: str) -> DataFrame:
+    """Run one AvailableNow cycle into a memory table, on the session
+    ``result`` was built on, and return the table read on that session.
 
-    ``finalize_watermark=False`` skips the trailing NO-DATA micro-batch
-    (``noDataMicroBatches.enabled``, restored after the run). That
-    batch exists to advance the watermark one last time so append-mode
-    AGGREGATIONS flush their final windows and join state gets cleaned
-    — for an append-mode stream-stream INNER join it changes no output
-    row (matches emit eagerly on arrival) and, on a bounded replay
-    cycle whose state dies with the checkpoint anyway, it only re-pays
-    a full state-store commit across every partition for zero rows
-    (measured: 2.3s of a 7.6s cycle at sf0.1). Queries whose RESULTS
-    depend on the final watermark advance (windowed aggregation,
-    dropDuplicatesWithinWatermark expiry proofs) must keep the default.
-
-    ``state_partitions`` temporarily overrides shuffle.partitions for
-    the cycle: streaming STATE partition count is fixed at the first
-    checkpoint, and every micro-batch (including the no-data finalize
-    batch) commits EVERY state store — a stream-stream join keeps 4
-    stores per partition, so 32 partitions is 128 commits per batch
-    for kilobytes of state (measured 8.4s -> 3.9s at sf0.1 with 8).
-    Size it to state volume, not CPU count; results are partition-
-    independent. Batch-side reads of the memory table are unaffected
-    (the conf is restored before returning)."""
+    The stream's STATE partition count is that session's shuffle width,
+    fixed at the first checkpoint, and every micro-batch (including the
+    no-data finalize batch) commits EVERY state store — so stateful
+    callers with kilobytes of state build their stream on a width-8
+    clone. The memory sink's temp view is dropped once read: the
+    returned frame keeps its analyzed plan, and the catalog stays as
+    the caller left it."""
+    spark = result.sparkSession
     name = "q_" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    pkey = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key, "true")
-    prev_parts = spark.conf.get(pkey)
-    if not finalize_watermark:
-        spark.conf.set(key, "false")
-    if state_partitions is not None:
-        spark.conf.set(pkey, str(state_partitions))
-    try:
-        ST.run_available_now(result, ckpt, output_mode=mode, query_name=name)
-    finally:
-        spark.conf.set(key, prev)
-        spark.conf.set(pkey, prev_parts)
-    return spark.table(name)
+    ST.run_available_now(result, ckpt, output_mode=mode, query_name=name)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 _STREAM_TUMBLE_SQL = """
@@ -105,7 +77,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _land_events(spark, sf_dir)
     stream = ST.read_file_stream(spark, path, ev.schema)
     res = ST.tumbling_counts(stream, width="1 hour", watermark="2 hours")
-    out = _run_to_table(spark, res, "complete")
+    out = _run_to_table(res, "complete")
     return out.select(
         F.col("win_start").alias("window_start"),
         "event_type",
@@ -133,7 +105,7 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # >1 file → >1 micro-batch → state actually carries across batches
     stream = ST.read_file_stream(spark, path, ev.schema, max_files_per_trigger=1)
     res = ST.running_totals_stateful(stream)
-    updates = _run_to_table(spark, res, "update")
+    updates = _run_to_table(res, "update")
     # update-mode memory sink holds every per-batch emission; the final
     # state per user is the one with the largest n_events (monotone)
     from pyspark.sql import Window as W
@@ -185,7 +157,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _land_events(spark, sf_dir)
     stream = ST.read_file_stream(spark, path, ev.schema)
     res = ST.session_aggregate(stream, gap="30 minutes", watermark="2 hours")
-    out = _run_to_table(spark, res, "complete")
+    out = _run_to_table(res, "complete")
     return out.select(
         "user_id",
         "sess_start",
@@ -217,21 +189,16 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(d, "files")
     ev.write.mode("overwrite").parquet(path)
     ev.write.mode("append").parquet(path)  # the duplicate replay
-    stream = ST.read_file_stream(spark, path, ev.schema, max_files_per_trigger=4)
+    # kilobytes of dedup state: the stream runs on a width-8 clone. A/B
+    # receipt: plans/r14/ab_receipts/stream_dedup.jsonl.
+    work = clone_session(spark, 8)
+    stream = ST.read_file_stream(work, path, ev.schema, max_files_per_trigger=4)
     # watermark far behind max event time: nothing is dropped as late,
     # dedup state spans the whole replayed range
     res = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    # round-14: state_partitions=8 — every micro-batch (plus the
-    # no-data finalize batch) commits EVERY dedup state store, and the
-    # state here is kilobytes; width follows state volume, not CPU
-    # count (the _run_to_table contract — results are partition-
-    # independent, the caller conf is restored). A/B receipt:
-    # plans/r14/ab_receipts/stream_dedup.jsonl.
-    return _run_to_table(spark, res, "append", state_partitions=8).select(
-        "event_id", "user_id", "ts"
-    )
+    return _run_to_table(res, "append").select("event_id", "user_id", "ts")
 
 
 _STREAM_PEAKS_SQL = """
@@ -259,7 +226,7 @@ def stream_tws_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the applyInPandasWithState lane where it's absent (this container)
     peaks = ST.running_peaks_tws if ST.tws_available() else ST.running_peaks_state
     res = peaks(stream)
-    updates = _run_to_table(spark, res, "update")
+    updates = _run_to_table(res, "update")
     from pyspark.sql import Window as W
 
     w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -300,7 +267,7 @@ def stream_curation_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs.write.mode("overwrite").parquet(path)
     stream = ST.read_file_stream(spark, path, docs.schema)
     res = CU.quality_gates(stream)
-    return _run_to_table(spark, res, "append")
+    return _run_to_table(res, "append")
 
 
 _STREAM_SS_JOIN_SQL = """
@@ -339,8 +306,13 @@ FROM events c JOIN events p
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _land_events(spark, sf_dir)
+    # 4 state stores per partition for kilobytes of state: the stream
+    # runs on a width-8 clone (measured 8.4s -> 3.9s at sf0.1 vs 32).
+    # The trailing no-data batch EVICTS expired join state — the cost a
+    # deployment pays per watermark advance — so the cycle times it.
+    work = clone_session(spark, 8)
     clicks = (
-        ST.read_file_stream(spark, path, ev.schema)
+        ST.read_file_stream(work, path, ev.schema)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -350,7 +322,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "1 day")
     )
     purchases = (
-        ST.read_file_stream(spark, path, ev.schema)
+        ST.read_file_stream(work, path, ev.schema)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -366,16 +338,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
     )
-    # finalize_watermark=True: with the realistic 1-day watermark the
-    # trailing no-data batch actually EVICTS expired join state — the
-    # cost a deployment pays per watermark advance — so the benched
-    # cycle times it (it changes no output row for an append inner
-    # join; matches emit eagerly on arrival). state_partitions=8:
-    # 4 state stores per partition x 32 partitions was 128 commits
-    # per batch for kilobytes of state — size to state, not cores
-    out = _run_to_table(
-        spark, joined, "append", finalize_watermark=True, state_partitions=8
-    )
+    out = _run_to_table(joined, "append")
     return out.select(
         "click_id",
         "purchase_id",
@@ -420,7 +383,7 @@ def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
     )
-    out = _run_to_table(spark, res, "complete")
+    out = _run_to_table(res, "complete")
     return out.select(
         "segment", "event_type", "n_events", dround("sum_value", 2).alias("sum_value")
     )
@@ -473,15 +436,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup as D
     from .queries_llm import _INC_NEW_MIN, _JACCARD_MAX_BUCKET
 
-    # Conf sandbox (VERDICT r12 item 4): the absorb loop's micro-batch
-    # shuffles run width-8 (volume-not-CPU sizing, set just before the
-    # stream starts below), and that width must not leak to concurrent
-    # queries on the caller's session — so the whole stream runs in a
-    # cloned session (shared SparkContext, isolated SQLConf; every
-    # engine conf lives at builder level in session.py, so the clone
-    # inherits them all). The caller's conf is never touched — pinned
-    # by test_stream_incdedup_width_scoped_to_clone.
-    work = spark.newSession()
+    # the corpus setup runs at the caller's width, the absorb loop's
+    # micro-batches at width 8 (set just before the stream starts)
+    work = clone_session(spark)
     docs = load_table(work, sf_dir, "documents")
     root = tempfile.mkdtemp(prefix="stream_incdedup_")
     docs_dir = os.path.join(root, "docs")
@@ -541,14 +498,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         work, land_dir, docs.schema, max_files_per_trigger=1
     )
     ckpt = os.path.join(root, "ckpt")
-    # A micro-batch here is ~1/3 of the new slice — kilobytes of
-    # shuffle data across the ~8 per-batch jobs, where 32-way shuffles
-    # are pure task-scheduling overhead (the same sizing rule as
-    # _run_to_table's state_partitions: width follows data volume, not
-    # CPU count; the output set is partition-independent). Set on the
-    # CLONED session only, after the full-width corpus setup above —
-    # the caller's session keeps its width throughout.
-    work.conf.set("spark.sql.shuffle.partitions", "8")
+    # a micro-batch is ~1/3 of the new slice: kilobytes of shuffle data
+    # across the ~8 per-batch jobs
+    set_width(work, 8)
     q = (
         stream.writeStream.foreachBatch(absorb)
         .option("checkpointLocation", ckpt)
@@ -818,7 +770,7 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max_by("value", "ordkey").alias("close"),
         F.count(F.lit(1)).alias("n_ticks"),
     )
-    out = _run_to_table(spark, res, "complete")
+    out = _run_to_table(res, "complete")
     return out.select(
         "event_type",
         F.col("win.start").cast("date").alias("day"),
@@ -899,8 +851,10 @@ SELECT * FROM matched UNION ALL SELECT * FROM unmatched
 )
 def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _land_events(spark, sf_dir)
+    # the inner join's state shape: the stream runs on a width-8 clone
+    work = clone_session(spark, 8)
     clicks = (
-        ST.read_file_stream(spark, path, ev.schema)
+        ST.read_file_stream(work, path, ev.schema)
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -910,7 +864,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("click_ts", "1 hour")
     )
     purchases = (
-        ST.read_file_stream(spark, path, ev.schema)
+        ST.read_file_stream(work, path, ev.schema)
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -927,11 +881,9 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
         "leftOuter",
     )
-    # finalize_watermark=True is REQUIRED here: the outer rows only
-    # exist because the trailing no-data batch advances the watermark
-    # same 4-stores-per-partition shape as the inner join: size the
-    # state partition count to state volume (see _run_to_table)
-    out = _run_to_table(spark, joined, "append", state_partitions=8)
+    # the outer rows only exist because the trailing no-data batch
+    # advances the watermark
+    out = _run_to_table(joined, "append")
     return out.select(
         "click_id",
         "user_id",
@@ -1004,13 +956,9 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
             nxt.isNull().alias("is_current"),
         ).localCheckpoint(eager=True)  # materialize BEFORE overwriting
         # the very files `old` reads from
-        key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(key, "static")
-        spark.conf.set(key, "dynamic")
-        try:
-            rebuilt.write.mode("overwrite").partitionBy("bkt").parquet(dim)
-        finally:
-            spark.conf.set(key, prev)
+        rebuilt.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("bkt").parquet(dim)
 
     return absorb
 
@@ -1041,15 +989,10 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
     ),
 )
 def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Round-14: the stream runs in a cloned session at width 8 — the
-    # stream_incremental_dedup conf sandbox (VERDICT r12 item 4): each
-    # micro-batch's rebuild window + store read-back shuffle a few
-    # thousand rows, where 32-way shuffles are pure task-scheduling
-    # overhead; width follows data volume, not CPU count, and the
-    # caller's session width is never touched (pinned by
-    # test_stream_scd2_width_scoped_to_clone). Fresh-subprocess
+    # each micro-batch's rebuild window + store read-back shuffle a few
+    # thousand rows: the stream runs on a width-8 clone. Fresh-subprocess
     # interleaved A/B receipt: plans/r14/ab_receipts/stream_scd2_apply.jsonl.
-    work = spark.newSession()
+    work = clone_session(spark, 8)
     ev = load_table(work, sf_dir, "events")
     upd = ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", dround(F.col("value"), 2).alias("tier")
@@ -1065,7 +1008,6 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         work, land, upd.schema, max_files_per_trigger=1
     )
     ckpt = os.path.join(root, "ckpt")
-    work.conf.set("spark.sql.shuffle.partitions", "8")
     q = (
         stream.writeStream.foreachBatch(absorb)
         .option("checkpointLocation", ckpt)

@@ -11,6 +11,22 @@ unchanged on a 1000-executor cluster:
 - shuffle.partitions sized from the env (driver runs local[$SPARK_GRAFT_CPUS]);
   on a real cluster AQE coalesces from a higher initial number.
 - session timezone UTC so timestamp semantics match the DuckDB oracle.
+
+Clones: a query that needs a different shuffle width runs on
+:func:`clone_session` — a ``newSession()`` that shares the SparkContext
+and cached blocks but has its own SQL conf (the clone inherits every
+engine conf :func:`get_spark` sets). Package code sets no width or
+write-mode conf on a session it did not create; per-write settings go
+on the writer (``.option("partitionOverwriteMode", "dynamic")``).
+Width follows data volume, not CPU count: frames far below the
+session width make every stage task-scheduling-bound, so a clone may
+narrow to a fixed small width or to :func:`volume_width`,
+``min(session_width, max(8, ceil(rows / 64Ki)))`` — at scale the row
+count dominates and the clone keeps the full width. Results are
+partition-independent (``SWEEP_sf0.01_w7.jsonl`` re-checks the whole
+catalog at width 7). A DataFrame runs at the width of the session it
+was built on, so a query's result read on its clone runs at the
+clone's width.
 """
 
 from __future__ import annotations
@@ -18,6 +34,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+_WIDTH = "spark.sql.shuffle.partitions"
 
 
 def default_parallelism() -> int:
@@ -34,7 +53,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
+        .config(_WIDTH, str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -59,3 +78,23 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def clone_session(spark: SparkSession, width: int | None = None) -> SparkSession:
+    """A new session on ``spark``'s SparkContext, optionally at shuffle
+    ``width`` (default: the caller's). Clones through ``newSession()``,
+    which ``perfbench/tracing.py`` hooks to hear clone streams."""
+    clone = spark.newSession()
+    if width is not None:
+        set_width(clone, width)
+    return clone
+
+
+def set_width(clone: SparkSession, width: int) -> None:
+    """Set the shuffle width of a session made by :func:`clone_session`."""
+    clone.conf.set(_WIDTH, str(width))
+
+
+def volume_width(spark: SparkSession, rows: int) -> int:
+    """The clone width for a frame of ``rows`` rows."""
+    return min(int(spark.conf.get(_WIDTH)), max(8, -(-rows // 65536)))

@@ -110,14 +110,9 @@ def write_native(
     if mode == "overwrite_partitions":
         if not partition_by:
             raise ValueError("overwrite_partitions requires partition_by")
-        spark = df.sparkSession
-        conf_key = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf_key, "static")
-        spark.conf.set(conf_key, "dynamic")
-        try:
-            df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-        finally:
-            spark.conf.set(conf_key, prev)
+        df.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(*partition_by).parquet(path)
         return
     w = df.write.mode(mode)
     if partition_by:

@@ -6,14 +6,12 @@ watermark+1 to today, per-day fetch/skip-if-empty, then
 download→UNION ALL→overwrite→upload, and finally advance the watermark
 (market/delta_non_fq_daily_kline.py:29-41, 63-108, 135-167).
 
-Spark restatement:
-- the day loop becomes `sequence(wm+1, end)` + explode, optionally
-  SEMI-joined with the trading calendar (the reference HAS the
-  calendar but iterates wall-clock days and skips empties — we fix
-  that, and keep the skip as a fallback),
-- the per-day fetch becomes ONE partition-pruned scan with
-  `date IN (<pending>)` — at 100 TB this prunes to exactly the new
-  date partitions instead of touching the table,
+Spark restatement (the cycle itself is `flows.delta_flow`):
+- the day loop + per-day fetch become ONE range filter (wm, end] on
+  each fact scan, optionally SEMI-joined with the trading calendar
+  (the reference HAS the calendar but iterates wall-clock days and
+  skips empties — we fix that, and keep the skip as a fallback); at
+  100 TB this prunes to exactly the new date partitions,
 - merge modes: 'compat' reproduces the reference's UNION ALL (a crash
   rerun can duplicate (code,date) rows — documented semantics,
   SURVEY.md §2.4 U1); 'merge' is the idempotent upgrade
@@ -29,10 +27,9 @@ re-reads a trailing window to do strictly better when merge mode is on.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
-from datetime import date, datetime, timedelta
+from datetime import date, datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 WIRE_FMT = "%Y%m%d"  # yyyyMMdd, as the reference stores it
@@ -57,33 +54,6 @@ class WatermarkStore:
         with open(tmp, "w") as f:
             f.write(day.strftime(WIRE_FMT))
         os.replace(tmp, self.path)  # atomic advance
-
-
-def pending_dates(
-    spark: SparkSession,
-    watermark: date,
-    end: date,
-    calendar: DataFrame | None = None,
-    slack_days: int = 0,
-) -> DataFrame:
-    """Dates to process: (watermark - slack, end], as one column `day`.
-
-    Declarative replacement for the reference's `for i in range(delta)`
-    loop; SEMI-join with the trading calendar prunes non-trading days
-    *before* any scan is issued.
-    """
-    start = watermark - timedelta(days=slack_days)
-    days = spark.range(1).select(
-        F.explode(
-            F.sequence(
-                F.date_add(F.lit(start.isoformat()).cast("date"), 1),
-                F.lit(end.isoformat()).cast("date"),
-            )
-        ).alias("day")
-    )
-    if calendar is not None:
-        days = days.join(calendar.select(F.col("cal_date").alias("day")), "day", "left_semi")
-    return days
 
 
 def delta_slice(source: DataFrame, ts_col: str, watermark, end=None) -> DataFrame:
@@ -120,30 +90,3 @@ def merge_increment(
             .drop("__rn", "__gen")
         )
     raise ValueError(f"unknown mode: {mode}")
-
-
-def run_increment(
-    spark: SparkSession,
-    source: DataFrame,
-    ts_col: str,
-    store: WatermarkStore,
-    end: date,
-    sink: Callable[[DataFrame], None],
-    calendar: DataFrame | None = None,
-    initial_watermark: date | None = None,
-) -> DataFrame:
-    """One incremental cycle: read wm → slice (calendar-pruned) → sink
-    → advance wm. Returns the delta DataFrame that was sunk."""
-    wm = store.read() or initial_watermark
-    if wm is None:
-        raise ValueError("no watermark and no initial_watermark")
-    delta = delta_slice(source, ts_col, wm.isoformat(), end.isoformat() + " 23:59:59.999999")
-    if calendar is not None:
-        delta = delta.join(
-            calendar.select(F.col("cal_date").alias("__d")),
-            F.to_date(F.col(ts_col)) == F.col("__d"),
-            "left_semi",
-        )
-    sink(delta)
-    store.write(end)  # advance only after sink success (T1 ordering)
-    return delta

@@ -1444,36 +1444,3 @@ def test_sample_negatives_never_plans_cartesian(spark):
 
     p = executed_plan_str(sample_negatives(spark, SF))
     assert "CartesianProduct" not in p, p[:2000]
-
-
-def test_round13_width_clones_leave_caller_width_untouched(spark):
-    """Measured-width clones (graph_pagerank + cc_incremental; the
-    r13 graph_label_propagation clone was REVERTED in round 14 —
-    the driver's r13 record and the r14 fresh-subprocess interleaved
-    A/B both read it slower, VERDICT r13 item 3 / OPTIMIZATION_r14.md;
-    bfs/kcore/closeness/components were measured net-negative in the
-    applied form and deliberately left alone, OPTIMIZATION_r13.md §6):
-    each runs its iterative rounds in a CLONED session whose shuffle
-    width is sized from the measured edge/pair count. The caller's
-    width must never move, and at smoke scale (counts far below
-    8·64Ki) the clone must land exactly on the volume rule's floor of
-    8 — proving the sizing really derives from the data, not the CPU
-    count."""
-    from a_share_data_pipeline_spark.plans.catalog import registry
-
-    pkey = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(pkey)
-    spark.conf.set(pkey, "12")  # distinctive caller width
-    reg = registry()
-    try:
-        for name in (
-            "graph_pagerank",
-            "graph_cc_incremental",
-        ):
-            out = reg[name].fn(spark, SF)
-            assert out.sparkSession is not spark, name
-            assert out.sparkSession.conf.get(pkey) == "8", name
-            assert out.count() > 0, name
-            assert spark.conf.get(pkey) == "12", name
-    finally:
-        spark.conf.set(pkey, before)

@@ -492,55 +492,105 @@ def test_incdedup_absorb_retry_replaces_pairs_and_parts(spark, tmp_path):
         assert set(parts) <= {-1, 0}
 
 
-def test_stream_incdedup_width_scoped_to_clone(spark, sf_smoke, monkeypatch):
-    """VERDICT r12 item 4: stream_incremental_dedup's width-8 absorb
-    sizing must be invisible to the caller's session — a concurrent
-    query planned on the caller mid-stream keeps the caller's width.
-    Spied via D.pair_jaccard (called inside every micro-batch): at
-    that moment the CALLER session must still read the distinctive
-    width this test pins on it, and it must still read it after."""
+# width-scoped query -> whether its result is read on the clone
+_RESULT_ON_CLONE = {
+    "graph_cc_incremental": True,
+    "graph_pagerank": True,
+    "stream_dedup": True,
+    "stream_incremental_dedup": False,
+    "stream_scd2_apply": False,
+}
+
+
+@pytest.mark.parametrize("name", list(_RESULT_ON_CLONE))
+def test_clone_width_leaves_caller_width(spark, sf_smoke, monkeypatch, name):
+    """Each width-scoped query runs in exactly one clone at width 8 —
+    fixed, or the volume rule's floor for the measured-width graph
+    queries at smoke scale, so the width derives from the data, not
+    the CPU count — while the caller keeps its distinctive width 12,
+    also mid-stream (spied via D.pair_jaccard, which runs inside every
+    stream_incremental_dedup micro-batch). The result comes back on
+    the clone or on the caller, as the query documents."""
+    from pyspark.sql import SparkSession
+
     from a_share_data_pipeline_spark.operators import dedup as D
     from a_share_data_pipeline_spark.plans.catalog import registry
 
     pkey = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(pkey)
-    spark.conf.set(pkey, "12")  # distinctive caller width
-    observed = []
-    real = D.pair_jaccard
+    clones, observed = [], []
+    new_session, real = SparkSession.newSession, D.pair_jaccard
+
+    def recording_new_session(session):
+        clones.append(new_session(session))
+        return clones[-1]
 
     def spy(*a, **k):
         observed.append(spark.conf.get(pkey))
         return real(*a, **k)
 
+    monkeypatch.setattr(SparkSession, "newSession", recording_new_session)
     monkeypatch.setattr(D, "pair_jaccard", spy)
-    try:
-        out = registry()["stream_incremental_dedup"].fn(spark, sf_smoke)
-        assert out.count() >= 0
-        assert observed, "spy never fired — absorb loop did not run"
-        assert all(w == "12" for w in observed), observed
-        assert spark.conf.get(pkey) == "12"
-    finally:
-        spark.conf.set(pkey, before)
-
-
-def test_stream_scd2_width_scoped_to_clone(spark, sf_smoke):
-    """Round-14: stream_scd2_apply's width-8 absorb sizing runs in a
-    cloned session — the caller's width must never move, and the
-    result must equal the batch SCD2 oracle shape regardless of the
-    clone width (rebuild is order- and partition-insensitive)."""
-    from a_share_data_pipeline_spark.plans.catalog import registry
-
-    pkey = "spark.sql.shuffle.partitions"
     before = spark.conf.get(pkey)
     spark.conf.set(pkey, "12")  # distinctive caller width
     try:
-        out = registry()["stream_scd2_apply"].fn(spark, sf_smoke)
-        assert out.sparkSession is spark  # result read-back on the caller
-        n = out.count()
-        assert n > 0
+        out = registry()[name].fn(spark, sf_smoke)
+        assert out.count() > 0
         assert spark.conf.get(pkey) == "12"
-        # exactly one current row per user
-        cur = out.filter("is_current").groupBy("user_id").count()
-        assert cur.filter("count != 1").count() == 0
+        assert len(clones) == 1
+        assert clones[0].conf.get(pkey) == "8"
+        assert out.sparkSession is (clones[0] if _RESULT_ON_CLONE[name] else spark)
+        if name == "stream_incremental_dedup":
+            assert observed, "spy never fired — absorb loop did not run"
+        assert all(w == "12" for w in observed), observed
     finally:
         spark.conf.set(pkey, before)
+
+
+@pytest.mark.parametrize("name", ["stream_dedup", "stream_curation_gates"])
+def test_stream_queries_leave_caller_catalog_unchanged(spark, sf_smoke, name):
+    """The memory-sink view ``_run_to_table`` reads its result from is
+    dropped once read, whether the stream ran on a clone (stream_dedup)
+    or on the caller (stream_curation_gates): repeated runs leave the
+    caller's catalog as it was, and the returned frame still reads."""
+    from a_share_data_pipeline_spark.plans.catalog import registry
+
+    before = sorted(t.name for t in spark.catalog.listTables())
+    for _ in range(3):
+        assert registry()[name].fn(spark, sf_smoke).count() > 0
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+
+
+def test_conf_changes_stay_in_session_py():
+    """Sessions are cloned, and width/overwrite/no-data-batch conf set,
+    only through session.py; elsewhere package code sets conf only by
+    a literal key outside those three (readers.load_table's defensive
+    timezone/nanos sets)."""
+    import ast
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    forbidden = ("shuffle.partitions", "partitionOverwriteMode", "noDataMicroBatches")
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "session.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "newSession":
+                bad.append(f"{path.name}:{node.lineno} newSession")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "set"
+                and isinstance(node.func.value, ast.Attribute)
+                and node.func.value.attr == "conf"
+            ):
+                key = node.args[0] if node.args else None
+                if not (
+                    isinstance(key, ast.Constant)
+                    and isinstance(key.value, str)
+                    and not any(f in key.value for f in forbidden)
+                ):
+                    bad.append(f"{path.name}:{node.lineno} conf.set")
+    assert not bad, bad
