@@ -41,7 +41,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # pagerank/personalized_pagerank: cut the single-use rank chain's
@@ -189,6 +189,42 @@ def pagerank(
       contribution divides rank/outdeg PER EDGE, the same expression
       the oracle's unrolled CTEs evaluate.
     """
+    return _rank_chain(edges, F.lit(1.0), F.lit(1.0 - damping), damping, iters, round_to)
+
+
+def personalized_pagerank(
+    edges: DataFrame,
+    seeds: list[str],
+    damping: float = 0.85,
+    iters: int = 3,
+    round_to: int = 6,
+) -> DataFrame:
+    """Personalized PageRank: teleport mass lands ONLY on ``seeds``
+    (r' = (1-d)·1[seed] + d·Σ r/outdeg; r0 = the teleport vector), so
+    rank concentrates in the seeds' neighborhoods — the recommendation
+    / similarity-expansion variant of :func:`pagerank`. Unnormalized
+    teleport (1 per seed, not 1/|S|) — deterministic and mirrored in
+    the oracle; relative ordering is unaffected.
+
+    Same rank chain as pagerank, with the seed indicator as r0 and
+    the seed-only teleport term. Seeds enter as literals (an isin over
+    the node column) — the seed SET is query-scoped and small by
+    definition; seeds absent from the graph contribute nothing on
+    either engine.
+    """
+    is_seed = F.col("node").isin(*seeds)
+    r0 = F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0))
+    teleport = F.when(is_seed, F.lit(1.0 - damping)).otherwise(F.lit(0.0))
+    return _rank_chain(edges, r0, teleport, damping, iters, round_to)
+
+
+def _rank_chain(
+    edges: DataFrame, r0: Column, teleport: Column, damping: float, iters: int, round_to: int
+) -> DataFrame:
+    """The PageRank iteration both variants share: ranks start at
+    ``r0`` and each round sets r' = teleport + d·Σ r/outdeg (both
+    columns are expressions over ``node``), rounded every round. The
+    scale design is documented on :func:`pagerank`."""
     from ..functions.rounding import dround
 
     nodes = (
@@ -210,78 +246,7 @@ def pagerank(
         .select("src", "dst", "outdeg")
         .localCheckpoint(eager=True)
     )
-    ranks = nodes_od.select("node", F.lit(1.0).alias("rank"))
-    for i in range(iters):
-        inflow = (
-            edges_w.join(ranks, edges_w["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("outdeg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            nodes_od.join(inflow, "node", "left")
-            .select(
-                "node",
-                dround(
-                    F.lit(1.0 - damping)
-                    + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
-                    round_to,
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", "rank")
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: list[str],
-    damping: float = 0.85,
-    iters: int = 3,
-    round_to: int = 6,
-) -> DataFrame:
-    """Personalized PageRank: teleport mass lands ONLY on ``seeds``
-    (r' = (1-d)·1[seed] + d·Σ r/outdeg; r0 = the teleport vector), so
-    rank concentrates in the seeds' neighborhoods — the recommendation
-    / similarity-expansion variant of :func:`pagerank`. Unnormalized
-    teleport (1 per seed, not 1/|S|) — deterministic and mirrored in
-    the oracle; relative ordering is unaffected.
-
-    Same scale shape as pagerank: single-use rank chain over the two
-    checkpointed static frames, no per-round materialization. Seeds
-    enter as literals (an isin over the node column) — the seed SET
-    is query-scoped and small by definition; seeds absent from the
-    graph contribute nothing on either engine.
-    """
-    from ..functions.rounding import dround
-
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    outdeg = edges.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    nodes_od = (
-        nodes.join(outdeg, "node", "left")
-        .select("node", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .localCheckpoint(eager=True)
-    )
-    edges_w = (
-        edges.join(outdeg.withColumnRenamed("node", "src"), "src")
-        .select("src", "dst", "outdeg")
-        .localCheckpoint(eager=True)
-    )
-    base = F.when(F.col("node").isin(*seeds), F.lit(1.0 - damping)).otherwise(
-        F.lit(0.0)
-    )
-    seed_one = F.when(F.col("node").isin(*seeds), F.lit(1.0)).otherwise(F.lit(0.0))
-    ranks = nodes_od.select("node", seed_one.alias("rank"))
+    ranks = nodes_od.select("node", r0.alias("rank"))
     for i in range(iters):
         inflow = (
             edges_w.join(ranks, edges_w["src"] == ranks["node"])
@@ -295,7 +260,7 @@ def personalized_pagerank(
         ranks = nodes_od.join(inflow, "node", "left").select(
             "node",
             dround(
-                base + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
+                teleport + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
                 round_to,
             ).alias("rank"),
         )

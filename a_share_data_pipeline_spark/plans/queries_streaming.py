@@ -52,7 +52,7 @@ def _run_to_table(result: DataFrame, mode: str) -> DataFrame:
     spark = result.sparkSession
     name = "q_" + uuid.uuid4().hex[:12]
     ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    ST.run_available_now(result, ckpt, output_mode=mode, query_name=name)
+    ST.run_available_now(result, ckpt, name, output_mode=mode)
     out = spark.table(name)
     spark.catalog.dropTempView(name)
     return out
@@ -257,8 +257,6 @@ def _gates_oracle() -> str:
     ),
 )
 def stream_curation_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators import curation as CU
 
     docs = load_table(spark, sf_dir, "documents")
@@ -497,17 +495,10 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ST.read_file_stream(
         work, land_dir, docs.schema, max_files_per_trigger=1
     )
-    ckpt = os.path.join(root, "ckpt")
     # a micro-batch is ~1/3 of the new slice: kilobytes of shuffle data
     # across the ~8 per-batch jobs
     set_width(work, 8)
-    q = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ST.run_available_now(stream, os.path.join(root, "ckpt"), absorb)
     # bid-keyed subdirs → recursive lookup; the result read runs on the
     # caller's session at the caller's width
     return (
@@ -703,13 +694,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         version["n"] += 1
 
     stream = ST.read_file_stream(spark, land_dir, changes.schema, max_files_per_trigger=1)
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ST.run_available_now(stream, os.path.join(root, "ckpt"), apply_batch)
     final = spark.read.schema(snap_schema).parquet(snap_dir(version["n"]))
     return final.select("k", dround("price", 2).alias("price"), "status")
 
@@ -1007,14 +992,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ST.read_file_stream(
         work, land, upd.schema, max_files_per_trigger=1
     )
-    ckpt = os.path.join(root, "ckpt")
-    q = (
-        stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    ST.run_available_now(stream, os.path.join(root, "ckpt"), absorb)
     # the result read runs on the caller's session at the caller's width
     return spark.read.schema(_SCD2_DIM_SCHEMA).parquet(dim).select(
         "user_id", "tier", "valid_from", "valid_to", "is_current"
@@ -1092,14 +1070,7 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             width="1 hour",
             watermark=f"{_LATE_DELAY_DAYS} days",
         )
-        q = (
-            res.writeStream.outputMode("update")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        ST.run_available_now(res, ckpt, sink, output_mode="update")
 
     on_time.write.mode("overwrite").parquet(land)
     run_cycle()

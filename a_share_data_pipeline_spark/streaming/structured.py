@@ -8,6 +8,9 @@ text-file watermark (market/delta_non_fq_daily_kline.py:29-41, 71-107,
         .trigger(availableNow=True)
         .option("checkpointLocation", ...)
 
+`run_available_now` is the one stream entry point: every stream in the
+package, memory-table or `foreachBatch` sink, starts through it.
+
 - `Trigger.AvailableNow` ≡ the reference's "process everything since
   the watermark, then stop" cron semantics (T2/T4);
 - the checkpoint dir replaces `.last_update_date` (T1) — offsets commit
@@ -27,6 +30,8 @@ built-in session_window (state merges server-side, no Python).
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,14 +156,14 @@ def running_totals_stateful(events: DataFrame, timeout_ms: int | None = None) ->
 def run_available_now(
     result: DataFrame,
     checkpoint_dir: str,
+    sink: str | Callable[[DataFrame, int], None],
     output_mode: str = "append",
-    sink_format: str = "memory",
-    query_name: str = "stream_q",
-    out_path: str | None = None,
 ):
     """Execute one AvailableNow cycle to completion — the streaming
-    analog of one reference cron run (T2/T4). The checkpoint dir is the
-    watermark: re-running with the same dir processes only new files.
+    analog of one reference cron run (T2/T4), and the package's one
+    place that starts a stream. ``sink`` is a memory-table name or a
+    ``foreachBatch`` function. The checkpoint dir is the watermark:
+    re-running with the same dir processes only new files.
     Returns the (terminated) StreamingQuery so callers can read its
     progress records — per-micro-batch `stateOperators` metrics are how
     tests prove state actually expires under a watermark."""
@@ -166,40 +171,14 @@ def run_available_now(
         result.writeStream.outputMode(output_mode)
         .trigger(availableNow=True)
         .option("checkpointLocation", checkpoint_dir)
-        .format(sink_format)
     )
-    if sink_format == "memory":
-        writer = writer.queryName(query_name)
-    if out_path is not None:
-        writer = writer.option("path", out_path)
+    if isinstance(sink, str):
+        writer = writer.format("memory").queryName(sink)
+    else:
+        writer = writer.foreachBatch(sink)
     q = writer.start()
     q.awaitTermination()
     return q
-
-
-def stream_delta_append(
-    spark: SparkSession,
-    landing_dir: str,
-    schema: T.StructType,
-    checkpoint_dir: str,
-    out_dir: str,
-    partition_col: str = "date",
-) -> None:
-    """Streaming restatement of flow 2: canonical rows land as files,
-    the stream appends them to the partitioned native table exactly
-    once (checkpointed offsets replace `.last_update_date`; crash rerun
-    resumes instead of duplicating — the MERGE-grade upgrade of U1)."""
-    src = read_file_stream(spark, landing_dir, schema)
-    q = (
-        src.writeStream.outputMode("append")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy(partition_col)
-        .format("parquet")
-        .option("path", out_dir)
-        .start()
-    )
-    q.awaitTermination()
 
 
 PEAK_OUT_SCHEMA = "user_id bigint, n_events bigint, peak double"
@@ -347,10 +326,4 @@ def stream_canonical_delta(
         )
         sinks.write_native(canonical, out_dir, mode="overwrite_partitions")
 
-    q = (
-        daily_stream.writeStream.foreachBatch(process)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(daily_stream, checkpoint_dir, process)

@@ -1,6 +1,6 @@
 """M5 Structured Streaming tests: AvailableNow file-source streams over
 the events fixture, checked against the equivalent batch plans, plus
-exactly-once semantics of the checkpointed delta append."""
+exactly-once semantics of a checkpointed foreachBatch sink."""
 
 from __future__ import annotations
 
@@ -37,9 +37,7 @@ def test_tumbling_stream_matches_batch(spark, events_landing, tmp_path):
     path, schema, ev_batch = events_landing
     stream = ST.read_file_stream(spark, path, schema)
     result = ST.tumbling_counts(stream, width="1 hour", watermark="2 hours")
-    ST.run_available_now(
-        result, str(tmp_path / "ckpt"), output_mode="complete", query_name="tumb"
-    )
+    ST.run_available_now(result, str(tmp_path / "ckpt"), "tumb", output_mode="complete")
     got = {tuple(r) for r in _memory_df(spark, "tumb").collect()}
     want = {tuple(r) for r in ST.tumbling_counts(ev_batch, width="1 hour").collect()}
     assert got == want
@@ -50,9 +48,7 @@ def test_sliding_stream_matches_batch(spark, events_landing, tmp_path):
     path, schema, ev_batch = events_landing
     stream = ST.read_file_stream(spark, path, schema)
     result = ST.sliding_counts(stream, width="2 hours", slide="1 hour", watermark="2 hours")
-    ST.run_available_now(
-        result, str(tmp_path / "ckpt"), output_mode="complete", query_name="slide"
-    )
+    ST.run_available_now(result, str(tmp_path / "ckpt"), "slide", output_mode="complete")
     got = {tuple(r) for r in _memory_df(spark, "slide").collect()}
     want = {tuple(r) for r in ST.sliding_counts(ev_batch, width="2 hours", slide="1 hour").collect()}
     assert got == want
@@ -64,9 +60,7 @@ def test_session_stream_matches_batch(spark, events_landing, tmp_path):
     path, schema, ev_batch = events_landing
     stream = ST.read_file_stream(spark, path, schema)
     result = ST.session_aggregate(stream, gap="30 minutes", watermark="2 hours")
-    ST.run_available_now(
-        result, str(tmp_path / "ckpt"), output_mode="complete", query_name="sess"
-    )
+    ST.run_available_now(result, str(tmp_path / "ckpt"), "sess", output_mode="complete")
     got = {tuple(r) for r in _memory_df(spark, "sess").collect()}
     want = {tuple(r) for r in ST.session_aggregate(ev_batch, gap="30 minutes").collect()}
     assert got == want
@@ -79,9 +73,7 @@ def test_stateful_running_totals(spark, events_landing, tmp_path):
     path, schema, ev_batch = events_landing
     stream = ST.read_file_stream(spark, path, schema, max_files_per_trigger=1)
     result = ST.running_totals_stateful(stream)
-    ST.run_available_now(
-        result, str(tmp_path / "ckpt"), output_mode="update", query_name="runtot"
-    )
+    ST.run_available_now(result, str(tmp_path / "ckpt"), "runtot", output_mode="update")
     # memory sink in update mode appends each update; with >1 micro-batch
     # a user may appear multiple times — the LAST row per user is final
     updates = _memory_df(spark, "runtot").toPandas()
@@ -165,9 +157,7 @@ def test_stream_stream_join_state_expires_under_tight_watermark(spark, tmp_path)
         ).select("click_id", "purchase_id")
 
     stream = ST.read_file_stream(spark, landing, ev.schema, max_files_per_trigger=1)
-    q = ST.run_available_now(
-        sides(stream), str(tmp_path / "ckpt"), output_mode="append", query_name="ssj_wm"
-    )
+    q = ST.run_available_now(sides(stream), str(tmp_path / "ckpt"), "ssj_wm")
     got = {tuple(r) for r in _memory_df(spark, "ssj_wm").collect()}
     want = {tuple(r) for r in sides(ev).collect()}
     # (a) nothing lost: files arrive in event-time order, so no row is
@@ -189,42 +179,38 @@ def test_stream_stream_join_state_expires_under_tight_watermark(spark, tmp_path)
     assert state_rows[-1] <= 2 * per_day * 2  # ≤ ~2 days resident at the end
 
 
-def test_delta_append_exactly_once(spark, events_landing, tmp_path):
-    """The checkpointed stream processes each landed file exactly once
-    across reruns — the idempotent upgrade of the reference's U1
-    rerun-duplication (same scenario as A9, opposite outcome)."""
+def test_foreach_batch_sink_resumes_checkpoint(spark, events_landing, tmp_path):
+    """A foreachBatch sink run through the runner sees each landed file
+    exactly once across reruns on one checkpoint — the idempotent
+    upgrade of the reference's U1 rerun-duplication (same scenario as
+    A9, opposite outcome)."""
     _, schema, ev_batch = events_landing
     landing = str(tmp_path / "landing")
     ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "table")
     os.makedirs(landing)
+    seen = []
 
-    wave1 = ev_batch.limit(100).withColumn("date", F.to_date("ts"))
-    wave1.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "w1"))
-    for f in os.listdir(str(tmp_path / "w1")):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(str(tmp_path / "w1"), f), os.path.join(landing, "w1_" + f))
+    def sink(batch, _bid):
+        seen.append(batch.count())
 
-    full_schema = wave1.schema
-    ST.stream_delta_append(spark, landing, full_schema, ckpt, out)
-    n1 = spark.read.parquet(out).count()
-    assert n1 == 100
+    def land(n, wave):
+        staged = str(tmp_path / wave)
+        ev_batch.limit(n).coalesce(1).write.parquet(staged)
+        for f in os.listdir(staged):
+            if f.endswith(".parquet"):
+                shutil.copy(os.path.join(staged, f), os.path.join(landing, f"{wave}_{f}"))
 
-    # rerun with no new files → no duplicates
-    ST.stream_delta_append(spark, landing, full_schema, ckpt, out)
-    assert spark.read.parquet(out).count() == n1
+    def run():
+        ST.run_available_now(ST.read_file_stream(spark, landing, schema), ckpt, sink)
+        return sum(seen)
 
-    # land a second wave → only its rows are appended
-    wave2 = ev_batch.limit(150).withColumn("date", F.to_date("ts"))
-    wave2.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "w2"))
-    for f in os.listdir(str(tmp_path / "w2")):
-        if f.endswith(".parquet"):
-            shutil.copy(os.path.join(str(tmp_path / "w2"), f), os.path.join(landing, "w2_" + f))
-    ST.stream_delta_append(spark, landing, full_schema, ckpt, out)
-    assert spark.read.parquet(out).count() == n1 + 150
-
-    # partition layout: the table is date-partitioned (pruning path)
-    assert any(p.startswith("date=") for p in os.listdir(out))
+    land(100, "w1")
+    assert run() == 100
+    # rerun with no new files → nothing replayed
+    assert run() == 100
+    # a second wave → only its rows reach the sink
+    land(150, "w2")
+    assert run() == 250
 
 
 @pytest.mark.slow  # round-14 tiering (VERDICT r13 item 2): measured 21s solo-class cost; slow tier, still run at round close
@@ -301,7 +287,7 @@ def test_write_native_overwrite_partitions_is_idempotent(spark, tmp_path):
     # exact replay converges (no duplicates)
     write_native(d2, out, mode="overwrite_partitions")
     assert spark.read.parquet(out).count() == 2
-    # the session conf is restored
+    # the write sets partitionOverwriteMode per write, not on the session
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") != "dynamic"
 
 
@@ -594,3 +580,26 @@ def test_conf_changes_stay_in_session_py():
                 ):
                     bad.append(f"{path.name}:{node.lineno} conf.set")
     assert not bad, bad
+
+
+def test_streams_start_only_in_run_available_now():
+    """``streaming/structured.run_available_now`` is the package's one
+    stream start: the package has exactly one ``writeStream`` attribute,
+    inside that function."""
+    import ast
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites, runner = [], None
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Attribute) and node.attr == "writeStream":
+                sites.append((rel, node.lineno))
+            if isinstance(node, ast.FunctionDef) and node.name == "run_available_now":
+                runner = (rel, range(node.lineno, node.end_lineno + 1))
+    assert len(sites) == 1, sites
+    rel, line = sites[0]
+    assert runner and rel == runner[0] and line in runner[1], (sites, runner)
