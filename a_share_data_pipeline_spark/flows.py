@@ -8,6 +8,7 @@ Reference (SURVEY.md §3):
      (market/delta_non_fq_daily_kline.py:170-181)
      — incremental: watermark → per-day fetch → merge → inner-join dim
        → append → download+UNION ALL+overwrite published → advance wm
+       (here: a line-level rewrite of the published file, see delta_flow)
   3. fetch_trade_calendar_flow (market/trade_calendar.py:45-50)
      — calendar: fetch open days → cast → sort → overwrite → publish
 
@@ -24,12 +25,15 @@ fixtures, or parquet.
 
 from __future__ import annotations
 
-from datetime import date
+import os
+import tempfile
+from datetime import date, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import assembly
+from .schemas import CANONICAL
 from .sources import sinks
 from .streaming.incremental import WatermarkStore
 
@@ -85,6 +89,16 @@ def delta_flow(
     date-range filter on each fact scan — at scale this is static
     partition pruning to exactly the pending date partitions.
 
+    The delta is evaluated ONCE (eager localCheckpoint): the empty
+    check, the staging append, the publish and the returned frame all
+    see the same rows, even from a nondeterministic source.
+
+    The publish rewrites lines, not rows. The old published file is
+    read as text, its header checked against CANONICAL (a mismatch
+    raises before upload, so the watermark stays put), and the new
+    file is the old data lines followed by the delta's lines — old
+    lines pass through byte-for-byte, nothing is parsed or shuffled.
+
     mode='compat' (default) keeps reference semantics on purpose:
     published = old UNION ALL new with NO dedup (U1 — a crash rerun
     duplicates rows), and late rows before the watermark are lost
@@ -92,15 +106,18 @@ def delta_flow(
 
     mode='merge' is the strictly-better upgrade the reference can't do:
     the delta window re-opens `slack_days` behind the watermark (so a
-    source backfilling a recent past date is picked up), and the
-    publish is an idempotent key-merge — reruns and the re-read slack
-    window dedup on (code, date), delta rows winning."""
+    source backfilling a recent past date is picked up), and every old
+    line whose (code, date) the delta carries is dropped (broadcast
+    anti-join on the line's text prefix) — reruns and the re-read slack
+    window replace their keys, delta rows winning. Lines outside the
+    delta's keys are kept as they are: duplicates an earlier compat
+    rerun left outside the window stay duplicated. A hub maintained in
+    merge mode from a backfill stays key-unique."""
     if mode not in ("compat", "merge"):
         raise ValueError(f"unknown mode: {mode}")
     wm = watermark.read()
     if wm is None:
         raise ValueError("delta flow needs an existing watermark")
-    from datetime import timedelta
 
     slack_from = wm - timedelta(days=slack_days) if mode == "merge" else wm
     lo = F.lit(slack_from.strftime("%Y%m%d"))
@@ -124,25 +141,22 @@ def delta_flow(
         in_range_cal(daily_basic),
         stock_basic,
         mode="delta",  # inner dim join doubles as the main-board filter (J3)
-    )
+    ).localCheckpoint(eager=True)
     if delta.isEmpty():  # P6: no new rows → no publish, no advance
         return None
 
     sinks.append_csv(delta, staging_path)  # local delta CSV, ref :101-107
 
-    from .schemas import CANONICAL
-    from .sources.readers import read_csv
-    from .streaming.incremental import merge_increment
-
-    if publisher.exists(PRICES_FILE):
-        existing = read_csv(spark, publisher.download(PRICES_FILE), CANONICAL)
-        # compat: U1 bag union, no dedup; merge: idempotent, delta wins
-        merged = merge_increment(existing, delta, keys=["code", "date"], mode=mode)
-    else:
-        merged = delta
-    published_local = staging_path + ".published"
-    sinks.overwrite_csv(merged, published_local)
-    publisher.upload(published_local, PRICES_FILE)
+    with tempfile.TemporaryDirectory(dir=os.path.dirname(staging_path) or ".") as tmp:
+        kept = None
+        if publisher.exists(PRICES_FILE):
+            # compat: U1 bag union, nothing dropped; merge: delta keys replace old lines
+            drop = delta.select("code", "date") if mode == "merge" else None
+            header = ",".join(CANONICAL.fieldNames())
+            kept = sinks.read_lines(spark, publisher.download(PRICES_FILE), header, drop)
+        published_local = os.path.join(tmp, PRICES_FILE)
+        sinks.overwrite_csv(delta, published_local, keep=kept)
+        publisher.upload(published_local, PRICES_FILE)
 
     watermark.write(end)  # advance ONLY after publish success (T1)
     publisher.upload(watermark.path, WATERMARK_FILE)

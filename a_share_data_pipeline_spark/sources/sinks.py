@@ -12,6 +12,15 @@ Reference semantics being reproduced:
       the engine; modeled as a `Publisher` protocol with a local-dir
       implementation for tests and a stub for the real hub.
 
+The compat sinks write text lines: `csv_lines` renders rows with the
+CSV writer's own generator and options, so a line written once can be
+passed through a later rewrite unparsed. The delta publish
+(`flows.delta_flow`) is such a rewrite: `read_lines` filters the old
+published file as text — header checked, lines whose (code, date)
+prefix the delta replaces dropped by a broadcast anti-join — and
+`overwrite_csv(delta, path, keep=...)` writes the kept lines followed
+by the delta's lines. Nothing is parsed and nothing is shuffled.
+
 Scale note: the compat sinks intentionally produce ONE file because the
 reference's contract is one canonical CSV; they stream partition files
 driver-side without collecting rows into memory. The native sink is the
@@ -25,9 +34,9 @@ import glob
 import os
 import shutil
 import tempfile
-from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 CSV_OPTS = {
     # match pandas to_csv defaults the reference relies on:
@@ -39,19 +48,50 @@ CSV_OPTS = {
 }
 
 
-def _write_headerless_csv_dir(df: DataFrame, out_dir: str) -> list[str]:
-    """Write df as headerless CSV part-files; return sorted part paths."""
-    df.write.mode("overwrite").options(**CSV_OPTS).csv(out_dir)
-    return sorted(glob.glob(os.path.join(out_dir, "part-*.csv")) or glob.glob(os.path.join(out_dir, "part-*")))
+def csv_lines(df: DataFrame) -> DataFrame:
+    """df's rows as headerless CSV lines (one `value` column), rendered
+    by the same generator and options as Spark's CSV writer."""
+    return df.select(F.to_csv(F.struct(*df.columns), CSV_OPTS).alias("value"))
 
 
-def _concat_into(parts: Iterable[str], target: str, mode: str, header: str | None) -> None:
-    with open(target, mode, encoding="utf-8") as out:
-        if header is not None:
-            out.write(header + "\n")
-        for p in parts:
-            with open(p, encoding="utf-8") as src:
-                shutil.copyfileobj(src, out)
+def read_lines(
+    spark: SparkSession, path: str, header: str, drop: DataFrame | None = None
+) -> DataFrame:
+    """The data lines of a CSV file these sinks wrote, unparsed (one
+    `value` column), ready to pass through `overwrite_csv(keep=...)`.
+
+    Raises ValueError unless the file's first line is `header`: lines
+    are only passed through under the header they were written with.
+    `drop` holds rows of the file's leading columns, in order (its
+    key); every line whose rendered prefix equals a rendered `drop` row
+    is removed by a broadcast anti-join on the text. The key columns
+    must never need CSV quoting (codes and ISO dates do not)."""
+    with open(path, encoding="utf-8") as f:
+        first = f.readline().rstrip("\n")
+    if first != header:
+        raise ValueError(f"{path}: header {first!r} is not {header!r}")
+    lines = spark.read.text(path).filter(F.col("value") != header)
+    if drop is None:
+        return lines
+    n = len(drop.columns)
+    keys = csv_lines(drop).withColumnRenamed("value", "key")
+    prefix = F.substring_index(lines["value"], ",", n)
+    return lines.join(F.broadcast(keys), prefix == keys["key"], "left_anti")
+
+
+def _write_lines(lines: DataFrame, path: str, mode: str, header: str | None) -> None:
+    """Write text lines as part-files in a temp dir beside `path`, then
+    stream them into `path` in part order (no driver collect)."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    with tempfile.TemporaryDirectory(dir=os.path.dirname(path) or ".") as tmp:
+        stage = os.path.join(tmp, "stage")
+        lines.write.text(stage)
+        with open(path, mode, encoding="utf-8") as out:
+            if header is not None:
+                out.write(header + "\n")
+            for p in sorted(glob.glob(os.path.join(stage, "part-*"))):
+                with open(p, encoding="utf-8") as src:
+                    shutil.copyfileobj(src, out)
 
 
 def append_csv(df: DataFrame, path: str) -> None:
@@ -63,20 +103,15 @@ def append_csv(df: DataFrame, path: str) -> None:
     distributed append (the reference appends per-stock sequentially —
     its order is an artifact of the driver loop, not a contract).
     """
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     first_write = not os.path.exists(path)  # header_once predicate
-    with tempfile.TemporaryDirectory(dir=os.path.dirname(path) or ".") as tmp:
-        parts = _write_headerless_csv_dir(df, os.path.join(tmp, "stage"))
-        header = ",".join(df.columns) if first_write else None
-        _concat_into(parts, path, "a", header)
+    _write_lines(csv_lines(df), path, "a", ",".join(df.columns) if first_write else None)
 
 
-def overwrite_csv(df: DataFrame, path: str) -> None:
-    """S10: full single-file rewrite, header always."""
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with tempfile.TemporaryDirectory(dir=os.path.dirname(path) or ".") as tmp:
-        parts = _write_headerless_csv_dir(df, os.path.join(tmp, "stage"))
-        _concat_into(parts, path, "w", ",".join(df.columns))
+def overwrite_csv(df: DataFrame, path: str, keep: DataFrame | None = None) -> None:
+    """S10: full single-file rewrite, header always. `keep` (lines from
+    `read_lines`) is written first, byte-for-byte, then df's rows."""
+    lines = csv_lines(df) if keep is None else keep.unionByName(csv_lines(df))
+    _write_lines(lines, path, "w", ",".join(df.columns))
 
 
 def write_native(

@@ -6,6 +6,7 @@ rerun duplication, and T1 watermark advance/late-data drop."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pandas as pd
 import pytest
@@ -352,6 +353,116 @@ def test_delta_flow_merge_mode_recovers_late_data_idempotently(
     assert again.groupBy("code", "date").count().filter("count > 1").count() == 0
 
 
+def _data_lines(path) -> list[str]:
+    """A published/staged CSV's lines after its header, unparsed."""
+    with open(path, encoding="utf-8") as f:
+        header, *lines = f.read().splitlines()
+    assert header == ",".join(CANONICAL.fieldNames())
+    return lines
+
+
+def test_delta_flow_merge_keeps_other_lines_byte_identical(
+    spark, fixture_sdfs, fixture_pdfs, tmp_path
+):
+    """A merge publish rewrites lines, not rows: the new file is exactly
+    the old lines whose (code, date) the delta does not carry, byte for
+    byte, plus the staged delta lines; rerunning the same merge leaves
+    the sorted file bytes unchanged."""
+    from pyspark.sql import functions as F
+
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    end = dt.datetime.strptime(cal_days[-1], "%Y%m%d").date()
+    pub = sinks.LocalDirPublisher(str(tmp_path / "hub"))
+    s = fixture_sdfs
+    # restated prices: every re-read row differs from its published line
+    restated = s["daily"].withColumn("close", F.col("close") + 0.5)
+
+    def run(i, wm_idx, mode, daily):
+        wm = WatermarkStore(str(tmp_path / f".wm{i}"))
+        wm.write(dt.datetime.strptime(cal_days[wm_idx], "%Y%m%d").date())
+        return flows.delta_flow(
+            spark, daily, s["limit"], s["dbasic"], s["stock_basic"],
+            str(tmp_path / f"delta{i}.csv"), pub, wm, end,
+            calendar=s["cal"], mode=mode, slack_days=3,
+        )
+
+    published = pub.download(flows.PRICES_FILE)
+    run(1, 5, "compat", s["daily"])
+    before = _data_lines(published)
+    delta = run(2, 20, "merge", restated)
+    keys = {(r.code, r.date.isoformat()) for r in delta.select("code", "date").collect()}
+    assert 0 < len(keys) < len(before)
+    kept = [ln for ln in before if tuple(ln.split(",")[:2]) not in keys]
+    assert len(kept) == len(before) - len(keys)
+    after = _data_lines(published)
+    assert sorted(after) == sorted(kept + _data_lines(tmp_path / "delta2.csv"))
+
+    with open(published, "rb") as f:
+        first = sorted(f.read().splitlines())
+    run(3, 20, "merge", restated)
+    with open(published, "rb") as f:
+        assert sorted(f.read().splitlines()) == first
+    # no publish scratch file or temp dir is left beside the staging files
+    assert sorted(os.listdir(tmp_path)) == [
+        ".wm1", ".wm2", ".wm3", "delta1.csv", "delta2.csv", "delta3.csv", "hub"
+    ]
+
+
+def test_delta_flow_pins_a_nondeterministic_delta(spark, fixture_sdfs, fixture_pdfs, tmp_path):
+    """The delta is evaluated once: with a source that changes on every
+    evaluation, the staged CSV, the published file and the returned
+    frame still hold the same rows."""
+    import random
+
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    coin = F.udf(lambda: random.random() < 0.5, T.BooleanType()).asNondeterministic()
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    wm = WatermarkStore(str(tmp_path / ".wm"))
+    wm.write(dt.datetime.strptime(cal_days[5], "%Y%m%d").date())
+    end = dt.datetime.strptime(cal_days[-1], "%Y%m%d").date()
+    pub = sinks.LocalDirPublisher(str(tmp_path / "hub"))
+    s = fixture_sdfs
+    delta = flows.delta_flow(
+        spark, s["daily"].filter(coin()), s["limit"], s["dbasic"], s["stock_basic"],
+        str(tmp_path / "delta.csv"), pub, wm, end, calendar=s["cal"], mode="merge",
+    )
+    returned = sorted(r.value for r in sinks.csv_lines(delta).collect())
+    assert len(returned) > 10
+    assert sorted(_data_lines(tmp_path / "delta.csv")) == returned
+    assert sorted(_data_lines(pub.download(flows.PRICES_FILE))) == returned
+
+
+def test_delta_flow_rejects_published_file_with_wrong_header(
+    spark, fixture_sdfs, fixture_pdfs, tmp_path
+):
+    """The line-level publish passes old lines through unparsed, so it
+    refuses a published file whose header is not CANONICAL's — raising
+    before upload, so neither the file nor the watermark changes."""
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    wm_day = dt.datetime.strptime(cal_days[19], "%Y%m%d").date()
+    end = dt.datetime.strptime(cal_days[-1], "%Y%m%d").date()
+    pub = sinks.LocalDirPublisher(str(tmp_path / "hub"))
+    cols = CANONICAL.fieldNames()
+    swapped = ",".join([cols[1], cols[0], *cols[2:]])
+    stale = f"{swapped}\n2024-01-02,600000.SH\n"
+    with open(pub.download(flows.PRICES_FILE), "w", encoding="utf-8") as f:
+        f.write(stale)
+    wm = WatermarkStore(str(tmp_path / ".wm"))
+    wm.write(wm_day)
+    s = fixture_sdfs
+    for mode in ("compat", "merge"):
+        with pytest.raises(ValueError, match="header"):
+            flows.delta_flow(
+                spark, s["daily"], s["limit"], s["dbasic"], s["stock_basic"],
+                str(tmp_path / "delta.csv"), pub, wm, end, calendar=s["cal"], mode=mode,
+            )
+    assert wm.read() == wm_day
+    with open(pub.download(flows.PRICES_FILE), encoding="utf-8") as f:
+        assert f.read() == stale
+
+
 def test_delta_skips_day_when_any_fact_empty(spark, fixture_sdfs, fixture_pdfs):
     """Reference parity (market/delta_non_fq_daily_kline.py:84): the
     per-day loop 'continue's when any of the three fetches is empty, so
@@ -411,3 +522,5 @@ def test_publish_failure_does_not_advance_watermark(spark, fixture_sdfs, tmp_pat
             dt.date(2030, 1, 1),
         )
     assert wm.read() == frozen  # not advanced past the failed publish
+    # the publish scratch file lived in a temp dir that is gone again
+    assert sorted(os.listdir(tmp_path)) == [".wm", "delta.csv", "hub"]
