@@ -139,7 +139,7 @@ def _bucket_pairs(
     )
 
 
-def _band_buckets(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def band_buckets(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, bucket) rows: one bucket per LSH band, via a single
     posexplode of the band-hash array (a union-per-band shape would
     make Catalyst execute the upstream aggregation once per band)."""
@@ -161,94 +161,40 @@ def lsh_band_candidates(
 ) -> DataFrame:
     """Candidate pairs (a < b) sharing any band bucket — one pass over
     the signatures, then bucket-pair expansion."""
-    return _bucket_pairs(_band_buckets(signatures, id_col), id_col, max_bucket=max_bucket).distinct()
+    return _bucket_pairs(band_buckets(signatures, id_col), id_col, max_bucket=max_bucket).distinct()
 
 
 def lsh_incremental_candidates(
-    signatures: DataFrame,
-    new_ids: DataFrame,
+    bands: DataFrame,
+    new_bands: DataFrame,
     id_col: str = "doc_id",
     max_bucket: int | None = None,
-    bands: DataFrame | None = None,
-    new_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental-corpus candidates: pairs sharing a band bucket where
-    at least ONE side is a new doc. The standing corpus's old×old pairs
-    are never formed (they were checked when those docs arrived) — the
+    at least ONE side is a new doc. ``bands`` is the :func:`band_buckets`
+    table of the whole corpus, new docs included; ``new_bands`` is its
+    rows for the new docs. The standing corpus's old×old pairs are
+    never formed (they were checked when those docs arrived) — the
     cost of absorbing a batch scales with the batch, not the corpus.
     The new batch's buckets broadcast (a batch is small vs the corpus);
     the corpus side stays a streamed probe of the bucket join.
 
-    ``max_bucket`` is the hot-bucket guard for this path. Band buckets
-    go hot exactly when the corpus carries mass-duplicated boilerplate —
-    the thing dedup targets — and here the pairs form through a bucket
-    JOIN rather than an array expansion, so the guard is a pre-join
-    bucket-size filter: buckets above the cap are dropped from the
-    corpus side (which removes every pair through them) BEFORE the join,
-    counted and logged — never silent.
-
     Only buckets TOUCHED by a new doc can form a pair, so the whole
     probe — including the hot-bucket size count — is restricted to the
     touched buckets first with a map-side broadcast semi-join during
-    the single corpus scan. An untouched bucket forms no pair whether
-    or not it is hot, so the output is identical, but the bucket-size
-    aggregation shuffles O(touched) rows instead of O(corpus) — the
-    difference between an absorb step that scales with the batch and
-    one that re-aggregates the store every batch (round-9 profile:
-    this count was the second-largest per-batch cost in
-    stream_incremental_dedup).
+    the single corpus scan: the bucket-size aggregation shuffles
+    O(touched) rows instead of O(corpus).
 
-    ``bands`` / ``new_bands`` (VERDICT r10 item 4): a caller that
-    maintains the band-bucket table as a standing derived store —
-    stream_incremental_dedup pins it across micro-batches — passes it
-    here so the corpus side is a memory-block scan of PRE-HASHED
-    (id, bucket) rows instead of a per-call store scan that recomputes
-    every band hash. ``bands`` must equal ``_band_buckets(signatures)``
-    row-for-row (the caller's invariant); ``new_bands`` is its
-    restriction to ``new_ids`` and is derived here when absent. The
-    output is identical to the self-computed path — pinned by
-    test_lsh_incremental_prebuilt_bands_identical."""
-    if bands is None and new_bands is not None:
-        # ADVICE r11: the self-computed branch below derives BOTH band
-        # frames and would silently overwrite a caller-supplied
-        # new_bands — there is no valid "new_bands without bands" call
-        # (new_bands is a restriction OF bands), so fail loudly.
-        raise ValueError(
-            "lsh_incremental_candidates: new_bands was passed without "
-            "bands — new_bands is the new-ids restriction of the "
-            "prebuilt corpus band table and is meaningless alone; pass "
-            "bands (and optionally new_bands), or neither"
-        )
-    if bands is None:
-        # O(batch): the new docs' bands, computed from a broadcast-
-        # restricted slice of the signature frame — never from the
-        # full corpus scan
-        sig_new = signatures.join(
-            F.broadcast(new_ids.select(id_col)), id_col, "left_semi"
-        )
-        new_bands = _band_buckets(sig_new, id_col)
-        all_bands = _band_buckets(signatures, id_col)
-    else:
-        all_bands = bands
-        if new_bands is None:
-            new_bands = bands.join(
-                F.broadcast(new_ids.select(id_col)), id_col, "left_semi"
-            )
-    prebuilt = bands is not None
+    ``max_bucket`` is the hot-bucket guard. Band buckets go hot exactly
+    when the corpus carries mass-duplicated boilerplate — the thing
+    dedup targets — and here the pairs form through a bucket JOIN
+    rather than an array expansion, so the guard is a pre-join
+    bucket-size filter: buckets above the cap are dropped from both
+    sides BEFORE the join, counted and logged — never silent."""
     touched = new_bands.select("bucket").distinct()
     # single corpus scan, map-side filtered to touched buckets
-    bands = all_bands.join(F.broadcast(touched), "bucket", "left_semi")
+    bands = bands.join(F.broadcast(touched), "bucket", "left_semi")
     if max_bucket is not None:
-        # the guard adds a second consumer of `bands` (the size count
-        # below, then the pair join) — without an eager pin the corpus
-        # scan runs once per consumer. The restricted frame is
-        # O(batch bands + collisions) rows, so pinning it is cheap.
-        # With PREBUILT bands the upstream is already checkpointed
-        # memory blocks, so re-running the cheap semi-join filter per
-        # consumer beats paying another checkpoint job per call
-        # (measured in the r11 stream_incremental_dedup floor work)
-        if not prebuilt:
-            bands = bands.localCheckpoint(eager=True)
         hot = (
             bands.groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("__bn"))

@@ -233,8 +233,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = D.exploded_shingles(docs).localCheckpoint(eager=True)
     sig = D.minhash_signatures(shingled, with_counts=True).localCheckpoint(eager=True)
     new_ids = docs.filter(F.col("doc_id") >= _INC_NEW_MIN).select("doc_id")
+    # the new docs' bands come from a broadcast-restricted slice of the
+    # signatures — O(batch), never a second corpus banding
+    new_bands = D.band_buckets(sig.join(F.broadcast(new_ids), "doc_id", "left_semi"))
     candidates = D.lsh_incremental_candidates(
-        sig, new_ids, max_bucket=_JACCARD_MAX_BUCKET
+        D.band_buckets(sig), new_bands, max_bucket=_JACCARD_MAX_BUCKET
     ).localCheckpoint(eager=True)
     verified = D.pair_jaccard(shingled, pairs=candidates, counts=sig)
     return verified.filter(F.col("jaccard") >= 0.5).select(

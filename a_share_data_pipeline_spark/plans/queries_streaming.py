@@ -412,11 +412,11 @@ def _inc_minhash_oracle() -> str:
     doc=(
         "continuous-ingestion dedup: new documents arrive as a file "
         "stream in multiple micro-batches; each batch computes ONLY its "
-        "own MinHash signatures, LSH-probes them against the standing "
-        "signature store (old×old never re-paired — O(batch) per "
+        "own MinHash band buckets, LSH-probes them against the standing "
+        "band-bucket store (old×old never re-paired — O(batch) per "
         "batch), Jaccard-verifies candidates against shingles of the "
         "CANDIDATE docs only, appends verified pairs to the output and "
-        "absorbs the batch (docs + signatures) into the store. A pair "
+        "absorbs the batch (docs + band buckets) into the store. A pair "
         "is found exactly once — by the batch where its later member "
         "arrives — so the union over batches equals the one-shot "
         "batch answer, and the oracle IS dedup_incremental's SQL. "
@@ -431,57 +431,17 @@ def _inc_minhash_oracle() -> str:
     ),
 )
 def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators import dedup as D
-    from .queries_llm import _INC_NEW_MIN, _JACCARD_MAX_BUCKET
+    from .queries_llm import _INC_NEW_MIN
 
     # the corpus setup runs at the caller's width, the absorb loop's
     # micro-batches at width 8 (set just before the stream starts)
     work = clone_session(spark)
     docs = load_table(work, sf_dir, "documents")
     root = tempfile.mkdtemp(prefix="stream_incdedup_")
-    docs_dir = os.path.join(root, "docs")
-    sig_dir = os.path.join(root, "sigs")
     out_dir = os.path.join(root, "pairs")
     land_dir = os.path.join(root, "landing")
 
-    # The SOURCE TABLE is the standing document store — production
-    # never copies the corpus to dedup it; absorbed batches land as
-    # appended files beside it (docs_dir starts empty) and `seen_docs`
-    # below is the union of the two, with the standing filter pushed
-    # into the source scan. Only the DERIVED signature store must be
-    # materialized (the per-batch probe reads it instead of re-hashing
-    # the corpus — that is the whole point of a signature store).
-    standing = docs.filter(F.col("doc_id") < _INC_NEW_MIN)
-    docs.limit(0).coalesce(1).write.parquet(docs_dir)
-    sh0 = D.exploded_shingles(standing)
-    D.minhash_signatures(sh0, with_counts=True).write.mode("overwrite").parquet(sig_dir)
-    sig_schema0 = D.minhash_signatures(sh0.limit(0), with_counts=True).schema
-
-    # In-memory pinned views of the DERIVED stores, one part per batch
-    # (VERDICT r10 item 4: the remaining floor was each micro-batch
-    # re-reading the signature store AND re-hashing every band — two
-    # full store scans per batch). The parquet store stays the durable
-    # source of truth (each batch writes its bid-keyed subdirectory —
-    # round 14: overwrite subdirs replaced the r12-documented
-    # at-least-once appends, so the durable store is retry-idempotent
-    # now; a restart re-pins from it); these checkpointed parts are
-    # its cache. A checkpoint→read-back job fold was attempted and
-    # MEASURED SLOWER this round (see the absorb closure), so the
-    # parts remain eager localCheckpoints. At 100 TB the
-    # signature/band store is the small derived side (k hashes per
-    # document, not the corpus), which is exactly what an absorb loop
-    # keeps resident between triggers.
-    # Parts are keyed by micro-batch id (ADVICE r11): foreachBatch
-    # re-delivers a batch under the SAME _bid after a partial failure,
-    # so a retried batch must REPLACE its earlier registration, never
-    # append beside it — list-shaped parts would double the batch into
-    # the candidate space. Key -1 is the pre-stream store.
-    sigs0 = work.read.schema(sig_schema0).parquet(sig_dir).localCheckpoint(eager=True)
-    state = {
-        "sig_parts": {-1: sigs0},
-        "band_parts": {-1: D._band_buckets(sigs0).localCheckpoint(eager=True)},
-        "doc_parts": {},  # absorbed batches (the corpus itself stays a source scan)
-    }
+    parts = _incdedup_store(docs.filter(F.col("doc_id") < _INC_NEW_MIN))
 
     # land the new batch as 3 files → 3 micro-batches (range-partitioned
     # so each file is a contiguous id slice; the output SET is
@@ -490,7 +450,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_docs.repartitionByRange(3, "doc_id").write.mode("overwrite").parquet(land_dir)
 
     pair_schema = "a long, b long, jaccard double"
-    absorb = _incdedup_make_absorb(state, standing, out_dir, docs_dir, sig_dir)
+    absorb = _incdedup_make_absorb(parts, out_dir)
 
     stream = ST.read_file_stream(
         work, land_dir, docs.schema, max_files_per_trigger=1
@@ -508,14 +468,33 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _incdedup_make_absorb(
-    state: dict, standing: DataFrame, out_dir: str, docs_dir: str, sig_dir: str
-):
-    """Build stream_incremental_dedup's foreachBatch closure (module
-    level, like :func:`_scd2_make_absorb`, so the retry contract is
-    directly testable: tests drive it twice with the SAME ``_bid`` and
-    assert both the in-memory parts and the read-back pairs converge
-    instead of doubling)."""
+def _incdedup_store(standing: DataFrame) -> dict:
+    """stream_incremental_dedup's state, the one store each micro-batch
+    reads: ``{bid: (docs, bands)}``, one part per absorbed batch, with
+    the pre-stream corpus under key -1. The corpus docs stay a source
+    scan — production never copies the corpus to dedup it — and only
+    its derived band table is pinned, so a batch probes pre-hashed
+    (id, bucket) memory blocks instead of re-hashing the corpus. At
+    100 TB the band table is the small derived side (a few buckets per
+    document, not the corpus), which is exactly what an absorb loop
+    keeps resident between triggers.
+
+    Parts are keyed by micro-batch id: foreachBatch re-delivers a batch
+    under the SAME _bid after a partial failure, so a retried batch
+    must REPLACE its earlier part, never append beside it."""
+    from ..operators import dedup as D
+
+    bands = D.band_buckets(D.minhash_signatures(D.exploded_shingles(standing)))
+    return {-1: (standing, bands.localCheckpoint(eager=True))}
+
+
+def _incdedup_make_absorb(parts: dict, out_dir: str):
+    """Build stream_incremental_dedup's foreachBatch closure over the
+    :func:`_incdedup_store` ``parts`` (module level, like
+    :func:`_scd2_make_absorb`, so the retry contract is directly
+    testable: tests drive it twice with the SAME ``_bid`` and assert
+    both the parts and the read-back pairs converge instead of
+    doubling)."""
     from ..operators import dedup as D
     from .queries_llm import _JACCARD_MAX_BUCKET
 
@@ -523,94 +502,54 @@ def _incdedup_make_absorb(
         if batch.isEmpty():
             return
         # a retried _bid must not see (or keep) its earlier attempt's
-        # parts: drop them up front so the unions below read only
-        # other batches' state, then re-register at the end
-        for parts in state.values():
-            parts.pop(_bid, None)
-        # Round 14 (VERDICT r13 item 5): the planned checkpoint→
-        # read-back job fold was BUILT AND MEASURED SLOWER — fresh-
-        # subprocess interleaved A/B read the folded form 11.34/9.32s
-        # vs 10.04/9.15s for the pinned form (receipts in
-        # plans/r14/ab_receipts/stream_incremental_dedup.jsonl): later
-        # batches re-scan every registered part per consumer, and
-        # parquet decode on those re-scans costs more than the one
-        # checkpoint job it saved. So the parts stay eager
-        # localCheckpoints (memory-resident blocks). What the attempt
-        # KEPT is the durable-store idempotency fix: docs/sigs land in
-        # bid-keyed overwrite subdirectories (below) instead of plain
-        # appends, retiring the at-least-once double-append hazard
-        # documented since r12.
+        # part: drop it up front so the unions below read only other
+        # batches' state, then re-register at the end
+        parts.pop(_bid, None)
         doc_part = batch.localCheckpoint(eager=True)
         # spread=False: the spread repartition is an anti-skew device
         # for corpus-scale explodes; a micro-batch is small, so the
-        # extra shuffle is pure per-job overhead here (signature
-        # values are identical either way). band_batch stays a lazy
-        # projection over the PINNED sig part — banding is a cheap
-        # concat, not worth its own checkpoint job per batch.
-        sig_batch = D.minhash_signatures(
-            D.exploded_shingles(doc_part, spread=False), with_counts=True
+        # extra shuffle is pure per-job overhead here (band values are
+        # identical either way)
+        band_part = D.band_buckets(
+            D.minhash_signatures(D.exploded_shingles(doc_part, spread=False))
         ).localCheckpoint(eager=True)
-        band_batch = D._band_buckets(sig_batch)
-        all_sigs = _union_all(list(state["sig_parts"].values()) + [sig_batch])
-        all_bands = _union_all(list(state["band_parts"].values()) + [band_batch])
         # the candidate-pair frame is tiny (LSH collisions of one batch)
         # but its lineage holds the corpus-band scan, and it feeds
-        # THREE consumers below (cand_ids, pair_jaccard's internal
-        # candidate-doc restriction, and the final left-semi) — without
-        # an eager pin Spark re-runs that scan per consumer (the
-        # round-4 broadcast re-execution lesson; round-9 profile showed
-        # it as the largest per-batch cost here). The pre-built band
-        # store makes that scan memory-resident and hash-free.
+        # several consumers below (both sides of cand_ids, then
+        # pair_jaccard's candidate filter) — without an eager pin Spark
+        # re-runs that scan per consumer
         cand = D.lsh_incremental_candidates(
-            all_sigs,
-            doc_part.select("doc_id"),
+            _union_all([b for _, b in parts.values()] + [band_part]),
+            band_part,
             max_bucket=_JACCARD_MAX_BUCKET,
-            bands=all_bands,
-            new_bands=band_batch,
         ).localCheckpoint(eager=True)
         cand_ids = (
             cand.select(F.col("a").alias("doc_id"))
             .union(cand.select(F.col("b").alias("doc_id")))
             .distinct()
         )
-        seen_docs = _union_all([standing] + list(state["doc_parts"].values()))
-        cand_docs = (
-            seen_docs.unionByName(doc_part)
-            .join(F.broadcast(cand_ids), "doc_id", "left_semi")
+        cand_docs = _union_all([d for d, _ in parts.values()] + [doc_part]).join(
+            F.broadcast(cand_ids), "doc_id", "left_semi"
         )
         # cand_docs is already the candidate restriction (semi-join
         # above), so skip pair_jaccard's internal re-restriction and
-        # the spread shuffle — a handful of docs explodes in place
+        # the spread shuffle — a handful of docs explodes in place, and
+        # their shingle counts come from the same explode
         ver = D.pair_jaccard(
             D.exploded_shingles(cand_docs, spread=False),
             pairs=cand,
-            counts=all_sigs.select("doc_id", "n_sh"),
             restrict=False,
         ).filter(F.col("jaccard") >= 0.5)
-        # Idempotent per batch (ADVICE r12): out_dir is read back as the
-        # query RESULT, so a retried _bid must REPLACE its earlier
-        # attempt's pairs, never append beside them — each batch owns a
-        # bid-keyed subdirectory written with overwrite. (The docs/sigs
-        # stores got the same bid-keyed overwrite treatment above, so
-        # the r12 at-least-once append hazard on them is retired too.)
+        # out_dir is read back as the query RESULT, so a retried _bid
+        # must REPLACE its earlier attempt's pairs, never append beside
+        # them — each batch owns a bid-keyed subdirectory written with
+        # overwrite
         ver.select("a", "b", dround("jaccard", 6).alias("jaccard")).write.mode(
             "overwrite"
         ).parquet(os.path.join(out_dir, f"bid_{_bid}"))
         # absorb AFTER pairing so the batch never pairs against itself
-        # through the store (it pairs against itself via all_sigs):
-        # durable bid-keyed overwrite subdirectories (retry-idempotent,
-        # round 14 — these reads come from the checkpoint blocks, so
-        # each write is one cheap job like the appends it replaces)
-        # + the in-memory cache parts
-        doc_part.write.mode("overwrite").parquet(
-            os.path.join(docs_dir, f"bid_{_bid}")
-        )
-        sig_batch.write.mode("overwrite").parquet(
-            os.path.join(sig_dir, f"bid_{_bid}")
-        )
-        state["sig_parts"][_bid] = sig_batch
-        state["band_parts"][_bid] = band_batch
-        state["doc_parts"][_bid] = doc_part
+        # through the store (it pairs against itself via band_part)
+        parts[_bid] = (doc_part, band_part)
 
     return absorb
 

@@ -1119,26 +1119,21 @@ def test_lsh_incremental_prebuilt_bands_plan_never_rescans_store(spark, tmp_path
     the candidate plan must contain NO scan of the signature store's
     parquet — the per-batch corpus work is a memory-block scan of
     pre-hashed (id, bucket) rows. This is the executed-plan proof that
-    stream_incremental_dedup's absorb loop stopped re-reading and
-    re-hashing the store every micro-batch."""
+    stream_incremental_dedup's absorb loop does not re-read and
+    re-hash the store every micro-batch."""
     rows = [(i, f"x{i % 7}") for i in range(60)]
     shingled = spark.createDataFrame(rows, "doc_id long, shingle string")
     store = str(tmp_path / "sigstore")
     dedup.minhash_signatures(shingled).write.parquet(store)
     sigs = spark.read.parquet(store)
-    bands = dedup._band_buckets(sigs).localCheckpoint(eager=True)
-    new_ids = spark.createDataFrame([(59,)], "doc_id long")
+    bands = dedup.band_buckets(sigs).localCheckpoint(eager=True)
+    new_bands = bands.filter(F.col("doc_id") == 59)
 
-    slow = dedup.lsh_incremental_candidates(sigs, new_ids, max_bucket=50)
-    assert "Scan parquet" in plan_str(slow, "simple")  # self-computed path scans
-
-    fast = dedup.lsh_incremental_candidates(
-        sigs, new_ids, max_bucket=50, bands=bands
-    )
-    p = plan_str(fast, "simple")
+    cand = dedup.lsh_incremental_candidates(bands, new_bands, max_bucket=50)
+    p = plan_str(cand, "simple")
     assert "Scan parquet" not in p, p  # store never re-read, bands never re-hashed
     assert "Scan ExistingRDD" in p, p  # the pinned band store is the input
-    # non-vacuous: both paths agree on the candidates
-    assert {(r.a, r.b) for r in fast.collect()} == {
-        (r.a, r.b) for r in slow.collect()
+    # non-vacuous: doc 59 collides with the docs sharing its shingle
+    assert {(r.a, r.b) for r in cand.collect()} == {
+        (i, 59) for i in range(59) if i % 7 == 59 % 7
     }

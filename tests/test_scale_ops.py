@@ -269,81 +269,22 @@ def test_lsh_incremental_candidates_cap_filters_before_bucket_join(spark, caplog
     rows = [(i, f"x{k}") for i in range(30) for k in range(3)]
     rows += [(d, f"y{k}") for d in (100, 101) for k in range(3)]
     shingled = spark.createDataFrame(rows, "doc_id long, shingle string")
-    sig = D.minhash_signatures(shingled)
+    bands = D.band_buckets(D.minhash_signatures(shingled))
     new_ids = spark.createDataFrame([(29,), (101,)], "doc_id long")
+    new_bands = bands.join(F.broadcast(new_ids), "doc_id", "left_semi")
 
-    uncapped = D.lsh_incremental_candidates(sig, new_ids).count()
+    uncapped = D.lsh_incremental_candidates(bands, new_bands).count()
     assert uncapped == 29 + 1  # doc 29 × standing 0..28, plus (100, 101)
 
     with caplog.at_level(logging.WARNING):
         capped = {
             (r.a, r.b)
             for r in D.lsh_incremental_candidates(
-                sig, new_ids, max_bucket=10
+                bands, new_bands, max_bucket=10
             ).collect()
         }
     assert capped == {(100, 101)}
     assert any("hot band bucket" in r.message for r in caplog.records)
-
-
-def test_lsh_incremental_prebuilt_bands_identical(spark):
-    """The prebuilt-bands fast path (VERDICT r10 item 4:
-    stream_incremental_dedup keeps the band store pinned across
-    micro-batches instead of re-hashing it per batch) must produce
-    byte-identical candidate pairs to the self-computed path — with
-    and without the hot-bucket guard."""
-    from a_share_data_pipeline_spark.operators import dedup as D
-
-    rows = [(i, f"x{k}") for i in range(30) for k in range(3)]
-    rows += [(d, f"y{k}") for d in (100, 101) for k in range(3)]
-    shingled = spark.createDataFrame(rows, "doc_id long, shingle string")
-    sig = D.minhash_signatures(shingled)
-    bands = D._band_buckets(sig).localCheckpoint(eager=True)
-    new_ids = spark.createDataFrame([(29,), (101,)], "doc_id long")
-
-    for cap in (None, 10):
-        want = {
-            (r.a, r.b)
-            for r in D.lsh_incremental_candidates(
-                sig, new_ids, max_bucket=cap
-            ).collect()
-        }
-        got = {
-            (r.a, r.b)
-            for r in D.lsh_incremental_candidates(
-                sig, new_ids, max_bucket=cap, bands=bands
-            ).collect()
-        }
-        # and with the probe side pre-restricted by the caller
-        nb = bands.join(F.broadcast(new_ids), "doc_id", "left_semi")
-        got2 = {
-            (r.a, r.b)
-            for r in D.lsh_incremental_candidates(
-                sig, new_ids, max_bucket=cap, bands=bands, new_bands=nb
-            ).collect()
-        }
-        assert want == got == got2 and want, cap
-
-
-def test_lsh_incremental_new_bands_without_bands_rejected(spark):
-    """ADVICE r11: new_bands is the new-ids restriction OF the prebuilt
-    bands table — passing it alone is an invalid combination that the
-    self-computed branch used to silently discard. It must fail loudly,
-    not run the slow path while the caller believes the fast path is
-    live."""
-    import pytest
-
-    from a_share_data_pipeline_spark.operators import dedup as D
-
-    rows = [(i, f"x{k}") for i in range(4) for k in range(3)]
-    shingled = spark.createDataFrame(rows, "doc_id long, shingle string")
-    sig = D.minhash_signatures(shingled)
-    new_ids = spark.createDataFrame([(3,)], "doc_id long")
-    nb = D._band_buckets(sig).join(
-        F.broadcast(new_ids), "doc_id", "left_semi"
-    )
-    with pytest.raises(ValueError, match="new_bands was passed without"):
-        D.lsh_incremental_candidates(sig, new_ids, new_bands=nb)
 
 
 def test_salted_join_wins_where_aqe_skew_split_cannot_apply(spark):

@@ -330,7 +330,7 @@ def test_stream_canonical_delta_full_replay_no_duplicates(spark, tmp_path):
 def test_stream_cap_semantics_as_of_batch(spark):
     """Pins stream_incremental_dedup's mid-stream hot-bucket-cap
     semantics (VERDICT r7 item 3): the guard evaluates bucket sizes
-    AS OF each micro-batch's (store + batch) signature set, so
+    AS OF each micro-batch's (store + batch) band table, so
 
     - pairs verified while the bucket was still under the cap STAND
       (arrival-time verification is never retracted), and
@@ -343,46 +343,38 @@ def test_stream_cap_semantics_as_of_batch(spark):
     ingestion hot buckets WILL cross mid-stream — this test is the
     documented-behavior contract for that regime, replaying the exact
     absorb-loop composition (lsh_incremental_candidates over
-    store ∪ batch, then absorb) with a 4-cap and identical-boilerplate
-    docs that share every band bucket."""
+    store ∪ batch band tables, then absorb) with a 4-cap and
+    identical-boilerplate docs that share every band bucket."""
     from a_share_data_pipeline_spark.operators import dedup as D
 
     CAP = 4
     text = "the same boilerplate paragraph repeated across mirrors " * 3
 
-    def docs(ids):
-        return spark.createDataFrame(
+    def bands(ids):
+        df = spark.createDataFrame(
             [(i, text) for i in ids], "doc_id long, text string"
         )
+        return D.band_buckets(D.minhash_signatures(D.exploded_shingles(df)))
 
-    def sigs(df):
-        return D.minhash_signatures(D.exploded_shingles(df))
-
-    store = sigs(docs([0, 1, 2])).localCheckpoint(eager=True)  # 3 < CAP
+    store = bands([0, 1, 2]).localCheckpoint(eager=True)  # 3 < CAP
     found: set[tuple[int, int]] = set()
     for batch_ids in ([3], [4, 5]):  # bucket hits 4 (= CAP), then 6 (> CAP)
-        batch = docs(batch_ids)
-        sig_batch = sigs(batch).localCheckpoint(eager=True)
-        all_sigs = store.unionByName(sig_batch)
-        cand = D.lsh_incremental_candidates(
-            all_sigs, batch.select("doc_id"), max_bucket=CAP
-        )
+        band_batch = bands(batch_ids).localCheckpoint(eager=True)
+        all_bands = store.unionByName(band_batch)
+        cand = D.lsh_incremental_candidates(all_bands, band_batch, max_bucket=CAP)
         found |= {(r.a, r.b) for r in cand.collect()}
-        store = all_sigs.localCheckpoint(eager=True)  # absorb after pairing
+        store = all_bands.localCheckpoint(eager=True)  # absorb after pairing
     # batch 1 paired doc 3 against the whole store; batch 2's docs met
     # only a hot bucket and paired with nothing
     assert found == {(0, 3), (1, 3), (2, 3)}
     # the one-shot guard over the final corpus drops the bucket entirely
-    one_shot = D.lsh_incremental_candidates(
-        store, docs([3, 4, 5]).select("doc_id"), max_bucket=CAP
-    )
+    new_bands = store.filter(F.col("doc_id") >= 3)
+    one_shot = D.lsh_incremental_candidates(store, new_bands, max_bucket=CAP)
     assert one_shot.count() == 0
     # sanity: unguarded, the corpus is fully pairable (the divergence
     # is the guard's, not an artifact of the fixture)
     assert (
-        D.lsh_incremental_candidates(
-            store, docs([3, 4, 5]).select("doc_id"), max_bucket=None
-        ).count()
+        D.lsh_incremental_candidates(store, new_bands, max_bucket=None).count()
         > 0
     )
 
@@ -432,9 +424,9 @@ def test_incdedup_absorb_retry_replaces_pairs_and_parts(spark, tmp_path):
     equality in exactly the failure scenario the parts fix defends
     against). Drives the factored-out absorb closure twice with the
     same _bid and asserts the read-back output converges."""
-    from a_share_data_pipeline_spark.operators import dedup as D
     from a_share_data_pipeline_spark.plans.queries_streaming import (
         _incdedup_make_absorb,
+        _incdedup_store,
     )
 
     text = "a shared near duplicate paragraph body across mirrors " * 4
@@ -445,17 +437,8 @@ def test_incdedup_absorb_retry_replaces_pairs_and_parts(spark, tmp_path):
         [(10, text), (11, text + " tail zero")], "doc_id long, text string"
     )
     out_dir = str(tmp_path / "pairs")
-    docs_dir = str(tmp_path / "docs")
-    sig_dir = str(tmp_path / "sigs")
-    sigs0 = D.minhash_signatures(
-        D.exploded_shingles(standing), with_counts=True
-    ).localCheckpoint(eager=True)
-    state = {
-        "sig_parts": {-1: sigs0},
-        "band_parts": {-1: D._band_buckets(sigs0).localCheckpoint(eager=True)},
-        "doc_parts": {},
-    }
-    absorb = _incdedup_make_absorb(state, standing, out_dir, docs_dir, sig_dir)
+    parts = _incdedup_store(standing)
+    absorb = _incdedup_make_absorb(parts, out_dir)
     absorb(batch, 0)
 
     def pairs():
@@ -474,8 +457,25 @@ def test_incdedup_absorb_retry_replaces_pairs_and_parts(spark, tmp_path):
     absorb(batch, 0)
     assert pairs() == first, "retried batch doubled its pairs"
     # in-memory parts singly registered (one entry per _bid, not a pile)
-    for parts in state.values():
-        assert set(parts) <= {-1, 0}
+    assert set(parts) <= {-1, 0}
+
+
+def test_incdedup_temp_root_holds_only_landing_ckpt_pairs(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """stream_incremental_dedup keeps its state in memory, so its temp
+    root holds only the landed input files, the stream checkpoint and
+    the pairs the result reads: no write-only copy of the docs or of
+    derived signatures."""
+    import tempfile
+
+    from a_share_data_pipeline_spark.plans.catalog import registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    registry()["stream_incremental_dedup"].fn(spark, sf_smoke).collect()
+    roots = list(tmp_path.glob("stream_incdedup_*"))
+    assert len(roots) == 1, roots
+    assert sorted(os.listdir(roots[0])) == ["ckpt", "landing", "pairs"]
 
 
 # width-scoped query -> whether its result is read on the clone
