@@ -2,47 +2,45 @@
 
 Near-dup pipelines end with "group the pairs into clusters, keep one
 canonical doc per cluster" — that grouping is connected components on
-the candidate-pair graph. The reference has nothing iterative
-(SURVEY.md §3: three linear flows), so this is a pure [GAP] capability;
-it is also the one operator family here that genuinely cannot be a
-single Catalyst plan and needs a driver-side fixed-point loop.
+the candidate-pair graph; entity resolution, DBSCAN's core-cell graph
+and the incremental co-purchase graph run the same operator. The
+component is the minimum reachable node id: every DuckDB oracle
+(recursive-CTE closure) and sweep.py's union-find replay rely on it.
+The reference has nothing iterative (SURVEY.md §3: three linear
+flows), so this is a pure [GAP] capability.
 
-Scale design:
-- the loop runs ONLY over nodes that appear in an edge: in a deduped
-  corpus the overwhelming majority of docs are singletons whose label
-  cannot change, so every per-round join/aggregate AND per-round
-  label checkpoint is sized by the pair graph, not the corpus (the
-  previous shape re-materialized a corpus-sized label frame every
-  round — the actual 100 TB killer); singletons rejoin as their own
-  component in one anti-join at the end. At bench scale this trades
-  ~0.5s of fixed extra jobs (distinct + anti-join + union) for the
-  asymptotic win — measured interleaved A/B at sf0.1: restricted
-  5.08s mean vs corpus-wide 6.09s mean (4.61 vs 4.07 steady-state
-  min),
-- each iteration is one shuffle (edge⋈label join + min-aggregate);
-  label state is `localCheckpoint`ed every round so the plan/lineage
-  does not grow with the iteration count (the classic iterative-Spark
-  failure mode),
-- min-label propagation converges in O(diameter) rounds; dedup
-  clusters are near-cliques (diameter ≤ ~3), so 3-5 rounds finish.
-  For adversarial long-chain graphs switch `fold_edges=True`, which
-  additionally rewrites each edge endpoint to its current label
-  (pointer-doubling-style contraction, O(log n) rounds on chains).
-  Measured rule of thumb (r9, sf0.1): fold pays ONLY when diameter
-  is large (geo percolation chains — required there, the plain loop
-  would exceed max_iters); on hub-dominated small-diameter graphs
-  the per-round contraction (two joins + distinct + re-symmetrize)
-  costs more than it saves — the 587k-edge bipartite co-purchase
-  graph benched 3.3-3.6s plain vs 3.8-4.2s folded, so
-  graph_cc_incremental/er_resolve/dedup stay fold-free,
-- convergence is detected with a count of changed labels — one extra
-  cheap action per round on an already-checkpointed frame.
+Shape — contract locally before any global round (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC 2014):
+- edges survive only when BOTH endpoints are in ``nodes``; the kept
+  edge set is pinned once and its size rides that pin (``observe``),
+  so sizing the next step costs no job of its own,
+- a NumPy union-find kernel runs inside ``mapInArrow`` and labels a
+  whole partition's edge set in ONE task: ``np.unique`` maps ids to
+  sorted indices (index order = Spark's id order; for string ids
+  Python's code-point order equals Spark's UTF-8 byte order), so the
+  local min index is the min id; then rounds of root hooking
+  (``np.minimum.at``) and pointer jumping (``lbl = lbl[lbl]``) until
+  every edge joins equal roots, all inside the task (a shuffled
+  4 M-node chain takes 14 rounds). It emits (node, local min) for
+  every node it saw; the union of those stars has exactly the
+  input's components,
+- the edges spread over ``ceil(E / _KERNEL_EDGES)`` partitions. With
+  one partition the kernel's labels are final, so the Spark job count
+  does not depend on the graph's diameter. With more, hash-min rounds
+  over the star forest finish the merge (each round one
+  join + min-aggregate, pinned so lineage stays flat) and stop when
+  no label moves — the moved count rides each round's pin; there is
+  no round cap,
+- nodes on no kept edge never enter the kernel (in a deduped corpus
+  nearly every doc is a singleton); they rejoin as their own
+  component in one anti-join at the end.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 # pagerank/personalized_pagerank: cut the single-use rank chain's
 # lineage every N unrolled rounds. Small fixed iteration counts (the
@@ -51,100 +49,119 @@ from pyspark.sql import functions as F
 # analysis cost grows superlinearly with depth.
 _CHECKPOINT_EVERY = 8
 
+# connected_components: edges one kernel task labels. The task holds
+# its partition as NumPy arrays (the Arrow input, both id columns,
+# their concatenation, np.unique's sort and inverse, labels and each
+# round's gathers), about 120 B per int64 edge: er_resolve at sf0.1,
+# 3.89 M edges, peaks at 615 MB of Python worker RSS on a 4-vCPU host.
+# 1 << 22 keeps a worker near that and every caller at sf0.1 in one
+# task; splitting er_resolve four ways measured slower (more jobs,
+# same answer).
+_KERNEL_EDGES = 1 << 22
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    max_iters: int = 25,
-    fold_edges: bool = False,
-) -> DataFrame:
+
+def connected_components(nodes: DataFrame, edges: DataFrame, id_col: str = "id") -> DataFrame:
     """(id, component) for every node; component = min reachable node id.
 
     ``nodes``: one column `id_col` (isolated nodes keep their own id as
-    component). ``edges``: columns (a, b), undirected, any orientation;
-    endpoints outside ``nodes`` are DROPPED along with the edges through
-    them (enforced below), so the output is always keyed exactly by the
-    ``nodes`` input and connectivity never flows through an unknown node.
+    component). ``edges``: columns (a, b), undirected, any orientation,
+    duplicates allowed; an edge with an endpoint outside ``nodes`` is
+    DROPPED, so the output is keyed exactly by the ``nodes`` input and
+    connectivity never flows through an unknown node.
     """
-    sym = edges.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        edges.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    )
-    sym = sym.localCheckpoint(eager=True)
-    # iterate ONLY over nodes that appear in an edge: in a deduped
-    # corpus the overwhelming majority of nodes are singletons whose
-    # label can never change — keeping them out shrinks every per-round
-    # join/aggregate to the pair-graph's node set; they rejoin as their
-    # own component at the end.
-    #
-    # endpoints ⊆ nodes is enforced AT LABEL INIT, not by rewriting
-    # sym: labels = (edge endpoints ∩ nodes), so a stray endpoint never
-    # acquires a label — the per-round inner join on src drops edges
-    # OUT of a stray node, and the left join back onto labels discards
-    # propagation INTO one, so an edge with a stray endpoint disappears
-    # entirely and its valid endpoint stays a singleton. This costs one
-    # map-only broadcast semi-join folded into the labels init that was
-    # already checkpointed (the distinct endpoint set is
-    # pair-graph-sized; the nodes frame is scanned once, never
-    # shuffled) — versus the previous shape's two extra eager sym
-    # checkpoints + two broadcast joins over the full edge list, which
-    # benched at +0.8s fixed cost (dedup_components 3.38→4.15s).
-    edge_nodes = sym.select(F.col("src").alias("node")).distinct()
-    labels = (
-        nodes.select(F.col(id_col).alias("node"))
-        .join(F.broadcast(edge_nodes), "node", "left_semi")
-        .select("node", F.col("node").alias("lbl"))
+    node = nodes.select(F.col(id_col).alias("node"))
+    id_type = node.schema["node"].dataType
+    sized = Observation()
+    kept = (
+        edges.join(node.withColumnRenamed("node", "a"), "a", "left_semi")
+        .join(node.withColumnRenamed("node", "b"), "b", "left_semi")
+        .select(F.col("a").cast(id_type).alias("a"), F.col("b").cast(id_type).alias("b"))
+        .observe(sized, F.count(F.lit(1)).alias("edges"))
         .localCheckpoint(eager=True)
     )
+    parts = (sized.get["edges"] + _KERNEL_EDGES - 1) // _KERNEL_EDGES
+    if parts == 0:  # no kept edge: every node is its own component
+        return node.select(F.col("node").alias(id_col), F.col("node").alias("component"))
 
-    for _ in range(max_iters):
-        # neighbor minimum: join edge source to its label, aggregate per dst
-        nbr_min = (
+    # NESTED so cloudpickle ships it by value: a Python worker cannot
+    # be assumed to import this package
+    def _union_find(it):
+        import numpy as np
+        import pyarrow as pa
+
+        batches = list(it)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        a = t.column("a").to_numpy(zero_copy_only=False)
+        b = t.column("b").to_numpy(zero_copy_only=False)
+        ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+        ea, eb = inv[: len(a)], inv[len(a) :]
+        lbl = np.arange(len(ids))
+        while True:
+            ra, rb = lbl[ea], lbl[eb]
+            live = ra != rb
+            if not live.any():
+                break
+            # an edge whose endpoints share a root keeps sharing it
+            ea, eb, ra, rb = ea[live], eb[live], ra[live], rb[live]
+            # hook every root onto the smallest root across its edges;
+            # labels only fall, so no cycle can form
+            np.minimum.at(lbl, ra, rb)
+            np.minimum.at(lbl, rb, ra)
+            while True:
+                jumped = lbl[lbl]
+                if np.array_equal(jumped, lbl):
+                    break
+                lbl = jumped
+        typ = t.schema.field("a").type
+        yield pa.record_batch(
+            [pa.array(ids, type=typ), pa.array(ids[lbl], type=typ)], names=["node", "lbl"]
+        )
+
+    schema = StructType([StructField("node", id_type), StructField("lbl", id_type)])
+    if parts == 1:
+        labels = kept.coalesce(1).mapInArrow(_union_find, schema).localCheckpoint(eager=True)
+    else:
+        stars = kept.repartition(parts, "a").mapInArrow(_union_find, schema)
+        labels = _hash_min(stars.localCheckpoint(eager=True))
+    singletons = node.join(labels.select("node"), "node", "left_anti")
+    return labels.unionByName(singletons.select("node", F.col("node").alias("lbl"))).select(
+        F.col("node").alias(id_col), F.col("lbl").alias("component")
+    )
+
+
+def _hash_min(stars: DataFrame) -> DataFrame:
+    """(node, lbl) = min reachable node over the union of the kernel
+    tasks' (node, local min) stars; a node seen by several tasks has
+    one star row per task. Min-label propagation until no label moves."""
+    sym = (
+        stars.select(F.col("node").alias("src"), F.col("lbl").alias("dst"))
+        .unionByName(stars.select(F.col("lbl").alias("src"), F.col("node").alias("dst")))
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=True)
+    )
+    labels = stars.groupBy("node").agg(F.min("lbl").alias("lbl")).localCheckpoint(eager=True)
+    while True:
+        nbr = (
             sym.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("nbr_lbl"))
+            .agg(F.min("lbl").alias("nbr"))
         )
-        new_labels = (
-            labels.join(nbr_min, "node", "left")
-            .select("node", F.least("lbl", "nbr_lbl").alias("lbl"), F.col("lbl").alias("old"))
-        ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("lbl") < F.col("old")).limit(1).count()
-        labels = new_labels.select("node", "lbl")
-        if changed == 0:
-            break
-        if fold_edges:
-            # contract: re-point both edge endpoints at current labels
-            # (shortcuts long chains, pointer-doubling style), and keep a
-            # "star" edge node↔label for every relabeled node — without
-            # it, contracted-away nodes stop receiving updates and end
-            # with a stale intermediate label
-            la = labels.select(F.col("node").alias("src"), F.col("lbl").alias("sa"))
-            lb = labels.select(F.col("node").alias("dst"), F.col("lbl").alias("sb"))
-            contracted = (
-                sym.join(la, "src")
-                .join(lb, "dst")
-                .select(F.col("sa").alias("src"), F.col("sb").alias("dst"))
+        moved = Observation()
+        labels = (
+            labels.join(nbr, "node", "left")
+            .select(
+                "node",
+                F.least("lbl", "nbr").alias("lbl"),
+                (F.col("nbr") < F.col("lbl")).alias("moved"),
             )
-            star = labels.filter(F.col("node") != F.col("lbl")).select(
-                F.col("node").alias("src"), F.col("lbl").alias("dst")
-            )
-            half = (
-                contracted.unionByName(star)
-                .filter(F.col("src") != F.col("dst"))
-                .distinct()
-            )
-            sym = half.unionByName(
-                half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            ).localCheckpoint(eager=True)
-    # anti-join against the CHECKPOINTED labels (same node set as
-    # edge_nodes) so the final job reads materialized blocks instead of
-    # recomputing the distinct
-    singletons = nodes.select(F.col(id_col).alias("node")).join(
-        labels.select("node"), "node", "left_anti"
-    )
-    return labels.unionByName(
-        singletons.select("node", F.col("node").alias("lbl"))
-    ).select(F.col("node").alias(id_col), F.col("lbl").alias("component"))
+            .observe(moved, F.count_if("moved").alias("moved"))
+            .select("node", "lbl")
+            .localCheckpoint(eager=True)
+        )
+        if moved.get["moved"] == 0:
+            return labels
 
 
 def pagerank(

@@ -455,7 +455,7 @@ _REGISTRY: dict[str, Query] = {}
 # families): stats_benjamini_hochberg (the inference family's first
 # window row — multiple-testing control, A&S erfc device),
 # geo_dbscan_grid (the geo family's first window row — grid join +
-# fold_edges CC capstone), cdc_time_travel (multi-version AS OF —
+# union-find CC capstone), cdc_time_travel (multi-version AS OF —
 # the CDC family's unverified half), curation_model_filter (the
 # learned quality-filter APPLY lane), agg_moments_merge
 # (re-aggregatable algebraic moments — the sketch-algebra row beyond

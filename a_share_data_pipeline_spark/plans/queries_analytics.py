@@ -4434,8 +4434,8 @@ def dedup_suffix_prefix_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CCI_CUTOFF = "1998-01-01"  # base = orders before; delta = on/after
 
 # Node encoding: customers = 2·custkey, suppliers = 2·suppkey+1 —
-# the k-core/pagerank int64-encode discipline (hash-min CC over int
-# keys, measured ~2x vs string ids); labels decode at emit and the
+# the k-core/pagerank int64-encode discipline (CC over int keys,
+# measured ~2x vs string ids); labels decode at emit and the
 # component id is the decoded min-ENCODED member on both engines.
 _CCI_DECODE_SQL = (
     "CASE WHEN {x} % 2 = 0 THEN 'c' || CAST({x} // 2 AS VARCHAR) "
@@ -4474,7 +4474,7 @@ FROM comp
         "maintenance for the iterative operator family (the graph "
         "sibling of rollup_incremental/join IVM): the customer⇄"
         f"supplier co-purchase graph splits at {_CCI_CUTOFF} into a "
-        "base (labeled once by the standard hash-min CC) and a delta "
+        "base (labeled once by connected_components) and a delta "
         "of NEW edges; instead of relabeling the world, delta edges "
         "CONTRACT to (base-label, base-label) pairs, a second CC runs "
         "on that contracted graph — sized by the DELTA's touched "
@@ -4486,11 +4486,8 @@ FROM comp
         "the Spark side too). Endpoints unseen in the base enter the "
         "contracted graph as themselves — no special case. Nodes ride "
         "as int64 (2k / 2k+1 bipartite encode, the k-core discipline) "
-        "and decode only at emit; measured at sf0.1 the encode is "
-        "cost-NEUTRAL (~12s either way — local-mode time is the "
-        "convergence loop's per-round job overhead, not key width), "
-        "kept because at cluster scale int keys halve the shuffled "
-        "bytes of every CC round"
+        "and decode only at emit, so every shuffle and the union-find "
+        "kernel carry 8-byte keys instead of strings"
     ),
 )
 def graph_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

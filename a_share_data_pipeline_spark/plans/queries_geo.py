@@ -778,13 +778,7 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    # fold_edges: a spatial percolation cluster spans the whole grid,
-    # so the plain min-label loop needs O(diameter) ~ O(grid width)
-    # rounds and would hit max_iters; edge contraction converges in
-    # O(log d) — and post-contraction every round is grid-sized
-    comp_rep = connected_components(
-        rep.select(F.col("rep").alias("id")), contracted, fold_edges=True
-    )
+    comp_rep = connected_components(rep.select(F.col("rep").alias("id")), contracted)
     # eager pin: comp feeds border + assigned + summary (and summary
     # feeds glob + the final join) — without it every consumer re-runs
     # the whole cnt/core/contraction chain (plan capture showed the

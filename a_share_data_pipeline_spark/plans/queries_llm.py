@@ -1072,8 +1072,8 @@ def components_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     _COMPONENTS_SQL,
     doc=(
         "dedup clustering: connected components over the jaccard>=0.05 "
-        "pair graph (operators/graph.py, iterative min-label propagation "
-        "with per-round localCheckpoint); component = min reachable "
+        "pair graph (operators/graph.py, one NumPy union-find task over the "
+        "kept pair edges); component = min reachable "
         "doc_id, canonical doc = component representative; the pair "
         "graph is built through the SAME stop-shingle guard as "
         "dedup_ngram_jaccard (buckets > 1000 docs dropped pre-expansion, "
