@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .operators import assembly
 from .schemas import CANONICAL
+from .session import pin
 from .sources import sinks
 from .streaming.incremental import WatermarkStore
 
@@ -89,9 +90,10 @@ def delta_flow(
     date-range filter on each fact scan — at scale this is static
     partition pruning to exactly the pending date partitions.
 
-    The delta is evaluated ONCE (eager localCheckpoint): the empty
-    check, the staging append, the publish and the returned frame all
-    see the same rows, even from a nondeterministic source.
+    The delta is evaluated ONCE (one ``pin``, which also counts its
+    rows): the empty check, the staging append, the publish and the
+    returned frame all see the same rows, even from a nondeterministic
+    source.
 
     The publish rewrites lines, not rows. The old published file is
     read as text, its header checked against CANONICAL (a mismatch
@@ -135,14 +137,17 @@ def delta_flow(
     else:
         in_range_cal = in_range
 
-    delta = assembly.assemble_canonical(
-        in_range_cal(daily),
-        in_range_cal(stk_limit),
-        in_range_cal(daily_basic),
-        stock_basic,
-        mode="delta",  # inner dim join doubles as the main-board filter (J3)
-    ).localCheckpoint(eager=True)
-    if delta.isEmpty():  # P6: no new rows → no publish, no advance
+    delta, seen = pin(
+        assembly.assemble_canonical(
+            in_range_cal(daily),
+            in_range_cal(stk_limit),
+            in_range_cal(daily_basic),
+            stock_basic,
+            mode="delta",  # inner dim join doubles as the main-board filter (J3)
+        ),
+        rows=F.count(F.lit(1)),
+    )
+    if seen["rows"] == 0:  # P6: no new rows → no publish, no advance
         return None
 
     sinks.append_csv(delta, staging_path)  # local delta CSV, ref :101-107

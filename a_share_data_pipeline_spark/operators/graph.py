@@ -38,9 +38,11 @@ Shape — contract locally before any global round (Kiveris et al.,
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+
+from ..session import pin
 
 # pagerank/personalized_pagerank: cut the single-use rank chain's
 # lineage every N unrolled rounds. Small fixed iteration counts (the
@@ -71,15 +73,13 @@ def connected_components(nodes: DataFrame, edges: DataFrame, id_col: str = "id")
     """
     node = nodes.select(F.col(id_col).alias("node"))
     id_type = node.schema["node"].dataType
-    sized = Observation()
-    kept = (
+    kept, seen = pin(
         edges.join(node.withColumnRenamed("node", "a"), "a", "left_semi")
         .join(node.withColumnRenamed("node", "b"), "b", "left_semi")
-        .select(F.col("a").cast(id_type).alias("a"), F.col("b").cast(id_type).alias("b"))
-        .observe(sized, F.count(F.lit(1)).alias("edges"))
-        .localCheckpoint(eager=True)
+        .select(F.col("a").cast(id_type).alias("a"), F.col("b").cast(id_type).alias("b")),
+        edges=F.count(F.lit(1)),
     )
-    parts = (sized.get["edges"] + _KERNEL_EDGES - 1) // _KERNEL_EDGES
+    parts = (seen["edges"] + _KERNEL_EDGES - 1) // _KERNEL_EDGES
     if parts == 0:  # no kept edge: every node is its own component
         return node.select(F.col("node").alias(id_col), F.col("node").alias("component"))
 
@@ -121,10 +121,10 @@ def connected_components(nodes: DataFrame, edges: DataFrame, id_col: str = "id")
 
     schema = StructType([StructField("node", id_type), StructField("lbl", id_type)])
     if parts == 1:
-        labels = kept.coalesce(1).mapInArrow(_union_find, schema).localCheckpoint(eager=True)
+        labels = pin(kept.coalesce(1).mapInArrow(_union_find, schema))
     else:
         stars = kept.repartition(parts, "a").mapInArrow(_union_find, schema)
-        labels = _hash_min(stars.localCheckpoint(eager=True))
+        labels = _hash_min(pin(stars))
     singletons = node.join(labels.select("node"), "node", "left_anti")
     return labels.unionByName(singletons.select("node", F.col("node").alias("lbl"))).select(
         F.col("node").alias(id_col), F.col("lbl").alias("component")
@@ -135,32 +135,28 @@ def _hash_min(stars: DataFrame) -> DataFrame:
     """(node, lbl) = min reachable node over the union of the kernel
     tasks' (node, local min) stars; a node seen by several tasks has
     one star row per task. Min-label propagation until no label moves."""
-    sym = (
+    sym = pin(
         stars.select(F.col("node").alias("src"), F.col("lbl").alias("dst"))
         .unionByName(stars.select(F.col("lbl").alias("src"), F.col("node").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=True)
     )
-    labels = stars.groupBy("node").agg(F.min("lbl").alias("lbl")).localCheckpoint(eager=True)
+    labels = pin(stars.groupBy("node").agg(F.min("lbl").alias("lbl")))
     while True:
         nbr = (
             sym.join(labels.withColumnRenamed("node", "src"), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lbl").alias("nbr"))
         )
-        moved = Observation()
-        labels = (
-            labels.join(nbr, "node", "left")
-            .select(
+        labels, seen = pin(
+            labels.join(nbr, "node", "left").select(
                 "node",
                 F.least("lbl", "nbr").alias("lbl"),
                 (F.col("nbr") < F.col("lbl")).alias("moved"),
-            )
-            .observe(moved, F.count_if("moved").alias("moved"))
-            .select("node", "lbl")
-            .localCheckpoint(eager=True)
+            ),
+            moved=F.count_if("moved"),
         )
-        if moved.get["moved"] == 0:
+        labels = labels.drop("moved")
+        if seen["moved"] == 0:
             return labels
 
 
@@ -253,15 +249,13 @@ def _rank_chain(
         F.count(F.lit(1)).alias("outdeg")
     )
     # static frames, each consumed once per round: materialize once
-    nodes_od = (
+    nodes_od = pin(
         nodes.join(outdeg, "node", "left")
         .select("node", F.coalesce("outdeg", F.lit(0)).alias("outdeg"))
-        .localCheckpoint(eager=True)
     )
-    edges_w = (
+    edges_w = pin(
         edges.join(outdeg.withColumnRenamed("node", "src"), "src")
         .select("src", "dst", "outdeg")
-        .localCheckpoint(eager=True)
     )
     ranks = nodes_od.select("node", r0.alias("rank"))
     for i in range(iters):
@@ -282,7 +276,7 @@ def _rank_chain(
             ).alias("rank"),
         )
         if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = pin(ranks)
     return ranks.select("node", "rank")
 
 
@@ -295,15 +289,15 @@ def _symmetrize(edges: DataFrame, dedup: bool = True) -> DataFrame:
     already distinct AND no reverse pair exists (e.g. a bipartite
     graph whose two sides use disjoint id ranges, like the
     customer-even / supplier-odd purchase graph). Neighbor-count
-    semantics (LPA) and min-relaxation (BFS) are both correct only
-    if the edge multiset is duplicate-free, so the flag is a
-    caller-supplied proof, not a tolerance."""
+    semantics (LPA) are correct only if the edge multiset is
+    duplicate-free, so the flag is a caller-supplied proof, not a
+    tolerance."""
     sym = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     if dedup:
         sym = sym.distinct()
-    return sym.localCheckpoint(eager=True)
+    return pin(sym)
 
 
 def label_propagation(
@@ -378,7 +372,7 @@ def label_propagation(
             .select("node", F.pmod(F.col("key"), shift).alias("lbl"))
         )
         if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            labels = labels.localCheckpoint(eager=True)
+            labels = pin(labels)
     return labels
 
 
@@ -388,50 +382,15 @@ def bfs_hops(
     max_hops: int = 3,
     edges_dedup: bool = True,
 ) -> DataFrame:
-    """Multi-source BFS hop distance over an UNDIRECTED edge list:
-    ``hops`` = length of the shortest path from any seed, up to
-    ``max_hops`` rounds; unreached nodes are dropped from the output
-    (at scale that is the point — k rounds from a small seed set touch
-    a local ball, the unreachable tail never materializes a row).
-
-    Each round relaxes every edge once: one O(E) join of the current
-    distance frame onto the symmetric edges, one min-aggregate per
-    destination, one left join back onto the (node, dist) state — the
-    dense Bellman-Ford-style relaxation (frontier-only would shuffle
-    less per round but needs a data-dependent stopping test; a fixed
-    small round count keeps the plan static and oracle-unrollable).
-    The NULL handling is explicit (CASE, not LEAST) because engines
-    disagree on LEAST's null semantics."""
-    sym = _symmetrize(edges, dedup=edges_dedup)
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    dist = nodes.select(
-        "node",
-        F.when(F.col("node").isin(*seeds), F.lit(0))
-        .otherwise(F.lit(None))
-        .cast("int")
-        .alias("hops"),
+    """Multi-source BFS hop distance over an UNDIRECTED edge list
+    (src, dst): ``hops`` = length of the shortest path from any seed,
+    up to ``max_hops`` rounds; unreached nodes are dropped. It is
+    :func:`sssp` with unit weight."""
+    unit = edges.select("src", "dst", F.lit(1).alias("w"))
+    return sssp(unit, seeds, max_rounds=max_hops, edges_dedup=edges_dedup).select(
+        "node", F.col("dist").cast("int").alias("hops")
     )
-    for i in range(max_hops):
-        relax = (
-            sym.join(
-                dist.filter(F.col("hops").isNotNull()),
-                sym["src"] == dist["node"],
-            )
-            .select(F.col("dst").alias("node"), (F.col("hops") + 1).alias("cand"))
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        dist = dist.join(relax, "node", "left").select(
-            "node",
-            F.when(F.col("hops").isNull(), F.col("cand"))
-            .when(F.col("cand").isNull(), F.col("hops"))
-            .otherwise(F.least("hops", "cand"))
-            .cast("int")
-            .alias("hops"),
-        )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < max_hops:
-            dist = dist.localCheckpoint(eager=True)
-    return dist.filter(F.col("hops").isNotNull())
+
 
 def sssp(
     edges: DataFrame,
@@ -442,15 +401,18 @@ def sssp(
     """Weighted multi-source shortest-path distance (bounded
     Bellman-Ford) over an UNDIRECTED weighted edge list (src, dst, w):
     ``dist`` = minimum total edge weight from any seed along paths of
-    at most ``max_rounds`` edges; unreached nodes are dropped (the
-    :func:`bfs_hops` scale argument — k rounds from a small seed set
-    touch a local ball, the unreachable tail never materializes).
+    at most ``max_rounds`` edges; unreached nodes are dropped (at scale
+    that is the point — k rounds from a small seed set touch a local
+    ball, the unreachable tail never materializes a row).
 
-    The weighted generalization of :func:`bfs_hops`: each round
-    relaxes every edge once (one O(E) join of the reachable frontier
-    onto the symmetric edges, one min-aggregate per destination, one
-    left join back onto the (node, dist) state); ``cand = dist + w``
-    instead of ``hops + 1``. Weights must be non-negative — bounded
+    Each round relaxes every edge once: one O(E) join of the reachable
+    frontier onto the symmetric edges, one min-aggregate per
+    destination, one left join back onto the (node, dist) state — the
+    dense relaxation (frontier-only would shuffle less per round but
+    needs a data-dependent stopping test; a fixed small round count
+    keeps the plan static and oracle-unrollable). The NULL handling is
+    explicit (CASE, not LEAST) because engines disagree on LEAST's null
+    semantics. Weights must be non-negative — bounded
     Bellman-Ford is still *correct* for negative weights within the
     round budget, but "shortest within k hops" stops being a useful
     distance there. Integer weights keep both engines bit-exact with
@@ -470,7 +432,7 @@ def sssp(
     )
     if edges_dedup:
         sym = sym.groupBy("src", "dst").agg(F.min("w").alias("w"))
-    sym = sym.localCheckpoint(eager=True)
+    sym = pin(sym)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     dist = nodes.select(
         "node",
@@ -500,5 +462,5 @@ def sssp(
             .alias("dist"),
         )
         if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < max_rounds:
-            dist = dist.localCheckpoint(eager=True)
+            dist = pin(dist)
     return dist.filter(F.col("dist").isNotNull())

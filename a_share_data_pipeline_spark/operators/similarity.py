@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import LSH_PLANES, lsh_planes
 from ..functions.rounding import dround
+from ..session import pin
 
 # banded sign-LSH shape for embedding near-dup candidate generation:
 # 8 bands × 8 planes. AND within a band (all 8 sign bits must agree),
@@ -528,10 +529,9 @@ def rp_rerank_topk(
     that write-time materialization. The per-pair float expression
     dot/(qrn·crn) keeps the oracle's exact operation order (each norm
     is its own sqrt, multiplied after), so rounding stays bit-equal."""
-    vp = (
+    vp = pin(
         vectors.select("c_id", random_project("cv").alias("cr"))
         .withColumn("crn", norm("cr"))
-        .localCheckpoint()
     )
     qp = queries.select("q_id", "qv", random_project("qv").alias("qr"))
     coarse = (

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
 from ..operators import dedup as D
-from ..session import clone_session, set_width, volume_width
+from ..session import clone_session, pin, set_width, volume_width
 from ..sources import load_table
 from .catalog import register
 
@@ -69,14 +69,13 @@ def purchase_iedges(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph_pagerank_personalized all ride it)."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    return (
+    return pin(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .select(
             (2 * F.col("o_custkey")).alias("src"),
             (2 * F.col("l_suppkey") + 1).alias("dst"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
 
@@ -388,8 +387,8 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * F.col("s_suppkey") + 1).alias("node"),
         F.col("s_nationkey").cast("bigint").alias("lbl"),
     )
-    labels = (
-        lpa.unionByName(cust).unionByName(supp).localCheckpoint(eager=True)
+    labels = pin(
+        lpa.unionByName(cust).unionByName(supp)
     )  # consumers: two endpoint remaps + the degree join
     m_df = ie.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("m"))
     la = labels.select(
@@ -520,7 +519,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # conf proxy's win came from trimming the full-width ingest,
     # which the scale-safe form must keep). OPTIMIZATION_r13.md §6.
     d = bfs_hops(
-        _edges(spark, sf_dir).localCheckpoint(eager=True),
+        pin(_edges(spark, sf_dir)),
         seeds=list(_BFS_SEEDS),
         max_hops=_BFS_HOPS,
         edges_dedup=False,
@@ -2042,7 +2041,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact verify) — materialize once; recomputing the split+explode
     # chain per consumer benched 2.4x slower (repo materialization
     # policy: shared derived frames use EAGER localCheckpoint)
-    shingled = D.exploded_shingles(aug).localCheckpoint(eager=True)
+    shingled = pin(D.exploded_shingles(aug))
     counts = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     # prefix under ASCENDING DOCUMENT FREQUENCY (ties by shingle): the
     # prefix keeps each doc's RAREST shingles, so prefix buckets are
@@ -2336,13 +2335,13 @@ def audit_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without this each edge would rescan lineitem and rebuild the
     # orphan union; repo materialization policy: eager localCheckpoint
     # for multi-consumer derived frames)
-    li = li0.unionByName(
+    li = pin(li0.unionByName(
         li0.filter(F.col("l_orderkey") % 53 == 0).select(
             (F.col("l_orderkey") + 1000000000).alias("l_orderkey"),
             (F.col("l_partkey") + 1000000000).alias("l_partkey"),
             (F.col("l_suppkey") + 1000000000).alias("l_suppkey"),
         )
-    ).localCheckpoint(eager=True)
+    ))
     orders = load_table(spark, sf_dir, "orders")
     part = load_table(spark, sf_dir, "part")
     sup = load_table(spark, sf_dir, "supplier")
@@ -2822,14 +2821,13 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    wedges = (
+    wedges = pin(
         orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
         .groupBy(
             (2 * F.col("o_custkey")).alias("src"),
             (2 * F.col("l_suppkey") + 1).alias("dst"),
         )
         .agg(F.min(F.col("l_quantity").cast("bigint")).alias("w"))
-        .localCheckpoint(eager=True)
     )
     iseeds = [2 * int(s[1:]) for s in _SSSP_SEEDS]
     d = sssp(wedges, seeds=iseeds, max_rounds=_SSSP_ROUNDS, edges_dedup=False)
@@ -3155,9 +3153,9 @@ def privacy_erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers (the orders audit row AND aff_orders feeding the
     # lineitem hop) — materialize once or the orders⟕delete-list join
     # runs twice per action (repo two-consumer checkpoint policy)
-    ord_flag = orders.join(
+    ord_flag = pin(orders.join(
         del_cust, orders["o_custkey"] == del_cust["c_custkey"], "left"
-    ).localCheckpoint(eager=True)
+    ))
     aff_orders = ord_flag.filter(F.col("c_custkey").isNotNull()).select(
         "o_orderkey"
     )
@@ -3261,12 +3259,12 @@ def stats_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dround(F.col("value") * 100, 0).cast("bigint")).alias("c")
     )
     w_all = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    idx = daily.select(
+    idx = pin(daily.select(
         "day",
         "c",
         (F.row_number().over(W.orderBy("day")) - 1).alias("i"),
         F.count(F.lit(1)).over(w_all).alias("n"),
-    ).localCheckpoint(eager=True)  # two consumers: grid + draw join
+    ))  # two consumers: grid + draw join
     bs = spark.range(_BOOT_B).select(F.col("id").alias("b"))
     h = F.conv(
         F.substring(
@@ -4030,11 +4028,11 @@ FROM scored GROUP BY doc_id
 )
 def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pos = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("p0", "tok")
-    ).select("doc_id", (F.col("p0") + 1).alias("p"), "tok").localCheckpoint(
-        eager=True
-    )  # consumers: unigram counts, total, both self-join sides
+    # consumers: unigram counts, total, both self-join sides
+    pos = pin(
+        docs.select("doc_id", F.posexplode(F.split("text", " ")).alias("p0", "tok"))
+        .select("doc_id", (F.col("p0") + 1).alias("p"), "tok")
+    )
     uni = pos.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     n = pos.agg(F.count(F.lit(1)).alias("n_tok"))
     a = pos.select("doc_id", "p", "tok")
@@ -4387,7 +4385,7 @@ def dedup_suffix_prefix_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ts = F.split(F.col("text"), " ")
     keyed = aug.select("doc_id", ts.alias("ts")).filter(F.size("ts") >= _STITCH_K)
-    edges = keyed.select(
+    edges = pin(keyed.select(
         "doc_id",
         F.md5(F.array_join(F.slice(F.col("ts"), 1, _STITCH_K), " ")).alias("prefix_h"),
         F.md5(
@@ -4396,7 +4394,7 @@ def dedup_suffix_prefix_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("suffix_h"),
         F.size("ts").cast("bigint").alias("n_tok"),
-    ).localCheckpoint(eager=True)  # consumers: both join sides + both
+    ))  # consumers: both join sides + both
     # hot-joint count frames
     lc = edges.groupBy(F.col("suffix_h").alias("joint")).agg(
         F.count(F.lit(1)).alias("nl")
@@ -4513,7 +4511,7 @@ def cc_incremental_labels(
     work = clone_session(spark)
     o = load_table(work, sf_dir, "orders")
     li = load_table(work, sf_dir, "lineitem")
-    edges_all = (
+    edges_all, seen = pin(
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(
             (F.lit(2) * F.col("o_custkey")).alias("a"),
@@ -4523,14 +4521,12 @@ def cc_incremental_labels(
             ),
         )
         .groupBy("a", "b")
-        .agg(F.max(F.col("is_base")).alias("is_base"))  # an edge seen in
-        # both eras is a base edge — the delta holds strictly NEW pairs
-        .localCheckpoint(eager=True)  # consumers: base CC, delta remap,
-        # node frame
+        .agg(F.max(F.col("is_base")).alias("is_base")),  # an edge seen in
+        # both eras is a base edge — the delta holds strictly NEW pairs;
+        # consumers: base CC, delta remap, node frame
+        rows=F.count(F.lit(1)),
     )
-    # edges_all is pinned, so this count is a metadata-cheap read; only
-    # the label-frame rounds below run at the narrowed width
-    set_width(work, volume_width(work, edges_all.count()))
+    set_width(work, volume_width(work, seen["rows"]))
     base_e = edges_all.filter(F.col("is_base")).select("a", "b")
     delta_e = edges_all.filter(~F.col("is_base")).select("a", "b")
     base_nodes = (
@@ -4538,9 +4534,8 @@ def cc_incremental_labels(
         .unionByName(base_e.select(F.col("b").alias("id")))
         .distinct()
     )
-    base_cc = connected_components(base_nodes, base_e).localCheckpoint(
-        eager=True
-    )  # (id, component); consumers: two endpoint remaps + final remap
+    # (id, component); consumers: two endpoint remaps + final remap
+    base_cc = pin(connected_components(base_nodes, base_e))
     lab = base_cc.select(F.col("id"), F.col("component").alias("lab"))
     # contract delta edges to base-label pairs; unseen endpoints keep
     # their own id as label
@@ -4958,11 +4953,10 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (5 seeds × symmetrized 1.17M-edge probe), so the width trim
     # costs CPU parallelism. OPTIMIZATION_r13.md §6.
     e0 = _edges(spark, sf_dir)
-    edges = (
+    edges = pin(
         e0.unionByName(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .localCheckpoint(eager=True)
     )
     d = spark.createDataFrame(
         [(s, s, 0) for s in _CLOSE_SEEDS], "seed string, node string, hops int"
@@ -4972,11 +4966,10 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.join(edges, d["node"] == edges["src"])
             .select("seed", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
         )
-        d = (
+        d = pin(
             d.unionByName(cand)
             .groupBy("seed", "node")
             .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=True)
         )
     r = d.filter(F.col("hops") > 0)
     return (
@@ -5184,11 +5177,10 @@ FROM cov c CROSS JOIN n_nodes n
 )
 def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
     e0 = _edges(spark, sf_dir)
-    edges = (
+    edges = pin(
         e0.unionByName(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .localCheckpoint(eager=True)
     )
     d = spark.createDataFrame(
         [(s, s, 0) for s in _CLOSE_SEEDS], "seed string, node string, hops int"
@@ -5198,11 +5190,10 @@ def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.join(edges, d["node"] == edges["src"])
             .select("seed", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
         )
-        d = (
+        d = pin(
             d.unionByName(cand)
             .groupBy("seed", "node")
             .agg(F.min("hops").alias("hops"))
-            .localCheckpoint(eager=True)
         )
     n_nodes = edges.select("src").distinct().count()
     denom = len(_CLOSE_SEEDS) * n_nodes

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources import load_table
 from ..functions.rounding import dround
 from .catalog import register
@@ -1010,9 +1011,9 @@ GROUP BY l_returnflag
 )
 def agg_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    shards = li.groupBy(
+    shards = pin(li.groupBy(
         "l_returnflag", F.year("l_shipdate").alias("yr")
-    ).agg(F.hll_sketch_agg("l_partkey", 12).alias("sk")).localCheckpoint(eager=True)
+    ).agg(F.hll_sketch_agg("l_partkey", 12).alias("sk")))
     merged = shards.groupBy("l_returnflag").agg(
         F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est_all")
     )

@@ -19,6 +19,7 @@ from ..operators import curation as CU
 from ..operators import text as TX
 from ..functions.rounding import dround
 from ..operators.text import LANG_MARKERS
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -1024,7 +1025,7 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_db = big.groupBy("doc_id", "is_t", "bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    per_db = per_db.localCheckpoint(eager=True)  # consumers: bucket
+    per_db = pin(per_db)  # consumers: bucket
     # table (model fit) + per-doc scoring
     btab = per_db.groupBy("bucket").agg(
         F.sum(F.when(F.col("is_t"), F.col("n")).otherwise(0))

@@ -19,6 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -84,14 +85,14 @@ WHERE 100 * p.c_ab >= {_MB_MINSUP_PCT} * n.n_baskets
 def assoc_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    items = (
+    items = pin(
         # no broadcast hint: part is SF-scaled — stats-based AQE
         # decides from the projected size (VERDICT r7 item 5)
         li.join(part, li.l_partkey == part.p_partkey)
         .select(F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item"))
         .distinct()
-        .localCheckpoint(eager=True)  # consumers: basket count, item
-        # counts, both sides of the pair self-join
+        # consumers: basket count, item counts, both sides of the pair
+        # self-join
     )
     n = items.agg(F.count_distinct(F.col("basket")).alias("n_baskets"))
     cnt = items.groupBy("item").agg(F.count(F.lit(1)).alias("c"))
@@ -410,23 +411,23 @@ FROM dev d JOIN mad m ON d.event_type = m.event_type
 )
 def profile_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    daily = (
+    daily = pin(
         ev.groupBy("event_type", F.col("ts").cast("date").alias("day"))
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)  # O(days·types) frame feeds the
+        # O(days·types) frame feeds the
         # med aggregate, the dev join, and (through dev) the mad
         # aggregate — without this the events scan runs 3×
     )
     med = daily.groupBy("event_type").agg(
         (F.lit(2) * F.expr("percentile(c, 0.5)")).cast("bigint").alias("med2")
     )
-    dev = daily.join(F.broadcast(med), "event_type").select(
+    dev = pin(daily.join(F.broadcast(med), "event_type").select(
         "event_type",
         "day",
         "c",
         "med2",
         F.abs(F.lit(2) * F.col("c") - F.col("med2")).alias("dev2"),
-    ).localCheckpoint(eager=True)  # consumers: mad aggregate + final emit
+    ))  # consumers: mad aggregate + final emit
     mad = dev.groupBy("event_type").agg(
         (F.lit(2) * F.expr("percentile(dev2, 0.5)")).cast("bigint").alias("mad4")
     )
@@ -586,7 +587,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bg")
     ).select(F.col("bg.wa").alias("wa"), F.col("bg.wb").alias("wb"))
     cnt = big.groupBy("wa", "wb").agg(F.count(F.lit(1)).alias("c_ab"))
-    cnt = cnt.localCheckpoint(eager=True)  # consumers: head marginal,
+    cnt = pin(cnt)  # consumers: head marginal,
     # tail marginal, the scored emit
     head = cnt.groupBy("wa").agg(F.sum("c_ab").alias("ha"))
     tail = cnt.groupBy("wb").agg(F.sum("c_ab").alias("tb"))
@@ -742,7 +743,7 @@ def events_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = units.groupBy("score").agg(
         F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")
     )
-    g = g.localCheckpoint(eager=True)  # consumers: the max aggregate
+    g = pin(g)  # consumers: the max aggregate
     # and the scored emit — without it the events scan runs twice
     m = g.agg(F.max("score").alias("maxs"))
     s, n, pos, maxs = F.col("score"), F.col("n"), F.col("pos"), F.col("maxs")

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -726,11 +727,11 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
     cells = _cells(spark, sf_dir)
-    neigh = (
+    neigh = pin(
         _grid_candidates(cells)
         .filter(F.col("dist2") <= _DB_EPS2)
         .select("id", "neighbor")
-        .localCheckpoint(eager=True)  # counts + core-edge + border consumers
+        # counts + core-edge + border consumers
     )
     cnt = neigh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     core = cnt.filter(F.col("n") >= _DB_MINPTS - 1).select("id")
@@ -783,10 +784,9 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds glob + the final join) — without it every consumer re-runs
     # the whole cnt/core/contraction chain (plan capture showed the
     # subtree duplicated; the old shape's CC labels were pinned too)
-    comp = (
+    comp = pin(
         core_rep.join(F.broadcast(comp_rep.withColumnRenamed("id", "rep")), "rep")
         .select(F.col("id").alias("node"), F.col("component").alias("cluster"))
-        .localCheckpoint(eager=True)
     )
     border = (
         neigh.join(core, "id", "left_anti")

@@ -16,6 +16,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import text as TX
+from ..session import pin
 from ..sources import load_table
 from ..functions.rounding import dround
 from .catalog import register
@@ -196,9 +197,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caller can safely place. On a real cluster the recompute-on-
     # executor-loss trade is the standard one for derived
     # (cheap-to-rebuild) frames.
-    shingled = D.exploded_shingles(docs).localCheckpoint(eager=True)
-    sig = D.minhash_signatures(shingled, with_counts=True).localCheckpoint(eager=True)
-    candidates = D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET).localCheckpoint(eager=True)
+    shingled = pin(D.exploded_shingles(docs))
+    sig = pin(D.minhash_signatures(shingled, with_counts=True))
+    candidates = pin(D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET))
     verified = D.pair_jaccard(shingled, pairs=candidates, counts=sig)
     return verified.filter(F.col("jaccard") >= 0.5).select(
         "a", "b", dround("jaccard", 6).alias("jaccard")
@@ -230,15 +231,15 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # eager localCheckpoint, not persist — see dedup_minhash_lsh
     # (cold A/B: eager 2.16s min / 2.50s mean vs lazy 2.33 / 3.87)
-    shingled = D.exploded_shingles(docs).localCheckpoint(eager=True)
-    sig = D.minhash_signatures(shingled, with_counts=True).localCheckpoint(eager=True)
+    shingled = pin(D.exploded_shingles(docs))
+    sig = pin(D.minhash_signatures(shingled, with_counts=True))
     new_ids = docs.filter(F.col("doc_id") >= _INC_NEW_MIN).select("doc_id")
     # the new docs' bands come from a broadcast-restricted slice of the
     # signatures — O(batch), never a second corpus banding
     new_bands = D.band_buckets(sig.join(F.broadcast(new_ids), "doc_id", "left_semi"))
-    candidates = D.lsh_incremental_candidates(
+    candidates = pin(D.lsh_incremental_candidates(
         D.band_buckets(sig), new_bands, max_bucket=_JACCARD_MAX_BUCKET
-    ).localCheckpoint(eager=True)
+    ))
     verified = D.pair_jaccard(shingled, pairs=candidates, counts=sig)
     return verified.filter(F.col("jaccard") >= 0.5).select(
         "a", "b", dround("jaccard", 6).alias("jaccard")
@@ -1761,11 +1762,9 @@ FROM est LEFT JOIN tru ON tru.a = est.a AND tru.b = est.b
 )
 def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    shingled = D.exploded_shingles(docs).localCheckpoint(eager=True)
-    sig = D.minhash_signatures(shingled, with_counts=True).localCheckpoint(eager=True)
-    cand = D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET).localCheckpoint(
-        eager=True
-    )
+    shingled = pin(D.exploded_shingles(docs))
+    sig = pin(D.minhash_signatures(shingled, with_counts=True))
+    cand = pin(D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET))
     k = len(MINHASH_SEEDS)
     sa = sig.select(
         F.col("doc_id").alias("a"), *[F.col(f"h{i}").alias(f"ha{i}") for i in MINHASH_SEEDS]
@@ -1926,7 +1925,7 @@ def multimodal_blockhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     base = docs.select("doc_id", "text").unionByName(tw)
-    fp = base.select(
+    fp = pin(base.select(
         "doc_id",
         F.hex(F.col("text").cast("binary")).alias("h"),
     ).select(
@@ -1951,7 +1950,7 @@ def multimodal_blockhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"aggregate(sequence(0, {_BH_BAND_BITS - 1}), CAST(0 AS BIGINT), "
             f"(acc, i) -> acc * 2 + element_at(bits, j * {_BH_BAND_BITS} + i + 1)))"
         ).alias("bands"),
-    ).localCheckpoint(eager=True)  # consumers: band explode + two verify sides
+    ))  # consumers: band explode + two verify sides
     bandrows = fp.select(
         "doc_id",
         F.explode(
@@ -2147,17 +2146,16 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wq = W.partitionBy("qid").orderBy(F.col("rel").desc(), "cand")
-    cands = (
+    cands = pin(
         relall.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= _MMR_C)
         .drop("rn")
-        .localCheckpoint(eager=True)
     )
     ca = cands.select("qid", F.col("cand").alias("a"))
     cb = cands.select("qid", F.col("cand").alias("b"))
     ea = emb.select(F.col("vec_id").alias("a"), F.col("v").alias("va"))
     eb = emb.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"))
-    sims = (
+    sims = pin(
         ca.join(cb, "qid")
         .filter(F.col("a") != F.col("b"))
         .join(F.broadcast(ea), "a")
@@ -2170,13 +2168,11 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 SIM.dot("va", "vb") / (SIM.norm("va") * SIM.norm("vb")), 6
             ).alias("sim"),
         )
-        .localCheckpoint(eager=True)
     )
-    selected = (
+    selected = pin(
         cands.withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") == 1)
         .select("qid", "cand", "rel", F.lit(1).alias("rnk"))
-        .localCheckpoint(eager=True)
     )
     lam, one_m = _MMR_LAMBDA, 1.0 - _MMR_LAMBDA
     for t in range(2, _MMR_S + 1):
@@ -2204,7 +2200,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("qid", "cand", "rel", F.lit(t).alias("rnk"))
         )
-        selected = selected.unionByName(pick).localCheckpoint(eager=True)
+        selected = pin(selected.unionByName(pick))
     return selected.select("qid", "cand", "rel", F.col("rnk").cast("long").alias("rnk"))
 
 
@@ -2465,7 +2461,7 @@ def embedding_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", SIM.as_double_vec("embedding", "v")
     )
-    emb = emb.localCheckpoint(eager=True)  # consumers: full + truncated lanes
+    emb = pin(emb)  # consumers: full + truncated lanes
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )

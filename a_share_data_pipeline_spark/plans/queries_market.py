@@ -20,6 +20,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -551,7 +552,7 @@ def events_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     o, h, l, cl = (F.col(x) for x in ("o", "h", "l", "cl"))
     po, pcl = F.col("po"), F.col("pcl")
     body = F.abs(cl - o)
-    flags = lagged.select(
+    flags = pin(lagged.select(
         "event_type",
         "day",
         "o",
@@ -570,7 +571,7 @@ def events_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
         (po.isNotNull() & (pcl > po) & (cl < o) & (o >= pcl) & (cl <= po)).alias(
             "is_bear_engulf"
         ),
-    ).localCheckpoint(eager=True)  # consumers: the four unpivot branches
+    ))  # consumers: the four unpivot branches
     parts = []
     for flag, name in (
         ("is_doji", "doji"),
@@ -678,9 +679,9 @@ FROM coefs
 def events_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir)
     epoch = F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
-    slotted = daily.select(
+    slotted = pin(daily.select(
         "event_type", "close_c", (epoch % _PG_P).alias("slot")
-    ).localCheckpoint(eager=True)  # consumers: one branch per frequency
+    ))  # consumers: one branch per frequency
     d38 = "decimal(38,0)"
     parts = []
     for k in _PG_KS:
@@ -787,13 +788,13 @@ WHERE rnk = 1
 def events_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir)
     epoch = F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
-    pts = daily.select(
+    pts = pin(daily.select(
         "event_type",
         "day",
         "close_c",
         epoch.alias("x"),
         (epoch / _LTTB_BUCKET).cast("bigint").alias("b"),
-    ).localCheckpoint(eager=True)  # consumers: bucket stats + candidates
+    ))  # consumers: bucket stats + candidates
     bstats = pts.groupBy("event_type", "b").agg(
         F.sum("x").alias("sx"), F.sum("close_c").alias("sy"), F.count(F.lit(1)).alias("n")
     )
@@ -883,9 +884,8 @@ GROUP BY event_type, n
 def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir)
     epoch = F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
-    pts = daily.select("event_type", "close_c", epoch.alias("x")).localCheckpoint(
-        eager=True
-    )  # consumers: both sides of the pair join
+    # consumers: both sides of the pair join
+    pts = pin(daily.select("event_type", "close_c", epoch.alias("x")))
     a = pts.select("event_type", F.col("close_c").alias("ya"), F.col("x").alias("xa"))
     b = pts.select("event_type", F.col("close_c").alias("yb"), F.col("x").alias("xb"))
     slopes = (
@@ -986,9 +986,7 @@ FROM v
     ),
 )
 def stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily_close(spark, sf_dir).localCheckpoint(
-        eager=True
-    )  # consumers: both pair sides, n, ties
+    daily = pin(_daily_close(spark, sf_dir))  # consumers: both pair sides, n, ties
     a = daily.select(
         "event_type", F.col("close_c").alias("ya"), F.col("day").alias("da")
     )
@@ -1407,7 +1405,7 @@ GROUP BY event_type, n
     ),
 )
 def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily_close(spark, sf_dir).localCheckpoint(eager=True)
+    daily = pin(_daily_close(spark, sf_dir))
     a = daily.select(
         "event_type", F.col("close_c").alias("ya"), F.col("day").alias("da")
     )
@@ -1575,7 +1573,7 @@ WHERE n = {_PAIRS_Z_W} AND n * s2 - CAST(s1 AS HUGEINT) * s1 > 0
     ).format(w=_PAIRS_Z_W),
 )
 def events_pairs_spread_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _daily_close(spark, sf_dir).localCheckpoint(eager=True)
+    daily = pin(_daily_close(spark, sf_dir))
     v = daily.filter(F.col("event_type") == "view").select(
         "day", F.col("close_c").alias("vc")
     )
@@ -2517,10 +2515,10 @@ def events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = ret.filter(F.col("event_type") == "purchase").select(
         "day", F.col("r").alias("rp")
     )
-    aligned = (
+    aligned = pin(
         v.join(p, "day")
         .select("day", "rv", "rp", F.row_number().over(W.orderBy("day")).alias("t"))
-        .localCheckpoint(eager=True)  # both sides of the lag join
+        # both sides of the lag join
     )
     lags = spark.createDataFrame(
         [(lg,) for lg in range(-_CCF_MAX_LAG, _CCF_MAX_LAG + 1)], "lg int"
@@ -2705,10 +2703,10 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = ret.filter(F.col("event_type") == "purchase").select(
         "day", F.col("r").alias("y")
     )
-    aligned = (
+    aligned = pin(
         v.join(p, "day")
         .select("x", "y", F.row_number().over(W.orderBy("day")).alias("t"))
-        .localCheckpoint(eager=True)  # both sides of the pair join
+        # both sides of the pair join
     )
     b = aligned.select(
         F.col("x").alias("bx"), F.col("y").alias("by"), F.col("t").alias("bt")
@@ -3025,9 +3023,9 @@ FROM ssr
 def events_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir).filter(F.col("event_type") == "view")
     w = W.partitionBy("event_type").orderBy("day")
-    tseries = daily.select(
+    tseries = pin(daily.select(
         "close_c", F.row_number().over(w).alias("t"), "day"
-    ).localCheckpoint(eager=True)  # pooled + two segment consumers
+    ))  # pooled + two segment consumers
 
     d38 = "decimal(38,0)"
 
@@ -3379,11 +3377,11 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mcnt = masks.groupBy("mask").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     subsets = spark.range(16).select(F.col("id").cast("int").alias("s"))
-    v = (
+    v = pin(
         subsets.join(mcnt, F.expr("(mask & ~s & 15) = 0"), "left")
         .groupBy("s")
         .agg(F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("v"))
-        .localCheckpoint(eager=True)  # consumers: v1 and v0 joins
+        # consumers: v1 and v0 joins
     )
     chans = spark.range(_SHAP_N_CH).select(F.col("id").cast("int").alias("ch"))
     w = (

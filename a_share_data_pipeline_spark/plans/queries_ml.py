@@ -23,6 +23,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -262,7 +263,7 @@ def feature_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixed-budget power iteration on the d²-row matrix frame; the
     # matrix is multi-use across rounds → checkpoint it once (the CC
     # discipline), then the single-use v chain pipelines
-    g = g.localCheckpoint(eager=True)
+    g = pin(g)
     v = g.select(F.col("i").alias("j")).distinct().select(
         "j", F.lit(_PPM).cast("bigint").alias("v")
     )
@@ -275,7 +276,7 @@ def feature_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         m = u.agg(F.max(F.abs(F.col("u"))).alias("m"))
         prev = v
-        v = (
+        v = pin(
             u.crossJoin(F.broadcast(m))
             .select(
                 F.col("i").alias("j"),
@@ -289,7 +290,6 @@ def feature_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
             # round) by the delta join — without cutting the chain
             # every broadcast re-executes the whole iteration prefix
             # (measured 77s → ~15s at sf0.01); the frame is d=64 rows
-            .localCheckpoint(eager=True)
         )
     dd = (
         v.join(prev.select("j", F.col("v").alias("pv")), "j")
@@ -421,7 +421,7 @@ def ml_naive_bayes_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         % 5
         == 0
     )
-    base = li.select(
+    base = pin(li.select(
         F.col("l_returnflag").alias("label"),
         F.col("l_linestatus").alias("f1"),
         (F.col("l_quantity").cast("bigint") / 10).cast("bigint").alias("f2"),
@@ -429,7 +429,7 @@ def ml_naive_bayes_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("f3"),
         is_test.alias("is_test"),
-    ).localCheckpoint(eager=True)  # consumers: three likelihood
+    ))  # consumers: three likelihood
     # tables, the class-prior frame, and the scoring pass
     train = base.filter(~F.col("is_test"))
     tabs = {}
@@ -945,13 +945,13 @@ FROM {prev_centers}
 )
 def ml_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.select(
+    q = pin(emb.select(
         "vec_id",
         F.transform(
             "embedding",
             lambda x: dround(x.cast("double") * 1000000, 0).cast("bigint"),
         ).alias("qv"),
-    ).localCheckpoint(eager=True)  # consumers: every round's distance pass
+    ))  # consumers: every round's distance pass
     centers = q.orderBy("vec_id").limit(1).select("vec_id", "qv")
     for _ in range(1, _KC_K):
         c = centers.select(
@@ -974,7 +974,7 @@ def ml_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("vec_id")
         )
         new_center = q.join(pick, "vec_id").select("vec_id", "qv")
-        centers = centers.unionByName(new_center).localCheckpoint(eager=True)
+        centers = pin(centers.unionByName(new_center))
         # ^ multi-use across the next round's broadcast — the CC
         # checkpoint discipline keeps each round one small job
     return centers.select(F.col("vec_id").cast("bigint").alias("center_id"))

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -683,7 +684,7 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("term")
     ).filter(F.col("term") != "")
-    sk = SK.cms_build(toks, "term").localCheckpoint(eager=True)
+    sk = pin(SK.cms_build(toks, "term"))
     exact = toks.groupBy("term").agg(F.count(F.lit(1)).alias("exact_cnt"))
     cand = exact.orderBy(F.col("exact_cnt").desc(), "term").limit(15)
     est = SK.cms_estimate(cand, "term", sk)
@@ -734,11 +735,11 @@ def shuffle_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("skey"),
     )
     n_parts = max(2, int(spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4)
-    ranged = (
+    ranged = pin(
         keyed.repartitionByRange(n_parts, "skey")
         .sortWithinPartitions("skey")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning: offsets job + final job see ONE layout
+        # pin partitioning: offsets job + final job see ONE layout
     )
     counts = {r["pid"]: r["n"] for r in ranged.groupBy("pid").agg(F.count(F.lit(1)).alias("n")).collect()}
     offsets, acc = {}, 0
@@ -1184,10 +1185,9 @@ def er_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager checkpoint: nodes + the CC edge feed both consume the
     # levenshtein block join — materialize it once (same discipline as
     # the triangle-family queries)
-    pairs = (
+    pairs = pin(
         join_fuzzy_blocked(spark, sf_dir)
         .select(F.col("key_a").alias("a"), F.col("key_b").alias("b"))
-        .localCheckpoint(eager=True)
     )
     nodes = (
         pairs.select(F.col("a").alias("id"))
@@ -1280,10 +1280,9 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and BOTH the degree pass and the capped probe consume it — without
     # materialization the fuzzy join executes twice (measured ~2x at
     # sf0.1, where the 3.9M-pair raw graph is the whole query cost)
-    pairs_raw = (
+    pairs_raw = pin(
         join_fuzzy_blocked(spark, sf_dir)
         .select(F.col("key_a").alias("ka"), F.col("key_b").alias("kb"))
-        .localCheckpoint(eager=True)
     )
     deg = (
         pairs_raw.select(F.col("ka").alias("node"))
@@ -1292,11 +1291,11 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("d"))
     )
     ok = deg.filter(F.col("d") <= _TRI_MAX_DEGREE).select("node")
-    pairs = (
+    pairs = pin(
         pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
         .join(ok.withColumnRenamed("node", "kb"), "kb")
         .select("ka", "kb")
-        .localCheckpoint(eager=True)  # three self-join consumers
+        # three self-join consumers
     )
     e1 = pairs.select(F.col("ka").alias("a"), F.col("kb").alias("b"))
     e2 = pairs.select(F.col("ka").alias("b"), F.col("kb").alias("c"))
@@ -1307,11 +1306,11 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured 3x the query cost at sf0.1), and derive the global
     # total from the per-node counts (every triangle contributes
     # exactly 3 corner rows) instead of a 4th scan
-    per_node = (
+    per_node = pin(
         tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("tri_cnt"))
-        .localCheckpoint(eager=True)  # top-k + the derived total
+        # top-k + the derived total
     )
     tot = per_node.agg(F.expr("sum(tri_cnt) div 3").alias("n_triangles"))
     return (
@@ -1557,10 +1556,9 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and BOTH the degree pass and the capped probe consume it — without
     # materialization the fuzzy join executes twice (measured ~2x at
     # sf0.1, where the 3.9M-pair raw graph is the whole query cost)
-    pairs_raw = (
+    pairs_raw = pin(
         join_fuzzy_blocked(spark, sf_dir)
         .select(F.col("key_a").alias("ka"), F.col("key_b").alias("kb"))
-        .localCheckpoint(eager=True)
     )
     deg0 = (
         pairs_raw.select(F.col("ka").alias("node"))
@@ -1569,11 +1567,11 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("d"))
     )
     ok = deg0.filter(F.col("d") <= _TRI_MAX_DEGREE).select("node")
-    pairs = (
+    pairs = pin(
         pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
         .join(ok.withColumnRenamed("node", "kb"), "kb")
         .select("ka", "kb")
-        .localCheckpoint(eager=True)  # degree + three wedge consumers
+        # degree + three wedge consumers
     )
     deg = (
         pairs.select(F.col("ka").alias("node"))
@@ -1715,10 +1713,9 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and BOTH the degree pass and the capped probe consume it — without
     # materialization the fuzzy join executes twice (measured ~2x at
     # sf0.1, where the 3.9M-pair raw graph is the whole query cost)
-    pairs_raw = (
+    pairs_raw = pin(
         join_fuzzy_blocked(spark, sf_dir)
         .select(F.col("key_a").alias("ka"), F.col("key_b").alias("kb"))
-        .localCheckpoint(eager=True)
     )
     deg0 = (
         pairs_raw.select(F.col("ka").alias("node"))
@@ -1732,11 +1729,11 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(ok.withColumnRenamed("node", "kb"), "kb")
         .select("ka", "kb")
     )
-    onehop = (
+    onehop = pin(
         pairs.select(F.col("ka").alias("src"), F.col("kb").alias("dst"))
         .unionByName(pairs.select(F.col("kb").alias("src"), F.col("ka").alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)  # wedge join + anti-join + counts
+        # wedge join + anti-join + counts
     )
     twohop = (
         onehop.alias("a")

@@ -24,6 +24,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -113,7 +114,7 @@ def events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rangeBetween(1, W.unboundedFollowing)
     )
     nb = F.min(F.when(F.col("tag") == "B", F.col("e"))).over(w_fut)
-    ab = (
+    ab = pin(
         f1.select("user_id", "e", "tag", nb.alias("nb"))
         .filter(F.col("tag") == "A")
         .select(
@@ -124,7 +125,6 @@ def events_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two consumers (the pass-2 pipeline and the no_view re-entry)
         # — materialize once or the whole union+window pass over the
         # log runs twice per action
-        .localCheckpoint(eager=True)
     )
 
     # pass 2: first purchase strictly after that view, still inside
@@ -243,13 +243,9 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_llm import _JACCARD_MAX_BUCKET
 
     docs = load_table(spark, sf_dir, "documents")
-    shingled = D.exploded_shingles(docs).localCheckpoint(eager=True)
-    sig = D.minhash_signatures(shingled, with_counts=True).localCheckpoint(
-        eager=True
-    )
-    cand = D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET).localCheckpoint(
-        eager=True
-    )
+    shingled = pin(D.exploded_shingles(docs))
+    sig = pin(D.minhash_signatures(shingled, with_counts=True))
+    cand = pin(D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET))
     truth = D.pair_jaccard(shingled, counts=sig).filter(
         F.col("jaccard") >= _LSHQ_T
     )
@@ -469,13 +465,12 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_analytics import _edges
 
     e0 = _edges(spark, sf_dir)
-    sym = (
+    sym = pin(
         e0.unionByName(
             e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         # no distinct needed: e0 is distinct and the 'c'/'s' prefixes
         # make the mirror collision-free (the edges_dedup=False proof)
-        .localCheckpoint(eager=True)
     )
     starts = spark.createDataFrame(
         [(f"{s}|{r}", s) for s in _RW_SEEDS for r in range(_RW_REPLICAS)],
@@ -567,14 +562,14 @@ GROUP BY e.prio, e.mth, d.prio
 )
 def rollup_retractions(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
+    base = pin(orders.select(
         F.col("o_orderpriority").alias("prio"),
         F.month("o_orderdate").cast("bigint").alias("mth"),
         dround(F.col("o_totalprice") * 100, 0).cast("bigint").alias("c"),
         ((F.month("o_orderdate") == 3) & (F.col("o_orderkey") % 5 == 0)).alias(
             "deleted"
         ),
-    ).localCheckpoint(eager=True)  # feeds state, deletes, inserts, repair
+    ))  # feeds state, deletes, inserts, repair
     keys = ["prio", "mth"]
 
     def partial(df: DataFrame) -> DataFrame:
@@ -728,9 +723,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trimming the full-width ingest too, which the scale-safe form
     # must keep). OPTIMIZATION_r13.md §6.
     e0 = purchase_iedges(spark, sf_dir)
-    edges = e0.unionByName(
+    edges = pin(e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(_KCORE_ROUNDS):
         keep = (
             edges.groupBy("src")
@@ -738,12 +733,11 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("deg") >= _KCORE_K)
             .select("src")
         )
-        edges = (
+        edges = pin(
             edges.join(keep, "src", "left_semi")
             .join(
                 keep.select(F.col("src").alias("dst")), "dst", "left_semi"
             )
-            .localCheckpoint(eager=True)
         )
     return edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("degree")
@@ -904,14 +898,14 @@ def forecast_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.sum(dround(F.col("value") * 100, 0).cast("bigint")).alias("c"))
-    idx = daily.select(
+    idx = pin(daily.select(
         "event_type",
         "day",
         "c",
         F.row_number()
         .over(W.partitionBy("event_type").orderBy("day"))
         .alias("i"),
-    ).localCheckpoint(eager=True)  # fit, calibration, and scoring consumers
+    ))  # fit, calibration, and scoring consumers
     fit = (
         idx.filter(F.col("i") <= _CF_TRAIN)
         .groupBy("event_type")
@@ -1084,9 +1078,9 @@ FROM per_doc GROUP BY source
 )
 def text_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
+    tok = pin(docs.select(
         "doc_id", "source", F.explode(F.split("text", " ")).alias("w")
-    ).localCheckpoint(eager=True)  # vocab fit + coverage scan share it
+    ))  # vocab fit + coverage scan share it
     counts = tok.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     vocab = (
         counts.orderBy(F.col("n").desc(), "w")
@@ -1292,14 +1286,14 @@ def feature_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.sum(dround(F.col("value") * 100, 0).cast("bigint")).alias("c"))
-    ranked = daily.select(
+    ranked = pin(daily.select(
         "event_type",
         "day",
         "c",
         F.row_number()
         .over(W.partitionBy("event_type").orderBy("c", "day"))
         .alias("r"),
-    ).localCheckpoint(eager=True)  # feeds the ref aggregate AND the join-back
+    ))  # feeds the ref aggregate AND the join-back
     ref = ranked.groupBy("r").agg(
         F.sum("c").alias("s"), F.count(F.lit(1)).alias("k")
     )
@@ -1908,18 +1902,18 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("s").alias("raw"))
         )
         atot = ar.agg(F.sum("raw").alias("t"))
-        a = ar.crossJoin(F.broadcast(atot)).select(
+        a = pin(ar.crossJoin(F.broadcast(atot)).select(
             "node", dround(F.col("raw") / F.col("t"), 6).alias("s")
-        ).localCheckpoint(eager=True)
+        ))
         hr = (
             edges.join(a.withColumnRenamed("node", "dst"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("s").alias("raw"))
         )
         htot = hr.agg(F.sum("raw").alias("t"))
-        h = hr.crossJoin(F.broadcast(htot)).select(
+        h = pin(hr.crossJoin(F.broadcast(htot)).select(
             "node", dround(F.col("raw") / F.col("t"), 6).alias("s")
-        ).localCheckpoint(eager=True)
+        ))
     return h.select(
         decode_purchase_node("node").alias("node"),
         F.lit("hub").alias("role"),
@@ -2853,11 +2847,11 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("d"))
     )
     ok = deg0.filter(F.col("d") <= _LP_MAX_DEGREE).select("node")
-    pairs = (
+    pairs = pin(
         pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
         .join(ok.withColumnRenamed("node", "kb"), "kb")
         .select("ka", "kb")
-        .localCheckpoint(eager=True)  # consumers: adj (×2 wedge sides),
+        # consumers: adj (×2 wedge sides),
         # degree aggregate, anti-join probe
     )
     adj = pairs.unionByName(
@@ -3077,7 +3071,7 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang").alias("a"), F.col("pred_lang").alias("b")
     )
     cell = pred.groupBy("a", "b").agg(F.count(F.lit(1)).alias("c"))
-    cell = cell.localCheckpoint(eager=True)  # consumers: n/agree/marginals
+    cell = pin(cell)  # consumers: n/agree/marginals
     d38 = "decimal(38,0)"
     n_df = cell.agg(F.sum("c").cast(d38).alias("n"))
     agree_df = cell.agg(
@@ -3227,7 +3221,7 @@ def text_keyword_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("plen") <= _RAKE_MAX_LEN)
     )
-    phrases = phrases.localCheckpoint(eager=True)  # consumers: word
+    phrases = pin(phrases)  # consumers: word
     # stats + distinct-phrase scoring
     pw = phrases.select("plen", F.explode(F.split("phrase", " ")).alias("w"))
     wsc = pw.groupBy("w").agg(

@@ -19,6 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -107,10 +108,9 @@ def _user_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(part, li.l_partkey == part.p_partkey)
         .select(F.col("o_custkey").alias("user_id"), F.col("p_brand").alias("item"))
     )
-    return (
+    return pin(
         raw.groupBy("user_id")
         .agg(F.sort_array(F.collect_set("item")).alias("items"))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -396,9 +396,8 @@ FROM agg CROSS JOIN cov CROSS JOIN cat
     ).format(n=_TOPN_RECS),
 )
 def rec_beyond_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    recs = rec_user_topn(spark, sf_dir).select("user_id", "item").localCheckpoint(
-        eager=True
-    )  # pair join (twice) + coverage
+    # pair join (twice) + coverage
+    recs = pin(rec_user_topn(spark, sf_dir).select("user_id", "item"))
     mfr = lambda c: F.substring(c, 7, 1)  # noqa: E731  Brand#MN -> M
     b = recs.select(F.col("user_id"), F.col("item").alias("item_b"))
     dpairs = (

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
+from ..session import pin
 from ..sources import load_table
 from .catalog import register
 
@@ -1623,7 +1624,7 @@ FROM per_g a JOIN per_g b ON a.g < b.g
     ),
 )
 def stats_nemenyi_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_g = _friedman_per_g(spark, sf_dir).localCheckpoint(eager=True)
+    per_g = pin(_friedman_per_g(spark, sf_dir))
     a = per_g.select(
         F.col("g").alias("g_a"),
         F.col("r2sum").alias("ra"),
@@ -1723,7 +1724,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = cents.groupBy("g", "day").agg(
         (F.sum("c") * F.lit(1.0) / F.count(F.lit(1))).alias("m")
     )
-    cell = cell.localCheckpoint(eager=True)  # consumers: ranks + ties
+    cell = pin(cell)  # consumers: ranks + ties
     wr = W.orderBy("m")
     wt = W.partitionBy("m")
     ranked = cell.select(
@@ -1975,7 +1976,7 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = cents.groupBy("g", "day").agg(
         F.sum("c").cast("decimal(38,0)").alias("s")
     )
-    cell = cell.localCheckpoint(eager=True)  # consumers: complete-day
+    cell = pin(cell)  # consumers: complete-day
     # filter, per-treatment totals, the indicator join
     complete = (
         cell.groupBy("day")
@@ -1995,7 +1996,7 @@ def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("x"),
     )
-    x = x.localCheckpoint(eager=True)  # consumers: column + row totals
+    x = pin(x)  # consumers: column + row totals
     cols = x.groupBy("g").agg(F.sum("x").cast("decimal(38,0)").alias("cj"))
     rows_ = x.groupBy("day").agg(F.sum("x").cast("decimal(38,0)").alias("ri"))
     s = cols.agg(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
-from ..session import clone_session, set_width
+from ..session import clone_session, pin, set_width
 from ..sources.readers import load_table
 from ..streaming import structured as ST
 from .catalog import register
@@ -485,7 +485,7 @@ def _incdedup_store(standing: DataFrame) -> dict:
     from ..operators import dedup as D
 
     bands = D.band_buckets(D.minhash_signatures(D.exploded_shingles(standing)))
-    return {-1: (standing, bands.localCheckpoint(eager=True))}
+    return {-1: (standing, pin(bands))}
 
 
 def _incdedup_make_absorb(parts: dict, out_dir: str):
@@ -499,30 +499,30 @@ def _incdedup_make_absorb(parts: dict, out_dir: str):
     from .queries_llm import _JACCARD_MAX_BUCKET
 
     def absorb(batch: DataFrame, _bid: int) -> None:
-        if batch.isEmpty():
+        doc_part, seen = pin(batch, rows=F.count(F.lit(1)))
+        if seen["rows"] == 0:
             return
         # a retried _bid must not see (or keep) its earlier attempt's
         # part: drop it up front so the unions below read only other
         # batches' state, then re-register at the end
         parts.pop(_bid, None)
-        doc_part = batch.localCheckpoint(eager=True)
         # spread=False: the spread repartition is an anti-skew device
         # for corpus-scale explodes; a micro-batch is small, so the
         # extra shuffle is pure per-job overhead here (band values are
         # identical either way)
-        band_part = D.band_buckets(
+        band_part = pin(D.band_buckets(
             D.minhash_signatures(D.exploded_shingles(doc_part, spread=False))
-        ).localCheckpoint(eager=True)
+        ))
         # the candidate-pair frame is tiny (LSH collisions of one batch)
         # but its lineage holds the corpus-band scan, and it feeds
         # several consumers below (both sides of cand_ids, then
         # pair_jaccard's candidate filter) — without an eager pin Spark
         # re-runs that scan per consumer
-        cand = D.lsh_incremental_candidates(
+        cand = pin(D.lsh_incremental_candidates(
             _union_all([b for _, b in parts.values()] + [band_part]),
             band_part,
             max_bucket=_JACCARD_MAX_BUCKET,
-        ).localCheckpoint(eager=True)
+        ))
         cand_ids = (
             cand.select(F.col("a").alias("doc_id"))
             .union(cand.select(F.col("b").alias("doc_id")))
@@ -618,9 +618,9 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     snap_schema = snap0.schema
 
     def apply_batch(batch: DataFrame, _bid: int) -> None:
-        if batch.isEmpty():
+        batch, seen = pin(batch, rows=F.count(F.lit(1)))
+        if seen["rows"] == 0:
             return
-        batch = batch.localCheckpoint(eager=True)
         cur = spark.read.schema(snap_schema).parquet(snap_dir(version["n"]))
         dels = batch.filter(F.col("op") == "D").select("k")
         ups = batch.filter(F.col("op") != "D").select("k", "price", "status")
@@ -849,11 +849,14 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
     from pyspark.sql import Window as W
 
     def absorb(batch: DataFrame, _bid: int) -> None:
-        if batch.isEmpty():
+        batch, seen = pin(
+            batch.withColumn(
+                "bkt", F.pmod(F.col("user_id"), F.lit(_SCD2_N_BUCKETS)).cast("int")
+            ),
+            rows=F.count(F.lit(1)),
+        )
+        if seen["rows"] == 0:
             return
-        batch = batch.withColumn(
-            "bkt", F.pmod(F.col("user_id"), F.lit(_SCD2_N_BUCKETS)).cast("int")
-        ).localCheckpoint(eager=True)
         touched = [r.bkt for r in batch.select("bkt").distinct().collect()]
         if os.path.isdir(dim) and any(
             f.endswith(".parquet") or f.startswith("bkt=")
@@ -870,7 +873,7 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
         )
         w = W.partitionBy("user_id").orderBy("ts", "event_id")
         nxt = F.lead("ts").over(w)
-        rebuilt = changes.select(
+        rebuilt = pin(changes.select(
             "bkt",
             "user_id",
             "tier",
@@ -878,7 +881,7 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
             "event_id",
             nxt.alias("valid_to"),
             nxt.isNull().alias("is_current"),
-        ).localCheckpoint(eager=True)  # materialize BEFORE overwriting
+        ))  # materialize BEFORE overwriting
         # the very files `old` reads from
         rebuilt.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"

@@ -27,13 +27,23 @@ partition-independent (``SWEEP_sf0.01_w7.jsonl`` re-checks the whole
 catalog at width 7). A DataFrame runs at the width of the session it
 was built on, so a query's result read on its clone runs at the
 clone's width.
+
+Pins: every eager materialization goes through :func:`pin` —
+``localCheckpoint(eager=True)`` run as one Spark job whose description
+is the calling function (``<module>.<qualname>``), so the event log
+splits any query into named phases with no per-site name. A question
+about the pinned frame (its row count, a moved-label count) is an
+``observe`` metric that rides the pin's own job, never a second
+``count()``/``isEmpty()`` job. A lazy ``localCheckpoint(eager=False)``
+submits no job, so it stays inline.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 
 _WIDTH = "spark.sql.shuffle.partitions"
@@ -98,3 +108,23 @@ def set_width(clone: SparkSession, width: int) -> None:
 def volume_width(spark: SparkSession, rows: int) -> int:
     """The clone width for a frame of ``rows`` rows."""
     return min(int(spark.conf.get(_WIDTH)), max(8, -(-rows // 65536)))
+
+
+def pin(df: DataFrame, **metrics: Column):
+    """``df`` materialized once (eager ``localCheckpoint``), under the
+    caller's name as the job description; the thread's previous
+    description is restored after. With ``metrics`` (name=aggregate
+    column, e.g. ``rows=F.count(F.lit(1))``) the aggregates are
+    observed on the same job and ``(frame, {name: value})`` returns."""
+    caller = sys._getframe(1)
+    sc = df.sparkSession.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"{caller.f_globals['__name__']}.{caller.f_code.co_qualname}")
+    try:
+        if metrics:
+            seen = Observation()
+            df = df.observe(seen, *(col.alias(name) for name, col in metrics.items()))
+        pinned = df.localCheckpoint(eager=True)
+        return (pinned, seen.get) if metrics else pinned
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)

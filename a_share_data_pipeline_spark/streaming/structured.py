@@ -310,9 +310,9 @@ def stream_canonical_delta(
     daily_stream = opts(spark.readStream, "daily", start_date=start_date).load()
 
     def process(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         dates = sorted(r[0] for r in batch_df.select("trade_date").distinct().collect())
+        if not dates:
+            return
         keys = ",".join(dates)
         limit = opts(spark.read, "stk_limit", mode="by_date", keys=keys).load()
         basic = opts(spark.read, "daily_basic", mode="by_date", keys=keys).load()

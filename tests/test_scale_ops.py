@@ -1385,3 +1385,67 @@ def test_sample_negatives_never_plans_cartesian(spark):
 
     p = executed_plan_str(sample_negatives(spark, SF))
     assert "CartesianProduct" not in p, p[:2000]
+
+
+def test_eager_pins_only_in_session_pin():
+    """``session.pin`` is the package's one eager materialization: the
+    only eager ``localCheckpoint`` call (``eager=True`` or no argument)
+    is inside it, and the lazy ``eager=False`` pins number exactly 4."""
+    import ast
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    eager, lazy, helper = [], [], None
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.FunctionDef) and node.name == "pin" and rel == "session.py":
+                helper = range(node.lineno, node.end_lineno + 1)
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                flags = [k.value for k in node.keywords if k.arg == "eager"] + node.args
+                is_lazy = bool(flags) and isinstance(flags[0], ast.Constant) and flags[0].value is False
+                (lazy if is_lazy else eager).append((rel, node.lineno))
+    assert len(eager) == 1, eager
+    assert helper and eager[0][0] == "session.py" and eager[0][1] in helper, (eager, helper)
+    assert len(lazy) == 4, lazy
+
+
+def test_pin_counts_rows_and_restores_job_description(spark, monkeypatch):
+    """``pin`` observes its metrics on the pin's own job (0 rows for a
+    0-partition frame and for a filter-to-empty one), names the job
+    after its caller, and leaves the thread's job description as it
+    found it, also when the pinned plan raises."""
+    from a_share_data_pipeline_spark.session import pin
+
+    rows = F.count(F.lit(1))
+    for df, n in (
+        (spark.range(0), 0),
+        (spark.range(5).filter(F.col("id") > 9), 0),
+        (spark.range(5), 5),
+    ):
+        pinned, seen = pin(df, rows=rows)
+        assert seen == {"rows": n}
+        assert pinned.count() == n
+
+    sc = spark.sparkContext
+    names = []
+    set_description = sc.setJobDescription
+    monkeypatch.setattr(sc, "setJobDescription", lambda v: names.append(v) or set_description(v))
+    sc.setJobDescription("outer phase")
+    try:
+        pin(spark.range(3))
+        assert sc.getLocalProperty("spark.job.description") == "outer phase"
+        fails = spark.range(3).select(F.raise_error(F.lit("pin boom")).alias("x"))
+        with pytest.raises(Exception, match="pin boom"):
+            pin(fails)
+        assert sc.getLocalProperty("spark.job.description") == "outer phase"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    phase = f"{__name__}.test_pin_counts_rows_and_restores_job_description"
+    assert names == ["outer phase", phase, phase], names

@@ -404,6 +404,10 @@ def test_scd2_stream_maintenance_is_order_insensitive(spark, tmp_path):
     # 3 scrambled batches: event_id % 3 interleaves every key's history
     for bid in range(3):
         absorb(upd.filter(F.col("event_id") % 3 == bid), bid)
+    # an empty micro-batch leaves the dimension's files untouched
+    before = sorted((str(p), p.stat().st_mtime_ns) for p in (tmp_path / "dim").rglob("*"))
+    absorb(upd.limit(0), 3)
+    assert sorted((str(p), p.stat().st_mtime_ns) for p in (tmp_path / "dim").rglob("*")) == before
     got = (
         spark.read.schema(_SCD2_DIM_SCHEMA)
         .parquet(dim)
@@ -458,6 +462,11 @@ def test_incdedup_absorb_retry_replaces_pairs_and_parts(spark, tmp_path):
     assert pairs() == first, "retried batch doubled its pairs"
     # in-memory parts singly registered (one entry per _bid, not a pile)
     assert set(parts) <= {-1, 0}
+    # an empty micro-batch registers no part and writes no pairs
+    keys = set(parts)
+    absorb(batch.limit(0), 1)
+    assert set(parts) == keys
+    assert not os.path.exists(os.path.join(out_dir, "bid_1"))
 
 
 def test_incdedup_temp_root_holds_only_landing_ckpt_pairs(
