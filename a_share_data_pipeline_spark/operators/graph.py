@@ -378,17 +378,16 @@ def label_propagation(
 
 def bfs_hops(
     edges: DataFrame,
-    seeds: list[str],
+    seeds: list,
     max_hops: int = 3,
-    edges_dedup: bool = True,
+    per_seed: bool = False,
 ) -> DataFrame:
-    """Multi-source BFS hop distance over an UNDIRECTED edge list
-    (src, dst): ``hops`` = length of the shortest path from any seed,
-    up to ``max_hops`` rounds; unreached nodes are dropped. It is
-    :func:`sssp` with unit weight."""
+    """BFS hop distance over an UNDIRECTED edge list (src, dst): it is
+    :func:`sssp` with unit weight, ``hops`` in place of ``dist``."""
     unit = edges.select("src", "dst", F.lit(1).alias("w"))
-    return sssp(unit, seeds, max_rounds=max_hops, edges_dedup=edges_dedup).select(
-        "node", F.col("dist").cast("int").alias("hops")
+    keys = ["seed", "node"] if per_seed else ["node"]
+    return sssp(unit, seeds, max_rounds=max_hops, per_seed=per_seed).select(
+        *keys, F.col("dist").cast("int").alias("hops")
     )
 
 
@@ -396,71 +395,48 @@ def sssp(
     edges: DataFrame,
     seeds: list,
     max_rounds: int = 3,
-    edges_dedup: bool = True,
+    per_seed: bool = False,
 ) -> DataFrame:
-    """Weighted multi-source shortest-path distance (bounded
-    Bellman-Ford) over an UNDIRECTED weighted edge list (src, dst, w):
-    ``dist`` = minimum total edge weight from any seed along paths of
-    at most ``max_rounds`` edges; unreached nodes are dropped (at scale
-    that is the point — k rounds from a small seed set touch a local
-    ball, the unreachable tail never materializes a row).
+    """Bounded multi-source shortest paths (Bellman-Ford) over an
+    UNDIRECTED weighted edge list (src, dst, w): ``dist`` is the
+    minimum total weight along paths of at most ``max_rounds`` edges.
+    By default it is the minimum over all seeds, one (node, dist) row
+    per reached node; ``per_seed=True`` keeps each seed apart, one
+    (seed, node, dist) row per pair. Unreached nodes emit no row, and
+    a seed on no edge reaches nothing, not even itself.
 
-    Each round relaxes every edge once: one O(E) join of the reachable
-    frontier onto the symmetric edges, one min-aggregate per
-    destination, one left join back onto the (node, dist) state — the
-    dense relaxation (frontier-only would shuffle less per round but
-    needs a data-dependent stopping test; a fixed small round count
-    keeps the plan static and oracle-unrollable). The NULL handling is
-    explicit (CASE, not LEAST) because engines disagree on LEAST's null
-    semantics. Weights must be non-negative — bounded
-    Bellman-Ford is still *correct* for negative weights within the
-    round budget, but "shortest within k hops" stops being a useful
-    distance there. Integer weights keep both engines bit-exact with
-    nothing to round.
-
-    ``edges_dedup=False`` is the caller's proof that the mirrored
-    edge multiset is already duplicate-free (see ``_symmetrize``);
-    parallel edges with DIFFERENT weights are always legal — the
-    min-aggregate keeps the cheapest — it is only exact duplicate
-    orientations that would be double-counted by LPA-style callers
-    (min-relaxation itself is idempotent, so even those are harmless
-    here; the flag just skips a full 2E shuffle)."""
-    sym = edges.select("src", "dst", "w").unionByName(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), F.col("w")
-        )
+    Only reached rows are held: the state is (seed, node, dist), with
+    a constant seed key when seeds are merged. The mirrored edges plus
+    a weight-0 self-loop on every node are pinned once, so one round
+    is a min-plus step — the state joined onto those edges and one
+    ``min`` per (seed, node). The self-loop carries every reached
+    distance into the next round, so a round reads the state once and
+    needs no union or NULL merge. Parallel or mirrored duplicate edges
+    need no dedup: the ``min`` keeps the cheapest. Weights must be
+    non-negative integers, so both engines stay bit-exact."""
+    sym = edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
+    sym = sym.unionByName(
+        sym.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
-    if edges_dedup:
-        sym = sym.groupBy("src", "dst").agg(F.min("w").alias("w"))
-    sym = pin(sym)
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    dist = nodes.select(
+    loops = sym.select("src").distinct().select(
+        "src", F.col("src").alias("dst"), F.lit(0).cast("bigint").alias("w")
+    )
+    step = pin(sym.unionByName(loops).withColumnRenamed("src", "node"))
+    is_seed = (F.col("node") == F.col("dst")) & (F.col("w") == 0) & F.col("node").isin(*seeds)
+    dist = step.filter(is_seed).select(
+        (F.col("node") if per_seed else F.lit(0)).alias("seed"),
         "node",
-        F.when(F.col("node").isin(*seeds), F.lit(0))
-        .otherwise(F.lit(None))
-        .cast("bigint")
-        .alias("dist"),
+        F.col("w").alias("dist"),
     )
     for i in range(max_rounds):
-        relax = (
-            sym.join(
-                dist.filter(F.col("dist").isNotNull()),
-                sym["src"] == dist["node"],
-            )
-            .select(
-                F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("cand")
-            )
-            .groupBy("node")
-            .agg(F.min("cand").alias("cand"))
-        )
-        dist = dist.join(relax, "node", "left").select(
-            "node",
-            F.when(F.col("dist").isNull(), F.col("cand"))
-            .when(F.col("cand").isNull(), F.col("dist"))
-            .otherwise(F.least("dist", "cand"))
-            .cast("bigint")
-            .alias("dist"),
+        # shuffle_hash: without it AQE sees the edges' shuffle output
+        # fit the broadcast threshold and collects and broadcasts all
+        # of them every round (sf0.1, 4 vCPUs: bfs 7.4 -> 6.0 s)
+        dist = (
+            dist.join(step.hint("shuffle_hash"), "node")
+            .groupBy("seed", F.col("dst").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
         )
         if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < max_rounds:
             dist = pin(dist)
-    return dist.filter(F.col("dist").isNotNull())
+    return dist if per_seed else dist.drop("seed")

@@ -497,34 +497,28 @@ SELECT node, CAST(hops AS INTEGER) AS hops FROM {prev} WHERE hops IS NOT NULL
         "multi-source BFS hop distance (<= 3 rounds from 5 seed "
         "customers) over the undirected purchase graph — the "
         "shortest-path family: CC answers 'same cluster?', PageRank "
-        "'how central?', BFS 'how FAR?'. Dense Bellman-Ford-style "
-        "relaxation: each round one O(E) join + min-aggregate + left "
-        "join back onto the (node, dist) state (a fixed round count "
-        "keeps the plan static and oracle-unrollable; the NULL merge "
-        "is an explicit CASE because engines disagree on LEAST null "
-        "semantics). Unreached nodes never materialize a row — k "
-        "rounds from a small seed set touch a local ball. Integer "
-        "hop arithmetic: nothing to round, bit-exact on both engines"
+        "'how central?', BFS 'how FAR?'. operators/graph.bfs_hops "
+        "holds only reached (node, hops) rows; each round is one "
+        "min-plus step — the state joined onto the mirrored edges "
+        "plus a weight-0 self-loop per node, then one min per node (a "
+        "fixed round count keeps the plan static and "
+        "oracle-unrollable; the oracle's dense NULL-merge CTEs give "
+        "the same distances). Unreached nodes never materialize a "
+        "row — k rounds from a small seed set touch a local ball. "
+        "Integer hop arithmetic: nothing to round, bit-exact on both "
+        "engines"
     ),
 )
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bfs_hops
 
-    # edges_dedup=False: same bipartite disjoint-range proof as
-    # graph_label_propagation ('c'/'s' prefixes cannot collide).
     # Measured-width clone deliberately NOT applied (round 13): the
     # applied-form NEW/OLD A/B read NEW min 3.97 vs OLD min 3.44 at
     # sf0.1 — the per-hop frontier⋈edges join is COMPUTE-bound, so a
     # volume-sized width trim costs CPU parallelism (the in-session
     # conf proxy's win came from trimming the full-width ingest,
     # which the scale-safe form must keep). OPTIMIZATION_r13.md §6.
-    d = bfs_hops(
-        pin(_edges(spark, sf_dir)),
-        seeds=list(_BFS_SEEDS),
-        max_hops=_BFS_HOPS,
-        edges_dedup=False,
-    )
-    return d.select("node", F.col("hops").cast("int").alias("hops"))
+    return bfs_hops(_edges(spark, sf_dir), seeds=list(_BFS_SEEDS), max_hops=_BFS_HOPS)
 
 
 # ---------------------------------------------------------------------------
@@ -2592,65 +2586,8 @@ FROM lf
     ),
 )
 def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    ud = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("f"),
-        F.date_trunc("hour", F.max("ts")).alias("l"),
-    )
-    m = ud.agg(F.max("l").alias("mx"))
-    # DuckDB DATEDIFF('hour', ...) counts hour-BOUNDARY crossings;
-    # on hour-truncated inputs that equals elapsed seconds / 3600
-    hours = lambda a, b: (  # noqa: E731
-        (F.unix_timestamp(b) - F.unix_timestamp(a)) / 3600
-    ).cast("bigint")
-    obs = ud.crossJoin(F.broadcast(m)).select(
-        hours(F.col("f"), F.col("l")).alias("t"),
-        F.when(hours(F.col("l"), F.col("mx")) >= 72, 1).otherwise(0).alias("ev"),
-    )
-    per_t = obs.groupBy("t").agg(
-        F.sum("ev").alias("d"), F.sum(F.lit(1) - F.col("ev")).alias("c")
-    )
-    w_all = W.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    w_lt = W.orderBy("t").rowsBetween(W.unboundedPreceding, -1)
-    risk = per_t.select(
-        "t",
-        "d",
-        (
-            F.sum(F.col("d") + F.col("c")).over(w_all)
-            - F.coalesce(
-                F.sum(F.col("d") + F.col("c")).over(w_lt), F.lit(0)
-            )
-        ).alias("n_risk"),
-    )
-    lf = risk.select(
-        "t",
-        "d",
-        "n_risk",
-        F.when((F.col("d") == 0) | (F.col("d") == F.col("n_risk")), F.lit(0))
-        .otherwise(
-            dround(
-                F.log(
-                    (F.col("n_risk") - F.col("d"))
-                    * F.lit(1.0)
-                    / F.col("n_risk")
-                )
-                * 100000000,
-                0,
-            ).cast("bigint")
-        )
-        .alias("lfac"),
-        F.when(F.col("d") == F.col("n_risk"), 1).otherwise(0).alias("hit_zero"),
-    )
-    w_le = W.orderBy("t").rowsBetween(W.unboundedPreceding, W.currentRow)
-    return lf.select(
-        "t",
-        F.col("n_risk").cast("bigint").alias("n_risk"),
-        F.col("d").cast("bigint").alias("d_events"),
-        F.when(F.max("hit_zero").over(w_le) == 1, F.lit(0.0))
-        .otherwise(
-            dround(F.exp(F.sum("lfac").over(w_le) / F.lit(100000000.0)), 4)
-        )
-        .alias("surv"),
+    return events_survival_greenwood(spark, sf_dir).select(
+        "t", "n_risk", "d_events", "surv"
     )
 
 
@@ -2806,14 +2743,14 @@ SELECT node, dist FROM {prev} WHERE dist IS NOT NULL
         "Bellman-Ford, 3 rounds from 3 seed customers) over the "
         "purchase graph with edge weight = MIN(l_quantity) per "
         "(customer, supplier) pair: the weighted generalization of "
-        "graph_bfs_hops (operators/graph.sssp) — cand = dist + w "
-        "instead of hops + 1, same one-O(E)-join + min-aggregate + "
-        "state-merge round shape, same explicit CASE null merge, "
+        "graph_bfs_hops (operators/graph.sssp) — dist + w instead "
+        "of hops + 1, the same min-plus round (state joined onto the "
+        "mirrored edges plus weight-0 self-loops, one min per node), "
         "unrolled-CTE oracle. Rides the shared int64 node bijection "
-        "(purchase_iedges parity proof -> edges_dedup=False skips "
-        "the 2E mirror distinct; parallel mirrored weights are "
-        "min-folded identically on both engines). Integer quantities "
-        "as weights: distances are bit-exact, nothing to round"
+        "(purchase_iedges); parallel mirrored weights fold to the "
+        "cheapest in the round's min on both engines. Integer "
+        "quantities as weights: distances are bit-exact, nothing to "
+        "round"
     ),
 )
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2830,7 +2767,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.col("l_quantity").cast("bigint")).alias("w"))
     )
     iseeds = [2 * int(s[1:]) for s in _SSSP_SEEDS]
-    d = sssp(wedges, seeds=iseeds, max_rounds=_SSSP_ROUNDS, edges_dedup=False)
+    d = sssp(wedges, seeds=iseeds, max_rounds=_SSSP_ROUNDS)
     return d.select(decode_purchase_node("node").alias("node"), "dist")
 
 
@@ -4894,7 +4831,10 @@ _CLOSE_SEEDS = ("c1", "c2", "c3", "c4", "c5")
 _CLOSE_HOPS = 3
 
 
-def _closeness_sql() -> str:
+def _close_bfs_sql() -> str:
+    """The per-seed BFS CTEs, edges through d<_CLOSE_HOPS>, that both
+    sampled-source oracles share; d0 holds every seed, so a seed on no
+    edge still counts."""
     seeds = ", ".join(f"'{s}'" for s in _CLOSE_SEEDS)
     rounds = []
     prev = "d0"
@@ -4909,24 +4849,38 @@ d{i} AS (
   ) u GROUP BY 1, 2
 )""")
         prev = f"d{i}"
-    return f"""
-WITH {_EDGES_CTE},
+    return f"""WITH {_EDGES_CTE},
 seeds AS (SELECT unnest([{seeds}]) AS seed),
 d0 AS (SELECT seed, seed AS node, 0 AS hops FROM seeds),
-{','.join(rounds)}
+{','.join(rounds)}"""
+
+
+def _close_reached(edges: DataFrame) -> DataFrame:
+    """(seed, node, hops) for every node 1.._CLOSE_HOPS hops from a
+    _CLOSE_SEEDS seed — the frame both sampled-source queries read. A
+    seed's own hops-0 row is left to the caller, which counts it even
+    when the seed is on no edge (as the oracles' d0 does)."""
+    from ..operators.graph import bfs_hops
+
+    d = bfs_hops(edges, list(_CLOSE_SEEDS), _CLOSE_HOPS, per_seed=True)
+    return d.filter(F.col("hops") > 0)
+
+
+_CLOSENESS_SQL = f"""
+{_close_bfs_sql()}
 SELECT seed,
        COUNT(*) FILTER (WHERE hops > 0)::BIGINT AS n_reached,
        COALESCE(SUM(hops) FILTER (WHERE hops > 0), 0)::BIGINT AS sum_hops,
        COALESCE(SUM(1000000 // hops) FILTER (WHERE hops > 0), 0)::BIGINT
          AS harmonic_micro
-FROM {prev}
+FROM d{_CLOSE_HOPS}
 GROUP BY seed
 """
 
 
 @register(
     "graph_closeness_sampled",
-    _closeness_sql(),
+    _CLOSENESS_SQL,
     doc=(
         "sampled-source bounded-horizon closeness centrality — the "
         "distance-based centrality completing the family (PageRank = "
@@ -4934,10 +4888,11 @@ GROUP BY seed
         "is; exact betweenness is deliberately omitted: its "
         "all-pairs path counting has no bounded-output oracle). Per "
         f"seed ({len(_CLOSE_SEEDS)} fixed sources, the Eppstein-Wang "
-        "sampling estimator shape), a per-seed BFS keyed by "
-        "(seed, node) runs the same dense min-relaxation as "
-        f"graph_bfs_hops for {_CLOSE_HOPS} rounds — ONE frame for "
-        "all seeds, so k sources cost one join per round, not k. "
+        "sampling estimator shape), operators/graph.bfs_hops with "
+        "per_seed=True keys its state by (seed, node) and runs the "
+        f"same min-plus round as graph_bfs_hops for {_CLOSE_HOPS} "
+        "rounds — ONE frame for all seeds, so k sources cost one join "
+        "per round, not k. "
         "Harmonic closeness Σ 1/d accumulates as exact integer "
         "micro-units (1000000 div d — float-free and "
         "disconnection-safe); n_reached and sum_hops cover the "
@@ -4952,44 +4907,17 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 — the per-hop seed-frontier⋈edges joins are COMPUTE-bound
     # (5 seeds × symmetrized 1.17M-edge probe), so the width trim
     # costs CPU parallelism. OPTIMIZATION_r13.md §6.
-    e0 = _edges(spark, sf_dir)
-    edges = pin(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+    per_seed = _close_reached(_edges(spark, sf_dir)).groupBy("seed").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_reached"),
+        F.sum("hops").cast("bigint").alias("sum_hops"),
+        F.sum(F.expr("1000000 div hops")).cast("bigint").alias("harmonic_micro"),
     )
-    d = spark.createDataFrame(
-        [(s, s, 0) for s in _CLOSE_SEEDS], "seed string, node string, hops int"
-    )
-    for _ in range(_CLOSE_HOPS):
-        cand = (
-            d.join(edges, d["node"] == edges["src"])
-            .select("seed", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
-        )
-        d = pin(
-            d.unionByName(cand)
-            .groupBy("seed", "node")
-            .agg(F.min("hops").alias("hops"))
-        )
-    r = d.filter(F.col("hops") > 0)
-    return (
-        d.select("seed")
-        .distinct()
-        .join(
-            r.groupBy("seed").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_reached"),
-                F.sum("hops").cast("bigint").alias("sum_hops"),
-                F.sum(F.expr("1000000 div hops")).cast("bigint").alias("harmonic_micro"),
-            ),
-            "seed",
-            "left",
-        )
-        .select(
-            "seed",
-            F.coalesce("n_reached", F.lit(0)).alias("n_reached"),
-            F.coalesce("sum_hops", F.lit(0)).alias("sum_hops"),
-            F.coalesce("harmonic_micro", F.lit(0)).alias("harmonic_micro"),
-        )
+    seeds = spark.createDataFrame([(s,) for s in _CLOSE_SEEDS], "seed string")
+    return seeds.join(per_seed, "seed", "left").select(
+        "seed",
+        F.coalesce("n_reached", F.lit(0)).alias("n_reached"),
+        F.coalesce("sum_hops", F.lit(0)).alias("sum_hops"),
+        F.coalesce("harmonic_micro", F.lit(0)).alias("harmonic_micro"),
     )
 
 
@@ -5120,31 +5048,13 @@ def privacy_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _eff_diam_sql() -> str:
-    seeds = ", ".join(f"'{s}'" for s in _CLOSE_SEEDS)
-    rounds = []
-    prev = "d0"
-    for i in range(1, _CLOSE_HOPS + 1):
-        rounds.append(f"""
-d{i} AS (
-  SELECT seed, node, MIN(hops) AS hops FROM (
-    SELECT seed, node, hops FROM {prev}
-    UNION ALL
-    SELECT p.seed, e.dst AS node, p.hops + 1 AS hops
-    FROM {prev} p JOIN edges e ON e.src = p.node
-  ) u GROUP BY 1, 2
-)""")
-        prev = f"d{i}"
-    return f"""
-WITH {_EDGES_CTE},
-seeds AS (SELECT unnest([{seeds}]) AS seed),
-d0 AS (SELECT seed, seed AS node, 0 AS hops FROM seeds),
-{','.join(rounds)},
+_EFF_DIAM_SQL = f"""
+{_close_bfs_sql()},
 n_nodes AS (SELECT COUNT(DISTINCT src)::BIGINT AS n FROM edges),
 hs AS (SELECT unnest(range({_CLOSE_HOPS + 1})) AS h),
 cov AS (
   SELECT hs.h, COUNT(*)::BIGINT AS n_pairs
-  FROM hs JOIN {prev} d ON d.hops <= hs.h
+  FROM hs JOIN d{_CLOSE_HOPS} d ON d.hops <= hs.h
   GROUP BY hs.h
 )
 SELECT CAST(c.h AS BIGINT) AS h, c.n_pairs,
@@ -5158,7 +5068,7 @@ FROM cov c CROSS JOIN n_nodes n
 
 @register(
     "graph_effective_diameter",
-    _eff_diam_sql(),
+    _EFF_DIAM_SQL,
     doc=(
         "effective-diameter coverage curve — the ANF/HyperANF "
         "question 'how many hops until ~everyone is reachable?' "
@@ -5168,40 +5078,30 @@ FROM cov c CROSS JOIN n_nodes n
         "hops, in exact 1e-6 integer micro-units (count·10⁶ div "
         "(seeds·nodes)); the effective diameter is the first h "
         "whose flag trips 90%. The per-h counts come from ONE "
-        "relaxation run — h rows re-scan the final (seed, node, "
-        "hops) state, never re-run BFS. On the dense bipartite "
+        "relaxation run — the final (seed, node, hops) state reduces "
+        "to one count per hop and each h sums those up to h (plus "
+        "the seeds themselves at hop 0), never re-running BFS. On "
+        "the dense bipartite "
         "purchase graph the curve saturates by h=3 (customer→"
         "supplier→customer covers the giant component) — the "
         "expected small-world shape, asserted in the replay test"
     ),
 )
 def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e0 = _edges(spark, sf_dir)
-    edges = pin(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-    )
-    d = spark.createDataFrame(
-        [(s, s, 0) for s in _CLOSE_SEEDS], "seed string, node string, hops int"
-    )
-    for _ in range(_CLOSE_HOPS):
-        cand = (
-            d.join(edges, d["node"] == edges["src"])
-            .select("seed", F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops"))
-        )
-        d = pin(
-            d.unionByName(cand)
-            .groupBy("seed", "node")
-            .agg(F.min("hops").alias("hops"))
-        )
-    n_nodes = edges.select("src").distinct().count()
+    edges = pin(_edges(spark, sf_dir))
+    n_nodes = edges.select("src").union(edges.select("dst")).distinct().count()
     denom = len(_CLOSE_SEEDS) * n_nodes
+    per_hop = _close_reached(edges).groupBy("hops").agg(F.count(F.lit(1)).alias("n"))
     hs = spark.range(_CLOSE_HOPS + 1).select(F.col("id").cast("int").alias("h"))
+    # every seed is its own hops-0 pair
     cov = (
-        hs.join(d, d["hops"] <= hs["h"])
+        hs.join(per_hop, per_hop["hops"] <= hs["h"], "left")
         .groupBy("h")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
+        .agg(
+            (F.coalesce(F.sum("n"), F.lit(0)) + len(_CLOSE_SEEDS))
+            .cast("bigint")
+            .alias("n_pairs")
+        )
     )
     return cov.select(
         F.col("h").cast("bigint").alias("h"),
@@ -5297,6 +5197,8 @@ def events_survival_greenwood(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("hour", F.max("ts")).alias("l"),
     )
     m = ud.agg(F.max("l").alias("mx"))
+    # DuckDB DATEDIFF('hour', ...) counts hour-BOUNDARY crossings;
+    # on hour-truncated inputs that equals elapsed seconds / 3600
     hours = lambda a, b: (  # noqa: E731
         (F.unix_timestamp(b) - F.unix_timestamp(a)) / 3600
     ).cast("bigint")

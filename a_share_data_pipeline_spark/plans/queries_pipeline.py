@@ -1459,13 +1459,24 @@ def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pagerank_sql(iters: int = 3, d: float = 0.85) -> str:
+def _rank_sql(d: float, seeds: tuple[str, ...] = (), iters: int = 3) -> str:
+    """The unrolled PageRank oracle; with ``seeds`` it is personalized
+    PageRank — teleport and r0 mass go to the seeds only, and only
+    pr > 0 is emitted."""
+    if seeds:
+        lits = ", ".join(f"'{s}'" for s in seeds)
+        sep = "\n         "
+        teleport = f"CASE WHEN s.node IN ({lits}) THEN {1.0 - d!r} ELSE 0.0 END"
+        r0 = f"CASE WHEN nodes.node IN ({lits}) THEN 1.0 ELSE 0.0 END"
+        where = " WHERE pr > 0"
+    else:
+        sep, teleport, r0, where = " ", f"{1.0 - d:.2f}", "1.0", ""
     rounds = []
     prev = "r0"
     for i in range(1, iters + 1):
         rounds.append(f"""
 r{i} AS (
-  SELECT s.node, s.outdeg, ROUND({1.0 - d:.2f} + {d} * COALESCE(i.inflow, 0), 6) AS pr
+  SELECT s.node, s.outdeg,{sep}ROUND({teleport} + {d!r} * COALESCE(i.inflow, 0), 6) AS pr
   FROM {prev} s LEFT JOIN (
     SELECT e.dst AS node, SUM(r.pr / r.outdeg) AS inflow
     FROM {prev} r JOIN edges e ON e.src = r.node
@@ -1482,17 +1493,17 @@ WITH edges AS (
 nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
 od AS (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src),
 r0 AS (
-  SELECT nodes.node, COALESCE(od.outdeg, 0) AS outdeg, 1.0 AS pr
+  SELECT nodes.node, COALESCE(od.outdeg, 0) AS outdeg,{sep}{r0} AS pr
   FROM nodes LEFT JOIN od ON od.node = nodes.node
 ),
 {','.join(rounds)}
-SELECT node, pr FROM {prev}
+SELECT node, pr FROM {prev}{where}
 """
 
 
 @register(
     "graph_pagerank",
-    _pagerank_sql(),
+    _rank_sql(0.85),
     doc=(
         "PageRank (3 rounds, d=0.85) over the customer→supplier "
         "purchase graph: the second iterative-graph operator family "
@@ -2376,44 +2387,9 @@ _PPR_SEEDS = ("c1", "c2", "c3", "c4", "c5")
 _PPR_D = 6.0 / 7.0
 
 
-def _ppr_sql(iters: int = 3, d: float = _PPR_D) -> str:
-    seeds = ", ".join(f"'{s}'" for s in _PPR_SEEDS)
-    base = f"CASE WHEN s.node IN ({seeds}) THEN {1.0 - d!r} ELSE 0.0 END"
-    rounds = []
-    prev = "r0"
-    for i in range(1, iters + 1):
-        rounds.append(f"""
-r{i} AS (
-  SELECT s.node, s.outdeg,
-         ROUND({base} + {d!r} * COALESCE(i.inflow, 0), 6) AS pr
-  FROM {prev} s LEFT JOIN (
-    SELECT e.dst AS node, SUM(r.pr / r.outdeg) AS inflow
-    FROM {prev} r JOIN edges e ON e.src = r.node
-    WHERE r.outdeg > 0 GROUP BY e.dst
-  ) i ON i.node = s.node
-)""")
-        prev = f"r{i}"
-    return f"""
-WITH edges AS (
-  SELECT DISTINCT 'c' || CAST(o_custkey AS VARCHAR) AS src,
-                  's' || CAST(l_suppkey AS VARCHAR) AS dst
-  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-),
-nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-od AS (SELECT src AS node, COUNT(*) AS outdeg FROM edges GROUP BY src),
-r0 AS (
-  SELECT nodes.node, COALESCE(od.outdeg, 0) AS outdeg,
-         CASE WHEN nodes.node IN ({seeds}) THEN 1.0 ELSE 0.0 END AS pr
-  FROM nodes LEFT JOIN od ON od.node = nodes.node
-),
-{','.join(rounds)}
-SELECT node, pr FROM {prev} WHERE pr > 0
-"""
-
-
 @register(
     "graph_pagerank_personalized",
-    _ppr_sql(),
+    _rank_sql(_PPR_D, _PPR_SEEDS),
     doc=(
         "personalized PageRank — teleport mass restricted to a seed "
         "set (r' = (1-d)·1[seed] + d·Σ r/outdeg, r0 = the teleport "

@@ -51,13 +51,20 @@ from a_share_data_pipeline_spark.session import get_spark  # noqa: E402
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "SWEEP_SF01.jsonl")
 ORACLE_TIMEOUT_S = 150
+# DuckDB's own cap, so an oracle that outgrows it fails with an
+# out-of-memory error (recorded as oracle-error, re-probed on resume)
+# instead of the host killing the whole sweep process. The Spark JVM
+# shares the host, so the cap stays well under its RAM.
+DUCKDB_MEMORY_LIMIT = "4GB"
 # sf0.1-only (matched on the directory BASENAME — a path merely
 # containing 'sf0.1' like .../sf0.12 must not trigger it): at
 # sf0.001/sf0.01 the components are small and the recursive oracle is
 # the driver-facing contract — run it there. geo_dbscan_grid's
-# min-label closure is quadratic on the percolated sf0.1 cluster, so
-# its oracle is not even attempted at that SF; the replay lane below
-# is its sf0.1 verification, same as an oracle-timeout fall-through.
+# min-label closure is quadratic on the percolated sf0.1 cluster and
+# graph_cc_incremental's outgrew a 15 GB host before its timeout
+# fired, so neither oracle is attempted at that SF; the replay lane
+# below is their sf0.1 verification, same as an oracle-timeout
+# fall-through.
 _IS_SF01 = os.path.basename(SF.rstrip("/")) == "sf0.1"
 ORACLE_PRESKIP = (
     {
@@ -65,6 +72,11 @@ ORACLE_PRESKIP = (
             "recursive-closure oracle quadratic at sf0.1 "
             "(O(|component|*|labels|) on the percolated cluster); "
             "verified via the union-find replay lane instead"
+        ),
+        "graph_cc_incremental": (
+            "recursive-closure oracle runs out of memory at sf0.1 "
+            "before its timeout fires; verified via the union-find "
+            "replay lane instead"
         ),
     }
     if _IS_SF01
@@ -301,7 +313,7 @@ def _load_resume(path):
 
 def main() -> None:
     spark = get_spark("sf-sweep")
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": DUCKDB_MEMORY_LIMIT})
     for t in TABLES.split():
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"

@@ -46,12 +46,21 @@ def test_bfs_hops_chain_distances_and_unreached_dropped(spark):
 
 def test_bfs_hops_multi_source_takes_minimum(spark):
     """Two seeds at both ends of a 4-chain: the middle nodes take the
-    nearer seed's distance."""
+    nearer seed's distance; with per_seed each seed keeps its own
+    distances. A seed on no edge (z) yields no row either way."""
     from a_share_data_pipeline_spark.operators.graph import bfs_hops
 
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
-    got = {r.node: r.hops for r in bfs_hops(e, seeds=["a", "d"], max_hops=3).collect()}
+    got = {r.node: r.hops for r in bfs_hops(e, seeds=["a", "d", "z"], max_hops=3).collect()}
     assert got == {"a": 0, "b": 1, "c": 1, "d": 0}
+    got = {
+        (r.seed, r.node): r.hops
+        for r in bfs_hops(e, seeds=["a", "d", "z"], max_hops=3, per_seed=True).collect()
+    }
+    assert got == {
+        ("a", "a"): 0, ("a", "b"): 1, ("a", "c"): 2, ("a", "d"): 3,
+        ("d", "d"): 0, ("d", "c"): 1, ("d", "b"): 2, ("d", "a"): 3,
+    }
 
 
 def test_pair_containment_prefix_doc_is_fully_contained(spark):
@@ -164,15 +173,21 @@ def test_sssp_round_budget_bounds_path_length(spark):
 
 
 def test_sssp_parallel_edges_keep_cheapest(spark):
-    """Duplicate (a, b) edges with different weights: the dedup
-    min-fold must keep w=3, not double-count or pick arbitrarily."""
+    """Duplicate (a, b) edges with different weights plus a cheaper
+    mirrored (b, a) copy: the round's min must keep w=2 from either
+    seed, not double-count or pick arbitrarily."""
     from a_share_data_pipeline_spark.operators.graph import sssp
 
     e = spark.createDataFrame(
-        [("a", "b", 7), ("a", "b", 3)], "src string, dst string, w long"
+        [("a", "b", 7), ("a", "b", 3), ("b", "a", 2)], "src string, dst string, w long"
     )
     got = {r.node: r.dist for r in sssp(e, seeds=["a"], max_rounds=1).collect()}
-    assert got == {"a": 0, "b": 3}
+    assert got == {"a": 0, "b": 2}
+    got = {
+        (r.seed, r.node): r.dist
+        for r in sssp(e, seeds=["a", "b"], max_rounds=1, per_seed=True).collect()
+    }
+    assert got == {("a", "a"): 0, ("a", "b"): 2, ("b", "b"): 0, ("b", "a"): 2}
 
 
 def test_skyline_dominance_on_constructed_frontier(spark, tmp_path):

@@ -832,7 +832,9 @@ def test_coverage_totals_match_live_catalog():
     """COVERAGE.md's totals line is generated, not hand-written
     (VERDICT r5: the hand-written '137 = 50 + 87' went stale while the
     registry grew to 177). Both COVERAGE.md and the generated
-    QUERIES.md must carry exactly catalog.totals_markdown()."""
+    QUERIES.md must carry exactly catalog.totals_markdown(), and
+    QUERIES.md must be exactly catalog_markdown()'s output, so a
+    registered doc edit cannot leave it stale."""
     import os
 
     from a_share_data_pipeline_spark.plans.catalog import (
@@ -850,6 +852,8 @@ def test_coverage_totals_match_live_catalog():
             os.path.join(repo, "COVERAGE.md")
         ).read(), "COVERAGE.md totals line != totals_markdown()"
     assert line in catalog_markdown()
+    with open(os.path.join(repo, "QUERIES.md")) as f:
+        assert f.read() == catalog_markdown() + "\n", "QUERIES.md != catalog_markdown()"
 
 
 def test_coverage_tiers_block_matches_live_history():
