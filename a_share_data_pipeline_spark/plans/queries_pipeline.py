@@ -1465,6 +1465,8 @@ def _rank_sql(d: float, seeds: tuple[str, ...] = (), iters: int = 3) -> str:
     pr > 0 is emitted."""
     if seeds:
         lits = ", ".join(f"'{s}'" for s in seeds)
+        # whitespace only: keeps PPR's registered oracle text as it
+        # was, with the long pr column on its own line
         sep = "\n         "
         teleport = f"CASE WHEN s.node IN ({lits}) THEN {1.0 - d!r} ELSE 0.0 END"
         r0 = f"CASE WHEN nodes.node IN ({lits}) THEN 1.0 ELSE 0.0 END"

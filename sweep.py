@@ -53,8 +53,11 @@ OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, "SWEEP_SF01.jsonl
 ORACLE_TIMEOUT_S = 150
 # DuckDB's own cap, so an oracle that outgrows it fails with an
 # out-of-memory error (recorded as oracle-error, re-probed on resume)
-# instead of the host killing the whole sweep process. The Spark JVM
-# shares the host, so the cap stays well under its RAM.
+# instead of the host killing the whole sweep process. Sized from
+# ORACLE_MEM_SF01_pr8.jsonl (every oracle at sf0.1 in its own process
+# under this cap, 4 vCPUs / 15 GB): the largest peak RSS is
+# graph_hits' 2.5 GB (2.6 GB uncapped), so every oracle that
+# completes keeps ~1.5x headroom and the Spark JVM keeps the rest.
 DUCKDB_MEMORY_LIMIT = "4GB"
 # sf0.1-only (matched on the directory BASENAME — a path merely
 # containing 'sf0.1' like .../sf0.12 must not trigger it): at

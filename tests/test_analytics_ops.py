@@ -173,14 +173,17 @@ def test_sssp_round_budget_bounds_path_length(spark):
 
 
 def test_sssp_parallel_edges_keep_cheapest(spark):
-    """Duplicate (a, b) edges with different weights plus a cheaper
-    mirrored (b, a) copy: the round's min must keep w=2 from either
-    seed, not double-count or pick arbitrarily."""
+    """Duplicate (a, b) edges with different weights: the round's min
+    must keep w=3, not double-count or pick arbitrarily. A cheaper
+    mirrored (b, a) copy then wins from either seed, per_seed too."""
     from a_share_data_pipeline_spark.operators.graph import sssp
 
     e = spark.createDataFrame(
-        [("a", "b", 7), ("a", "b", 3), ("b", "a", 2)], "src string, dst string, w long"
+        [("a", "b", 7), ("a", "b", 3)], "src string, dst string, w long"
     )
+    got = {r.node: r.dist for r in sssp(e, seeds=["a"], max_rounds=1).collect()}
+    assert got == {"a": 0, "b": 3}
+    e = e.union(spark.createDataFrame([("b", "a", 2)], e.schema))
     got = {r.node: r.dist for r in sssp(e, seeds=["a"], max_rounds=1).collect()}
     assert got == {"a": 0, "b": 2}
     got = {
