@@ -8,7 +8,7 @@ Reference (SURVEY.md §3):
      (market/delta_non_fq_daily_kline.py:170-181)
      — incremental: watermark → per-day fetch → merge → inner-join dim
        → append → download+UNION ALL+overwrite published → advance wm
-       (here: a line-level rewrite of the published file, see delta_flow)
+       (here: a byte splice of the published file, see delta_flow)
   3. fetch_trade_calendar_flow (market/trade_calendar.py:45-50)
      — calendar: fetch open days → cast → sort → overwrite → publish
 
@@ -25,6 +25,7 @@ fixtures, or parquet.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 from datetime import date, timedelta
@@ -41,6 +42,7 @@ from .streaming.incremental import WatermarkStore
 PRICES_FILE = "all-prices.csv"
 CALENDAR_FILE = "calendar.csv"
 WATERMARK_FILE = ".last_update_date"
+SEGMENTS_FILE = ".all-prices.segments.json"  # PRICES_FILE's segment index
 
 
 def backfill_flow(
@@ -95,26 +97,31 @@ def delta_flow(
     returned frame all see the same rows, even from a nondeterministic
     source.
 
-    The publish rewrites lines, not rows. The old published file is
-    read as text, its header checked against CANONICAL (a mismatch
-    raises before upload, so the watermark stays put), and the new
-    file is the old data lines followed by the delta's lines — old
-    lines pass through byte-for-byte, nothing is parsed or shuffled.
+    The publish splices bytes, not rows, in the driver: no Spark job
+    runs after the staging append. The old published file's header is
+    checked against CANONICAL (a mismatch raises before upload, so the
+    watermark stays put), and the new file is the old lines followed by
+    the delta's lines, read back from the staging file. A segment index
+    (SEGMENTS_FILE) beside the published file tells `sinks.splice_csv`
+    which leading bytes no merge can touch; those are copied as they
+    are, the rest filtered line by line. The file is uploaded before
+    its index and both before the watermark.
 
     mode='compat' (default) keeps reference semantics on purpose:
     published = old UNION ALL new with NO dedup (U1 — a crash rerun
     duplicates rows), and late rows before the watermark are lost
-    forever (§2.9).
+    forever (§2.9). The publish is a pure append.
 
     mode='merge' is the strictly-better upgrade the reference can't do:
     the delta window re-opens `slack_days` behind the watermark (so a
     source backfilling a recent past date is picked up), and every old
-    line whose (code, date) the delta carries is dropped (broadcast
-    anti-join on the line's text prefix) — reruns and the re-read slack
-    window replace their keys, delta rows winning. Lines outside the
-    delta's keys are kept as they are: duplicates an earlier compat
-    rerun left outside the window stay duplicated. A hub maintained in
-    merge mode from a backfill stays key-unique."""
+    line whose (code, date) the delta carries is dropped — reruns and
+    the re-read slack window replace their keys, delta rows winning.
+    Only segments with a date after the window's start can hold such
+    a line. Lines outside the delta's keys are kept as they are:
+    duplicates an earlier compat rerun left outside the window stay
+    duplicated. A hub maintained in merge mode from a backfill stays
+    key-unique."""
     if mode not in ("compat", "merge"):
         raise ValueError(f"unknown mode: {mode}")
     wm = watermark.read()
@@ -150,18 +157,30 @@ def delta_flow(
     if seen["rows"] == 0:  # P6: no new rows → no publish, no advance
         return None
 
-    sinks.append_csv(delta, staging_path)  # local delta CSV, ref :101-107
+    offset = sinks.append_csv(delta, staging_path)  # local delta CSV, ref :101-107
+    with open(staging_path, "rb") as f:
+        f.seek(offset)
+        delta_lines = f.read()
 
+    old = index = None
+    if publisher.exists(PRICES_FILE):
+        old = publisher.download(PRICES_FILE)
+        if publisher.exists(SEGMENTS_FILE):
+            with open(publisher.download(SEGMENTS_FILE)) as f:
+                index = json.load(f)
     with tempfile.TemporaryDirectory(dir=os.path.dirname(staging_path) or ".") as tmp:
-        kept = None
-        if publisher.exists(PRICES_FILE):
-            # compat: U1 bag union, nothing dropped; merge: delta keys replace old lines
-            drop = delta.select("code", "date") if mode == "merge" else None
-            header = ",".join(CANONICAL.fieldNames())
-            kept = sinks.read_lines(spark, publisher.download(PRICES_FILE), header, drop)
         published_local = os.path.join(tmp, PRICES_FILE)
-        sinks.overwrite_csv(delta, published_local, keep=kept)
+        segments_local = os.path.join(tmp, SEGMENTS_FILE)
+        # compat: U1 bag union, nothing dropped; merge: delta keys replace old lines
+        replace_after = slack_from.isoformat() if mode == "merge" else None
+        header = ",".join(CANONICAL.fieldNames())
+        index = sinks.splice_csv(old, index, delta_lines, published_local, header, replace_after)
+        with open(segments_local, "w") as f:
+            json.dump(index, f)
+        # file before index: a crash between the two leaves an index that
+        # no longer matches the file, which the next splice ignores
         publisher.upload(published_local, PRICES_FILE)
+        publisher.upload(segments_local, SEGMENTS_FILE)
 
     watermark.write(end)  # advance ONLY after publish success (T1)
     publisher.upload(watermark.path, WATERMARK_FILE)

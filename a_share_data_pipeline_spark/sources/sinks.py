@@ -15,11 +15,16 @@ Reference semantics being reproduced:
 The compat sinks write text lines: `csv_lines` renders rows with the
 CSV writer's own generator and options, so a line written once can be
 passed through a later rewrite unparsed. The delta publish
-(`flows.delta_flow`) is such a rewrite: `read_lines` filters the old
-published file as text — header checked, lines whose (code, date)
-prefix the delta replaces dropped by a broadcast anti-join — and
-`overwrite_csv(delta, path, keep=...)` writes the kept lines followed
-by the delta's lines. Nothing is parsed and nothing is shuffled.
+(`flows.delta_flow`) is such a rewrite, done by `splice_csv` in the
+driver without a Spark job: the published file is a sequence of
+segments (the backfill, then one tail per cycle), and a segment index
+records each segment's byte offset and max date. Segments no merge can
+touch are copied byte for byte, the later ones are filtered line by
+line on their `code,date` prefix, and the delta's lines (read back from
+the staging append) go last. Once the index describes the file, only
+the lines a merge can reach are parsed (O(delta)); the rest is a byte
+copy plus the sha256 that checks the index. Without a valid index every
+line is parsed, in one pass.
 
 Scale note: the compat sinks intentionally produce ONE file because the
 reference's contract is one canonical CSV; they stream partition files
@@ -31,11 +36,13 @@ incremental read path), append/overwrite via Spark's committer.
 from __future__ import annotations
 
 import glob
+import hashlib
+import io
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CSV_OPTS = {
@@ -54,49 +61,28 @@ def csv_lines(df: DataFrame) -> DataFrame:
     return df.select(F.to_csv(F.struct(*df.columns), CSV_OPTS).alias("value"))
 
 
-def read_lines(
-    spark: SparkSession, path: str, header: str, drop: DataFrame | None = None
-) -> DataFrame:
-    """The data lines of a CSV file these sinks wrote, unparsed (one
-    `value` column), ready to pass through `overwrite_csv(keep=...)`.
-
-    Raises ValueError unless the file's first line is `header`: lines
-    are only passed through under the header they were written with.
-    `drop` holds rows of the file's leading columns, in order (its
-    key); every line whose rendered prefix equals a rendered `drop` row
-    is removed by a broadcast anti-join on the text. The key columns
-    must never need CSV quoting (codes and ISO dates do not)."""
-    with open(path, encoding="utf-8") as f:
-        first = f.readline().rstrip("\n")
-    if first != header:
-        raise ValueError(f"{path}: header {first!r} is not {header!r}")
-    lines = spark.read.text(path).filter(F.col("value") != header)
-    if drop is None:
-        return lines
-    n = len(drop.columns)
-    keys = csv_lines(drop).withColumnRenamed("value", "key")
-    prefix = F.substring_index(lines["value"], ",", n)
-    return lines.join(F.broadcast(keys), prefix == keys["key"], "left_anti")
-
-
-def _write_lines(lines: DataFrame, path: str, mode: str, header: str | None) -> None:
+def _write_lines(lines: DataFrame, path: str, mode: str, header: str | None) -> int:
     """Write text lines as part-files in a temp dir beside `path`, then
-    stream them into `path` in part order (no driver collect)."""
+    copy their bytes into `path` in part order (no driver collect).
+    Returns the byte offset in `path` where the lines start."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with tempfile.TemporaryDirectory(dir=os.path.dirname(path) or ".") as tmp:
         stage = os.path.join(tmp, "stage")
         lines.write.text(stage)
-        with open(path, mode, encoding="utf-8") as out:
+        with open(path, mode + "b") as out:
             if header is not None:
-                out.write(header + "\n")
+                out.write((header + "\n").encode())
+            start = out.tell()
             for p in sorted(glob.glob(os.path.join(stage, "part-*"))):
-                with open(p, encoding="utf-8") as src:
+                with open(p, "rb") as src:
                     shutil.copyfileobj(src, out)
+    return start
 
 
-def append_csv(df: DataFrame, path: str) -> None:
+def append_csv(df: DataFrame, path: str) -> int:
     """S9: append rows to ONE csv file; write the header only if the
-    file does not exist yet (reference header-once semantics).
+    file does not exist yet (reference header-once semantics). Returns
+    the byte offset where the appended lines start.
 
     Partition part-files are streamed into the target without a driver
     collect; ordering across partitions is unspecified, as in any
@@ -104,14 +90,97 @@ def append_csv(df: DataFrame, path: str) -> None:
     its order is an artifact of the driver loop, not a contract).
     """
     first_write = not os.path.exists(path)  # header_once predicate
-    _write_lines(csv_lines(df), path, "a", ",".join(df.columns) if first_write else None)
+    return _write_lines(
+        csv_lines(df), path, "a", ",".join(df.columns) if first_write else None
+    )
 
 
-def overwrite_csv(df: DataFrame, path: str, keep: DataFrame | None = None) -> None:
-    """S10: full single-file rewrite, header always. `keep` (lines from
-    `read_lines`) is written first, byte-for-byte, then df's rows."""
-    lines = csv_lines(df) if keep is None else keep.unionByName(csv_lines(df))
-    _write_lines(lines, path, "w", ",".join(df.columns))
+def overwrite_csv(df: DataFrame, path: str) -> None:
+    """S10: full single-file rewrite, header always."""
+    _write_lines(csv_lines(df), path, "w", ",".join(df.columns))
+
+
+def _key(line: bytes) -> tuple[bytes, bytes]:
+    """A line's (code, date): its first two fields, which never need
+    CSV quoting."""
+    code, _, rest = line.partition(b",")
+    return code, rest.partition(b",")[0]
+
+
+def splice_csv(
+    old: str | None,
+    index: dict | None,
+    delta: bytes,
+    out: str,
+    header: str,
+    replace_after: str | None = None,
+) -> dict:
+    """Write `out` = the published CSV `old` (None: nothing published
+    yet) followed by `delta`'s lines, and return `out`'s segment index.
+
+    An index is `{"size", "sha256", "segments": [[offset, max_date]]}`
+    over the file's bytes; each segment runs from its offset to the
+    next one's (the last to the end of the file), and max_date bounds
+    the ISO dates of its lines. `index` is `old`'s index as an earlier
+    splice returned it; one that is missing or whose size or sha256
+    does not match `old` counts as one segment after the header with an
+    unknown max date, so every line is read.
+
+    `replace_after` None (compat) drops nothing: `out` is `old` with the
+    delta appended. A date (merge) drops every old line whose (code,
+    date) the delta carries — the caller guarantees all such dates are
+    after it, so segments whose max date is not are copied byte for
+    byte; the rest are filtered line by line. Untouched leading
+    segments merge into one index row; filtered segments keep a row
+    each, bounded by the dates of their kept lines.
+
+    Raises ValueError unless `old`'s first line is `header`: lines are
+    only passed through under the header they were written with."""
+    hdr = (header + "\n").encode()
+    lines = delta.splitlines()
+    keys = {_key(ln) for ln in lines} if replace_after else set()
+    with open(old, "rb") if old else io.BytesIO(hdr) as src, open(out, "wb") as dst:
+        if (first := src.readline()) != hdr:
+            raise ValueError(f"{old}: header {first.decode(errors='replace')!r} is not {header!r}")
+        size = src.seek(0, os.SEEK_END)
+        trusted = bool(old and index and index.get("size") == size)
+        rows = [(len(hdr), None)] if old else []  # unknown layout: one segment, all read
+        if trusted:
+            rows = [tuple(r) for r in index["segments"]]
+        # the first segment that can hold a delta key; the ones before it are copied
+        cut = next(
+            (i for i, (_, top) in enumerate(rows) if top is None or (keys and top > replace_after)),
+            len(rows),
+        )
+        ends = [off for off, _ in rows[1:]] + [size]
+        segments = [[len(hdr), max(top for _, top in rows[:cut])]] if cut else []
+        src.seek(0)
+        read = hashlib.sha256()  # every byte of `old`, to check the index against
+        prefix = ends[cut - 1] if cut else len(hdr)
+        for chunk in iter(lambda: src.read(min(1 << 22, prefix - src.tell())), b""):
+            read.update(chunk)
+            dst.write(chunk)
+        wrote = read.copy()  # every byte of `out`
+        for end in ends[cut:]:
+            start, top = dst.tell(), b""
+            while src.tell() < end and (line := src.readline()):
+                read.update(line)
+                key = _key(line)
+                if key not in keys:
+                    line = line if line.endswith(b"\n") else line + b"\n"
+                    dst.write(line)
+                    wrote.update(line)
+                    top = max(top, key[1])
+            if top:
+                segments.append([start, top.decode()])
+        if lines:
+            segments.append([dst.tell(), max(_key(ln)[1] for ln in lines).decode()])
+            dst.write(delta)
+            wrote.update(delta)
+    if trusted and read.hexdigest() != index.get("sha256"):
+        # same size, other bytes: the index's offsets mean nothing here
+        return splice_csv(old, None, delta, out, header, replace_after)
+    return {"size": os.path.getsize(out), "sha256": wrote.hexdigest(), "segments": segments}
 
 
 def write_native(
@@ -171,9 +240,16 @@ class LocalDirPublisher(Publisher):
         os.makedirs(repo_dir, exist_ok=True)
 
     def upload(self, local_path: str, repo_path: str) -> None:
+        """Atomic: a copy that fails part-way leaves the old file whole."""
         dst = os.path.join(self.repo_dir, repo_path)
         os.makedirs(os.path.dirname(dst) or ".", exist_ok=True)
-        shutil.copyfile(local_path, dst)
+        tmp = dst + ".tmp"
+        try:
+            shutil.copyfile(local_path, tmp)
+            os.replace(tmp, dst)
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
 
     def download(self, repo_path: str) -> str:
         return os.path.join(self.repo_dir, repo_path)

@@ -12,15 +12,16 @@ Spark restatement (the cycle itself is `flows.delta_flow`):
   (the reference HAS the calendar but iterates wall-clock days and
   skips empties — we fix that, and keep the skip as a fallback); at
   100 TB this prunes to exactly the new date partitions,
-- download→UNION ALL→overwrite becomes a line-level rewrite
-  (`flows.delta_flow` with `sinks.read_lines`/`sinks.overwrite_csv`):
-  the old published lines pass through as unparsed text, the delta's
-  lines are appended. 'compat' drops nothing — the reference's UNION
-  ALL, so a crash rerun can duplicate (code,date) rows (documented
-  semantics, SURVEY.md §2.4 U1); 'merge' first drops the old lines
-  whose (code,date) the delta carries (broadcast anti-join, delta
-  wins), so reruns are idempotent. Lines outside the delta's keys are
-  never touched: duplicates an earlier compat rerun left there stay,
+- download→UNION ALL→overwrite becomes a byte splice in the driver
+  (`flows.delta_flow` with `sinks.splice_csv`): the old published
+  bytes pass through unparsed, the delta's lines are appended. 'compat'
+  drops nothing — the reference's UNION ALL, a pure append, so a crash
+  rerun can duplicate (code,date) rows (documented semantics, SURVEY.md
+  §2.4 U1); 'merge' first drops the old lines whose (code,date) the
+  delta carries (delta wins), so reruns are idempotent. A segment index
+  beside the published file bounds that filter to the segments the
+  delta's window can reach. Lines outside the delta's keys are never
+  touched: duplicates an earlier compat rerun left there stay,
 - `merge_increment` is the same two modes over DataFrames (UNION ALL /
   row_number dedup on the key, last-writer-wins), for frames that are
   not a published file (`merge_idempotent` in plans/queries_pipeline),

@@ -524,3 +524,212 @@ def test_publish_failure_does_not_advance_watermark(spark, fixture_sdfs, tmp_pat
     assert wm.read() == frozen  # not advanced past the failed publish
     # the publish scratch file lived in a temp dir that is gone again
     assert sorted(os.listdir(tmp_path)) == [".wm", "delta.csv", "hub"]
+
+
+def test_upload_leaves_the_old_file_whole_when_the_copy_fails(tmp_path, monkeypatch):
+    """LocalDirPublisher.upload is atomic: a copy that raises part-way
+    leaves the published file byte-identical and no temp file behind."""
+    import shutil
+
+    pub = sinks.LocalDirPublisher(str(tmp_path / "hub"))
+    old, new = tmp_path / "old.csv", tmp_path / "new.csv"
+    old.write_bytes(b"a,b\n1,2\n")
+    new.write_bytes(b"a,b\n" + b"3,4\n" * 1000)
+    pub.upload(str(old), flows.PRICES_FILE)
+
+    def torn_copy(src, dst):
+        with open(src, "rb") as f, open(dst, "wb") as out:
+            out.write(f.read(100))
+        raise OSError("disk full")
+
+    monkeypatch.setattr(shutil, "copyfile", torn_copy)
+    with pytest.raises(OSError, match="disk full"):
+        pub.upload(str(new), flows.PRICES_FILE)
+    assert (tmp_path / "hub" / flows.PRICES_FILE).read_bytes() == old.read_bytes()
+    assert os.listdir(tmp_path / "hub") == [flows.PRICES_FILE]
+
+
+def _day(s: str) -> dt.date:
+    return dt.datetime.strptime(s, "%Y%m%d").date()
+
+
+def _backfilled_hub(spark, s, tmp_path, last: str):
+    """A hub holding a backfill through `last`, and its watermark."""
+    from pyspark.sql import functions as F
+
+    pub = sinks.LocalDirPublisher(str(tmp_path / "hub"))
+    wm = WatermarkStore(str(tmp_path / ".wm"))
+    until = lambda df: df.filter(F.col("trade_date") <= last)  # noqa: E731
+    flows.backfill_flow(
+        spark, until(s["daily"]), until(s["limit"]), until(s["dbasic"]), s["stock_basic"],
+        str(tmp_path / "backfill.csv"), pub, wm, _day(last),
+    )
+    return pub, wm
+
+
+def _cycle(spark, s, tmp_path, pub, wm, end: str, mode="merge", daily=None) -> list[str]:
+    """One delta cycle through `end`; the delta's lines, sorted."""
+    delta = flows.delta_flow(
+        spark, s["daily"] if daily is None else daily, s["limit"], s["dbasic"],
+        s["stock_basic"], str(tmp_path / "delta.csv"), pub, wm, _day(end),
+        calendar=s["cal"], mode=mode, slack_days=3,
+    )
+    return sorted(r.value for r in sinks.csv_lines(delta).collect())
+
+
+def _key(line: str) -> tuple[str, str]:
+    return tuple(line.split(",")[:2])
+
+
+def _merged(before: list[str], delta: list[str]) -> list[str]:
+    """The merge semantics: old lines minus the delta's keys, plus the delta."""
+    keys = {_key(ln) for ln in delta}
+    return sorted([ln for ln in before if _key(ln) not in keys] + delta)
+
+
+def _index(pub) -> dict:
+    """The published file's segment index, checked against its bytes."""
+    import hashlib
+    import json
+
+    with open(pub.download(flows.SEGMENTS_FILE)) as f:
+        index = json.load(f)
+    with open(pub.download(flows.PRICES_FILE), "rb") as f:
+        body = f.read()
+    assert index["size"] == len(body)
+    assert index["sha256"] == hashlib.sha256(body).hexdigest()
+    return index
+
+
+def test_compat_publish_is_a_pure_append(spark, fixture_sdfs, fixture_pdfs, tmp_path):
+    """Compat drops nothing, so each publish appends: the old file's
+    bytes are a prefix of the new file's, with or without an index."""
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    pub, wm = _backfilled_hub(spark, fixture_sdfs, tmp_path, cal_days[14])
+    published = pub.download(flows.PRICES_FILE)
+    for end in cal_days[15:17]:  # first without an index, then with one
+        with open(published, "rb") as f:
+            before = f.read()
+        delta = _cycle(spark, fixture_sdfs, tmp_path, pub, wm, end, mode="compat")
+        with open(published, "rb") as f:
+            after = f.read()
+        assert after.startswith(before)
+        assert sorted(after[len(before):].decode().splitlines()) == delta
+    assert len(_index(pub)["segments"]) == 2  # the old file, then the delta
+
+
+def test_merge_publish_ignores_a_stale_segment_index(
+    spark, fixture_sdfs, fixture_pdfs, tmp_path
+):
+    """A missing index, an index whose size does not match the file, and
+    a same-size file whose lines were permuted under a stale index each
+    fall back to a full pass: the result is exactly the old lines minus
+    the delta's keys plus the delta, with no duplicate (code, date)."""
+    import random
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    s = fixture_sdfs
+    pub, wm = _backfilled_hub(spark, s, tmp_path, cal_days[14])
+    for end in cal_days[15:19]:
+        _cycle(spark, s, tmp_path, pub, wm, end)
+    # the index lets the next cycle copy a prefix, so trusting it stale would matter
+    slack_from = (wm.read() - dt.timedelta(days=3)).isoformat()
+    assert _index(pub)["segments"][0][1] <= slack_from
+    restated = s["daily"].withColumn("close", F.col("close") + 0.5)
+    header = ",".join(CANONICAL.fieldNames())
+
+    for stale in ("missing", "size", "permuted"):
+        case = tmp_path / stale
+        shutil.copytree(tmp_path / "hub", case / "hub")
+        shutil.copy(wm.path, case / ".wm")
+        hub = sinks.LocalDirPublisher(str(case / "hub"))
+        published = hub.download(flows.PRICES_FILE)
+        lines = _data_lines(published)
+        if stale == "missing":
+            os.remove(hub.download(flows.SEGMENTS_FILE))
+        else:
+            random.Random(7).shuffle(lines)
+            if stale == "size":
+                lines = lines[1:]
+            with open(published, "w", encoding="utf-8") as f:
+                f.write("\n".join([header, *lines]) + "\n")
+        delta = _cycle(
+            spark, s, case, hub, WatermarkStore(str(case / ".wm")), cal_days[19],
+            daily=restated,
+        )
+        after = _data_lines(published)
+        assert sorted(after) == _merged(lines, delta), stale
+        assert len({_key(ln) for ln in after}) == len(after), stale
+        _index(hub)
+
+
+def test_merge_publish_exact_after_a_watermark_reset(
+    spark, fixture_sdfs, fixture_pdfs, tmp_path
+):
+    """Resetting the watermark back across earlier cycles' segments
+    re-opens them: the splice filters every segment the wider window
+    can touch, and the result is exact."""
+    from pyspark.sql import functions as F
+
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    s = fixture_sdfs
+    pub, wm = _backfilled_hub(spark, s, tmp_path, cal_days[14])
+    for end in cal_days[15:20]:
+        _cycle(spark, s, tmp_path, pub, wm, end)
+    reset = _day(cal_days[16])
+    tops = [top for _, top in _index(pub)["segments"]]
+    assert sum(top > reset.isoformat() for top in tops) >= 2
+    wm.write(reset)
+    before = _data_lines(pub.download(flows.PRICES_FILE))
+    restated = s["daily"].withColumn("close", F.col("close") + 0.5)
+    delta = _cycle(spark, s, tmp_path, pub, wm, cal_days[19], daily=restated)
+    after = _data_lines(pub.download(flows.PRICES_FILE))
+    assert sorted(after) == _merged(before, delta)
+    assert len({_key(ln) for ln in after}) == len(after)
+    _index(pub)
+
+
+def test_segment_index_stays_small(spark, fixture_sdfs, fixture_pdfs, tmp_path):
+    """Untouched leading segments merge into one index row, so after 10
+    merge cycles the index holds at most slack-window + 2 rows."""
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    s = fixture_sdfs
+    pub, wm = _backfilled_hub(spark, s, tmp_path, cal_days[14])
+    for end in cal_days[15:25]:
+        _cycle(spark, s, tmp_path, pub, wm, end)
+    assert len(_index(pub)["segments"]) <= 3 + 2
+    lines = _data_lines(pub.download(flows.PRICES_FILE))
+    assert len({_key(ln) for ln in lines}) == len(lines)
+
+
+def test_merge_publish_runs_no_spark_job(
+    spark, fixture_sdfs, fixture_pdfs, tmp_path, monkeypatch
+):
+    """After its pin returns, a merge delta_flow submits exactly one
+    Spark job — the delta's one render to the staging file; the publish
+    itself runs in the driver."""
+    cal_days = list(fixture_pdfs["cal"]["cal_date"])
+    s = fixture_sdfs
+    pub, wm = _backfilled_hub(spark, s, tmp_path, cal_days[14])
+    _cycle(spark, s, tmp_path, pub, wm, cal_days[15])
+    sc = spark.sparkContext
+    pin = flows.pin
+
+    def pin_then_group(df, **metrics):
+        out = pin(df, **metrics)
+        sc.setJobGroup("after-pin", "delta_flow after its pin")
+        return out
+
+    monkeypatch.setattr(flows, "pin", pin_then_group)
+    try:
+        flows.delta_flow(
+            spark, s["daily"], s["limit"], s["dbasic"], s["stock_basic"],
+            str(tmp_path / "delta.csv"), pub, wm, _day(cal_days[16]),
+            calendar=s["cal"], mode="merge", slack_days=3,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("after-pin")) == 1
