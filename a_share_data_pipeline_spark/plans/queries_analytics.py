@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.ordering import ordkey
 from ..functions.rounding import dround
 from ..operators import dedup as D
 from ..session import clone_session, pin, set_width, volume_width
@@ -4100,16 +4101,12 @@ def _haar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    ordkey = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     return (
         ev.select(
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
             dround(F.col("value") * 100, 0).cast("bigint").alias("close_c"),
-            ordkey.alias("ordkey"),
+            ordkey().alias("ordkey"),
         )
         .groupBy("event_type", "day")
         .agg(F.max_by("close_c", "ordkey").alias("close_c"))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.ordering import ORDKEY_SQL, ordkey
 from ..functions.rounding import dround
 from ..session import pin
 from ..sources import load_table
@@ -27,20 +28,6 @@ from .catalog import register
 # ---------------------------------------------------------------------------
 # shared frames: cents-priced ticks, daily closes, weekly OHLC
 # ---------------------------------------------------------------------------
-
-# Zero-padded (epoch-micros, event_id) string key: unique, identically
-# ordered on both engines — the events_ohlc tie-break discipline.
-_ORDKEY_SQL = (
-    "lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0') "
-    "|| lpad(CAST(event_id AS VARCHAR), 12, '0')"
-)
-
-
-def _ordkey() -> F.Column:
-    return F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
 
 
 def _cents() -> F.Column:
@@ -56,7 +43,7 @@ def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DAILY_CLOSE_SQL = f"""
 daily AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {_ORDKEY_SQL}) AS close_c
+         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {ORDKEY_SQL}) AS close_c
   FROM events WHERE event_type IN ('view', 'purchase')
   GROUP BY 1, 2
 )"""
@@ -72,7 +59,7 @@ def _daily_close(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
             _cents().alias("close_c"),
-            _ordkey().alias("ordkey"),
+            ordkey().alias("ordkey"),
         )
         .groupBy("event_type", "day")
         .agg(F.max_by("close_c", "ordkey").alias("close_c"))
@@ -84,7 +71,7 @@ weekly AS (
   SELECT event_type, date_trunc('week', ts) AS week,
          MAX(CAST(ROUND(value * 100, 0) AS BIGINT)) AS h_c,
          MIN(CAST(ROUND(value * 100, 0) AS BIGINT)) AS l_c,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {_ORDKEY_SQL}) AS c_c
+         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {ORDKEY_SQL}) AS c_c
   FROM events WHERE event_type IN ('view', 'purchase')
   GROUP BY 1, 2
 )"""
@@ -97,7 +84,7 @@ def _weekly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_trunc("week", "ts").cast("date").alias("week"),
             _cents().alias("c"),
-            _ordkey().alias("ordkey"),
+            ordkey().alias("ordkey"),
         )
         .groupBy("event_type", "week")
         .agg(
@@ -462,7 +449,7 @@ _CANDLE_SQL = f"""
 WITH keyed AS (
   SELECT event_type, date_trunc('day', ts) AS day,
          CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         {_ORDKEY_SQL} AS ordkey
+         {ORDKEY_SQL} AS ordkey
   FROM events WHERE event_type IN ('view', 'purchase')
 ),
 bars AS (
@@ -530,7 +517,7 @@ def events_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         F.date_trunc("day", "ts").cast("date").alias("day"),
         _cents().alias("c"),
-        _ordkey().alias("ordkey"),
+        ordkey().alias("ordkey"),
     )
     bars = keyed.groupBy("event_type", "day").agg(
         F.min_by("c", "ordkey").alias("o"),
@@ -1048,10 +1035,10 @@ _GK_C2 = 2.0 * math.log(2.0) - 1.0  # 0.386294…, one shared literal
 _DAILY_OHLC_SQL = f"""
 dbars AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         arg_min(CAST(ROUND(value * 100, 0) AS BIGINT), {_ORDKEY_SQL}) AS o,
+         arg_min(CAST(ROUND(value * 100, 0) AS BIGINT), {ORDKEY_SQL}) AS o,
          MAX(CAST(ROUND(value * 100, 0) AS BIGINT)) AS h,
          MIN(CAST(ROUND(value * 100, 0) AS BIGINT)) AS l,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {_ORDKEY_SQL}) AS c
+         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {ORDKEY_SQL}) AS c
   FROM events WHERE event_type IN ('view', 'purchase')
   GROUP BY 1, 2
 )"""
@@ -1106,7 +1093,7 @@ def events_volatility_gk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
             _cents().alias("cent"),
-            _ordkey().alias("ordkey"),
+            ordkey().alias("ordkey"),
         )
         .groupBy("event_type", "day")
         .agg(
@@ -1158,7 +1145,7 @@ _DOLLAR_BARS_SQL = f"""
 WITH ticks AS (
   SELECT event_type, ts, event_id,
          CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         {_ORDKEY_SQL} AS ok
+         {ORDKEY_SQL} AS ok
   FROM events WHERE event_type IN ('view', 'purchase')
 ),
 cum AS (
@@ -1204,7 +1191,7 @@ GROUP BY 1, 2
 )
 def events_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticks = _ticks(spark, sf_dir).select(
-        "event_type", _cents().alias("c"), _ordkey().alias("ok")
+        "event_type", _cents().alias("c"), ordkey().alias("ok")
     )
     wc = (
         W.partitionBy("event_type")
@@ -1246,7 +1233,7 @@ _VPIN_W = 5  # trailing bars per VPIN estimate
 _VPIN_SQL = f"""
 WITH ticks AS (
   SELECT event_type, CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         {_ORDKEY_SQL} AS ok
+         {ORDKEY_SQL} AS ok
   FROM events WHERE event_type IN ('view', 'purchase')
 ),
 lagged AS (
@@ -1308,7 +1295,7 @@ FROM rolled WHERE n_w = {_VPIN_W}
 )
 def events_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticks = _ticks(spark, sf_dir).select(
-        "event_type", _cents().alias("c"), _ordkey().alias("ok")
+        "event_type", _cents().alias("c"), ordkey().alias("ok")
     )
     wo = W.partitionBy("event_type").orderBy("ok")
     wc = wo.rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -2146,7 +2133,7 @@ _AMIHUD_SCALE = 1000000000000  # |r|*1e12 // dv_c ~= ratio * 1e18 grid
 _AMIHUD_SQL = f"""
 WITH daily2 AS (
   SELECT event_type, date_trunc('day', ts) AS day,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {_ORDKEY_SQL}) AS close_c,
+         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT), {ORDKEY_SQL}) AS close_c,
          SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS dv_c
   FROM events WHERE event_type IN ('view', 'purchase')
   GROUP BY 1, 2
@@ -2197,7 +2184,7 @@ def events_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
             _cents().alias("cent"),
-            _ordkey().alias("ordkey"),
+            ordkey().alias("ordkey"),
         )
         .groupBy("event_type", "day")
         .agg(
@@ -2316,7 +2303,7 @@ def events_frac_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KYLE_SQL = f"""
 WITH ticks AS (
   SELECT event_type, CAST(ROUND(value * 100, 0) AS BIGINT) AS c,
-         date_trunc('day', ts) AS day, {_ORDKEY_SQL} AS ok
+         date_trunc('day', ts) AS day, {ORDKEY_SQL} AS ok
   FROM events WHERE event_type IN ('view', 'purchase')
 ),
 lagged AS (
@@ -2388,7 +2375,7 @@ def events_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         _cents().alias("c"),
         F.date_trunc("day", "ts").cast("date").alias("day"),
-        _ordkey().alias("ok"),
+        ordkey().alias("ok"),
     )
     wo = W.partitionBy("event_type").orderBy("ok")
     nz = (

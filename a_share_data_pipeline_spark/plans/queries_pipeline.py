@@ -16,7 +16,9 @@ from pyspark.sql import functions as F
 from ..operators.asof import as_of_join
 from ..session import clone_session, set_width, volume_width
 from ..sources import load_table
+from ..streaming import structured as ST
 from ..streaming.incremental import delta_slice, merge_increment
+from ..functions.ordering import ordkey
 from ..functions.rounding import dround
 from .catalog import register
 
@@ -445,13 +447,19 @@ GROUP BY 1, 2
 """
 
 
-@register("events_tumbling", _TUMBLE_SQL, doc="tumbling 1h window aggregation (T5); streaming variant in streaming/windows.py")
+@register("events_tumbling", _TUMBLE_SQL, doc="tumbling 1h window aggregation (T5); streaming twin: stream_tumbling")
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), dround(F.sum("value"), 2).alias("value_sum"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "value_sum")
+    return _tumble_out(ST.tumbling_counts(ev, width="1 hour"))
+
+
+def _tumble_out(counts: DataFrame) -> DataFrame:
+    """events_tumbling's columns over ``ST.tumbling_counts`` output."""
+    return counts.select(
+        F.col("win_start").alias("window_start"),
+        "event_type",
+        F.col("n_events").alias("n"),
+        dround("sum_value", 2).alias("value_sum"),
     )
 
 
@@ -500,7 +508,7 @@ FROM sessions GROUP BY user_id, session_id
 @register(
     "events_sessionize",
     _SESSION_SQL,
-    doc="session windows, batch gap-based sessionization (T5); stateful streaming variant in streaming/",
+    doc="session windows, batch gap-based sessionization (T5); stateful streaming twin: stream_sessionize",
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
@@ -561,18 +569,28 @@ FROM upd
     ),
 )
 def scd2_dim_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    upd = ev.filter(F.col("event_type") == "purchase").select(
+    return _scd2_versions(_scd2_updates(load_table(spark, sf_dir, "events")))
+
+
+def _scd2_updates(ev: DataFrame) -> DataFrame:
+    """The SCD2 change feed: purchase events as tier updates."""
+    return ev.filter(F.col("event_type") == "purchase").select(
         "user_id", "ts", "event_id", dround(F.col("value"), 2).alias("tier")
     )
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = F.lead("ts").over(w)
-    return upd.select(
+
+
+def _scd2_versions(changes: DataFrame, *extra: str) -> DataFrame:
+    """Validity intervals over change rows: each change is valid from its
+    ``ts`` until the key's next change (lead over ts, event_id), and the
+    last one is current. ``extra`` columns pass through after them."""
+    nxt = F.lead("ts").over(W.partitionBy("user_id").orderBy("ts", "event_id"))
+    return changes.select(
         "user_id",
         "tier",
         F.col("ts").alias("valid_from"),
         nxt.alias("valid_to"),
         nxt.isNull().alias("is_current"),
+        *extra,
     )
 
 
@@ -947,12 +965,24 @@ SELECT k, ROUND(price, 2), status FROM ups
     ),
 )
 def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    snap = load_table(spark, sf_dir, "orders").select(
+    snap = _cdc_snapshot(spark, sf_dir)
+    return _cdc_step(snap, _cdc_changes(snap)).select(
+        "k", dround("price", 2).alias("price"), "status"
+    )
+
+
+def _cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_totalprice").alias("price"),
         F.col("o_orderstatus").alias("status"),
     )
-    changes = (
+
+
+def _cdc_changes(snap: DataFrame) -> DataFrame:
+    """The deterministic change feed over a snapshot: updates on
+    ``k % 10 == 0``, deletes on 1, inserts of new keys on 2."""
+    return (
         snap.filter(F.col("k") % 10 == 0)
         .select("k", F.lit("U").alias("op"), dround(F.col("price") + 1000, 2).alias("price"), "status")
         .unionByName(
@@ -972,15 +1002,18 @@ def cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
+
+
+def _cdc_step(cur: DataFrame, changes: DataFrame) -> DataFrame:
+    """Apply one change batch to ``cur``: rows whose key is deleted or
+    upserted drop out by two anti-joins that broadcast the change side,
+    and the upserts append."""
     dels = changes.filter(F.col("op") == "D").select("k")
     ups = changes.filter(F.col("op") != "D").select("k", "price", "status")
-    survivors = (
-        snap.join(F.broadcast(dels), "k", "left_anti")
+    return (
+        cur.join(F.broadcast(dels), "k", "left_anti")
         .join(F.broadcast(ups.select("k")), "k", "left_anti")
-        .select("k", dround("price", 2).alias("price"), "status")
-    )
-    return survivors.unionByName(
-        ups.select("k", dround("price", 2).alias("price"), "status")
+        .unionByName(ups)
     )
 
 
@@ -1296,24 +1329,26 @@ def events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    ordkey = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     keyed = ev.select(
         "event_type",
         F.date_trunc("week", "ts").cast("date").alias("week"),
         "value",
-        ordkey.alias("ordkey"),
+        ordkey().alias("ordkey"),
     )
     return keyed.groupBy("event_type", "week").agg(
+        *_ohlc_aggs(), dround(F.sum("value"), 2).alias("volume")
+    )
+
+
+def _ohlc_aggs() -> list:
+    """A bar's open/high/low/close/n_ticks over ``ordkey``-keyed ticks."""
+    return [
         F.min_by("value", "ordkey").alias("open"),
         F.max("value").alias("high"),
         F.min("value").alias("low"),
         F.max_by("value", "ordkey").alias("close"),
         F.count(F.lit(1)).alias("n_ticks"),
-        dround(F.sum("value"), 2).alias("volume"),
-    )
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -1923,16 +1958,12 @@ def events_kdj(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    ordkey = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     bars = (
         ev.select(
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
             "value",
-            ordkey.alias("ordkey"),
+            ordkey().alias("ordkey"),
         )
         .groupBy("event_type", "day")
         .agg(
@@ -2343,12 +2374,8 @@ def events_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_start"),
     )
     sess = flagged.withColumn("session_id", F.sum("is_start").over(w_run))
-    ordkey = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     paths = (
-        sess.select("user_id", "session_id", ordkey.alias("ok"), "event_type")
+        sess.select("user_id", "session_id", ordkey().alias("ok"), "event_type")
         .groupBy("user_id", "session_id")
         .agg(
             F.concat_ws(

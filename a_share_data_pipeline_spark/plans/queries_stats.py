@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.ordering import ordkey
 from ..functions.rounding import dround
 from ..session import pin
 from ..sources import load_table
@@ -544,16 +545,12 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    ordkey = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     daily = (
         ev.select(
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
             dround(F.col("value") * 100, 0).cast("bigint").alias("close_c"),
-            ordkey.alias("ordkey"),
+            ordkey().alias("ordkey"),
         )
         .groupBy("event_type", "day")
         .agg(F.max_by("close_c", "ordkey").alias("close_c"))
@@ -1371,16 +1368,12 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    ordkey = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     daily = (
         ev.select(
             "event_type",
             F.date_trunc("day", "ts").cast("date").alias("day"),
             dround(F.col("value") * 100, 0).cast("bigint").alias("c"),
-            ordkey.alias("ok"),
+            ordkey().alias("ok"),
         )
         .groupBy("event_type", "day")
         .agg(F.max_by("c", "ok").alias("close_c"))

@@ -8,37 +8,60 @@ returned as the result DataFrame.
 
 Because an AvailableNow cycle over a static landing dir is
 deterministic, these carry full SQL oracles — DuckDB verifies the
-*streaming* engine's output, not a batch stand-in (the batch analogs
-live in queries_pipeline.py; tests/test_streaming.py proves
-stream≡batch on the same input).
+*streaming* engine's output, not a batch stand-in. A query with a
+batch twin in queries_pipeline.py is built from that twin's builders
+and registers its oracle, so the two differ only in source and sink
+(tests/test_streaming.py proves stream≡batch on the same input).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..functions.ordering import ordkey
 from ..functions.rounding import dround
 from ..session import clone_session, pin, set_width
 from ..sources.readers import load_table
 from ..streaming import structured as ST
 from .catalog import register
+from .queries_pipeline import (
+    _CDC_SQL,
+    _SCD2_SQL,
+    _TUMBLE_SQL,
+    _cdc_changes,
+    _cdc_snapshot,
+    _cdc_step,
+    _ohlc_aggs,
+    _scd2_updates,
+    _scd2_versions,
+    _tumble_out,
+)
 
 
-def _land_events(spark: SparkSession, sf_dir: str) -> tuple[str, "DataFrame"]:
-    """Write events (micros timestamps) into a fresh landing dir."""
+def _land(df: DataFrame) -> str:
+    """Write ``df`` as a stream's landing files under a fresh temp root
+    and return the landing dir; :func:`_run_to_table` checkpoints beside
+    it and removes the root."""
+    path = os.path.join(tempfile.mkdtemp(prefix="stream_"), "files")
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def _land_events(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+    """Land events (micros timestamps); return the landing dir and the
+    events frame."""
     ev = load_table(spark, sf_dir, "events")
-    d = tempfile.mkdtemp(prefix="stream_landing_")
-    path = os.path.join(d, "files")
-    ev.write.mode("overwrite").parquet(path)
-    return path, ev
+    return _land(ev), ev
 
 
-def _run_to_table(result: DataFrame, mode: str) -> DataFrame:
+def _run_to_table(result: DataFrame, mode: str, landing: str) -> DataFrame:
     """Run one AvailableNow cycle into a memory table, on the session
     ``result`` was built on, and return the table read on that session.
 
@@ -48,42 +71,43 @@ def _run_to_table(result: DataFrame, mode: str) -> DataFrame:
     callers with kilobytes of state build their stream on a width-8
     clone. The memory sink's temp view is dropped once read: the
     returned frame keeps its analyzed plan, and the catalog stays as
-    the caller left it."""
+    the caller left it. The memory table holds its rows in driver
+    memory, so the root of ``landing`` (from :func:`_land`, which also
+    holds the checkpoint) is removed before returning."""
     spark = result.sparkSession
     name = "q_" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    ST.run_available_now(result, ckpt, name, output_mode=mode)
-    out = spark.table(name)
-    spark.catalog.dropTempView(name)
+    root = os.path.dirname(landing)
+    try:
+        ST.run_available_now(result, os.path.join(root, "ckpt"), name, output_mode=mode)
+        out = spark.table(name)
+        spark.catalog.dropTempView(name)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
-_STREAM_TUMBLE_SQL = """
-SELECT DATE_TRUNC('hour', ts) AS window_start,
-       event_type,
-       COUNT(*) AS n,
-       ROUND(SUM(value), 2) AS value_sum
-FROM events
-GROUP BY 1, 2
-"""
+def _final_emission(updates: DataFrame, *keys: str) -> DataFrame:
+    """The final state per key of an update-mode emission log, which
+    holds every per-batch emission: the row with the largest
+    ``n_events`` (running counts only grow)."""
+    w = W.partitionBy(*keys).orderBy(F.col("n_events").desc())
+    return (
+        updates.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 @register(
     "stream_tumbling",
-    _STREAM_TUMBLE_SQL,
+    _TUMBLE_SQL,
     doc="Structured Streaming tumbling window (AvailableNow file stream → memory sink); oracle checks the streaming output itself",
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _land_events(spark, sf_dir)
     stream = ST.read_file_stream(spark, path, ev.schema)
     res = ST.tumbling_counts(stream, width="1 hour", watermark="2 hours")
-    out = _run_to_table(res, "complete")
-    return out.select(
-        F.col("win_start").alias("window_start"),
-        "event_type",
-        F.col("n_events").alias("n"),
-        dround("sum_value", 2).alias("value_sum"),
-    )
+    return _tumble_out(_run_to_table(res, "complete", path))
 
 
 _STREAM_TOTALS_SQL = """
@@ -105,16 +129,9 @@ def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # >1 file → >1 micro-batch → state actually carries across batches
     stream = ST.read_file_stream(spark, path, ev.schema, max_files_per_trigger=1)
     res = ST.running_totals_stateful(stream)
-    updates = _run_to_table(res, "update")
-    # update-mode memory sink holds every per-batch emission; the final
-    # state per user is the one with the largest n_events (monotone)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "n_events", dround("sum_value", 2).alias("sum_value"))
+    updates = _run_to_table(res, "update", path)
+    return _final_emission(updates, "user_id").select(
+        "user_id", "n_events", dround("sum_value", 2).alias("sum_value")
     )
 
 
@@ -157,7 +174,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ev = _land_events(spark, sf_dir)
     stream = ST.read_file_stream(spark, path, ev.schema)
     res = ST.session_aggregate(stream, gap="30 minutes", watermark="2 hours")
-    out = _run_to_table(res, "complete")
+    out = _run_to_table(res, "complete", path)
     return out.select(
         "user_id",
         "sess_start",
@@ -185,9 +202,7 @@ SELECT event_id, user_id, ts FROM events
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    d = tempfile.mkdtemp(prefix="stream_dedup_")
-    path = os.path.join(d, "files")
-    ev.write.mode("overwrite").parquet(path)
+    path = _land(ev)
     ev.write.mode("append").parquet(path)  # the duplicate replay
     # kilobytes of dedup state: the stream runs on a width-8 clone. A/B
     # receipt: plans/r14/ab_receipts/stream_dedup.jsonl.
@@ -198,7 +213,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    return _run_to_table(res, "append").select("event_id", "user_id", "ts")
+    return _run_to_table(res, "append", path).select("event_id", "user_id", "ts")
 
 
 _STREAM_PEAKS_SQL = """
@@ -225,15 +240,9 @@ def stream_tws_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # TWS needs protobuf in the Python worker; same state semantics on
     # the applyInPandasWithState lane where it's absent (this container)
     peaks = ST.running_peaks_tws if ST.tws_available() else ST.running_peaks_state
-    res = peaks(stream)
-    updates = _run_to_table(res, "update")
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        updates.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "n_events", dround("peak", 2).alias("peak"))
+    updates = _run_to_table(peaks(stream), "update", path)
+    return _final_emission(updates, "user_id").select(
+        "user_id", "n_events", dround("peak", 2).alias("peak")
     )
 
 
@@ -260,12 +269,9 @@ def stream_curation_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import curation as CU
 
     docs = load_table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="stream_docs_")
-    path = os.path.join(d, "files")
-    docs.write.mode("overwrite").parquet(path)
+    path = _land(docs)
     stream = ST.read_file_stream(spark, path, docs.schema)
-    res = CU.quality_gates(stream)
-    return _run_to_table(res, "append")
+    return _run_to_table(CU.quality_gates(stream), "append", path)
 
 
 _STREAM_SS_JOIN_SQL = """
@@ -303,47 +309,54 @@ FROM events c JOIN events p
     ),
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _click_purchase_attribution(
+        spark, sf_dir, "1 day", "inner",
+        "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts",
+    )
+
+
+def _click_purchase_attribution(
+    spark: SparkSession, sf_dir: str, delay: str, how: str, *cols: str
+) -> DataFrame:
+    """Click→purchase attribution as a stream-stream join: each click
+    joins the same user's purchases in the 30 minutes after it, both
+    streams watermarked ``delay`` behind their event time. The result
+    is ``cols`` then purchase_value."""
     path, ev = _land_events(spark, sf_dir)
     # 4 state stores per partition for kilobytes of state: the stream
     # runs on a width-8 clone (measured 8.4s -> 3.9s at sf0.1 vs 32).
-    # The trailing no-data batch EVICTS expired join state — the cost a
-    # deployment pays per watermark advance — so the cycle times it.
     work = clone_session(spark, 8)
-    clicks = (
-        ST.read_file_stream(work, path, ev.schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
+
+    def events(event_type: str) -> DataFrame:
+        return ST.read_file_stream(work, path, ev.schema).filter(
+            F.col("event_type") == event_type
         )
-        .withWatermark("click_ts", "1 day")
-    )
-    purchases = (
-        ST.read_file_stream(work, path, ev.schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            "value",
-        )
-        .withWatermark("purchase_ts", "1 day")
-    )
+
+    clicks = events("click").select(
+        F.col("event_id").alias("click_id"),
+        "user_id",
+        F.col("ts").alias("click_ts"),
+    ).withWatermark("click_ts", delay)
+    purchases = events("purchase").select(
+        F.col("event_id").alias("purchase_id"),
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").alias("purchase_ts"),
+        "value",
+    ).withWatermark("purchase_ts", delay)
     joined = clicks.join(
         purchases,
         (F.col("user_id") == F.col("p_user_id"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
+        how,
     )
-    out = _run_to_table(joined, "append")
+    # The trailing no-data batch advances the watermark: it EVICTS
+    # expired join state, the cost a deployment pays per watermark
+    # advance, so the cycle times it; in an outer join it also emits
+    # the clicks that can no longer match.
+    out = _run_to_table(joined, "append", path)
     return out.select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        "click_ts",
-        "purchase_ts",
-        dround(F.coalesce("value", F.lit(0.0)), 2).alias("purchase_value"),
+        *cols, dround(F.coalesce("value", F.lit(0.0)), 2).alias("purchase_value")
     )
 
 
@@ -381,7 +394,7 @@ def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
     )
-    out = _run_to_table(res, "complete")
+    out = _run_to_table(res, "complete", path)
     return out.select(
         "segment", "event_type", "n_events", dround("sum_value", 2).alias("sum_value")
     )
@@ -559,15 +572,9 @@ def _incdedup_make_absorb(parts: dict, out_dir: str):
 # ---------------------------------------------------------------------------
 
 
-def _stream_cdc_oracle() -> str:
-    from .queries_pipeline import _CDC_SQL
-
-    return _CDC_SQL
-
-
 @register(
     "stream_cdc_apply",
-    _stream_cdc_oracle(),
+    _CDC_SQL,
     doc=(
         "CDC stream → maintained snapshot: change batches (I/U/D) "
         "arrive as a file stream; each micro-batch reads the CURRENT "
@@ -585,34 +592,14 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = tempfile.mkdtemp(prefix="stream_cdc_")
     land_dir = os.path.join(root, "changes")
 
-    snap0 = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_totalprice").alias("price"),
-        F.col("o_orderstatus").alias("status"),
-    )
+    snap0 = _cdc_snapshot(spark, sf_dir)
     version = {"n": 0}
     snap_dir = lambda v: os.path.join(root, f"snapshot_v{v}")  # noqa: E731
     snap0.write.mode("overwrite").parquet(snap_dir(0))
 
-    # the same deterministic change feed as cdc_apply, landed as a
-    # 3-file stream (range-partitioned on k → batches touch disjoint keys)
-    changes = (
-        snap0.filter(F.col("k") % 10 == 0)
-        .select("k", F.lit("U").alias("op"), dround(F.col("price") + 1000, 2).alias("price"), "status")
-        .unionByName(
-            snap0.filter(F.col("k") % 10 == 1).select(
-                "k", F.lit("D").alias("op"),
-                F.lit(None).cast("double").alias("price"),
-                F.lit(None).cast("string").alias("status"),
-            )
-        )
-        .unionByName(
-            snap0.filter(F.col("k") % 10 == 2).select(
-                (F.col("k") + 100000000).alias("k"), F.lit("I").alias("op"),
-                dround(F.col("k") * 0.01, 2).alias("price"), F.lit("N").alias("status"),
-            )
-        )
-    )
+    # cdc_apply's change feed, landed as a 3-file stream
+    # (range-partitioned on k → batches touch disjoint keys)
+    changes = _cdc_changes(snap0)
     changes.repartitionByRange(3, "k").write.mode("overwrite").parquet(land_dir)
 
     snap_schema = snap0.schema
@@ -622,14 +609,7 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         if seen["rows"] == 0:
             return
         cur = spark.read.schema(snap_schema).parquet(snap_dir(version["n"]))
-        dels = batch.filter(F.col("op") == "D").select("k")
-        ups = batch.filter(F.col("op") != "D").select("k", "price", "status")
-        nxt = (
-            cur.join(F.broadcast(dels), "k", "left_anti")
-            .join(F.broadcast(ups.select("k")), "k", "left_anti")
-            .unionByName(ups)
-        )
-        nxt.write.mode("overwrite").parquet(snap_dir(version["n"] + 1))
+        _cdc_step(cur, batch).write.mode("overwrite").parquet(snap_dir(version["n"] + 1))
         version["n"] += 1
 
     stream = ST.read_file_stream(spark, land_dir, changes.schema, max_files_per_trigger=1)
@@ -678,23 +658,13 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = ST.read_file_stream(spark, path, ev.schema).filter(
         F.col("event_type").isin("view", "purchase")
     )
-    ordkey = F.concat(
-        F.lpad(F.unix_micros("ts").cast("string"), 20, "0"),
-        F.lpad(F.col("event_id").cast("string"), 12, "0"),
-    )
     keyed = stream.withWatermark("ts", "2 hours").select(
-        "event_type", "ts", "value", ordkey.alias("ordkey")
+        "event_type", "ts", "value", ordkey().alias("ordkey")
     )
-    res = keyed.groupBy(
-        F.window("ts", "1 day").alias("win"), "event_type"
-    ).agg(
-        F.min_by("value", "ordkey").alias("open"),
-        F.max("value").alias("high"),
-        F.min("value").alias("low"),
-        F.max_by("value", "ordkey").alias("close"),
-        F.count(F.lit(1)).alias("n_ticks"),
+    res = keyed.groupBy(F.window("ts", "1 day").alias("win"), "event_type").agg(
+        *_ohlc_aggs()
     )
-    out = _run_to_table(res, "complete")
+    out = _run_to_table(res, "complete", path)
     return out.select(
         "event_type",
         F.col("win.start").cast("date").alias("day"),
@@ -756,8 +726,8 @@ SELECT * FROM matched UNION ALL SELECT * FROM unmatched
         "LEFT-OUTER stream-stream join — the capability the inner "
         "join cannot witness: a click with no purchase in its window "
         "emits a NULL-extended row only after the GLOBAL watermark "
-        "(min across both inputs, here 1 hour — a real deployment "
-        "delay, unlike the inner query's bounded-replay 3650 days) "
+        "(min across both inputs, here 1 hour behind, where the inner "
+        "query's is 1 day; both share one attribution builder) "
         "proves no match can still arrive, i.e. when click_ts + the "
         "30-minute join range falls behind the final watermark. On "
         "the AvailableNow replay the data passes in one micro-batch "
@@ -774,64 +744,15 @@ SELECT * FROM matched UNION ALL SELECT * FROM unmatched
     ),
 )
 def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, ev = _land_events(spark, sf_dir)
-    # the inner join's state shape: the stream runs on a width-8 clone
-    work = clone_session(spark, 8)
-    clicks = (
-        ST.read_file_stream(work, path, ev.schema)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            "user_id",
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", "1 hour")
-    )
-    purchases = (
-        ST.read_file_stream(work, path, ev.schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user_id"),
-            F.col("ts").alias("purchase_ts"),
-            "value",
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 MINUTES")),
-        "leftOuter",
-    )
-    # the outer rows only exist because the trailing no-data batch
-    # advances the watermark
-    out = _run_to_table(joined, "append")
-    return out.select(
-        "click_id",
-        "user_id",
-        "click_ts",
-        "purchase_id",
-        "purchase_ts",
-        dround(F.coalesce("value", F.lit(0.0)), 2).alias("purchase_value"),
+    return _click_purchase_attribution(
+        spark, sf_dir, "1 hour", "leftOuter",
+        "click_id", "user_id", "click_ts", "purchase_id", "purchase_ts",
     )
 
 
 # ---------------------------------------------------------------------------
 # Streaming SCD2 maintenance (wave 64)
 # ---------------------------------------------------------------------------
-
-_SCD2_STREAM_SQL = """
-WITH upd AS (
-  SELECT user_id, ts, event_id, ROUND(value, 2) AS tier
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT user_id, tier, ts AS valid_from,
-       LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
-       LEAD(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
-FROM upd
-"""
 
 _SCD2_N_BUCKETS = 16
 
@@ -846,7 +767,6 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
     """The per-batch SCD2 maintenance closure (shared with the
     order-insensitivity property test, which drives it with scrambled
     batches outside any stream)."""
-    from pyspark.sql import Window as W
 
     def absorb(batch: DataFrame, _bid: int) -> None:
         batch, seen = pin(
@@ -871,18 +791,8 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
         changes = old.unionByName(
             batch.select("bkt", "user_id", "tier", "ts", "event_id")
         )
-        w = W.partitionBy("user_id").orderBy("ts", "event_id")
-        nxt = F.lead("ts").over(w)
-        rebuilt = pin(changes.select(
-            "bkt",
-            "user_id",
-            "tier",
-            F.col("ts").alias("valid_from"),
-            "event_id",
-            nxt.alias("valid_to"),
-            nxt.isNull().alias("is_current"),
-        ))  # materialize BEFORE overwriting
-        # the very files `old` reads from
+        # materialize BEFORE overwriting the very files `old` reads from
+        rebuilt = pin(_scd2_versions(changes, "bkt", "event_id"))
         rebuilt.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("bkt").parquet(dim)
@@ -892,7 +802,7 @@ def _scd2_make_absorb(spark: SparkSession, dim: str):
 
 @register(
     "stream_scd2_apply",
-    _SCD2_STREAM_SQL,
+    _SCD2_SQL,
     doc=(
         "streaming SCD2 maintenance — the continuous half of "
         "scd2_dim_history: the change feed arrives in 3 micro-batches "
@@ -920,10 +830,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thousand rows: the stream runs on a width-8 clone. Fresh-subprocess
     # interleaved A/B receipt: plans/r14/ab_receipts/stream_scd2_apply.jsonl.
     work = clone_session(spark, 8)
-    ev = load_table(work, sf_dir, "events")
-    upd = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id", dround(F.col("value"), 2).alias("tier")
-    )
+    upd = _scd2_updates(load_table(work, sf_dir, "events"))
     root = tempfile.mkdtemp(prefix="stream_scd2_")
     land = os.path.join(root, "landing")
     dim = os.path.join(root, "dim")
@@ -989,8 +896,6 @@ GROUP BY 1, 2, 3
     ),
 )
 def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -1023,17 +928,10 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events long, sum_value double"
     )
     both = spark.read.schema(sch).parquet(out)
-    w = W.partitionBy("win_start", "win_end", "event_type").orderBy(
-        F.col("n_events").desc()
-    )
-    return (
-        both.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(
-            "win_start",
-            "win_end",
-            "event_type",
-            "n_events",
-            dround("sum_value", 2).alias("sum_value"),
-        )
+    return _final_emission(both, "win_start", "win_end", "event_type").select(
+        "win_start",
+        "win_end",
+        "event_type",
+        "n_events",
+        dround("sum_value", 2).alias("sum_value"),
     )

@@ -8,9 +8,9 @@ Reference semantics being reproduced:
 - S10 overwrite CSV (market/delta_non_fq_daily_kline.py:151;
        market/trade_calendar.py:29)
 - S11 publish artifact to a remote dataset repo
-      (market/non_fq_daily_kline.py:141-146) — hub client is not part of
-      the engine; modeled as a `Publisher` protocol with a local-dir
-      implementation for tests and a stub for the real hub.
+      (market/non_fq_daily_kline.py:141-146) — the hub client is not
+      part of the engine; modeled as a `Publisher` protocol, implemented
+      by a local dir that stands in for the hub repo.
 
 The compat sinks write text lines: `csv_lines` renders rows with the
 CSV writer's own generator and options, so a line written once can be
@@ -257,13 +257,3 @@ class LocalDirPublisher(Publisher):
     def exists(self, repo_path: str) -> bool:
         return os.path.exists(os.path.join(self.repo_dir, repo_path))
 
-
-class HubPublisher(Publisher):  # pragma: no cover - network client not in container
-    """Real-hub stub: the huggingface_hub client is an external
-    dependency, deliberately outside the engine (SURVEY.md §2.1 S11)."""
-
-    def __init__(self, repo_id: str):
-        self.repo_id = repo_id
-
-    def upload(self, local_path: str, repo_path: str) -> None:
-        raise NotImplementedError("hub client not available in this environment")

@@ -1420,6 +1420,36 @@ def test_eager_pins_only_in_session_pin():
     assert len(lazy) == 4, lazy
 
 
+def test_tick_order_key_built_only_in_ordering_py():
+    """``functions/ordering.ordkey`` is the package's one Spark-side
+    tick-order key: the only ``lpad`` over ``unix_micros`` (the
+    zero-padded epoch-micros half of the key) is inside it."""
+    import ast
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    def calls(node, attr):
+        return [
+            n for n in ast.walk(node)
+            if isinstance(n, ast.Call)
+            and getattr(n.func, "attr", getattr(n.func, "id", None)) == attr
+        ]
+
+    root = Path(pkg.__file__).parent
+    sites, owner = [], None
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "ordkey":
+                owner = (rel, range(node.lineno, node.end_lineno + 1))
+        sites += [(rel, c.lineno) for c in calls(tree, "lpad") if calls(c, "unix_micros")]
+    assert len(sites) == 1, sites
+    rel, line = sites[0]
+    assert owner and rel == owner[0] == "functions/ordering.py" and line in owner[1], (sites, owner)
+
+
 def test_pin_counts_rows_and_restores_job_description(spark, monkeypatch):
     """``pin`` observes its metrics on the pin's own job (0 rows for a
     0-partition frame and for a filter-to-empty one), names the job

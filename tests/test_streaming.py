@@ -487,6 +487,29 @@ def test_incdedup_temp_root_holds_only_landing_ckpt_pairs(
     assert sorted(os.listdir(roots[0])) == ["ckpt", "landing", "pairs"]
 
 
+@pytest.mark.parametrize("name", ["stream_tumbling", "stream_stream_join"])
+def test_memory_sink_queries_remove_their_scratch(
+    spark, sf_smoke, tmp_path, monkeypatch, name
+):
+    """A memory-sink query's result rows live in driver memory, so
+    ``_run_to_table`` removes the temp root holding its landing files
+    and checkpoint before returning: three runs leave no ``stream_*``
+    dir behind, and each result still collects, the same rows every
+    time, after its root is gone."""
+    import tempfile
+
+    from a_share_data_pipeline_spark.plans.catalog import registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    results = []
+    for _ in range(3):
+        out = registry()[name].fn(spark, sf_smoke)
+        assert not list(tmp_path.glob("stream_*"))
+        results.append(sorted(map(tuple, out.collect())))
+    assert results[0], "fixture must produce rows"
+    assert results[1] == results[0] and results[2] == results[0]
+
+
 # width-scoped query -> whether its result is read on the clone
 _RESULT_ON_CLONE = {
     "graph_cc_incremental": True,
