@@ -10,18 +10,21 @@ Scale design:
 - MinHash/LSH: shingle explode → groupBy(doc) agg of k min-hashes →
   band join. The candidate join is on (band_id, band_hash), so only
   colliding docs meet — never an all-pairs product,
-- n-gram Jaccard runs on LSH candidates or shingle-bucket joins with a
-  minimum-overlap prune (HAVING n >= k) before the ratio.
+- LSH candidates are verified map-only (verify_pairs: broadcast pair
+  frames, array_intersect of shingle arrays); all-pairs n-gram Jaccard runs
+  shingle-bucket joins with a minimum-overlap prune (HAVING n >= k)
+  before the ratio.
 """
 
 from __future__ import annotations
 
 import logging
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import MINHASH_BAND_SIZE, MINHASH_SEEDS
+from ..session import pin
 from .common import spread as _spread
 
 _LOG = logging.getLogger(__name__)
@@ -59,10 +62,10 @@ def exploded_shingles(
     arrive in a handful of file splits, and the explode fans out
     50-100× — without the repartition all that expansion (and the md5
     work downstream) runs in as few tasks as there are splits.
-    ``spread=False`` skips that shuffle — for callers exploding an
-    already-candidate-restricted handful of docs (the LSH verify step),
-    where the repartition costs a whole extra stage to balance work
-    that fits in one task anyway.
+    ``spread=False`` skips that shuffle — for callers exploding a
+    handful of docs (one stream micro-batch), where the repartition
+    costs a whole extra stage to balance work that fits in one task
+    anyway.
     """
     if spread:
         df = _spread(df, id_col)
@@ -179,44 +182,41 @@ def lsh_incremental_candidates(
     The new batch's buckets broadcast (a batch is small vs the corpus);
     the corpus side stays a streamed probe of the bucket join.
 
-    Only buckets TOUCHED by a new doc can form a pair, so the whole
-    probe — including the hot-bucket size count — is restricted to the
-    touched buckets first with a map-side broadcast semi-join during
-    the single corpus scan: the bucket-size aggregation shuffles
-    O(touched) rows instead of O(corpus).
+    Only buckets TOUCHED by a new doc can form a pair, so the corpus is
+    read once, map-side semi-joined to the touched buckets: every later
+    step (bucket sizes, the join) shuffles O(touched) rows, never
+    O(corpus).
 
     ``max_bucket`` is the hot-bucket guard. Band buckets go hot exactly
     when the corpus carries mass-duplicated boilerplate — the thing
     dedup targets — and here the pairs form through a bucket JOIN
     rather than an array expansion, so the guard is a pre-join
-    bucket-size filter: buckets above the cap are dropped from both
-    sides BEFORE the join, counted and logged — never silent."""
-    touched = new_bands.select("bucket").distinct()
-    # single corpus scan, map-side filtered to touched buckets
+    bucket-size filter. The touched rows are sized with a window count
+    and pinned in that one pass, the hot-row count observed on the same
+    pin; the join then reads only buckets at or under the cap. Only the
+    corpus side is filtered: ``new_bands`` is a subset of ``bands``, so
+    a new doc in a hot bucket finds no corpus row to pair with through
+    it. The drop is logged — never silent — and only then is the pin
+    read again to count the distinct hot buckets for the message."""
+    # no .distinct(): a broadcast left-semi build ignores duplicate keys
+    touched = new_bands.select("bucket")
     bands = bands.join(F.broadcast(touched), "bucket", "left_semi")
     if max_bucket is not None:
-        hot = (
-            bands.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket)
-            .select("bucket")
+        hot = F.col("__bn") > max_bucket
+        bands, seen = pin(
+            bands.withColumn("__bn", F.count(F.lit(1)).over(Window.partitionBy("bucket"))),
+            hot_rows=F.count(F.when(hot, 1)),
         )
-        n_hot = hot.count()
-        if n_hot:
+        if seen["hot_rows"]:
             _LOG.warning(
                 "lsh_incremental_candidates: dropping %d hot band bucket(s) "
                 "(touched by this batch) with > %d members before the bucket "
                 "join (stop-shingle filter; untouched hot buckets form no "
                 "pairs and are skipped without counting)",
-                n_hot,
+                bands.filter(hot).select("bucket").distinct().count(),
                 max_bucket,
             )
-            # hot buckets are few by construction (each holds > max_bucket
-            # of a finite corpus) — broadcast the anti-join side; the
-            # probe side (new_bands) must drop them too, or a new doc
-            # could still pair THROUGH a capped bucket via the join below
-            bands = bands.join(F.broadcast(hot), "bucket", "left_anti")
-            new_bands = new_bands.join(F.broadcast(hot), "bucket", "left_anti")
+        bands = bands.filter(~hot).drop("__bn")
     n = new_bands.select(F.col(id_col).alias("__n_id"), "bucket")
     pairs = (
         bands.join(F.broadcast(n), "bucket")
@@ -229,47 +229,69 @@ def lsh_incremental_candidates(
     return pairs.distinct()
 
 
+def verify_pairs(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(a, b, jaccard) of word-3-gram sets for each candidate pair
+    (a, b) of ``docs`` (doc_id, text) — the LSH verify step. Pairs
+    sharing no shingle are not emitted (as :func:`pair_jaccard` never
+    emits them), so a doc with fewer than 3 tokens pairs with nothing.
+
+    Map-only: the pairs broadcast onto the docs, which pick up the
+    a-side :func:`word_shingles_col` array (already distinct); those
+    rows broadcast onto the docs again for the b-side array, and
+    |A∩B| = size(array_intersect) — the same integers and the same
+    division as the shingle-bucket join, so the ratio is bit-identical,
+    with no explode, no per-pair aggregation and no shuffle. ``docs``
+    is scanned twice, once per side; restricting it by a broadcast
+    left-semi join instead would be pushed into each branch of a
+    unioned ``docs`` (a stream's store) and broadcast once per branch."""
+    text = docs.select("doc_id", "text")
+    pairs = F.broadcast(pairs.select("a", "b"))
+    with_a = text.join(pairs, F.col("doc_id") == F.col("a")).select(
+        "a", "b", word_shingles_col().alias("sa")
+    )
+    both = text.join(F.broadcast(with_a), F.col("doc_id") == F.col("b")).select(
+        "a", "b", "sa", word_shingles_col().alias("sb")
+    )
+    n_inter = F.size(F.array_intersect("sa", "sb"))
+    return (
+        both.select(
+            "a", "b", n_inter.alias("n_inter"), F.size("sa").alias("n_a"), F.size("sb").alias("n_b")
+        )
+        .filter(F.col("n_inter") > 0)
+        .select(
+            "a",
+            "b",
+            (
+                F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+            ).alias("jaccard"),
+        )
+    )
+
+
 def pair_overlap(
     shingled: DataFrame,
-    pairs: DataFrame | None = None,
     min_overlap: int = 1,
     counts: DataFrame | None = None,
     max_bucket: int | None = None,
-    restrict: bool = True,
 ) -> DataFrame:
     """(a, b, n_inter, n_a, n_b) per doc pair sharing >= ``min_overlap``
     shingles — the shared core every set-resemblance measure divides
     from (:func:`pair_jaccard` and :func:`pair_containment` are thin
-    ratio selections over this output).
+    ratio selections over this output). Every pair sharing a shingle is
+    considered; candidate pairs are verified by :func:`verify_pairs`.
 
-    With `pairs` given, restricts to those candidates (LSH verify step);
-    otherwise considers every pair sharing >= min_overlap shingles.
     `counts` (doc_id, n_sh) can be supplied by a caller that already
     aggregated the shingle set (minhash_signatures with_counts=True).
-    ``max_bucket``: stop-shingle guard for the no-candidate path — a
-    shingle shared by more than this many docs is dropped (logged)
-    before the quadratic pair expansion; intersections through such
-    shingles are not counted, which is the standard near-dup trade
-    (stop-shingles carry no signal and their buckets are the OOM risk).
-    ``restrict=False`` asserts the caller ALREADY semi-joined
-    ``shingled`` down to the candidate docs, skipping the internal
-    restriction (one broadcast build + one semi-join per call — visible
-    overhead in per-micro-batch use).
+    ``max_bucket``: stop-shingle guard — a shingle shared by more than
+    this many docs is dropped (logged) before the quadratic pair
+    expansion; intersections through such shingles are not counted,
+    which is the standard near-dup trade (stop-shingles carry no signal
+    and their buckets are the OOM risk).
     """
     if counts is None:
         counts = shingled.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     else:
         counts = counts.select("doc_id", "n_sh")
-    if pairs is not None and restrict:
-        # verify path: only candidate docs enter the shingle self-join —
-        # the candidate set is tiny relative to the corpus, so this
-        # turns an O(corpus-pairs) join into O(candidate-docs) work
-        cand_docs = (
-            pairs.select(F.col("a").alias("doc_id"))
-            .union(pairs.select(F.col("b").alias("doc_id")))
-            .distinct()
-        )
-        shingled = shingled.join(F.broadcast(cand_docs), "doc_id", "left_semi")
     inter = (
         _bucket_pairs(
             shingled.select("doc_id", F.col("shingle").alias("bucket")),
@@ -280,8 +302,6 @@ def pair_overlap(
         .agg(F.count(F.lit(1)).alias("n_inter"))
         .filter(F.col("n_inter") >= min_overlap)
     )
-    if pairs is not None:
-        inter = inter.join(pairs, ["a", "b"], "left_semi")
     ca = counts.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("n_a"))
     cb = counts.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("n_b"))
     return (
@@ -293,23 +313,15 @@ def pair_overlap(
 
 def pair_jaccard(
     shingled: DataFrame,
-    pairs: DataFrame | None = None,
     min_overlap: int = 1,
     counts: DataFrame | None = None,
     max_bucket: int | None = None,
-    restrict: bool = True,
 ) -> DataFrame:
     """Jaccard similarity per doc pair via shingle-bucket join — the
     symmetric-resemblance ratio over :func:`pair_overlap`'s counts
-    (|A∩B| / |A∪B|); see that function for the candidate/guard
-    parameters."""
+    (|A∩B| / |A∪B|); see that function for the guard parameters."""
     return pair_overlap(
-        shingled,
-        pairs=pairs,
-        min_overlap=min_overlap,
-        counts=counts,
-        max_bucket=max_bucket,
-        restrict=restrict,
+        shingled, min_overlap=min_overlap, counts=counts, max_bucket=max_bucket
     ).select(
         "a",
         "b",

@@ -180,8 +180,9 @@ WHERE n_inter / (ca.n_sh + cb.n_sh - n_inter) >= 0.5
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # the shingle set feeds signatures AND the verify join; one
-    # aggregation produces minhashes AND per-doc shingle counts.
+    # the verify reads the docs themselves (verify_pairs), so the
+    # shingle explode feeds only the signature aggregation and is not
+    # pinned on its own.
     # EAGER localCheckpoint: each derived frame materializes once, up
     # front, and every consumer reads the blocks. A lazy checkpoint
     # (eager=False) lets parallel downstream stages race the first
@@ -197,10 +198,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # caller can safely place. On a real cluster the recompute-on-
     # executor-loss trade is the standard one for derived
     # (cheap-to-rebuild) frames.
-    shingled = pin(D.exploded_shingles(docs))
-    sig = pin(D.minhash_signatures(shingled, with_counts=True))
+    sig = pin(D.minhash_signatures(D.exploded_shingles(docs)))
     candidates = pin(D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET))
-    verified = D.pair_jaccard(shingled, pairs=candidates, counts=sig)
+    verified = D.verify_pairs(docs, candidates)
     return verified.filter(F.col("jaccard") >= 0.5).select(
         "a", "b", dround("jaccard", 6).alias("jaccard")
     )
@@ -231,8 +231,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # eager localCheckpoint, not persist — see dedup_minhash_lsh
     # (cold A/B: eager 2.16s min / 2.50s mean vs lazy 2.33 / 3.87)
-    shingled = pin(D.exploded_shingles(docs))
-    sig = pin(D.minhash_signatures(shingled, with_counts=True))
+    sig = pin(D.minhash_signatures(D.exploded_shingles(docs)))
     new_ids = docs.filter(F.col("doc_id") >= _INC_NEW_MIN).select("doc_id")
     # the new docs' bands come from a broadcast-restricted slice of the
     # signatures — O(batch), never a second corpus banding
@@ -240,7 +239,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = pin(D.lsh_incremental_candidates(
         D.band_buckets(sig), new_bands, max_bucket=_JACCARD_MAX_BUCKET
     ))
-    verified = D.pair_jaccard(shingled, pairs=candidates, counts=sig)
+    verified = D.verify_pairs(docs, candidates)
     return verified.filter(F.col("jaccard") >= 0.5).select(
         "a", "b", dround("jaccard", 6).alias("jaccard")
     )
@@ -690,7 +689,7 @@ FROM pairs GROUP BY a, b HAVING COUNT(*) >= {_WINNOW_PAIR_MIN_SHARED}
         "Jaccard. Pairs expand through the guarded single-aggregation "
         "_bucket_pairs (hot fingerprints shared by > 1000 docs drop "
         "before expansion, logged, oracle-mirrored); a full pipeline "
-        "composes pair_jaccard verification exactly as "
+        "composes verify_pairs verification exactly as "
         "dedup_minhash_lsh does"
     ),
 )
@@ -1755,15 +1754,14 @@ FROM est LEFT JOIN tru ON tru.a = est.a AND tru.b = est.b
         "permutation count / band shape at scale you MEASURE the "
         "estimator on a sample, and this query is that measurement as "
         "an oracled catalog entry. Signature comparison is a broadcast "
-        "join of the k-hash rows; the exact side reuses the "
-        "candidate-restricted verify join (cost scales with candidates, "
-        "not corpus)"
+        "join of the k-hash rows; the exact side is the same map-only "
+        "candidate verify as dedup_minhash_lsh (cost scales with "
+        "candidates, not corpus)"
     ),
 )
 def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    shingled = pin(D.exploded_shingles(docs))
-    sig = pin(D.minhash_signatures(shingled, with_counts=True))
+    sig = pin(D.minhash_signatures(D.exploded_shingles(docs)))
     cand = pin(D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET))
     k = len(MINHASH_SEEDS)
     sa = sig.select(
@@ -1780,7 +1778,7 @@ def dedup_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sb), "b")
         .select("a", "b", (matches / F.lit(float(k))).alias("est"))
     )
-    tru = D.pair_jaccard(shingled, pairs=cand, counts=sig)
+    tru = D.verify_pairs(docs, cand)
     return (
         est.join(tru, ["a", "b"], "left")
         .select(

@@ -249,7 +249,7 @@ def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = D.pair_jaccard(shingled, counts=sig).filter(
         F.col("jaccard") >= _LSHQ_T
     )
-    verified = D.pair_jaccard(shingled, pairs=cand, counts=sig).filter(
+    verified = D.verify_pairs(docs, cand).filter(
         F.col("jaccard") >= _LSHQ_T
     )
     nt = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))

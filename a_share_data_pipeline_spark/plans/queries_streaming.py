@@ -469,7 +469,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         work, land_dir, docs.schema, max_files_per_trigger=1
     )
     # a micro-batch is ~1/3 of the new slice: kilobytes of shuffle data
-    # across the ~8 per-batch jobs
+    # across its 9-11 jobs (job_probe.py, sf0.01 and sf0.1)
     set_width(work, 8)
     ST.run_available_now(stream, os.path.join(root, "ckpt"), absorb)
     # bid-keyed subdirs → recursive lookup; the result read runs on the
@@ -526,32 +526,15 @@ def _incdedup_make_absorb(parts: dict, out_dir: str):
         band_part = pin(D.band_buckets(
             D.minhash_signatures(D.exploded_shingles(doc_part, spread=False))
         ))
-        # the candidate-pair frame is tiny (LSH collisions of one batch)
-        # but its lineage holds the corpus-band scan, and it feeds
-        # several consumers below (both sides of cand_ids, then
-        # pair_jaccard's candidate filter) — without an eager pin Spark
-        # re-runs that scan per consumer
-        cand = pin(D.lsh_incremental_candidates(
+        # not pinned: verify_pairs reads the candidates once (as its
+        # broadcast pair frame), and the store probe inside is pinned
+        cand = D.lsh_incremental_candidates(
             _union_all([b for _, b in parts.values()] + [band_part]),
             band_part,
             max_bucket=_JACCARD_MAX_BUCKET,
-        ))
-        cand_ids = (
-            cand.select(F.col("a").alias("doc_id"))
-            .union(cand.select(F.col("b").alias("doc_id")))
-            .distinct()
         )
-        cand_docs = _union_all([d for d, _ in parts.values()] + [doc_part]).join(
-            F.broadcast(cand_ids), "doc_id", "left_semi"
-        )
-        # cand_docs is already the candidate restriction (semi-join
-        # above), so skip pair_jaccard's internal re-restriction and
-        # the spread shuffle — a handful of docs explodes in place, and
-        # their shingle counts come from the same explode
-        ver = D.pair_jaccard(
-            D.exploded_shingles(cand_docs, spread=False),
-            pairs=cand,
-            restrict=False,
+        ver = D.verify_pairs(
+            _union_all([d for d, _ in parts.values()] + [doc_part]), cand
         ).filter(F.col("jaccard") >= 0.5)
         # out_dir is read back as the query RESULT, so a retried _bid
         # must REPLACE its earlier attempt's pairs, never append beside

@@ -238,24 +238,38 @@ def test_lsh_band_candidates_cap_drops_hot_band_bucket(spark, caplog):
     assert any("hot bucket" in r.message for r in caplog.records)
 
 
-def test_pair_jaccard_restrict_false_equals_caller_restriction(spark):
-    """`restrict=False` asserts the caller already semi-joined the
-    shingle set to the candidate docs; on such an input it must return
-    exactly what the internal restriction would — the per-micro-batch
-    job-cut in stream_incremental_dedup rides on this equivalence."""
+def test_verify_pairs_equals_pair_jaccard(spark):
+    """The map-only LSH verify (array_intersect of each pair's shingle
+    arrays) returns the same pairs as the shingle-bucket join
+    with bit-equal Jaccard, emits no zero-overlap pair, and pairs a doc
+    with fewer than 3 tokens (no shingle) with nothing."""
     from a_share_data_pipeline_spark.operators import dedup as D
 
-    rows = [(i, f"s{j}") for i in range(8) for j in range(i, i + 4)]
-    shingled = spark.createDataFrame(rows, "doc_id long, shingle string")
-    pairs = spark.createDataFrame([(0, 1), (2, 3)], "a long, b long")
-    cand_docs = spark.createDataFrame([(0,), (1,), (2,), (3,)], "doc_id long")
-    pre = shingled.join(cand_docs, "doc_id", "left_semi")
-
-    full = {(r.a, r.b, round(r.jaccard, 9))
-            for r in D.pair_jaccard(shingled, pairs=pairs).collect()}
-    fast = {(r.a, r.b, round(r.jaccard, 9))
-            for r in D.pair_jaccard(pre, pairs=pairs, restrict=False).collect()}
-    assert full == fast and full  # non-vacuous
+    w = [f"w{i}" for i in range(40)]
+    texts = {
+        0: " ".join(w[0:20]),
+        1: " ".join(w[3:22]),
+        2: " ".join(w[0:20] * 2),  # repeated 3-grams count once
+        3: " ".join(w[30:40]),  # shares no 3-gram with 0..2
+        4: "w0 w1",  # < 3 tokens
+        5: " ".join(w[5:12] + ["x", "y", "z"] + w[12:25]),
+    }
+    docs = spark.createDataFrame(sorted(texts.items()), "doc_id long, text string")
+    every = spark.createDataFrame(
+        [(a, b) for a in texts for b in texts if a < b], "a long, b long"
+    )
+    ref = {
+        (r.a, r.b): r.jaccard
+        for r in D.pair_jaccard(D.exploded_shingles(docs)).collect()
+    }
+    got = {(r.a, r.b): r.jaccard for r in D.verify_pairs(docs, every).collect()}
+    assert got == ref  # same pairs, floats compared exactly
+    assert len(got) >= 5 and (0, 3) not in got and not any(4 in p for p in got)
+    # only the given candidates are verified
+    some = spark.createDataFrame([(0, 1), (0, 3), (0, 4)], "a long, b long")
+    assert {
+        (r.a, r.b): r.jaccard for r in D.verify_pairs(docs, some).collect()
+    } == {(0, 1): ref[(0, 1)]}
 
 
 def test_lsh_incremental_candidates_cap_filters_before_bucket_join(spark, caplog):

@@ -526,7 +526,7 @@ def test_clone_width_leaves_caller_width(spark, sf_smoke, monkeypatch, name):
     fixed, or the volume rule's floor for the measured-width graph
     queries at smoke scale, so the width derives from the data, not
     the CPU count — while the caller keeps its distinctive width 12,
-    also mid-stream (spied via D.pair_jaccard, which runs inside every
+    also mid-stream (spied via D.verify_pairs, which runs inside every
     stream_incremental_dedup micro-batch). The result comes back on
     the clone or on the caller, as the query documents."""
     from pyspark.sql import SparkSession
@@ -536,7 +536,7 @@ def test_clone_width_leaves_caller_width(spark, sf_smoke, monkeypatch, name):
 
     pkey = "spark.sql.shuffle.partitions"
     clones, observed = [], []
-    new_session, real = SparkSession.newSession, D.pair_jaccard
+    new_session, real = SparkSession.newSession, D.verify_pairs
 
     def recording_new_session(session):
         clones.append(new_session(session))
@@ -547,7 +547,7 @@ def test_clone_width_leaves_caller_width(spark, sf_smoke, monkeypatch, name):
         return real(*a, **k)
 
     monkeypatch.setattr(SparkSession, "newSession", recording_new_session)
-    monkeypatch.setattr(D, "pair_jaccard", spy)
+    monkeypatch.setattr(D, "verify_pairs", spy)
     before = spark.conf.get(pkey)
     spark.conf.set(pkey, "12")  # distinctive caller width
     try:
