@@ -23,12 +23,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.ordering import ordkey
 from ..functions.rounding import dround
 from ..operators import dedup as D
-from ..session import clone_session, pin, set_width, volume_width
+from ..session import clone_session, pin, scratch_dir, set_width, volume_width
 from ..sources import load_table
 from .catalog import register
+from .queries_market import _daily_close
 
 # ---------------------------------------------------------------------------
 # Label propagation: community detection (the non-CC, non-rank graph family)
@@ -3879,18 +3879,13 @@ GROUP BY d.day, daily.event_type
     ),
 )
 def layout_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urllib.parse import urlparse
-
     ev = load_table(spark, sf_dir, "events")
     daily = ev.select(
         F.date_trunc("day", "ts").cast("date").alias("day"),
         "event_type",
         dround(F.col("value") * 100, 0).cast("bigint").alias("cents"),
     )
-    # idempotent rewrite per call (the layout_zorder warehouse
-    # discipline): local-FS path; at scale only the prefix changes
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    path = f"{wh}/events_by_day"
+    path = scratch_dir(spark, "layout_dpp_join")
     daily.write.mode("overwrite").partitionBy("day").parquet(path)
     fact = spark.read.parquet(path)
     dim = (
@@ -4063,7 +4058,7 @@ WHERE n8 = 8
     ),
 )
 def events_haar_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    daily = _haar_daily(spark, sf_dir)
+    daily = _daily_close(spark, sf_dir)
     epoch = F.datediff(F.col("day"), F.lit("1970-01-01").cast("date"))
     slotted = daily.select(
         "event_type",
@@ -4092,24 +4087,6 @@ def events_haar_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
         (a[2] - a[3]).cast("bigint").alias("d3b_c"),
         (a[4] - a[5]).cast("bigint").alias("d3c_c"),
         (a[6] - a[7]).cast("bigint").alias("d3d_c"),
-    )
-
-
-def _haar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily closes in cents — the queries_market._daily_close shape,
-    local to avoid a cross-module import cycle."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    return (
-        ev.select(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-            dround(F.col("value") * 100, 0).cast("bigint").alias("close_c"),
-            ordkey().alias("ordkey"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.max_by("close_c", "ordkey").alias("close_c"))
     )
 
 
@@ -4547,20 +4524,17 @@ GROUP BY o.o_custkey
     ),
 )
 def join_bucketed_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    from urllib.parse import urlparse
-
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    root = scratch_dir(spark, "join_bucketed_zero_shuffle")
     for tbl, df, key in (
         ("orders_bk", orders, "o_orderkey"),
         ("lineitem_bk", li, "l_orderkey"),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        if wh:
-            shutil.rmtree(f"{wh}/{tbl}", ignore_errors=True)
-        df.write.mode("overwrite").bucketBy(8, key).sortBy(key).saveAsTable(tbl)
+        df.write.mode("overwrite").bucketBy(8, key).sortBy(key).option(
+            "path", f"{root}/{tbl}"
+        ).saveAsTable(tbl)
     o = spark.table("orders_bk").filter(F.col("o_orderstatus") == "O")
     lb = spark.table("lineitem_bk")
     # hint("merge") pins the SortMergeJoin path: at test SFs AQE would

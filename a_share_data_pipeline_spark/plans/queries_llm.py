@@ -16,7 +16,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import text as TX
-from ..session import pin
+from ..session import pin, scratch_dir
 from ..sources import load_table
 from ..functions.rounding import dround
 from .catalog import register
@@ -180,26 +180,12 @@ WHERE n_inter / (ca.n_sh + cb.n_sh - n_inter) >= 0.5
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # the verify reads the docs themselves (verify_pairs), so the
-    # shingle explode feeds only the signature aggregation and is not
-    # pinned on its own.
-    # EAGER localCheckpoint: each derived frame materializes once, up
-    # front, and every consumer reads the blocks. A lazy checkpoint
-    # (eager=False) lets parallel downstream stages race the first
-    # materialization and recompute the upstream — measured A/B under
-    # bench.py's cold isolated harness (clearCache+GC per rep, sf0.1,
-    # 4 interleaved reps): eager 2.25s min / 2.70s mean vs lazy 2.97 /
-    # 4.10 vs no-checkpoint 3.48 / 4.10. (Round 3 recorded the
-    # opposite because its pre-isolation harness let rep 2 reuse rep
-    # 1's blocks — the driver's honest 4.51s record exposed it;
-    # VERDICT r3 item 1.) localCheckpoint, not persist(): blocks are
-    # ContextCleaner-freed when the result frame drops — persist()
-    # would pin them in the CacheManager until an unpersist() no
-    # caller can safely place. On a real cluster the recompute-on-
-    # executor-loss trade is the standard one for derived
-    # (cheap-to-rebuild) frames.
+    # the signatures are read twice (the hot-bucket count and the pair
+    # expansion), so they are pinned EAGERLY: a lazy checkpoint lets
+    # parallel consumers race its first materialization and recompute
+    # the shingle explode. verify_pairs reads the candidates once.
     sig = pin(D.minhash_signatures(D.exploded_shingles(docs)))
-    candidates = pin(D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET))
+    candidates = D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET)
     verified = D.verify_pairs(docs, candidates)
     return verified.filter(F.col("jaccard") >= 0.5).select(
         "a", "b", dround("jaccard", 6).alias("jaccard")
@@ -229,16 +215,15 @@ _INC_NEW_MIN = 450  # docs with id >= this model the newly-arrived batch
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # eager localCheckpoint, not persist — see dedup_minhash_lsh
-    # (cold A/B: eager 2.16s min / 2.50s mean vs lazy 2.33 / 3.87)
+    # eager, not lazy, for the reason in dedup_minhash_lsh
     sig = pin(D.minhash_signatures(D.exploded_shingles(docs)))
     new_ids = docs.filter(F.col("doc_id") >= _INC_NEW_MIN).select("doc_id")
     # the new docs' bands come from a broadcast-restricted slice of the
     # signatures — O(batch), never a second corpus banding
     new_bands = D.band_buckets(sig.join(F.broadcast(new_ids), "doc_id", "left_semi"))
-    candidates = pin(D.lsh_incremental_candidates(
+    candidates = D.lsh_incremental_candidates(
         D.band_buckets(sig), new_bands, max_bucket=_JACCARD_MAX_BUCKET
-    ))
+    )
     verified = D.verify_pairs(docs, candidates)
     return verified.filter(F.col("jaccard") >= 0.5).select(
         "a", "b", dround("jaccard", 6).alias("jaccard")
@@ -873,8 +858,6 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def sim_ann_index_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", SIM.as_double_vec("embedding", "v")
     )
@@ -884,7 +867,7 @@ def sim_ann_index_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     # write time: assign cells, persist the index partitioned by cell
     va = SIM.ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1)
-    d = tempfile.mkdtemp(prefix="ann_index_")
+    d = scratch_dir(spark, "sim_ann_index_scan")
     va.write.mode("overwrite").partitionBy("cell").parquet(d)
     idx = spark.read.parquet(d)
     # query time: probe cells, scan ONLY their partitions

@@ -14,7 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.asof import as_of_join
-from ..session import clone_session, set_width, volume_width
+from ..session import clone_session, scratch_dir, set_width, volume_width
 from ..sources import load_table
 from ..streaming import structured as ST
 from ..streaming.incremental import delta_slice, merge_increment
@@ -281,7 +281,7 @@ FROM orders
     _BUCKETED_MA_SQL,
     doc=(
         "bucketed canonical layout end-to-end: orders rewritten as a "
-        "managed table bucketed AND sorted by the window key "
+        "catalog table bucketed AND sorted by the window key "
         "(bucketBy(8, o_custkey)), then a per-key moving average reads "
         "it back — the bucketed scan already satisfies the window's "
         "clustering, so the plan has ZERO Exchange (gate-tested in "
@@ -292,23 +292,14 @@ FROM orders
 )
 def bucketed_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    # idempotent rewrite per call — the layout IS the thing under test.
-    # DROP covers a table registered in this session's catalog; the
-    # rmtree covers an orphaned warehouse dir left by a previous
-    # session (saveAsTable refuses LOCATION_ALREADY_EXISTS). Local-FS
-    # only — on a real cluster the warehouse is an object store and the
-    # catalog entry persists, so DROP alone suffices.
+    # idempotent rewrite per call — the layout IS the thing under test:
+    # an external table over the query's scratch dir, re-registered
     spark.sql("DROP TABLE IF EXISTS orders_bucketed_ma")
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    if wh:
-        shutil.rmtree(f"{wh}/orders_bucketed_ma", ignore_errors=True)
     (
         orders.write.mode("overwrite")
         .bucketBy(8, "o_custkey")
         .sortBy("o_custkey", "o_orderdate", "o_orderkey")
+        .option("path", scratch_dir(spark, "bucketed_ma"))
         .saveAsTable("orders_bucketed_ma")
     )
     b = spark.table("orders_bucketed_ma")
@@ -345,18 +336,12 @@ WHERE o_custkey BETWEEN 100 AND 300 AND o_totalprice > 150000
     ),
 )
 def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urllib.parse import urlparse
-
     from ..operators.layout import zorder_write
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
-    # idempotent rewrite per call (mode=overwrite); local-FS warehouse,
-    # same convention as bucketed_ma — on a real cluster this is an
-    # object-store prefix and only the path literal changes
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    path = f"{wh}/orders_zorder"
+    path = scratch_dir(spark, "layout_zorder")
     zorder_write(orders, path, ["o_custkey", "o_totalprice"], bits=8, n_files=16)
     back = spark.read.parquet(path)
     return back.filter(
@@ -387,16 +372,14 @@ _COMPACT_SQL = "SELECT event_id, ts, user_id, event_type, value, props FROM even
     ),
 )
 def layout_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urllib.parse import urlparse
-
     from ..operators.layout import compact_files
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    frag = f"{wh}/events_fragmented"
-    compacted = f"{wh}/events_compacted"
+    root = scratch_dir(spark, "layout_compact")
+    frag = f"{root}/events_fragmented"
+    compacted = f"{root}/events_compacted"
     ev.repartition(64).write.mode("overwrite").parquet(frag)
     compact_files(spark.read.parquet(frag), compacted, target_bytes=1 << 20, sort_col="ts")
     return spark.read.parquet(compacted).select(
@@ -421,13 +404,10 @@ _JSONL_SQL = "SELECT doc_id, text, lang, source, n_chars FROM documents"
     ),
 )
 def source_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urllib.parse import urlparse
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    path = f"{wh}/documents_jsonl"
+    path = scratch_dir(spark, "source_jsonl")
     docs.write.mode("overwrite").json(path)
     schema = "doc_id long, text string, lang string, source string, n_chars long"
     return spark.read.schema(schema).json(path)
@@ -694,10 +674,8 @@ FROM documents GROUP BY source
     ),
 )
 def source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="orc_interchange_")
+    d = scratch_dir(spark, "source_orc")
     docs.write.mode("overwrite").orc(d)
     back = spark.read.schema(docs.schema).orc(d)
     return back.groupBy("source").agg(
@@ -730,10 +708,8 @@ FROM documents GROUP BY source
     ),
 )
 def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="csv_interchange_")
+    d = scratch_dir(spark, "source_csv")
     docs.write.mode("overwrite").option("header", True).csv(d)
     back = spark.read.schema(docs.schema).option("header", True).csv(d)
     return back.groupBy("source").agg(
@@ -1266,11 +1242,8 @@ FROM documents
     ),
 )
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urllib.parse import urlparse
-
     docs = load_table(spark, sf_dir, "documents")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    path = f"{wh}/documents_evolving"
+    path = scratch_dir(spark, "source_schema_evolution")
     docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
         "overwrite"
     ).parquet(f"{path}/batch=v1")
@@ -2538,13 +2511,10 @@ GROUP BY 1, 2
     ),
 )
 def source_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urllib.parse import urlparse
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value", F.col("ts").cast("date").alias("day")
     )
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    path = f"{wh}/events_by_day"
+    path = scratch_dir(spark, "source_partitioned_read")
     ev.write.mode("overwrite").partitionBy("day").parquet(path)
     back = spark.read.parquet(path).filter(
         F.col("day").between("2024-01-08", "2024-01-14")
@@ -2674,13 +2644,11 @@ GROUP BY 1
 def source_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
     import os
-    from urllib.parse import urlparse
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = f"{wh}/orders_txnlog"
+    root = scratch_dir(spark, "source_txn_log_snapshot")
     k = F.col("o_orderkey")
     for b in range(4):
         orders.filter(k % 4 == b).write.mode("overwrite").parquet(
@@ -2690,7 +2658,7 @@ def source_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{root}/b1v2.parquet"
     )
     log_dir = f"{root}/_log"
-    os.makedirs(log_dir, exist_ok=True)
+    os.makedirs(log_dir)
     commits = {
         "000": [
             {"v": 0, "action": "add", "file": "b0.parquet"},
@@ -2758,14 +2726,12 @@ GROUP BY event_type
     ).format(cutoff=_PE_CUTOFF),
 )
 def source_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urllib.parse import urlparse
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    old_dir = f"{wh}/events_flat_v1"
-    new_dir = f"{wh}/events_parted_v2"
+    root = scratch_dir(spark, "source_partition_evolution")
+    old_dir = f"{root}/events_flat_v1"
+    new_dir = f"{root}/events_parted_v2"
     cutoff = F.lit(_PE_CUTOFF).cast("timestamp")
     ev.filter(F.col("ts") < cutoff).write.mode("overwrite").parquet(old_dir)
     ev.filter(F.col("ts") >= cutoff).write.mode("overwrite").partitionBy(

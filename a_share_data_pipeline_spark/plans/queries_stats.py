@@ -16,11 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.ordering import ordkey
 from ..functions.rounding import dround
 from ..session import pin
 from ..sources import load_table
 from .catalog import register
+from .queries_market import _daily_close
 
 # ---------------------------------------------------------------------------
 # Welch's t-test: purchase vs click order values (wave 20)
@@ -542,19 +542,7 @@ WHERE n1 > 0 AND n0 > 0
 def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = (
-        ev.select(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-            dround(F.col("value") * 100, 0).cast("bigint").alias("close_c"),
-            ordkey().alias("ordkey"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.max_by("close_c", "ordkey").alias("close_c"))
-    )
+    daily = _daily_close(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("day")
     prev = F.lag("close_c").over(w)
     moves = daily.select(
@@ -1365,19 +1353,7 @@ FROM s WHERE n > 0
 def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = (
-        ev.select(
-            "event_type",
-            F.date_trunc("day", "ts").cast("date").alias("day"),
-            dround(F.col("value") * 100, 0).cast("bigint").alias("c"),
-            ordkey().alias("ok"),
-        )
-        .groupBy("event_type", "day")
-        .agg(F.max_by("c", "ok").alias("close_c"))
-    )
+    daily = _daily_close(spark, sf_dir)
     v = daily.filter(F.col("event_type") == "view").select(
         "day", F.col("close_c").alias("vc")
     )

@@ -4,7 +4,10 @@ Each query materializes a real Structured Streaming run: events are
 landed as files, read back with a file-source stream, processed through
 windowed / stateful operators, executed to completion with
 Trigger.AvailableNow into a memory sink, and the sink's table is
-returned as the result DataFrame.
+returned as the result DataFrame. A ``foreachBatch`` query writes its
+output as files instead and returns a read of them. Every query keeps
+its landing files, checkpoint and any output under its own
+``session.scratch_dir``, which its next call replaces.
 
 Because an AvailableNow cycle over a static landing dir is
 deterministic, these carry full SQL oracles — DuckDB verifies the
@@ -17,8 +20,6 @@ and registers its oracle, so the two differ only in source and sink
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..functions.ordering import ordkey
 from ..functions.rounding import dround
-from ..session import clone_session, pin, set_width
+from ..session import clone_session, pin, scratch_dir, set_width
 from ..sources.readers import load_table
 from ..streaming import structured as ST
 from .catalog import register
@@ -45,23 +46,24 @@ from .queries_pipeline import (
 )
 
 
-def _land(df: DataFrame) -> str:
-    """Write ``df`` as a stream's landing files under a fresh temp root
-    and return the landing dir; :func:`_run_to_table` checkpoints beside
-    it and removes the root."""
-    path = os.path.join(tempfile.mkdtemp(prefix="stream_"), "files")
-    df.write.mode("overwrite").parquet(path)
-    return path
+def _land(df: DataFrame, name: str) -> tuple[str, str]:
+    """Write ``df`` as a stream's landing files in the scratch dir of
+    the query ``name``; return the landing dir and the checkpoint dir
+    beside it, for :func:`_run_to_table`."""
+    root = scratch_dir(df.sparkSession, name)
+    landing = os.path.join(root, "landing")
+    df.write.mode("overwrite").parquet(landing)
+    return landing, os.path.join(root, "ckpt")
 
 
-def _land_events(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
-    """Land events (micros timestamps); return the landing dir and the
-    events frame."""
+def _land_events(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, str, DataFrame]:
+    """Land events (micros timestamps) for the query ``name``; return
+    the landing dir, the checkpoint dir and the events frame."""
     ev = load_table(spark, sf_dir, "events")
-    return _land(ev), ev
+    return *_land(ev, name), ev
 
 
-def _run_to_table(result: DataFrame, mode: str, landing: str) -> DataFrame:
+def _run_to_table(result: DataFrame, mode: str, ckpt: str) -> DataFrame:
     """Run one AvailableNow cycle into a memory table, on the session
     ``result`` was built on, and return the table read on that session.
 
@@ -72,17 +74,13 @@ def _run_to_table(result: DataFrame, mode: str, landing: str) -> DataFrame:
     clone. The memory sink's temp view is dropped once read: the
     returned frame keeps its analyzed plan, and the catalog stays as
     the caller left it. The memory table holds its rows in driver
-    memory, so the root of ``landing`` (from :func:`_land`, which also
-    holds the checkpoint) is removed before returning."""
+    memory, so the result reads nothing under ``ckpt`` (from
+    :func:`_land`)."""
     spark = result.sparkSession
     name = "q_" + uuid.uuid4().hex[:12]
-    root = os.path.dirname(landing)
-    try:
-        ST.run_available_now(result, os.path.join(root, "ckpt"), name, output_mode=mode)
-        out = spark.table(name)
-        spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    ST.run_available_now(result, ckpt, name, output_mode=mode)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
     return out
 
 
@@ -104,10 +102,10 @@ def _final_emission(updates: DataFrame, *keys: str) -> DataFrame:
     doc="Structured Streaming tumbling window (AvailableNow file stream → memory sink); oracle checks the streaming output itself",
 )
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, ev = _land_events(spark, sf_dir)
+    path, ckpt, ev = _land_events(spark, sf_dir, "stream_tumbling")
     stream = ST.read_file_stream(spark, path, ev.schema)
     res = ST.tumbling_counts(stream, width="1 hour", watermark="2 hours")
-    return _tumble_out(_run_to_table(res, "complete", path))
+    return _tumble_out(_run_to_table(res, "complete", ckpt))
 
 
 _STREAM_TOTALS_SQL = """
@@ -125,11 +123,11 @@ GROUP BY user_id
     doc="applyInPandasWithState running totals (update mode, multi-micro-batch); final state per user oracle-checked",
 )
 def stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, ev = _land_events(spark, sf_dir)
+    path, ckpt, ev = _land_events(spark, sf_dir, "stream_stateful_totals")
     # >1 file → >1 micro-batch → state actually carries across batches
     stream = ST.read_file_stream(spark, path, ev.schema, max_files_per_trigger=1)
     res = ST.running_totals_stateful(stream)
-    updates = _run_to_table(res, "update", path)
+    updates = _run_to_table(res, "update", ckpt)
     return _final_emission(updates, "user_id").select(
         "user_id", "n_events", dround("sum_value", 2).alias("sum_value")
     )
@@ -171,10 +169,10 @@ GROUP BY user_id, sid
     ),
 )
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, ev = _land_events(spark, sf_dir)
+    path, ckpt, ev = _land_events(spark, sf_dir, "stream_sessionize")
     stream = ST.read_file_stream(spark, path, ev.schema)
     res = ST.session_aggregate(stream, gap="30 minutes", watermark="2 hours")
-    out = _run_to_table(res, "complete", path)
+    out = _run_to_table(res, "complete", ckpt)
     return out.select(
         "user_id",
         "sess_start",
@@ -202,7 +200,7 @@ SELECT event_id, user_id, ts FROM events
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
-    path = _land(ev)
+    path, ckpt = _land(ev, "stream_dedup")
     ev.write.mode("append").parquet(path)  # the duplicate replay
     # kilobytes of dedup state: the stream runs on a width-8 clone. A/B
     # receipt: plans/r14/ab_receipts/stream_dedup.jsonl.
@@ -213,7 +211,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    return _run_to_table(res, "append", path).select("event_id", "user_id", "ts")
+    return _run_to_table(res, "append", ckpt).select("event_id", "user_id", "ts")
 
 
 _STREAM_PEAKS_SQL = """
@@ -235,12 +233,12 @@ GROUP BY user_id
     ),
 )
 def stream_tws_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, ev = _land_events(spark, sf_dir)
+    path, ckpt, ev = _land_events(spark, sf_dir, "stream_tws_peaks")
     stream = ST.read_file_stream(spark, path, ev.schema, max_files_per_trigger=1)
     # TWS needs protobuf in the Python worker; same state semantics on
     # the applyInPandasWithState lane where it's absent (this container)
     peaks = ST.running_peaks_tws if ST.tws_available() else ST.running_peaks_state
-    updates = _run_to_table(peaks(stream), "update", path)
+    updates = _run_to_table(peaks(stream), "update", ckpt)
     return _final_emission(updates, "user_id").select(
         "user_id", "n_events", dround("peak", 2).alias("peak")
     )
@@ -269,9 +267,9 @@ def stream_curation_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import curation as CU
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _land(docs)
+    path, ckpt = _land(docs, "stream_curation_gates")
     stream = ST.read_file_stream(spark, path, docs.schema)
-    return _run_to_table(CU.quality_gates(stream), "append", path)
+    return _run_to_table(CU.quality_gates(stream), "append", ckpt)
 
 
 _STREAM_SS_JOIN_SQL = """
@@ -310,19 +308,19 @@ FROM events c JOIN events p
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _click_purchase_attribution(
-        spark, sf_dir, "1 day", "inner",
+        spark, sf_dir, "stream_stream_join", "1 day", "inner",
         "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts",
     )
 
 
 def _click_purchase_attribution(
-    spark: SparkSession, sf_dir: str, delay: str, how: str, *cols: str
+    spark: SparkSession, sf_dir: str, name: str, delay: str, how: str, *cols: str
 ) -> DataFrame:
-    """Click→purchase attribution as a stream-stream join: each click
-    joins the same user's purchases in the 30 minutes after it, both
-    streams watermarked ``delay`` behind their event time. The result
-    is ``cols`` then purchase_value."""
-    path, ev = _land_events(spark, sf_dir)
+    """Click→purchase attribution as a stream-stream join for the query
+    ``name``: each click joins the same user's purchases in the 30
+    minutes after it, both streams watermarked ``delay`` behind their
+    event time. The result is ``cols`` then purchase_value."""
+    path, ckpt, ev = _land_events(spark, sf_dir, name)
     # 4 state stores per partition for kilobytes of state: the stream
     # runs on a width-8 clone (measured 8.4s -> 3.9s at sf0.1 vs 32).
     work = clone_session(spark, 8)
@@ -354,7 +352,7 @@ def _click_purchase_attribution(
     # expired join state, the cost a deployment pays per watermark
     # advance, so the cycle times it; in an outer join it also emits
     # the clicks that can no longer match.
-    out = _run_to_table(joined, "append", path)
+    out = _run_to_table(joined, "append", ckpt)
     return out.select(
         *cols, dround(F.coalesce("value", F.lit(0.0)), 2).alias("purchase_value")
     )
@@ -384,7 +382,7 @@ GROUP BY 1, 2
     ),
 )
 def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, ev = _land_events(spark, sf_dir)
+    path, ckpt, ev = _land_events(spark, sf_dir, "stream_enrich_join")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -394,7 +392,7 @@ def stream_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.coalesce(F.col("value"), F.lit(0.0))).alias("sum_value"),
     )
-    out = _run_to_table(res, "complete", path)
+    out = _run_to_table(res, "complete", ckpt)
     return out.select(
         "segment", "event_type", "n_events", dround("sum_value", 2).alias("sum_value")
     )
@@ -450,7 +448,7 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # micro-batches at width 8 (set just before the stream starts)
     work = clone_session(spark)
     docs = load_table(work, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="stream_incdedup_")
+    root = scratch_dir(spark, "stream_incremental_dedup")
     out_dir = os.path.join(root, "pairs")
     land_dir = os.path.join(root, "landing")
 
@@ -572,8 +570,8 @@ def _incdedup_make_absorb(parts: dict, out_dir: str):
     ),
 )
 def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    root = tempfile.mkdtemp(prefix="stream_cdc_")
-    land_dir = os.path.join(root, "changes")
+    root = scratch_dir(spark, "stream_cdc_apply")
+    land_dir = os.path.join(root, "landing")
 
     snap0 = _cdc_snapshot(spark, sf_dir)
     version = {"n": 0}
@@ -637,7 +635,7 @@ GROUP BY event_type, day
     ),
 )
 def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path, ev = _land_events(spark, sf_dir)
+    path, ckpt, ev = _land_events(spark, sf_dir, "stream_ohlc")
     stream = ST.read_file_stream(spark, path, ev.schema).filter(
         F.col("event_type").isin("view", "purchase")
     )
@@ -647,7 +645,7 @@ def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = keyed.groupBy(F.window("ts", "1 day").alias("win"), "event_type").agg(
         *_ohlc_aggs()
     )
-    out = _run_to_table(res, "complete", path)
+    out = _run_to_table(res, "complete", ckpt)
     return out.select(
         "event_type",
         F.col("win.start").cast("date").alias("day"),
@@ -728,7 +726,7 @@ SELECT * FROM matched UNION ALL SELECT * FROM unmatched
 )
 def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _click_purchase_attribution(
-        spark, sf_dir, "1 hour", "leftOuter",
+        spark, sf_dir, "stream_stream_join_outer", "1 hour", "leftOuter",
         "click_id", "user_id", "click_ts", "purchase_id", "purchase_ts",
     )
 
@@ -814,7 +812,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # interleaved A/B receipt: plans/r14/ab_receipts/stream_scd2_apply.jsonl.
     work = clone_session(spark, 8)
     upd = _scd2_updates(load_table(work, sf_dir, "events"))
-    root = tempfile.mkdtemp(prefix="stream_scd2_")
+    root = scratch_dir(spark, "stream_scd2_apply")
     land = os.path.join(root, "landing")
     dim = os.path.join(root, "dim")
     upd.repartitionByRange(3, "ts", "event_id").write.mode("overwrite").parquet(land)
@@ -885,9 +883,9 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = F.lit(_LATE_CUT).cast("timestamp")
     on_time = ev.filter(F.col("ts") >= cut)
     late = ev.filter(F.col("ts") < cut)
-    root = tempfile.mkdtemp(prefix="stream_late_")
-    land = os.path.join(root, "land")
-    ckpt = os.path.join(root, "ck")
+    root = scratch_dir(spark, "stream_late_data_audit")
+    land = os.path.join(root, "landing")
+    ckpt = os.path.join(root, "ckpt")
     out = os.path.join(root, "out")
 
     def sink(b: DataFrame, _bid: int) -> None:

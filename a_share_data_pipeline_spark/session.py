@@ -36,12 +36,25 @@ about the pinned frame (its row count, a moved-label count) is an
 ``observe`` metric that rides the pin's own job, never a second
 ``count()``/``isEmpty()`` job. A lazy ``localCheckpoint(eager=False)``
 submits no job, so it stays inline.
+
+Scratch: a query that writes its own files (stream landings and
+checkpoints, interchange round-trips, stored indexes, layout tables)
+writes them under :func:`scratch_dir`, ``<warehouse>/<name>`` for its
+registry name, in subdirectories when it needs more than one. A
+query's result may read its scratch directory lazily, and the next call
+of the same query empties and replaces that directory, so collect a
+result before calling its query again. Names are unique, so two queries
+never share files, and disk use is bounded to one directory per query.
+Processes that run at the same time need their own warehouse
+(``bench.py`` and ``perfbench`` give each run one).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+from urllib.parse import urlparse
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
@@ -128,3 +141,12 @@ def pin(df: DataFrame, **metrics: Column):
         return (pinned, seen.get) if metrics else pinned
     finally:
         sc.setLocalProperty("spark.job.description", prior)
+
+
+def scratch_dir(spark: SparkSession, name: str) -> str:
+    """The query ``name``'s scratch directory, emptied (see Scratch
+    above)."""
+    d = os.path.join(urlparse(spark.conf.get("spark.sql.warehouse.dir")).path, name)
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    return d

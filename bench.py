@@ -280,9 +280,9 @@ def main() -> None:
     # source_jsonl, bucketed_ma, sim_ann_*, kmeans_embeddings) swung
     # ±2-4s across rounds on byte-identical code — roaming host disk
     # latency, not plans. The bench measures the PLAN, so pin every
-    # temp/warehouse write to tmpfs when available: TMPDIR covers the
-    # queries' tempfile.mkdtemp sites, warehouse.dir covers
-    # saveAsTable/warehouse-path writes. Evaluation and isolation are
+    # temp/warehouse write to tmpfs when available: warehouse.dir
+    # covers every query's scratch (session.scratch_dir), TMPDIR any
+    # other Python temp file. Evaluation and isolation are
     # untouched (method label unchanged); the record carries
     # "tmpfs": true so a reader can see which substrate a series ran
     # on. Shuffle spill (spark.local.dir) deliberately stays on disk —

@@ -85,7 +85,7 @@ def test_pair_containment_prefix_doc_is_fully_contained(spark):
     assert row.n_inter / min(row.n_a, row.n_b) == 1.0
 
 
-def test_attribution_credit_is_exact_integer_ppm(spark):
+def test_attribution_credit_is_exact_integer_ppm(spark, tmp_path):
     """One purchase preceded by three clicks on distinct channels:
     each channel's linear credit is floor(1e6/3)/1e6 = 0.3333, the
     last click (latest ts) takes the last-touch conversion, and a
@@ -94,8 +94,6 @@ def test_attribution_credit_is_exact_integer_ppm(spark):
         events_attribution,
     )
     import datetime as dt
-    import os
-    import tempfile
 
     base = dt.datetime(2024, 3, 10, 12, 0, 0)
     rows = [
@@ -111,9 +109,8 @@ def test_attribution_credit_is_exact_integer_ppm(spark):
         "event_id long, ts timestamp, user_id long, event_type string, "
         "value double, props string",
     )
-    d = tempfile.mkdtemp(prefix="attr_fixture_")
-    df.write.mode("overwrite").parquet(os.path.join(d, "events.parquet"))
-    out = {r.channel: r for r in events_attribution(spark, d).collect()}
+    df.write.mode("overwrite").parquet(str(tmp_path / "events.parquet"))
+    out = {r.channel: r for r in events_attribution(spark, str(tmp_path)).collect()}
     assert set(out) == {1, 2, 3}  # stale click's channel 0 absent
     for ch in (1, 2, 3):
         assert out[ch].n_touches == 1
@@ -4321,7 +4318,7 @@ def test_txn_log_time_travel_sees_pre_delete_rows(spark):
     register_out = registry()["source_txn_log_snapshot"].fn(spark, sf)
     n_latest = register_out.agg(F.sum("n")).collect()[0][0]
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    root = f"{wh}/orders_txnlog"
+    root = f"{wh}/source_txn_log_snapshot"
     log = spark.read.schema("v long, action string, file string").json(
         f"{root}/_log"
     )

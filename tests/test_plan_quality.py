@@ -376,12 +376,10 @@ def test_minhash_estimate_bounds(spark):
     assert any(r.est_jaccard > 0 for r in rows), rows
 
 
-def test_ann_index_scan_prunes_partitions(spark):
+def test_ann_index_scan_prunes_partitions(spark, tmp_path):
     """sim_ann_index_scan: the stored IVF index read must prune to the
     probed cells at the PARTITION level (PartitionFilters on `cell`),
     not post-filter a full index scan — the billion-vector contract."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from a_share_data_pipeline_spark.operators import similarity as SIM
@@ -393,7 +391,7 @@ def test_ann_index_scan_prunes_partitions(spark):
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-    d = tempfile.mkdtemp(prefix="ann_index_gate_")
+    d = str(tmp_path / "ann_index")
     SIM.ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1).write.mode(
         "overwrite"
     ).partitionBy("cell").parquet(d)
@@ -1074,7 +1072,7 @@ def test_partition_evolution_prunes_the_partitioned_half(spark):
 
     registry()["source_partition_evolution"].fn(spark, SF).collect()
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    new = spark.read.parquet(f"{wh}/events_parted_v2")
+    new = spark.read.parquet(f"{wh}/source_partition_evolution/events_parted_v2")
     p = plan_str(new.filter(F.col("event_type") == "purchase"))
     assert "PartitionFilters" in p, p
     assert "isnotnull(event_type" in p or "event_type" in p.split("PartitionFilters")[1].split("]")[0], p

@@ -1497,3 +1497,100 @@ def test_pin_counts_rows_and_restores_job_description(spark, monkeypatch):
         sc.setLocalProperty("spark.job.description", None)
     phase = f"{__name__}.test_pin_counts_rows_and_restores_job_description"
     assert names == ["outer phase", phase, phase], names
+
+
+def test_scratch_paths_only_in_scratch_dir():
+    """``session.scratch_dir`` is the package's one owner of query
+    scratch: the only ``spark.sql.warehouse.dir`` read is inside it, no
+    ``mkdtemp`` appears anywhere, and a ``TemporaryDirectory`` appears
+    only as a ``with`` block, which removes itself on exit."""
+    import ast
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    reads, strays, helper = [], [], None
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        tree = ast.parse(path.read_text())
+        scoped = {id(i.context_expr) for n in ast.walk(tree) if isinstance(n, ast.With) for i in n.items}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "scratch_dir" and rel == "session.py":
+                helper = range(node.lineno, node.end_lineno + 1)
+            if isinstance(node, ast.Constant) and node.value == "spark.sql.warehouse.dir":
+                reads.append((rel, node.lineno))
+            name = getattr(node, "attr", getattr(node, "id", None))
+            if name == "mkdtemp":
+                strays.append((rel, node.lineno))
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "TemporaryDirectory":
+                if id(node) not in scoped:
+                    strays.append((rel, node.lineno))
+    assert not strays, strays
+    assert len(reads) == 1, reads
+    assert helper and reads[0][0] == "session.py" and reads[0][1] in helper, (reads, helper)
+
+
+def _scratch_queries() -> list[str]:
+    """The registered queries that name their own scratch dir: every
+    registry name passed as a literal to a call other than ``register``
+    (``scratch_dir`` or a streaming helper that calls it)."""
+    import ast
+    from pathlib import Path
+
+    plans = Path(__file__).resolve().parents[1] / "a_share_data_pipeline_spark" / "plans"
+    registered, passed = set(), set()
+    for path in plans.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                fn = getattr(node.func, "id", getattr(node.func, "attr", None))
+                lits = {a.value for a in node.args if isinstance(a, ast.Constant) and isinstance(a.value, str)}
+                (registered if fn == "register" else passed).update(lits)
+    return sorted(registered & passed)
+
+
+def _tree_stamp(path: str) -> set:
+    return {
+        (os.path.relpath(os.path.join(d, f), path), os.stat(os.path.join(d, f)).st_mtime_ns)
+        for d, _, files in os.walk(path)
+        for f in files
+    }
+
+
+@pytest.mark.parametrize("name", _scratch_queries())
+def test_query_scratch_is_one_dir_replaced_per_call(spark, tmp_path, monkeypatch, name):
+    """Three calls of a scratch-writing query leave nothing under the
+    Python temp dir, change nothing in the warehouse but the query's own
+    ``<warehouse>/<name>``, and collect the same rows every time."""
+    import tempfile
+    from urllib.parse import urlparse
+
+    from a_share_data_pipeline_spark.plans.catalog import registry
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    os.makedirs(wh, exist_ok=True)
+    before = {e: _tree_stamp(os.path.join(wh, e)) for e in os.listdir(wh)}
+    results = []
+    for _ in range(3):
+        results.append(sorted(map(tuple, registry()[name].fn(spark, SF).collect())))
+        assert not list(tmp_path.iterdir())
+    after = {e: _tree_stamp(os.path.join(wh, e)) for e in os.listdir(wh)}
+    assert {e for e in before.keys() | after.keys() if before.get(e) != after.get(e)} == {name}
+    assert results[0], "fixture must produce rows"
+    assert results[1] == results[0] and results[2] == results[0]
+    if name == "stream_incremental_dedup":
+        # its state lives in memory: only the landed input, the stream
+        # checkpoint and the pairs the result reads are on disk
+        assert sorted(os.listdir(os.path.join(wh, name))) == ["ckpt", "landing", "pairs"]
+
+
+def test_scratch_of_one_query_survives_another(spark):
+    """Two queries that write similar layouts do not share files: a
+    result still collects after another query has rewritten its own
+    scratch."""
+    from a_share_data_pipeline_spark.plans.catalog import registry
+
+    first = registry()["source_partitioned_read"].fn(spark, SF)
+    registry()["layout_dpp_join"].fn(spark, SF)
+    assert first.collect()

@@ -469,47 +469,6 @@ def test_incdedup_absorb_retry_replaces_pairs_and_parts(spark, tmp_path):
     assert not os.path.exists(os.path.join(out_dir, "bid_1"))
 
 
-def test_incdedup_temp_root_holds_only_landing_ckpt_pairs(
-    spark, sf_smoke, tmp_path, monkeypatch
-):
-    """stream_incremental_dedup keeps its state in memory, so its temp
-    root holds only the landed input files, the stream checkpoint and
-    the pairs the result reads: no write-only copy of the docs or of
-    derived signatures."""
-    import tempfile
-
-    from a_share_data_pipeline_spark.plans.catalog import registry
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    registry()["stream_incremental_dedup"].fn(spark, sf_smoke).collect()
-    roots = list(tmp_path.glob("stream_incdedup_*"))
-    assert len(roots) == 1, roots
-    assert sorted(os.listdir(roots[0])) == ["ckpt", "landing", "pairs"]
-
-
-@pytest.mark.parametrize("name", ["stream_tumbling", "stream_stream_join"])
-def test_memory_sink_queries_remove_their_scratch(
-    spark, sf_smoke, tmp_path, monkeypatch, name
-):
-    """A memory-sink query's result rows live in driver memory, so
-    ``_run_to_table`` removes the temp root holding its landing files
-    and checkpoint before returning: three runs leave no ``stream_*``
-    dir behind, and each result still collects, the same rows every
-    time, after its root is gone."""
-    import tempfile
-
-    from a_share_data_pipeline_spark.plans.catalog import registry
-
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    results = []
-    for _ in range(3):
-        out = registry()[name].fn(spark, sf_smoke)
-        assert not list(tmp_path.glob("stream_*"))
-        results.append(sorted(map(tuple, out.collect())))
-    assert results[0], "fixture must produce rows"
-    assert results[1] == results[0] and results[2] == results[0]
-
-
 # width-scoped query -> whether its result is read on the clone
 _RESULT_ON_CLONE = {
     "graph_cc_incremental": True,
