@@ -2,7 +2,7 @@
 
 Near-dup pipelines end with "group the pairs into clusters, keep one
 canonical doc per cluster" — that grouping is connected components on
-the candidate-pair graph; entity resolution, DBSCAN's core-cell graph
+the candidate-pair graph; entity resolution, DBSCAN's core-point graph
 and the incremental co-purchase graph run the same operator. The
 component is the minimum reachable node id: every DuckDB oracle
 (recursive-CTE closure) and sweep.py's union-find replay rely on it.
@@ -11,9 +11,9 @@ flows), so this is a pure [GAP] capability.
 
 Shape — contract locally before any global round (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC 2014):
-- edges survive only when BOTH endpoints are in ``nodes``; the kept
-  edge set is pinned once and its size rides that pin (``observe``),
-  so sizing the next step costs no job of its own,
+- the operator takes only the (a, b) edges and labels every endpoint;
+  the edge set is pinned once and its size rides that pin
+  (``observe``), so sizing the next step costs no job of its own,
 - a NumPy union-find kernel runs inside ``mapInArrow`` and labels a
   whole partition's edge set in ONE task: ``np.unique`` maps ids to
   sorted indices (index order = Spark's id order; for string ids
@@ -31,9 +31,10 @@ Shape — contract locally before any global round (Kiveris et al.,
   join + min-aggregate, pinned so lineage stays flat) and stop when
   no label moves — the moved count rides each round's pin; there is
   no round cap,
-- nodes on no kept edge never enter the kernel (in a deduped corpus
-  nearly every doc is a singleton); they rejoin as their own
-  component in one anti-join at the end.
+- a node on no edge is the caller's to add, as its own component (in
+  a deduped corpus nearly every doc is one). With no edge the result
+  is a false filter the optimizer plans as an empty relation, so the
+  caller's join onto it folds away too.
 """
 
 from __future__ import annotations
@@ -62,26 +63,20 @@ _CHECKPOINT_EVERY = 8
 _KERNEL_EDGES = 1 << 22
 
 
-def connected_components(nodes: DataFrame, edges: DataFrame, id_col: str = "id") -> DataFrame:
-    """(id, component) for every node; component = min reachable node id.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """(id, component) for every endpoint of ``edges``; component = min
+    reachable id.
 
-    ``nodes``: one column `id_col` (isolated nodes keep their own id as
-    component). ``edges``: columns (a, b), undirected, any orientation,
-    duplicates allowed; an edge with an endpoint outside ``nodes`` is
-    DROPPED, so the output is keyed exactly by the ``nodes`` input and
-    connectivity never flows through an unknown node.
+    ``edges``: columns (a, b) of one id type, undirected, any
+    orientation, duplicates allowed. A node on no edge is not in the
+    output (see the module docstring for how callers add it).
     """
-    node = nodes.select(F.col(id_col).alias("node"))
-    id_type = node.schema["node"].dataType
-    kept, seen = pin(
-        edges.join(node.withColumnRenamed("node", "a"), "a", "left_semi")
-        .join(node.withColumnRenamed("node", "b"), "b", "left_semi")
-        .select(F.col("a").cast(id_type).alias("a"), F.col("b").cast(id_type).alias("b")),
-        edges=F.count(F.lit(1)),
-    )
+    pinned, seen = pin(edges.select("a", "b"), edges=F.count(F.lit(1)))
     parts = (seen["edges"] + _KERNEL_EDGES - 1) // _KERNEL_EDGES
-    if parts == 0:  # no kept edge: every node is its own component
-        return node.select(F.col("node").alias(id_col), F.col("node").alias("component"))
+    if parts == 0:
+        return pinned.select(F.col("a").alias("id"), F.col("b").alias("component")).where(
+            F.lit(False)
+        )
 
     # NESTED so cloudpickle ships it by value: a Python worker cannot
     # be assumed to import this package
@@ -119,16 +114,14 @@ def connected_components(nodes: DataFrame, edges: DataFrame, id_col: str = "id")
             [pa.array(ids, type=typ), pa.array(ids[lbl], type=typ)], names=["node", "lbl"]
         )
 
+    id_type = pinned.schema["a"].dataType
     schema = StructType([StructField("node", id_type), StructField("lbl", id_type)])
     if parts == 1:
-        labels = pin(kept.coalesce(1).mapInArrow(_union_find, schema))
+        labels = pin(pinned.coalesce(1).mapInArrow(_union_find, schema))
     else:
-        stars = kept.repartition(parts, "a").mapInArrow(_union_find, schema)
+        stars = pinned.repartition(parts, "a").mapInArrow(_union_find, schema)
         labels = _hash_min(pin(stars))
-    singletons = node.join(labels.select("node"), "node", "left_anti")
-    return labels.unionByName(singletons.select("node", F.col("node").alias("lbl"))).select(
-        F.col("node").alias(id_col), F.col("lbl").alias("component")
-    )
+    return labels.select(F.col("node").alias("id"), F.col("lbl").alias("component"))
 
 
 def _hash_min(stars: DataFrame) -> DataFrame:
@@ -188,11 +181,9 @@ def pagerank(
       and because ranks_i feeds ranks_{i+1} exactly once, lineage is
       a simple chain: no recompute fan-out, no per-round checkpoint,
       the whole unrolled iteration runs as ONE job with full stage
-      pipelining. (connected_components keeps per-round checkpoints
-      because its round count is data-dependent and its state is
-      multi-use; a fixed small iteration count does not need them.
-      For large ``iters`` the loop cuts lineage every
-      ``_CHECKPOINT_EVERY`` rounds — without the guard the unrolled
+      pipelining. (A fixed small iteration count needs no
+      per-round checkpoint. For large ``iters`` the loop cuts lineage
+      every ``_CHECKPOINT_EVERY`` rounds — without the guard the unrolled
       join tower's Catalyst analysis cost grows superlinearly with
       caller-supplied ``iters``; with it, plan depth is bounded while
       small-iters callers still pay zero checkpoints.)

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import dround
 from ..operators import dedup as D
-from ..session import clone_session, pin, scratch_dir, set_width, volume_width
+from ..session import pin, scratch_dir
 from ..sources import load_table
 from .catalog import register
 from .queries_market import _daily_close
@@ -172,8 +172,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMPUTE-bound (the count aggregate fans out per neighbor label),
     not scheduling-floor-bound like CC's label frames, so trimming
     width only gives up CPU parallelism — plus the clone's extra
-    eager count job. cc_incremental/pagerank keep their clones (their
-    A/Bs and the driver's record stand on the winning side)."""
+    eager count job. graph_pagerank keeps its clone (its A/B stands
+    on the winning side)."""
     from ..operators.graph import label_propagation
 
     labels = label_propagation(purchase_iedges(spark, sf_dir), edges_dedup=False)
@@ -4411,18 +4411,12 @@ def cc_incremental_labels(
     varies the cutoff (including empty-base and empty-delta splits)
     and asserts label equality with a one-shot full CC each time,
     pinning the min-label composition argument at EVERY split, not one
-    (VERDICT r6 item 8).
-
-    The per-round CC frames are pair-graph-sized, so the pipeline runs
-    on a clone sized by ``session.volume_width`` from the edge
-    count measured after the one full-width ingest shuffle (measured
-    A/B in SCALE.md). The result is read on the clone."""
+    (VERDICT r6 item 8). Runs on the caller's session."""
     from ..operators.graph import connected_components
 
-    work = clone_session(spark)
-    o = load_table(work, sf_dir, "orders")
-    li = load_table(work, sf_dir, "lineitem")
-    edges_all, seen = pin(
+    o = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+    edges_all = pin(
         o.join(li, o.o_orderkey == li.l_orderkey)
         .select(
             (F.lit(2) * F.col("o_custkey")).alias("a"),
@@ -4432,22 +4426,13 @@ def cc_incremental_labels(
             ),
         )
         .groupBy("a", "b")
-        .agg(F.max(F.col("is_base")).alias("is_base")),  # an edge seen in
+        .agg(F.max(F.col("is_base")).alias("is_base"))  # an edge seen in
         # both eras is a base edge — the delta holds strictly NEW pairs;
         # consumers: base CC, delta remap, node frame
-        rows=F.count(F.lit(1)),
     )
-    set_width(work, volume_width(work, seen["rows"]))
     base_e = edges_all.filter(F.col("is_base")).select("a", "b")
     delta_e = edges_all.filter(~F.col("is_base")).select("a", "b")
-    base_nodes = (
-        base_e.select(F.col("a").alias("id"))
-        .unionByName(base_e.select(F.col("b").alias("id")))
-        .distinct()
-    )
-    # (id, component); consumers: two endpoint remaps + final remap
-    base_cc = pin(connected_components(base_nodes, base_e))
-    lab = base_cc.select(F.col("id"), F.col("component").alias("lab"))
+    lab = connected_components(base_e).select("id", F.col("component").alias("lab"))
     # contract delta edges to base-label pairs; unseen endpoints keep
     # their own id as label
     da = delta_e.join(lab.withColumnRenamed("id", "a"), "a", "left").select(
@@ -4457,13 +4442,8 @@ def cc_incremental_labels(
         "la", F.coalesce(F.col("lab"), F.col("b")).alias("lb")
     )
     contracted = dl.filter(F.col("la") != F.col("lb")).distinct()
-    c_nodes = (
-        contracted.select(F.col("la").alias("id"))
-        .unionByName(contracted.select(F.col("lb").alias("id")))
-        .distinct()
-    )
     small_cc = connected_components(
-        c_nodes, contracted.select(F.col("la").alias("a"), F.col("lb").alias("b"))
+        contracted.select(F.col("la").alias("a"), F.col("lb").alias("b"))
     ).select(F.col("id").alias("lab"), F.col("component").alias("final_lab"))
     # final labels over ALL nodes: base label (or own id), then the
     # contracted remap where one applies

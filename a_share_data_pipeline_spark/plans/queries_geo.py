@@ -637,13 +637,6 @@ _DB_EPS = _CELL  # eps = one cell edge, so the 3x3 neighborhood is complete
 _DB_EPS2 = _DB_EPS * _DB_EPS
 _DB_MINPTS = 3  # core <=> at least (minPts - 1) eps-neighbors besides self
 _DB_TOP = 20
-# contraction subcell edge (round 14): the largest integer s with
-# 2·s² ≤ eps², so any two points in one subcell are within eps —
-# isqrt keeps the derivation integer-exact from eps itself
-import math as _math
-
-_DB_SUB = _math.isqrt(_DB_EPS2 // 2)
-assert 2 * _DB_SUB * _DB_SUB <= _DB_EPS2
 
 _DBSCAN_SQL = f"""
 WITH RECURSIVE {_POINTS_CTE},
@@ -710,8 +703,8 @@ ORDER BY s.n_total DESC, s.cluster LIMIT {_DB_TOP}
         "eps = the cell edge, so the neighborhood is provably "
         "complete), core points are a count filter (>= minPts-1 "
         "neighbors), clusters are connected_components over the "
-        "core-core eps-graph (min-label loop, per-round "
-        "localCheckpoint), and border points attach "
+        "core-core eps-graph (one union-find task; a core point with "
+        "no core neighbor is its own cluster), and border points attach "
         "DETERMINISTICALLY to the minimum cluster label among their "
         "core neighbors (classic DBSCAN is visit-order-dependent "
         "here — the min rule makes both engines agree). Noise = "
@@ -719,8 +712,8 @@ ORDER BY s.n_total DESC, s.cluster LIMIT {_DB_TOP}
         "a recursive reachability CTE (the er_resolve precedent). "
         "Output bounded: top-{top} clusters + global "
         "(n_clusters, n_noise). At scale: candidate stage is the "
-        "geo_grid_knn plan, CC rounds are delta-sized, everything "
-        "else is one count/one join per step"
+        "geo_grid_knn plan, CC is one task over the core-core edges, "
+        "everything else is one count/one join per step"
     ).format(top=_DB_TOP),
 )
 def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -736,57 +729,21 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = neigh.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     core = cnt.filter(F.col("n") >= _DB_MINPTS - 1).select("id")
     # a<b keeps ONE row per unordered core pair: connectivity needs
-    # each pair once (the contraction below symmetrizes what's left)
+    # each pair once
     cedge = (
         neigh.filter(F.col("id") < F.col("neighbor"))
-        .join(core.withColumnRenamed("id", "id"), "id")
+        .join(core, "id")
         .join(core.withColumnRenamed("id", "neighbor"), "neighbor")
         .select(F.col("id").alias("a"), F.col("neighbor").alias("b"))
     )
-    # Round-14 subcell contraction (guide §1.2/§2.4 — fix the
-    # distributed algorithm; VERDICT r13 item 4; A/B + stage receipts
-    # in plans/r14/): DBSCAN-specific geometry the CC operator cannot
-    # see. Any two CORE points in the same subcell of edge
-    # floor(eps/√2) are within eps of each other (max subcell
-    # distance² = 2·_DB_SUB² ≤ eps², checked below), i.e. directly
-    # density-reachable — one cluster. So each subcell's core points
-    # CONTRACT to their minimum id before the iterative CC: the loop
-    # runs over ≤ (plane/sub)² ≈ 800 grid-bounded representative
-    # nodes and their deduped adjacency (corpus-size-INDEPENDENT — an
-    # asymptotic win: the old loop re-shuffled the ~1.7M-row sym edge
-    # frame every round at sf0.1, and that frame grows quadratically
-    # with density). Exactness: the component partition is unchanged
-    # (within-subcell merges are real eps-edges by the geometry;
-    # cross-subcell rep edges come 1:1 from real core-core eps-pairs)
-    # and labels are unchanged (a component's min core id IS one of
-    # its subcell minima, so min-over-reps = min-over-members;
-    # border/count/noise logic untouched). Exhaustive-reachability
-    # oracle re-proved exact at 3 SFs post-change.
-    core_pts = cells.join(core, "id", "left_semi").select(
-        "id",
-        (F.col("x") / _DB_SUB).cast("bigint").alias("sx"),
-        (F.col("y") / _DB_SUB).cast("bigint").alias("sy"),
-    )
-    # one row per populated subcell — bounded by the FIXED grid
-    # (≤ ceil(plane/sub)² = 29² at any SF), hence always broadcastable
-    rep = core_pts.groupBy("sx", "sy").agg(F.min("id").alias("rep"))
-    core_rep = core_pts.join(F.broadcast(rep), ["sx", "sy"]).select("id", "rep")
-    contracted = (
-        cedge.join(core_rep.withColumnRenamed("id", "a"), "a")
-        .select(F.col("rep").alias("ra"), "b")
-        .join(core_rep.withColumnRenamed("id", "b"), "b")
-        .select(F.col("ra").alias("a"), F.col("rep").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    comp_rep = connected_components(rep.select(F.col("rep").alias("id")), contracted)
     # eager pin: comp feeds border + assigned + summary (and summary
     # feeds glob + the final join) — without it every consumer re-runs
-    # the whole cnt/core/contraction chain (plan capture showed the
-    # subtree duplicated; the old shape's CC labels were pinned too)
+    # the whole cnt/core/CC chain
     comp = pin(
-        core_rep.join(F.broadcast(comp_rep.withColumnRenamed("id", "rep")), "rep")
-        .select(F.col("id").alias("node"), F.col("component").alias("cluster"))
+        core.join(connected_components(cedge), "id", "left").select(
+            F.col("id").alias("node"),
+            F.coalesce("component", "id").alias("cluster"),
+        )
     )
     border = (
         neigh.join(core, "id", "left_anti")

@@ -1029,14 +1029,6 @@ def components_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     place; the SQL twins share _COMPONENTS_CTE the same way."""
     from ..operators.graph import connected_components
 
-    # Measured-width clone deliberately NOT applied (round 13): the
-    # clone form needs an extra eager pin + count of the pair frame to
-    # size the CC-round width, and the applied-form NEW/OLD A/B read
-    # it net-negative across this frame's THREE consumers (NEW/OLD
-    # mins: dedup_components 3.18/3.29 — a small win — but
-    # dedup_keep_canonical 4.27/3.56, which recomputes this frame
-    # wholesale, pays the pin+count overhead without enough CC-round
-    # savings to cover it). OPTIMIZATION_r13.md §6.
     docs = load_table(spark, sf_dir, "documents")
     # lazy localCheckpoint: see dedup_components' measured rationale
     shingled = D.exploded_shingles(docs).localCheckpoint(eager=False)
@@ -1045,8 +1037,15 @@ def components_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("jaccard") >= 0.05)
         .select("a", "b")
     )
-    return connected_components(
-        docs.select(F.col("doc_id").alias("id")), pairs, id_col="id"
+    # a doc on no pair is its own component. A union, not a left join:
+    # Catalyst sizes an outer join as the product of its inputs, so
+    # sample_negatives' two joins onto this frame would plan as
+    # sort-merge and AQE would run both shuffle stages (two jobs)
+    # before switching to broadcast; a union is sized as the sum.
+    comp = connected_components(pairs)
+    ids = docs.select(F.col("doc_id").alias("id"))
+    return comp.unionByName(
+        ids.join(comp, "id", "left_anti").select("id", F.col("id").alias("component"))
     )
 
 

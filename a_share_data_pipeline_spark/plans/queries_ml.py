@@ -227,7 +227,7 @@ def _pca_gram_marg(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     ),
 )
 def feature_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round-14 width-clone A/B (the cc_incremental device): a d-derived
+    # round-14 width-clone A/B (the graph_pagerank device): a d-derived
     # trimmed-width clone for the post-gram iteration measured PARITY
     # in a quiet-window fresh-subprocess interleaved A/B (clone mins
     # 2.611/2.520 vs plain 2.553/2.781 — split rounds, inside noise;

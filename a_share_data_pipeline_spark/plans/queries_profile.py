@@ -1170,31 +1170,22 @@ FROM comp c JOIN sizes s ON s.component = c.component
         "pairs (join_fuzzy_blocked's equi-join blocking + in-block "
         "levenshtein) become an undirected match graph, "
         "connected_components assigns every matched record its "
-        "cluster (min-label propagation — the component id IS the "
+        "cluster (the min reachable key — the component id IS the "
         "canonical survivor id, so no extra argmin pass), and each "
         "record emerges with (canonical_key, n_members) — the merge "
-        "map a downstream MERGE/golden-record step applies. Unmatched "
-        "records never enter the loop (pair-graph-restricted CC); the "
-        "oracle replays the identical pipeline with a recursive "
+        "map a downstream MERGE/golden-record step applies. Only "
+        "matched records are labeled (CC over the pair edges alone); "
+        "the oracle replays the identical pipeline with a recursive "
         "reachability CTE"
     ),
 )
 def er_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import connected_components
 
-    # eager checkpoint: nodes + the CC edge feed both consume the
-    # levenshtein block join — materialize it once (same discipline as
-    # the triangle-family queries)
-    pairs = pin(
+    comp = connected_components(
         join_fuzzy_blocked(spark, sf_dir)
         .select(F.col("key_a").alias("a"), F.col("key_b").alias("b"))
     )
-    nodes = (
-        pairs.select(F.col("a").alias("id"))
-        .unionByName(pairs.select(F.col("b").alias("id")))
-        .distinct()
-    )
-    comp = connected_components(nodes, pairs, id_col="id")
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))
     return comp.join(sizes, "component").select(
         F.col("id").alias("p_partkey"),

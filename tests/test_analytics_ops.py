@@ -1916,19 +1916,29 @@ def test_lttb_keeps_one_point_per_interior_bucket(spark):
             assert got[b] == best[1], (et, b)
 
 
-def test_cc_incremental_equals_full_recompute(spark):
+def test_cc_incremental_equals_full_recompute(spark, monkeypatch):
     """The incremental path (base CC + contracted delta CC + remap)
     must equal a one-shot CC over the full edge set, label for label
-    (same int64 bipartite encoding + decode as the query)."""
+    (same int64 bipartite encoding + decode as the query). The query
+    runs on the caller's session: it makes no clone."""
+    from pyspark.sql import SparkSession
+
     from a_share_data_pipeline_spark.operators.graph import connected_components
     from a_share_data_pipeline_spark.plans.catalog import registry
     from a_share_data_pipeline_spark.sources import load_table
 
+    clones = []
+    new_session = SparkSession.newSession
+
+    def recording_new_session(session):
+        clones.append(new_session(session))
+        return clones[-1]
+
+    monkeypatch.setattr(SparkSession, "newSession", recording_new_session)
     sf = "/root/testdata/sf0.001"
-    inc = {
-        (r.node, r.component)
-        for r in registry()["graph_cc_incremental"].fn(spark, sf).collect()
-    }
+    out = registry()["graph_cc_incremental"].fn(spark, sf)
+    assert out.sparkSession is spark and not clones
+    inc = {(r.node, r.component) for r in out.collect()}
     o = load_table(spark, sf, "orders")
     li = load_table(spark, sf, "lineitem")
     edges = (
@@ -1939,18 +1949,13 @@ def test_cc_incremental_equals_full_recompute(spark):
         )
         .distinct()
     )
-    nodes = (
-        edges.select(F.col("a").alias("id"))
-        .unionByName(edges.select(F.col("b").alias("id")))
-        .distinct()
-    )
 
     def dec(x):
         return ("c" if x % 2 == 0 else "s") + str(x // 2)
 
     full = {
         (dec(r.id), dec(r.component))
-        for r in connected_components(nodes, edges).collect()
+        for r in connected_components(edges).collect()
     }
     assert inc == full and inc
 
@@ -1981,14 +1986,9 @@ def test_cc_incremental_equals_full_recompute_string_ids(spark):
         )
         .distinct()
     )
-    nodes = (
-        edges.select(F.col("a").alias("id"))
-        .unionByName(edges.select(F.col("b").alias("id")))
-        .distinct()
-    )
     full = {
         (r.id, r.component)
-        for r in connected_components(nodes, edges).collect()
+        for r in connected_components(edges).collect()
     }
     assert inc == full and inc
 
@@ -2057,18 +2057,13 @@ def test_cc_incremental_equals_full_at_any_cutoff(spark, cutoff):
         )
         .distinct()
     )
-    nodes = (
-        edges.select(F.col("a").alias("id"))
-        .unionByName(edges.select(F.col("b").alias("id")))
-        .distinct()
-    )
 
     def dec(x):
         return ("c" if x % 2 == 0 else "s") + str(x // 2)
 
     full = {
         (dec(r.id), dec(r.component))
-        for r in connected_components(nodes, edges).collect()
+        for r in connected_components(edges).collect()
     }
     assert inc == full and inc
 
@@ -3248,15 +3243,13 @@ def test_dbscan_matches_python_replay(spark):
     assert n_clusters > 1 and n_noise > 0  # the fixture is non-degenerate
 
 
-def test_dbscan_subcell_contraction_matches_plain_cc(spark):
-    """Round-14 subcell contraction pin, DENSE regime: at sf0.01 the
-    plane is one multi-subcell percolation component (every point
-    core), which is exactly the case the contraction rewrites — so
-    replay it in Python with an UNCONTRACTED union-find over the raw
-    core-core eps-pairs and assert the query's clusters/labels are
-    identical. sf0.001 (sparse, real border+noise) is covered by
-    test_dbscan_matches_python_replay above; together the two pins
-    bracket both regimes of the geometry argument (2·sub² ≤ eps²)."""
+def test_dbscan_dense_matches_plain_union_find(spark):
+    """DENSE regime: at sf0.01 the plane is one large percolation
+    component (every point core), so replay it in Python with a
+    union-find over the raw core-core eps-pairs and assert the query's
+    clusters/labels are identical. sf0.001 (sparse, real border+noise)
+    is covered by test_dbscan_matches_python_replay above; together
+    the two pins bracket both regimes."""
     import duckdb
     import hashlib
 
@@ -3265,12 +3258,9 @@ def test_dbscan_subcell_contraction_matches_plain_cc(spark):
         _CELL,
         _DB_EPS2,
         _DB_MINPTS,
-        _DB_SUB,
         _DB_TOP,
         _PLANE,
     )
-
-    assert 2 * _DB_SUB * _DB_SUB <= _DB_EPS2  # the geometry the proof needs
 
     sf = "/root/testdata/sf0.01"
     keys = [
@@ -3323,12 +3313,6 @@ def test_dbscan_subcell_contraction_matches_plain_cc(spark):
     roots = set(comp_root.values())
     lab = {r: min(k for k, rr in comp_root.items() if rr == r) for r in roots}
     cluster = {k: lab[r] for k, r in comp_root.items()}
-    # the dense fixture must actually exercise the contraction: a
-    # component spanning many subcells
-    n_subcells = len(
-        {(x // _DB_SUB, y // _DB_SUB) for k, (x, y) in pts.items() if k in core}
-    )
-    assert n_subcells > 10
     border = {}
     for k in keys:
         if k in core:

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from a_share_data_pipeline_spark.operators import graph
 from a_share_data_pipeline_spark.operators.graph import connected_components
@@ -36,12 +37,19 @@ def _union_find(n_nodes, edges):
     return {v: min(vs) for r, vs in comp.items() for v in vs}
 
 
-def _run(spark, n_nodes, edges):
-    nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
+def _edges(spark, edges):
     e = spark.createDataFrame(edges or [(0, 0)], "a long, b long")
-    if not edges:
-        e = e.limit(0)
-    out = connected_components(nodes, e, id_col="id")
+    return e if edges else e.limit(0)
+
+
+def _run(spark, n_nodes, edges):
+    """Labels of nodes 0..n_nodes-1: a node on no edge is its own
+    component, filled by a left join and coalesce as geo_dbscan_grid
+    fills it."""
+    nodes = spark.createDataFrame([(i,) for i in range(n_nodes)], "id long")
+    out = nodes.join(connected_components(_edges(spark, edges)), "id", "left").select(
+        "id", F.coalesce("component", "id").alias("component")
+    )
     return {r.id: r.component for r in out.collect()}
 
 
@@ -114,16 +122,31 @@ def test_multi_partition_matches_union_find(spark, monkeypatch):
         assert _run(spark, 60, edges) == _union_find(60, edges)
     edges = _chain(100)
     assert _run(spark, 100, edges) == _union_find(100, edges)
-    # stray endpoints 98/99 would bridge components if their edges leaked
-    edges = _random_edges(3)
-    strays = [(0, 99), (99, 59), (5, 98), (98, 40)]
-    assert _run(spark, 60, edges + strays) == _union_find(60, edges)
-    assert len(partitions) == 4 and min(partitions) >= 3
+    assert len(partitions) == 3 and min(partitions) >= 3
 
 
 def test_no_edges_all_singletons(spark):
-    got = _run(spark, 5, [])
-    assert got == {i: i for i in range(5)}
+    """No edge: the result is empty, and planned as empty, so the
+    caller's left join that fills singletons folds away (no Join)."""
+    assert connected_components(_edges(spark, [])).count() == 0
+    nodes = spark.createDataFrame([(i,) for i in range(5)], "id long")
+    filled = nodes.join(connected_components(_edges(spark, [])), "id", "left")
+    assert "Join" not in filled._jdf.queryExecution().optimizedPlan().toString()
+    assert _run(spark, 5, []) == {i: i for i in range(5)}
+
+
+def test_collect_runs_at_most_three_jobs(spark):
+    """A one-task graph costs the edge pin, the kernel pin and the
+    collect: at most 3 jobs, counted under a job group."""
+    sc = spark.sparkContext
+    edges = _edges(spark, _chain(50))
+    sc.setJobGroup("cc-jobs", "connected_components job count")
+    try:
+        rows = connected_components(edges).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(rows) == 50
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-jobs")) <= 3
 
 
 def test_kmeans_deterministic_and_total(spark):
@@ -138,17 +161,62 @@ def test_kmeans_deterministic_and_total(spark):
     assert all(rd >= 0 for _, rd in a1.values())
 
 
-def test_stray_endpoints_drop_edges(spark):
-    """endpoints ⊆ nodes contract: an edge touching a node NOT in the
-    nodes frame disappears entirely — its valid endpoint stays a
-    singleton, connectivity never flows through the stray node, and
-    the output is keyed exactly by the nodes input."""
-    nodes = spark.createDataFrame([(i,) for i in range(5)], "id long")
-    # (0,1) valid; (2,99) stray endpoint; (3,98),(98,4) would connect
-    # 3-4 through stray 98 if the guard leaked
-    e = spark.createDataFrame(
-        [(0, 1), (2, 99), (3, 98), (98, 4)], "a long, b long"
+_RETRY_SCRIPT = """
+import json, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from a_share_data_pipeline_spark.operators import graph
+
+marks, edges = sys.argv[1], json.loads(sys.argv[2])
+spark = SparkSession.builder.master("local[4,2]").config("spark.ui.enabled", "false").getOrCreate()
+e = spark.createDataFrame(edges, "a long, b long")
+frame = type(e)  # the session's DataFrame implementation
+real = frame.mapInArrow
+
+
+def flaky(self, fn, schema, *a, **k):
+    def fail_first_attempt(it):
+        ctx = TaskContext.get()
+        if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            with open(marks, "a") as f:
+                f.write("failed\\n")
+            raise RuntimeError("injected failure of attempt 0")
+        yield from fn(it)
+
+    return real(self, fail_first_attempt, schema, *a, **k)
+
+
+frame.mapInArrow = flaky
+out = {}
+for budget in (graph._KERNEL_EDGES, 7):  # one kernel task, then >= 3
+    graph._KERNEL_EDGES = budget
+    out[budget] = sorted([r.id, r.component] for r in graph.connected_components(e).collect())
+print(json.dumps(list(out.values())))
+"""
+
+
+def test_kernel_retry_keeps_labels(tmp_path):
+    """On local[4,2] a task may fail once: attempt 0 of the kernel's
+    partition 0 raises, the retry relabels it, and the labels still
+    equal a union-find replay, on the one-task and the multi-partition
+    path alike."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    edges = _random_edges(3) + _chain(30)
+    marks = tmp_path / "marks"
+    root = str(Path(__file__).resolve().parents[1])
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join([root, os.environ.get("PYTHONPATH", "")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, str(marks), json.dumps(edges)],
+        capture_output=True, text=True, env=env, timeout=300,
     )
-    out = connected_components(nodes, e, id_col="id")
-    got = {r.id: r.component for r in out.collect()}
-    assert got == {0: 0, 1: 0, 2: 2, 3: 3, 4: 4}
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    want = _union_find(60, edges)
+    seen = {a for e in edges for a in e}
+    golden = sorted([v, want[v]] for v in seen)
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == [golden, golden]
+    assert marks.read_text().count("failed") == 2

@@ -471,7 +471,6 @@ def test_incdedup_absorb_retry_replaces_pairs_and_parts(spark, tmp_path):
 
 # width-scoped query -> whether its result is read on the clone
 _RESULT_ON_CLONE = {
-    "graph_cc_incremental": True,
     "graph_pagerank": True,
     "stream_dedup": True,
     "stream_incremental_dedup": False,
@@ -483,7 +482,7 @@ _RESULT_ON_CLONE = {
 def test_clone_width_leaves_caller_width(spark, sf_smoke, monkeypatch, name):
     """Each width-scoped query runs in exactly one clone at width 8 —
     fixed, or the volume rule's floor for the measured-width graph
-    queries at smoke scale, so the width derives from the data, not
+    query at smoke scale, so the width derives from the data, not
     the CPU count — while the caller keeps its distinctive width 12,
     also mid-stream (spied via D.verify_pairs, which runs inside every
     stream_incremental_dedup micro-batch). The result comes back on
