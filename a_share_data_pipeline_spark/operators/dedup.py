@@ -19,6 +19,7 @@ Scale design:
 from __future__ import annotations
 
 import logging
+import sys
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -95,6 +96,26 @@ def minhash_signatures(
     return shingled.groupBy(id_col).agg(*aggs)
 
 
+def _drop_hot_buckets(df: DataFrame, size: "F.Column", max_bucket: int, unit: str) -> DataFrame:
+    """The hot-bucket guard (standard stop-shingle filter): ``df``'s
+    rows whose bucket size ``size`` is at or under ``max_bucket``.
+
+    ``df`` is pinned once, and the count of rows over the cap is
+    observed on that pin's own job, so the guard reads its input once
+    and runs no second job. A non-zero count is logged as ``unit`` (what
+    one row of ``df`` is) under the caller's name — never silent."""
+    df, seen = pin(df, hot=F.count(F.when(size > max_bucket, 1)))
+    if seen["hot"]:
+        _LOG.warning(
+            "%s: dropping %d %s with > %d members (stop-shingle filter)",
+            sys._getframe(1).f_code.co_name,
+            seen["hot"],
+            unit,
+            max_bucket,
+        )
+    return df.filter(size <= max_bucket)
+
+
 def _bucket_pairs(
     bucketed: DataFrame, id_col: str, max_bucket: int | None = None
 ) -> DataFrame:
@@ -105,28 +126,20 @@ def _bucket_pairs(
     in the (partially aggregated) groupBy instead of surviving into a
     join probe side.
 
-    ``max_bucket`` is the hot-bucket guard (standard stop-shingle
-    filter): a bucket shared by n ids expands to n(n-1)/2 pairs INSIDE
-    one aggregate row, so a single stop-shingle shared by 1M docs would
-    materialize ~5·10¹¹ pairs in one task. Buckets above the cap are
-    dropped BEFORE expansion and the drop is counted and logged — never
-    silent. The count costs one extra (cheap, partially-aggregated)
-    job; pass None to skip both the guard and the job."""
+    ``max_bucket`` is the hot-bucket guard: a bucket shared by n ids
+    expands to n(n-1)/2 pairs INSIDE one aggregate row, so a single
+    stop-shingle shared by 1M docs would materialize ~5·10¹¹ pairs in
+    one task. The grouped buckets are pinned by
+    :func:`_drop_hot_buckets`, which counts and logs the buckets over
+    the cap on the pin's own job and drops them BEFORE expansion; the
+    expansion then reads the pin. None skips the guard and its pin."""
     grouped = (
         bucketed.groupBy("bucket")
         .agg(F.collect_list(id_col).alias("ids"))
         .filter(F.size("ids") > 1)
     )
     if max_bucket is not None:
-        n_hot = grouped.filter(F.size("ids") > max_bucket).count()
-        if n_hot:
-            _LOG.warning(
-                "_bucket_pairs: dropping %d hot bucket(s) with > %d members "
-                "before pair expansion (stop-shingle filter)",
-                n_hot,
-                max_bucket,
-            )
-        grouped = grouped.filter(F.size("ids") <= max_bucket)
+        grouped = _drop_hot_buckets(grouped, F.size("ids"), max_bucket, "hot bucket(s)")
     return (
         grouped
         .select(
@@ -191,32 +204,22 @@ def lsh_incremental_candidates(
     when the corpus carries mass-duplicated boilerplate — the thing
     dedup targets — and here the pairs form through a bucket JOIN
     rather than an array expansion, so the guard is a pre-join
-    bucket-size filter. The touched rows are sized with a window count
-    and pinned in that one pass, the hot-row count observed on the same
-    pin; the join then reads only buckets at or under the cap. Only the
-    corpus side is filtered: ``new_bands`` is a subset of ``bands``, so
-    a new doc in a hot bucket finds no corpus row to pair with through
-    it. The drop is logged — never silent — and only then is the pin
-    read again to count the distinct hot buckets for the message."""
+    bucket-size filter: the touched rows are sized with a window count
+    and go through :func:`_drop_hot_buckets` (one pinned pass, the
+    dropped rows counted and logged on the pin's job), and the join
+    reads only buckets at or under the cap. Only the corpus side is
+    filtered: ``new_bands`` is a subset of ``bands``, so a new doc in a
+    hot bucket finds no corpus row to pair with through it."""
     # no .distinct(): a broadcast left-semi build ignores duplicate keys
     touched = new_bands.select("bucket")
     bands = bands.join(F.broadcast(touched), "bucket", "left_semi")
     if max_bucket is not None:
-        hot = F.col("__bn") > max_bucket
-        bands, seen = pin(
+        bands = _drop_hot_buckets(
             bands.withColumn("__bn", F.count(F.lit(1)).over(Window.partitionBy("bucket"))),
-            hot_rows=F.count(F.when(hot, 1)),
-        )
-        if seen["hot_rows"]:
-            _LOG.warning(
-                "lsh_incremental_candidates: dropping %d hot band bucket(s) "
-                "(touched by this batch) with > %d members before the bucket "
-                "join (stop-shingle filter; untouched hot buckets form no "
-                "pairs and are skipped without counting)",
-                bands.filter(hot).select("bucket").distinct().count(),
-                max_bucket,
-            )
-        bands = bands.filter(~hot).drop("__bn")
+            F.col("__bn"),
+            max_bucket,
+            "row(s) of hot band buckets touched by this batch",
+        ).drop("__bn")
     n = new_bands.select(F.col(id_col).alias("__n_id"), "bucket")
     pairs = (
         bands.join(F.broadcast(n), "bucket")

@@ -45,595 +45,62 @@ _REGISTRY: dict[str, Query] = {}
 # stream≡batch in tests/test_streaming.py against the driver-verified
 # events_* batch queries).
 #
-# Round-3 rotation (VERDICT r2 item 2): four redundant witnesses moved
-# to the extended tier — join_left_outer (⊂ canonical_assembly +
-# join_full_outer), window_lag_lead (⊂ window_rank/window_running +
-# local window tests), sql_not_in (⊂ sql_in_subquery + the LeftAnti
-# plan gate), scalar_array (⊂ scalar_string + HOF local tests) — so
-# the round-2 operator families gain driver-green rows: curation
-# (curation_pipeline composes repetition+gates+decontaminate+packing
-# in ONE verified query), incremental-corpus dedup (dedup_incremental),
-# PQ ANN (sim_ann_pq), and deterministic sampling (sample_stratified).
-# Every retained name is unchanged — CORRECTNESS keys are the driver's
-# contract and renames reset verification history.
-#
-# Round-3 additions rotated in (same policy as round 2: new operator
-# families get driver rows by retiring subsumed witnesses):
-# window_running (running sum + MA ⊂ bucketed_ma's rows-frame MA +
-# window_rank's exchange) → dedup_keep_canonical (the dedup end
-# product — cluster → longest-survivor selection — composing the
-# driver-green dedup_components); join_top_orders (3-table broadcast
-# join + agg + top-k ⊂ join_regional_revenue's 6-table join cycle +
-# sort_topk's TakeOrdered) → curation_pii_redact (PII scrubbing, the
-# curation step round 2's pipeline lacked).
-#
-# Round-4 rotation (VERDICT r3 item 5): the last never-driver-verified
-# operator families enter the window — layout_zorder (Morton-key
-# multi-dim layout; bucketed_ma witnesses bucketing, not z-order),
-# source_jsonl (corpus-interchange ingest), sample_mixture
-# (rate-table mixture sampling; sample_stratified witnesses only the
-# hash-threshold family). Retired to extended (redundant witnesses,
-# all with driver-green r1-r3 history): scalar_datetime (⊂
-# incremental_delta's yyyyMMdd parse + canonical_assembly's date
-# casts), agg_pivot (unpivot/Expand is plan-gated; the grouping-set
-# family is witnessed by agg_grouping_sets), dedup_simhash (the
-# fingerprint family is witnessed by text_metrics' md5 fingerprint +
-# the minhash rows). Every retained name is unchanged.
-#
-# Round-5 rotation (VERDICT r4 item 2): the strongest never-driver-
-# verified round-4 families enter the window — dedup_semantic (SemDeDup
-# cluster-scoped dedup), curation_line_dedup (C4 boilerplate removal),
-# dedup_substring (rolling-window span-dedup stats), stream_stream_join
-# (watermarked key+time-range join — the first STREAMING query in the
-# window; its AvailableNow cycle is deterministic so it carries a full
-# static-range-join oracle), sim_ann_ivfpq (cell-restricted ADC — the
-# billion-vector ANN shape). Retired to extended (redundant witnesses,
-# all driver-green r1-r4): udf_table_function (UDTF lane ⊂ the three
-# other UDF witnesses), merge_idempotent (⊂ incremental_delta's MERGE
-# + rollup_incremental), sql_scalar_subquery (⊂ sql_in_subquery + the
-# decorrelation plan gates), join_salted (manual salting ⊂ AQE skew
-# path + join_regional_revenue), sim_ann_pq (its write-time PQ encode
-# + broadcast-ADC path is composed verbatim INSIDE sim_ann_ivfpq).
-# agg_approx_distinct stays — it is the only sketch witness. Every
-# retained name is unchanged. Still-extended round-4 families
-# (rotation candidates for r6): stream_enrich_join, layout_compact,
-# curation_chunk_docs, sample_group_fixed, text_vocab_topk,
-# dedup_substring_removal (round-5 addition), plus the round-5
-# additions text_lm_quality (unigram-LM quality scoring),
-# sim_random_projection (JL dim-reduce ANN prefix), sim_ann_recall
-# (approximate-vs-exact measurement harness), profile_expectations
-# (Deequ-shape single-scan constraint suite), scd2_dim_history
-# (change feed → validity intervals), events_funnel (staged
-# conversion), source_orc (second columnar interchange format),
-# events_retention (cohort matrix), dedup_minhash_estimate
-# (estimator-error measurement harness), split_leakage_safe
-# (cluster-coherent train/holdout split), sim_ann_index_scan (stored
-# partition-pruned IVF index), stream_incremental_dedup (continuous-
-# ingestion dedup, O(batch) per micro-batch), cdc_apply (change batch
-# with deletes onto a snapshot), text_bpe_merges (tokenizer-training
-# pair statistics), multimodal_resize (fixed-shape crop-or-pad),
-# join_interval_overlap (bucketized interval join),
-# curation_relative_quality (percentile-relative gate),
-# profile_observed_metrics (Observation-API piggyback metrics),
-# stream_cdc_apply (change stream → versioned snapshot), and the
-# round-5 second-wave additions: join_bloom_prune (Bloom-pruned
-# semi-join, O(m)-bounded build collect), text_heavy_hitters
-# (oracle-reproducible count-min sketch), agg_sketch_merge
-# (re-aggregatable HLL shard sketches), shuffle_deterministic
-# (reproducible global training order), text_bm25 (ranked retrieval),
-# table_diff (row-hash snapshot diff), events_anomaly (3-sigma
-# flags), source_schema_evolution (mergeSchema read),
-# text_compression_ratio (zlib quality signal, Arrow lane),
-# events_ohlc + stream_ohlc (kline bar resample, batch + live
-# streaming twins), window_rolling_corr (frame-window corr),
-# graph_pagerank (second iterative-graph family), text_bpe_encode
-# (tokenizer apply via chained codegen replaces); and the third-wave
-# Spark-4 SQL-surface trio: sql_recursive_cte (WITH RECURSIVE
-# UnionLoop series generation), sql_lateral_topk (correlated
-# LATERAL-with-LIMIT decorrelation), json_variant (parse-once VARIANT
-# typed field access), plus text_winnow_fingerprint (MOSS winnowing,
-# map-only array-HOF local-minimum selection), dedup_winnow_pairs
-# (shared-fingerprint posting-list candidates), profile_skew_report
-# (pre-join skew diagnostic: per-key percentiles + heaviest key), and
-# events_ema (normalized truncated EMA, the kline smoothing
-# indicator), events_bollinger (7-day MA ± 2σ volatility bands),
-# events_rsi (Cutler's SMA variant), source_csv (the reference's
-# native sink format, round-tripped with a text-derived checksum),
-# and scalar_map (the MapType F7 lane: typed from_json map +
-# transform_values/map_filter lambdas), plus events_macd (dual-EMA
-# DIF/DEA/histogram, two chained Window stages) and events_kdj
-# (stochastic oscillator, three stacked Window stages) completing the
-# kline-indicator family, agg_quantile_sketch (shard-mergeable
-# histogram quantiles — the quantile sibling of agg_sketch_merge),
-# and sample_negatives (contrastive negative pairs with the near-dup
-# component false-negative guard, composing shuffle_deterministic's
-# global index and dedup_components' labels), profile_k_anonymity
-# (k-anonymity / l-diversity privacy risk profile), and join_pit_scd2
-# (point-in-time temporal join consuming scd2_dim_history's validity
-# intervals — leakage-free fact enrichment), and sample_importance
-# (importance resampling to a target length distribution via
-# histogram-derived keep rates), and window_rolling_distinct
-# (sliding 7-day uniques: HLL sketches as window aggregates, exact
-# lane via bounded calendar fan-out), er_resolve (record-linkage
-# capstone: fuzzy pairs -> CC -> canonical id), and
-# curation_curriculum (quality-annealed reproducible training order),
-# and stream_stream_join_outer (left-outer stream-stream join whose
-# watermark-expiry emission rule is itself oracle-verified), plus
-# events_trending (exponentially decayed popularity rank over a
-# literal weight table), and asof_join_nearest (merge_asof
-# direction='nearest' semantics — two union-merge passes + a scalar
-# distance resolve, tie-break oracle-verified), basket_pairs
-# (2-itemset market-basket mining with the capped pair fan-out), and
-# graph_triangles (oriented wedge-join triangle counting with a
-# mirrored hot-node cap), events_seasonal_decompose (additive
-# trend/seasonal/residual split), text_phrase_search (positional
-# posting-list phrase adjacency — exact-phrase retrieval),
-# events_markov_transitions (first-order sequential-pattern matrix),
-# feature_discretize (broadcast-quantile equi-depth bucketing — the
-# scalable ntile replacement), profile_benford (first-digit
-# forensic audit), abc_classification (Pareto cumulative-share
-# ranking over the reduced key frame), and events_session_paths
-# (clickstream opening-path frequencies via one ordered-list
-# aggregation), and graph_pagerank_personalized (seed-teleport PPR —
-# the recommendation variant; damping 6/7 per the decimal-grid
-# rounding argument), profile_chi_square (categorical-dependence
-# audit), agg_concentration_hhi (market-concentration index), and
-# agg_gini (inequality coefficient in exact integer cents), and
-# events_cumulative_uniques (expanding distinct via the first-seen
-# reduction).
-#
-# Round-7 rotation (VERDICT r6 item 2): five never-driver-verified
-# operator FAMILIES enter the window — sim_ann_index_scan (stored
-# partition-pruned IVF index: write-time layout + read-time
-# PartitionFilters, the serving half of ANN), stream_incremental_dedup
-# (continuous-ingestion dedup, O(batch) state per micro-batch — the
-# streaming half of the dedup story), scd2_dim_history (change feed →
-# validity intervals, the warehouse temporal-dimension shape),
-# incremental_join_delta (join IVM: delta×base + base×delta + delta×
-# delta, never base×base re-paired), agg_sketch_merge
-# (re-aggregatable HLL shard sketches — the sketch-algebra family).
-# Retired to extended (redundant witnesses, all driver-green r1-r6):
-# dedup_embedding_cosine (its sign-LSH band + exact-cosine-verify
-# path is composed verbatim INSIDE dedup_semantic — the sim_ann_pq
-# precedent), dedup_substring (fingerprint-window family witnessed by
-# curation_line_dedup's md5-segment-count machinery; the Lee-et-al
-# span stats remain oracled locally), sim_ann_lsh (band-bucket ANN ⊂
-# sim_ann_ivfpq's cell-restricted search, same precedent that retired
-# sim_ann_ivf in r6), sample_stratified (md5-hash-threshold core is
-# the identical mechanism inside sample_mixture's rate-table path),
-# text_tfidf (tf·idf is composed verbatim INSIDE text_bm25's
-# saturated scoring). Every retained name is unchanged —
-# CORRECTNESS keys are the driver's contract and renames reset
-# verification history.
-#
-# Strongest r8 rotation candidates (never-driver-verified families,
-# strongest first): join_bloom_prune (sketch-prune semi-join),
-# events_ohlc (argmin/argmax bar aggregate — the reference-domain
-# kline resample), sql_recursive_cte (in-engine recursion),
-# graph_label_propagation (community detection),
-# profile_distribution_drift (integer-exact TVD monitoring),
-# dedup_jaccard_prefix (prefix-filter prune, now broadcast-fixed),
-# events_window_funnel (per-occurrence funnel), stats_ks_test
-# (two-sample KS), feature_pca_power (iterative integer-grid PCA),
-# rec_user_topn (two-stage item-CF), geo_grid_knn (grid-blocked
-# spatial kNN, now salt-guarded), rollup_retractions (delete-side
-# IVM), cdc_time_travel (multi-version AS OF), table_diff (row-hash
-# snapshot diff), er_resolve (record-linkage capstone). The round-7
-# waves 37-44 add a further tier of candidates (strongest first):
-# stats_poisson_bootstrap (the corpus-scale bootstrap — one-pass
-# per-row Poisson weights), curation_model_filter (the learned
-# quality-filter APPLY lane), multimodal_blockhash_dedup (binary
-# perceptual-hash dedup — the multimodal half of the dedup story),
-# dedup_url_canonical (the web-corpus first dedup pass),
-# agg_moments_merge (re-aggregatable algebraic moments),
-# source_partitioned_read (Hive partition layout + planning-time
-# pruning), events_dollar_bars / events_vpin (information-driven bars
-# + order-flow toxicity), graph_assortativity / graph_modularity
-# (whole-graph structure metrics), stats_mann_kendall /
-# stats_hodges_lehmann (the robust-inference trio's missing rows),
-# geo_point_in_polygon (point×region spatial join),
-# audit_temporal_fk (time-aware referential integrity),
-# stats_cohens_kappa (label-quality agreement), text_zipf_fit
-# (corpus power-law health), curation_temperature_mixture
-# (multilingual rebalancing), ml_knn_classifier (embedding-label
-# vote), events_pairs_spread_zscore / events_roll_spread
-# (mean-reversion monitor + implied spread).
-#
-# Round-9 rotation (VERDICT r8 item 1) — APPLIED at the top of round
-# 9, reflected in CORE_WINDOW below, exactly as planned in r8. IN
-# (never-driver-verified families): events_funnel + events_retention
-# (the product-analytics core pair — ordered conversion steps and
-# cohort day-N return), audit_referential_integrity (the multi-table
-# ingest gate), join_bloom_prune (the sketch-prune shuffle primitive),
-# stats_welch_ttest (the inference family's unequal-variance witness).
-# OUT (subsumable, driver-green history stands): agg_approx_distinct
-# (HLL bound contract ⊂ agg_sketch_merge's merged-shard HLL row),
-# join_full_outer (⊂ canonical_assembly's outer-concat J1 +
-# join_semi_anti's null-handling), events_tumbling (fixed windows ⊂
-# events_sessionize's harder gap windows + stream lanes),
-# udf_pandas_scalar (arrow scalar lane ⊂ udf_grouped_map's heavier
-# grouped-map arrow lane), sql_in_subquery (decorrelation ⊂
-# join_semi_anti's LeftSemi plan shape, gated locally — the sql_
-# front-end family leaves the must-witness prefix list with that
-# documented subsumption).
-#
-# FAMILY-WITNESS ROTATION QUEUE (VERDICT r8 item 2): at the SURVEY
-# §2.12 capability-row granularity, ~21 families still have zero
-# driver-record history. Each names its single best witness below;
-# rotations r10+ drain this queue IN ORDER (5/round closes every
-# family hole by ~r14), never re-promoting an already-witnessed
-# family while a hole remains.
-#
-# Round-10 rotation (VERDICT r9 item 1) — APPLIED at the top of round
-# 10, reflected in CORE_WINDOW below, exactly as planned in r9. All
-# five IN names (and the r11 queue behind them) were PRE-VERIFIED
-# exact against DuckDB at sf0.1 in round 9 — see SCALE.md "Round-9
-# pre-verification" and the full-catalog sweep record
-# SWEEP_SF01_r09.jsonl — so the rotation promotes nothing whose
-# cross-SF behavior is unprobed.
-# IN (each the best witness of a never-witnessed §2.12
-# family): dedup_jaccard_prefix (prefix-filtered similarity join —
-# PPJoin pruning, oracle proves the no-false-negative guarantee),
-# profile_distribution_drift (drift monitoring — integer-exact TVD,
-# the PSI slot of ML ops), events_attribution (multi-touch
-# attribution — integer-ppm credit; the experimentation half stays
-# witnessed via stats_welch_ttest), table_diff (snapshot diff /
-# data versioning — md5-row-hash full-outer diff),
-# source_txn_log_snapshot (lakehouse log-replay read path — also the
-# r8 production-shape shortlist's top name). OUT (subsumable,
-# driver-green history stands — pick five of): cdc_apply (I/U/D
-# apply ⊂ cdc_time_travel's multi-version AS OF over the same
-# change-log), rollup_incremental (insert-side IVM ⊂
-# incremental_join_delta's harder join IVM), scalar_string (scalar
-# lane ⊂ the window's canonical_assembly F1-F6 surface + local
-# scalar_* oracle diffs), source_jsonl (lines-read lane ⊂
-# source_txn_log_snapshot's harder log-replay read incoming),
-# layout_zorder (write-layout lane ⊂ sim_ann_index_scan's stored
-# partition-pruned layout).
-#
-# Round-11 rotation (VERDICT r10 item 1) — APPLIED at the top of
-# round 11, reflected in CORE_WINDOW below, exactly as planned in
-# r10. All five IN names were differentially verified exact against
-# DuckDB at sf0.1 in BOTH the round-9 pre-verification (SCALE.md) and
-# round 10's full-catalog sweep (SWEEP_SF01_r10.jsonl), so the
-# rotation promotes nothing whose cross-SF behavior is unprobed.
-# IN (each the best witness of a never-witnessed §2.12 family):
-# stream_scd2_apply (streaming upsert — foreachBatch copy-on-write;
-# also closes streaming SCD2), sql_recursive_cte (Spark-4 SQL
-# surface; json_variant is the alternate), events_streaks
-# (gaps-and-islands engagement curves), privacy_generalize (privacy
-# enforcement; l-diversity/DP stay local witnesses), forecast_linear
-# (forecasting/rolling). OUT (subsumable, driver-green history
-# stands): stats_benjamini_hochberg (multiple-testing control ⊂ the
-# inference family's retained stats_welch_ttest window row + local
-# stats_* oracle diffs), curation_model_filter (learned-filter APPLY
-# ⊂ curation_pipeline's composed gate surface), agg_moments_merge
-# (algebraic moment merge ⊂ agg_sketch_merge's merged-shard sketch
-# algebra), cdc_time_travel (multi-version AS OF — the cdc_ family is
-# fully driver-witnessed r6-r10 across both halves, cdc_apply r6-r9 +
-# time_travel r8-r10), events_macd (chained-EMA kline indicator ⊂
-# bucketed_ma's frame windows + the events_ family's five remaining
-# window rows incl. events_streaks incoming).
-#
-# Round-12 rotation (VERDICT r11 item 1) — APPLIED at the top of
-# round 12, reflected in CORE_WINDOW below, exactly as planned in
-# r10/r11. All five IN names pre-verified exact at sf0.1 in
-# SWEEP_SF01_r10.jsonl AND SWEEP_SF01_r11.jsonl (two independent
-# rounds), plus the r11 judge independently re-executed search_rrf
-# and abc_classification exact at sf0.01, so the rotation promotes
-# nothing whose cross-SF behavior is unprobed.
-# IN (each the best witness of a never-driver-witnessed §2.12
-# family, per the r10 verdict's shortlist): abc_classification
-# (ABC/Pareto), assoc_market_basket (market-basket 2-itemset mining;
-# basket_pairs is the alternate), search_rrf (hybrid search +
-# gap-fill family; events_gapfill alternate), split_temporal_embargo
-# (temporal ML splits; split_leakage_safe alternate),
-# events_multires_rollup (time hierarchy/reshape — the Expand-based
-# GROUPING SETS multires rollup; reshape_unpivot alternate).
-# OUT (subsumable, driver-green history stands): join_range (range
-# predicate ⊂ join_interval_overlap's bucketized interval join over
-# the same shape), agg_grouping_sets (Expand/grouping-sets shape ⊂
-# events_multires_rollup's multires rollup incoming + local
-# agg_rollup/agg_cube oracle diffs), set_ops (INTERSECT/EXCEPT
-# compile to the semi/anti plan shapes ⊂ join_semi_anti retained +
-# local set_ops_all bag-semantics oracle), dedup_exact (exact
-# hash-groupBy dedup ⊂ curation_line_dedup's exact line-hash dedup +
-# dedup_components' canonical-survivor pick), events_retention
-# (cohort day-N return ⊂ the events_ family's remaining window rows:
-# funnel + attribution + sessionize + streaks; r9-r11 history
-# stands).
-#
-# r13+ family-witness queue (one witness per remaining hole, in
-# priority order; pick OUT names by the same subsumption discipline):
-#
-# The r13 rotation below was APPLIED first thing in round 13,
-# reflected in CORE_WINDOW below, exactly as planned in r11/r12. All
-# five IN names were pre-verified exact at sf0.1 in
-# SWEEP_SF01_r11.jsonl AND SWEEP_SF01_r12.jsonl, the r12 judge
-# independently re-executed four of the five exact at sf0.01, and a
-# fresh-session round-13 pre-flight re-ran all five (including
-# agg_hll_intersect, the one never independently re-executed) exact
-# at BOTH sf0.01 and sf0.1 before the rotation landed.
-# IN (each the best witness of a family that is still
-# never-driver-witnessed after r12): stream_dedup (streaming exact
-# dedup — also the only §2.12 family whose witness doubles as a
-# SURVEY §2.9 behavior), profile_chi_square (dependence /
-# concentration audits; agg_gini and profile_hhi_concentration are
-# the alternates), events_markov_transitions (sequential patterns;
-# events_session_paths alternate), agg_hll_intersect (HLL sketch set
-# algebra; agg_hll_union alternate), events_trending (trending rank;
-# z-score-vs-trailing-window shape).
-# OUT (subsumable, driver-green history stands): stream_stream_join
-# (watermarked stream-stream interval join ⊂ join_interval_overlap's
-# retained bucketized interval join + stream_ keeps three window rows
-# incl. stream_dedup incoming; r5-r12 history), events_funnel
-# (ordered conversion ⊂ local events_window_funnel oracle + the
-# events_ family's retained attribution/sessionize/streaks rows;
-# r9-r12 history), profile_distribution_drift (integer-exact TVD
-# drift ⊂ profile_chi_square's incoming dependence-audit shape +
-# local profile_* diffs; r10-r12 history), agg_sketch_merge
-# (merged-shard HLL algebra ⊂ agg_hll_intersect's incoming
-# inclusion-exclusion set algebra, which composes the same shard
-# merge; r7-r12 history), join_bloom_prune (Bloom-build broadcast
-# prune ⊂ join_semi_anti's retained LeftSemi shape + local sketch
-# oracles; r9-r12 history).
-# Cascade reminder: update the family-prefix assert list in
-# tests/test_scale_ops.py (events_funnel leaving keeps events_ via
-# four other rows; no prefix vanishes), bench.py EXTENDED gains the
-# five OUT names, COVERAGE/QUERIES regen, members_hash refreshes.
-#
-# ROUND-14 FREEZE (VERDICT r13 item 1 — supersedes the r14 rotation
-# plan below): the r13 rotation is why PERF_r13 recorded 5 dropped
-# queries and n_common = 0, and round 14 is an OPTIMIZATION round
-# whose gate requires zero window churn. The rotation below is
-# therefore NOT applied in round 14 — CORE_WINDOW is byte-identical
-# to its r13 state, so the driver's 50-query verification window and
-# the bench headline membership (members_hash) are unchanged and
-# PERF_r14 can compare every query round-over-round. The plan keeps
-# its place in the queue for the next BUILD round.
-#
-# CONCRETE r14 rotation plan (VERDICT r12 item 3 — superseded for
-# round 14 by the freeze above; apply at the top of the next build
-# round, never mid-round). All three family-hole IN names were
-# judge-re-executed exact at sf0.01 in the r12 verdict session AND
-# are sweep-exact at sf0.001/sf0.1 in the committed r13 sweeps, so
-# the rotation promotes nothing whose cross-SF behavior is unprobed.
-# Round-13 pre-flight: ALL FIVE IN names below were re-executed in a
-# fresh session against the DuckDB oracle at BOTH sf0.01 and sf0.1
-# during round 13 — 10/10 exact — so the r14 builder inherits a fully
-# de-risked queue (the same discipline r12 applied to the r13 queue).
-# IN — the LAST three never-driver-witnessed §2.12 families, which
-# empties the family backlog: dedup_containment (containment /
-# excerpt dedup — asymmetric-overlap candidate join),
-# events_seasonal_decompose (seasonal decomposition — integer-exact
-# moving-average detrend + seasonal index), set_ops_all (bag
-# INTERSECT ALL / EXCEPT ALL semantics — the multiplicity-aware
-# variant the r12-retired set_ops row never carried). Plus the two
-# highest-value SECOND witnesses (deepest §2.12 rows with only one
-# driver-green query): dedup_substring (fingerprint-window excerpt
-# dedup — the substring lane vs curation_line_dedup's line lane;
-# driver-green r5-r6 history, re-witnesses after 8 rounds out) and
-# agg_gini (Gini concentration — the concentration half of the
-# dependence/concentration family whose dependence half
-# profile_chi_square witnesses in r13; judge-re-executed exact r12).
-# OUT candidates (subsumable, driver-green history stands):
-# events_attribution (multi-touch credit ⊂ the events_ family's
-# retained rows: sessionize + streaks + markov + trending;
-# r10-r13), stats_welch_ttest (inference ⊂ profile_chi_square's
-# retained integer-cross-multiply test shape + local stats_*
-# diffs; r9-r13), table_diff (snapshot diff ⊂
-# audit_referential_integrity's retained multi-table gate + local
-# cdc_ oracles; r10-r13), incremental_join_delta (join IVM ⊂
-# incremental_delta + scd2_dim_history retained + local rollup_
-# retraction oracles; r7-r13), asof_join (as-of backward join ⊂
-# join_interval_overlap's retained bucketized temporal join +
-# local asof variants; r1-r13 — the longest green history in the
-# window). After r14 the rotation's job changes: no families
-# remain, so point it at production-shape second witnesses
-# (curation_bloom_decontaminate, curation_dsir_importance,
-# sample_bottom_k_merge, graph_closeness_sampled, ...).
-#
-# Round-8 waves 60-67 added a further candidate tier for r9/r10
-# (never-driver-verified, strongest first): stream_scd2_apply (the
-# streaming upsert production shape — foreachBatch copy-on-write,
-# order-insensitive rebuild), source_txn_log_snapshot (the lakehouse
-# log-replay read path), curation_dsir_importance (published
-# target-domain selection), curation_bloom_decontaminate (the
-# two-stage eval-overlap gate), sample_bottom_k_merge (the mergeable
-# uniform-sample primitive), events_shapley_attribution (coalition
-# algebra entirely post-reduction), stats_kruskal_wallis /
-# stats_nemenyi_posthoc (inference completion), forecast_holt_winters
-# (bit-stable cross-engine float recursion), multimodal_audio_vad +
-# multimodal_crossmodal_retrieval (audio + alignment halves of the
-# multimodal story), embedding_matryoshka_truncate (truncated-index
-# eval), graph_closeness_sampled (distance centrality),
-# events_page_hinkley (online drift), privacy_l_diversity (entropy /
-# recursive (c,l)).
-#
-# Round-8 rotation (VERDICT r7 item 1) — APPLIED at the top of round
-# 8, reflected in CORE_WINDOW above. IN (never-driver-verified
-# families): stats_benjamini_hochberg (the inference family's first
-# window row — multiple-testing control, A&S erfc device),
-# geo_dbscan_grid (the geo family's first window row — grid join +
-# union-find CC capstone), cdc_time_travel (multi-version AS OF —
-# the CDC family's unverified half), curation_model_filter (the
-# learned quality-filter APPLY lane), agg_moments_merge
-# (re-aggregatable algebraic moments — the sketch-algebra row beyond
-# HLL). OUT (subsumable, driver-green r1-r7 history stands):
-# dedup_keep_canonical (canonical-survivor pick ⊂ dedup_components'
-# min-label + one argmin window), sim_cosine_topk (exact-verify
-# top-k is composed INSIDE sim_ann_ivfpq's rerank stage),
-# dedup_incremental (new-vs-corpus restriction now witnessed by
-# stream_incremental_dedup IN the window), curation_pii_redact
-# (map-only regex gate ⊂ curation_pipeline's driver-green gates),
-# json_extract (JSON path family ⊂ scalar_string's codegen lane +
-# local json_variant/scalar_* oracles; 6 rounds of history stand).
-# Round-6 rotation (VERDICT r5 item 1): five never-driver-verified
-# operator FAMILIES enter the window — graph_pagerank (the only
-# iterative family besides CC; unrolled-CTE oracle), cdc_apply
-# (I/U/D change-batch apply — the one MERGE-family shape with
-# deletes), text_bm25 (ranked lexical retrieval), events_macd
-# (dual-EMA DIF/DEA/histogram — witnesses EMA + chained-Window kline
-# indicators in one row), join_interval_overlap (bucketized interval
-# join — the scalable theta-join replacement). Retired to extended
-# (redundant witnesses, all driver-green r1-r5): udf_arrow_map (UDF
-# lane ⊂ udf_pandas_scalar + udf_grouped_map), sim_ann_ivf (its
-# cell-restriction path is composed verbatim INSIDE sim_ann_ivfpq —
-# the same precedent that retired sim_ann_pq in r5),
-# dedup_ngram_jaccard (shingle-bucket pair expansion ⊂
-# dedup_minhash_lsh, which adds banding on top of the same bucketed
-# join), agg_pricing_summary (hash agg partial+final ⊂ agg_stats'
-# wider aggregate over the same shuffle; the A1 Expand/partial-agg
-# plan gate remains a local test), filter_predicates (general
-# predicates ⊂ every window row's WHERE clauses + canonical_assembly's
-# driver-green CJK/null filters + the local pushdown plan gates).
-# Every retained name is unchanged — CORRECTNESS keys are the
-# driver's contract and renames reset verification history.
-#
-# Strongest r7 rotation candidates (VERDICT r5 item 4 — schedule the
-# two most production-shaped LLM-pipeline queries first):
-# sim_ann_index_scan (stored partition-pruned IVF index — write-time
-# layout + read-time PartitionFilters, the serving half of ANN) and
-# stream_incremental_dedup (continuous-ingestion dedup, O(batch) per
-# micro-batch — the streaming half of the dedup story); then
-# join_bloom_prune (sketch-prune family), agg_sketch_merge
-# (re-aggregatable HLL shards), events_ohlc (argmin/argmax bar
-# aggregate), sql_recursive_cte (in-engine recursion), text_bpe_encode
-# (tokenizer-apply). Round-6 analytics-wave families are the next
-# tier of candidates once those are green: graph_label_propagation
-# (community detection), dedup_jaccard_prefix (prefix-filter prune,
-# whose oracle proves the no-false-negative guarantee),
-# profile_distribution_drift (integer-exact TVD monitoring),
-# events_attribution (integer-ppm credit), dedup_containment
-# (excerpt detection). The round-6 wave-5..9 families queue behind
-# those, strongest first: events_window_funnel (per-occurrence
-# funnel, oracle = the correlated textbook form),
-# rollup_retractions (delete-side IVM with scoped min/max repair),
-# dedup_lsh_quality (banding precision/recall vs exhaustive truth),
-# skyline_pareto (reduce+window frontier vs quadratic-definition
-# oracle), graph_sssp_weighted / graph_kcore (weighted relaxation /
-# degeneracy peeling), cdc_time_travel (multi-version AS OF),
-# stats_ks_test (integer two-sample KS), forecast_conformal
-# (distribution-free intervals). The round-6 waves 18-27 add one
-# more candidate tier (strongest first): feature_pca_power (the
-# third iterative family — integer-grid linear algebra, d²-bounded
-# shuffle), dedup_content_chunking (shift-robust CDC storage dedup,
-# fixture-proven), rec_user_topn (two-stage item-CF — model build +
-# user-linear scoring in one), stats_permutation_test (md5-resample
-# inference, 128-bit cross-multiply compares), geo_grid_knn
-# (grid-blocked spatial kNN — the LSH-banding analogue), events_vwap
-# (the reference-domain VWAP bar), stats_sprt (sequential analysis
-# over integer-nano ln literals).
+# One line per window row below: the operator family the row
+# witnesses. How the window rotated to this membership (rounds 2-13)
+# and the queued next rotation are in git history and VERDICT.md; the
+# window and the bench headline membership stay frozen while rounds
+# compare query-for-query.
 CORE_WINDOW: tuple[str, ...] = (
-    # flagship + aggregation surface (agg_grouping_sets rotated out
-    # r12 — Expand/grouping-sets shape ⊂ events_multires_rollup's
-    # multires rollup below + local agg_rollup/agg_cube oracle diffs)
-    "canonical_assembly",
-    "agg_stats",
-    # windows
-    "window_rank",
-    # sort / top-k (set_ops rotated out r12 — INTERSECT/EXCEPT compile
-    # to the semi/anti plan shapes ⊂ join_semi_anti below + local
-    # set_ops_all bag-semantics oracle)
-    "sort_topk",
-    # ABC/Pareto concentration classification (r12)
-    "abc_classification",
-    # HLL sketch set algebra — inclusion-exclusion over merged shards
-    # (r13; agg_sketch_merge rotated out r13 — merged-shard HLL
-    # algebra ⊂ this row's inclusion-exclusion, which composes the
-    # same shard merge; r7-r12 driver history stands)
-    "agg_hll_intersect",
-    # inference: unequal-variance t (r9; BH multiple-testing control
-    # rotated out r11 — ⊂ this row + local stats_* oracle diffs)
-    "stats_welch_ttest",
-    # join shapes (r9; join_range rotated out r12 — range predicate ⊂
-    # join_interval_overlap's bucketized interval join over the same
-    # shape; join_bloom_prune rotated out r13 — Bloom-build broadcast
-    # prune ⊂ join_semi_anti's LeftSemi shape + local sketch oracles,
-    # r9-r12 driver history stands)
-    "join_regional_revenue",
-    "join_semi_anti",
-    "join_interval_overlap",
-    "asof_join",
-    # multi-table ingest gate (r9) + snapshot diff / data versioning (r10)
-    "audit_referential_integrity",
-    "table_diff",
-    # pipeline / incrementality / time windows / log-replay read (r10;
-    # cdc_time_travel rotated out r11 — the cdc_ family is fully
-    # driver-witnessed r6-r10 across both halves)
-    "incremental_delta",
-    "scd2_dim_history",
-    "incremental_join_delta",
-    "source_txn_log_snapshot",
-    # product analytics: multi-touch attribution (r10;
-    # events_retention rotated out r12 — cohort day-N return ⊂ the
-    # events_ family's remaining window rows; events_funnel rotated
-    # out r13 — ordered conversion ⊂ local events_window_funnel
-    # oracle + the family's retained rows, r9-r12 driver history)
-    "events_attribution",
-    "events_sessionize",
-    # gaps-and-islands engagement streaks (r11; events_macd rotated
-    # out r11 — chained-EMA ⊂ bucketed_ma's frame windows + the
-    # events_ family's remaining window rows)
-    "events_streaks",
-    "bucketed_ma",
-    # dependence / concentration audits — integer-cross-multiply χ²
-    # independence test (r13; profile_distribution_drift rotated out
-    # r13 — integer-exact TVD drift ⊂ this row's dependence-audit
-    # shape + local profile_* diffs, r10-r12 driver history stands)
-    "profile_chi_square",
-    # sequential patterns — Markov transition matrix over event
-    # sequences (r13)
-    "events_markov_transitions",
-    # trending rank — z-score vs trailing window (r13)
-    "events_trending",
-    # time hierarchy / multi-resolution reshape — Expand-based
-    # GROUPING SETS rollup (r12; carries the grouping-sets plan shape)
-    "events_multires_rollup",
-    # market-basket 2-itemset mining (r12)
-    "assoc_market_basket",
-    # hybrid search: reciprocal-rank fusion over BM25 + ANN lanes (r12)
-    "search_rrf",
-    # temporal ML splits with leakage embargo (r12)
-    "split_temporal_embargo",
-    # forecasting / rolling models (r11)
-    "forecast_linear",
-    # privacy enforcement — k-anonymity generalization (r11)
-    "privacy_generalize",
-    # Spark-4 SQL surface — in-engine recursion (r11)
-    "sql_recursive_cte",
-    # Structured Streaming (deterministic AvailableNow cycle, full
-    # oracle): exact dedup-within-watermark (r13;
-    # stream_stream_join rotated out r13 — watermarked stream-stream
-    # interval join ⊂ join_interval_overlap's retained bucketized
-    # interval join, r5-r12 driver history stands) + incremental
-    # LSH dedup + streaming SCD2 upsert (r11)
-    "stream_dedup",
-    "stream_incremental_dedup",
-    "stream_scd2_apply",
-    # UDF lanes (arrow scalar lane rotated out r9, subsumed by the
-    # heavier grouped-map arrow lane below)
-    "udf_grouped_map",
-    # LLM-training-data operators (+ PPJoin prefix-filter join, r10;
-    # dedup_exact rotated out r12 — exact hash-groupBy dedup ⊂
-    # curation_line_dedup's exact line-hash dedup below +
-    # dedup_components' canonical-survivor pick)
-    "dedup_minhash_lsh",
-    "dedup_jaccard_prefix",
-    "dedup_semantic",
-    "dedup_components",
-    "sim_ann_ivfpq",
-    "sim_ann_index_scan",
-    "kmeans_embeddings",
-    "text_metrics",
-    "text_bm25",
-    "graph_pagerank",
-    "curation_pipeline",
-    "curation_line_dedup",
-    "sample_mixture",
-    # geo: grid-blocked DBSCAN capstone (r8)
-    "geo_dbscan_grid",
-    "multimodal_features",
+    "canonical_assembly",  # the reference's assembly shape (flagship)
+    "agg_stats",  # stat + regression aggregates
+    "window_rank",  # ranking and distribution windows
+    "sort_topk",  # global top-k
+    "abc_classification",  # ABC/Pareto cumulative-share classification
+    "agg_hll_intersect",  # HLL sketch set algebra
+    "stats_welch_ttest",  # inference: unequal-variance t-test
+    "join_regional_revenue",  # TPC-H Q5 multi-way join, dims broadcast
+    "join_semi_anti",  # semi/anti existence joins
+    "join_interval_overlap",  # bucketized interval join
+    "asof_join",  # as-of backward join
+    "audit_referential_integrity",  # multi-table ingest gate
+    "table_diff",  # snapshot diff / data versioning
+    "incremental_delta",  # watermark-driven delta
+    "scd2_dim_history",  # change feed to validity intervals
+    "incremental_join_delta",  # join view maintenance
+    "source_txn_log_snapshot",  # lakehouse log-replay read
+    "events_attribution",  # multi-touch attribution
+    "events_sessionize",  # session windows
+    "events_streaks",  # gaps-and-islands streaks
+    "bucketed_ma",  # bucketed layout + per-key moving average
+    "profile_chi_square",  # integer-exact chi-square independence audit
+    "events_markov_transitions",  # Markov transition matrix
+    "events_trending",  # time-decayed trending rank
+    "events_multires_rollup",  # GROUPING SETS multi-resolution rollup
+    "assoc_market_basket",  # 2-itemset mining
+    "search_rrf",  # reciprocal-rank fusion of BM25 + ANN lanes
+    "split_temporal_embargo",  # temporal ML split with leakage embargo
+    "forecast_linear",  # linear trend forecast
+    "privacy_generalize",  # k-anonymity generalization
+    "sql_recursive_cte",  # in-engine recursion
+    "stream_dedup",  # streaming exact dedup within a watermark
+    "stream_incremental_dedup",  # streaming incremental LSH dedup
+    "stream_scd2_apply",  # streaming SCD2 upsert
+    "udf_grouped_map",  # Arrow grouped-map UDF lane
+    "dedup_minhash_lsh",  # MinHash + LSH near-dup pairs
+    "dedup_jaccard_prefix",  # PPJoin prefix-filter join
+    "dedup_semantic",  # cluster-scoped semantic dedup
+    "dedup_components",  # near-dup connected components
+    "sim_ann_ivfpq",  # IVF-PQ approximate nearest neighbours
+    "sim_ann_index_scan",  # stored partition-pruned IVF index
+    "kmeans_embeddings",  # distributed k-means
+    "text_metrics",  # one-scan per-document text analysis
+    "text_bm25",  # BM25 ranked retrieval
+    "graph_pagerank",  # PageRank (iterative graph)
+    "curation_pipeline",  # end-to-end curation flow
+    "curation_line_dedup",  # boilerplate line removal
+    "sample_mixture",  # rate-table mixture sampling
+    "geo_dbscan_grid",  # grid-blocked DBSCAN
+    "multimodal_features",  # Arrow-batched multimodal feature extraction
 )
 
 

@@ -4459,15 +4459,9 @@ def cc_incremental_labels(
         "node",
         F.coalesce(F.col("final_lab"), F.col("lab")).alias("component"),
     )
-
-    def decode(c):
-        half = (F.col(c) / 2).cast("bigint").cast("string")
-        return F.when(
-            F.col(c) % 2 == 0, F.concat(F.lit("c"), half)
-        ).otherwise(F.concat(F.lit("s"), half))
-
     return enc.select(
-        decode("node").alias("node"), decode("component").alias("component")
+        decode_purchase_node("node").alias("node"),
+        decode_purchase_node("component").alias("component"),
     )
 
 

@@ -166,6 +166,18 @@ WHERE n_inter / (ca.n_sh + cb.n_sh - n_inter) >= 0.5
 """
 
 
+def _verified_pairs(docs: DataFrame, candidates: DataFrame) -> DataFrame:
+    """The LSH dedup queries' result: ``candidates`` of ``docs`` kept at
+    true Jaccard >= 0.5, rounded to 6 places. Shared by
+    dedup_minhash_lsh, dedup_incremental and the absorb step of
+    stream_incremental_dedup."""
+    return (
+        D.verify_pairs(docs, candidates)
+        .filter(F.col("jaccard") >= 0.5)
+        .select("a", "b", dround("jaccard", 6).alias("jaccard"))
+    )
+
+
 @register(
     "dedup_minhash_lsh",
     _minhash_sql(),
@@ -180,16 +192,8 @@ WHERE n_inter / (ca.n_sh + cb.n_sh - n_inter) >= 0.5
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # the signatures are read twice (the hot-bucket count and the pair
-    # expansion), so they are pinned EAGERLY: a lazy checkpoint lets
-    # parallel consumers race its first materialization and recompute
-    # the shingle explode. verify_pairs reads the candidates once.
-    sig = pin(D.minhash_signatures(D.exploded_shingles(docs)))
-    candidates = D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET)
-    verified = D.verify_pairs(docs, candidates)
-    return verified.filter(F.col("jaccard") >= 0.5).select(
-        "a", "b", dround("jaccard", 6).alias("jaccard")
-    )
+    sig = D.minhash_signatures(D.exploded_shingles(docs))
+    return _verified_pairs(docs, D.lsh_band_candidates(sig, max_bucket=_JACCARD_MAX_BUCKET))
 
 
 # ---------------------------------------------------------------------------
@@ -215,7 +219,10 @@ _INC_NEW_MIN = 450  # docs with id >= this model the newly-arrived batch
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # eager, not lazy, for the reason in dedup_minhash_lsh
+    # the signatures are read twice (the corpus bands and the new
+    # slice), so they are pinned EAGERLY: a lazy checkpoint lets
+    # parallel consumers race its first materialization and recompute
+    # the shingle explode
     sig = pin(D.minhash_signatures(D.exploded_shingles(docs)))
     new_ids = docs.filter(F.col("doc_id") >= _INC_NEW_MIN).select("doc_id")
     # the new docs' bands come from a broadcast-restricted slice of the
@@ -224,10 +231,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = D.lsh_incremental_candidates(
         D.band_buckets(sig), new_bands, max_bucket=_JACCARD_MAX_BUCKET
     )
-    verified = D.verify_pairs(docs, candidates)
-    return verified.filter(F.col("jaccard") >= 0.5).select(
-        "a", "b", dround("jaccard", 6).alias("jaccard")
-    )
+    return _verified_pairs(docs, candidates)
 
 
 # ---------------------------------------------------------------------------

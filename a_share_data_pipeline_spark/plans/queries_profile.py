@@ -1259,11 +1259,11 @@ ORDER BY p.tri_cnt DESC, p.node LIMIT {_TRI_TOP}
         "by a third edge probe — never an all-pairs pass. The "
         "hot-node guard drops nodes above a literal degree cap BEFORE "
         "the wedge join (a d-degree node closes O(d^2) wedges — the "
-        "same drop-and-log discipline as _bucket_pairs; mirrored in "
-        "the oracle so both engines count the identical capped "
-        "graph). Output is bounded: per-node counts for the top "
-        "participants plus the global total, not the triangle set "
-        "itself (538k triangles at sf0.01)"
+        "cap-before-expansion discipline of _bucket_pairs, without its "
+        "logged count; mirrored in the oracle so both engines count the "
+        "identical capped graph). Output is bounded: per-node counts "
+        "for the top participants plus the global total, not the "
+        "triangle set itself (538k triangles at sf0.01)"
     ),
 )
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:

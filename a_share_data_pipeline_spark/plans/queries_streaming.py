@@ -507,7 +507,7 @@ def _incdedup_make_absorb(parts: dict, out_dir: str):
     both the parts and the read-back pairs converge instead of
     doubling)."""
     from ..operators import dedup as D
-    from .queries_llm import _JACCARD_MAX_BUCKET
+    from .queries_llm import _JACCARD_MAX_BUCKET, _verified_pairs
 
     def absorb(batch: DataFrame, _bid: int) -> None:
         doc_part, seen = pin(batch, rows=F.count(F.lit(1)))
@@ -531,16 +531,14 @@ def _incdedup_make_absorb(parts: dict, out_dir: str):
             band_part,
             max_bucket=_JACCARD_MAX_BUCKET,
         )
-        ver = D.verify_pairs(
+        ver = _verified_pairs(
             _union_all([d for d, _ in parts.values()] + [doc_part]), cand
-        ).filter(F.col("jaccard") >= 0.5)
+        )
         # out_dir is read back as the query RESULT, so a retried _bid
         # must REPLACE its earlier attempt's pairs, never append beside
         # them — each batch owns a bid-keyed subdirectory written with
         # overwrite
-        ver.select("a", "b", dround("jaccard", 6).alias("jaccard")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"bid_{_bid}"))
+        ver.write.mode("overwrite").parquet(os.path.join(out_dir, f"bid_{_bid}"))
         # absorb AFTER pairing so the batch never pairs against itself
         # through the store (it pairs against itself via band_part)
         parts[_bid] = (doc_part, band_part)

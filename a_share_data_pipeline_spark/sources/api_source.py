@@ -183,6 +183,41 @@ class _KeyPartition(InputPartition):
         self.value = value
 
 
+def _fetch_arrow(options: dict, table: str, schema: T.StructType, query: dict) -> "Iterator":
+    """One partition's fetch, shared by the batch and the stream reader:
+    the ``query`` call (``ts_code``/date arguments) projected to
+    ``schema``'s fields, each attempt taking a token from the named
+    ``api:<table>`` bucket (R3) under retry (R1), returned as one
+    vectorized Arrow batch — no per-row Python. Empty results yield
+    nothing."""
+    import pyarrow as pa
+
+    client = FixtureApiClient(
+        options["fixture_dir"], log_calls=options.get("log_calls", "false") == "true"
+    )
+    bucket = TokenBucket.named(
+        f"api:{table}",
+        rate=float(options.get("rate", "1e9")),
+        capacity=float(options.get("burst", "1e9")),
+    )
+    fields = [f.name for f in schema.fields]
+
+    def call() -> pd.DataFrame:
+        bucket.acquire()
+        return client.fetch(table, fields=fields, **query)
+
+    pdf = with_retry(call, retries=int(options.get("retries", "3")))
+    if len(pdf) == 0:
+        return
+    arrow_schema = pa.schema(
+        [
+            (f.name, pa.float64() if isinstance(f.dataType, T.DoubleType) else pa.string())
+            for f in schema.fields
+        ]
+    )
+    yield pa.RecordBatch.from_pandas(pdf[fields], schema=arrow_schema, preserve_index=False)
+
+
 class AShareApiReader(DataSourceReader):
     def __init__(self, schema: T.StructType, options: dict):
         self.schema_ = schema
@@ -251,42 +286,11 @@ class AShareApiReader(DataSourceReader):
 
     # -- execution ----------------------------------------------------------
     def read(self, partition: _KeyPartition) -> "Iterator":
-        import pyarrow as pa
-
-        client = FixtureApiClient(
-            self.options["fixture_dir"],
-            log_calls=self.options.get("log_calls", "false") == "true",
-        )
-        bucket = TokenBucket.named(
-            f"api:{self.table}",
-            rate=float(self.options.get("rate", "1e9")),
-            capacity=float(self.options.get("burst", "1e9")),
-        )
-        fields = [f.name for f in self.schema_.fields]
-
-        def call() -> pd.DataFrame:
-            bucket.acquire()
-            if self.mode == "by_key":
-                return client.fetch(
-                    self.table,
-                    ts_code=partition.value,
-                    start_date=self._start,
-                    end_date=self._end,
-                    fields=fields,
-                )
-            return client.fetch(self.table, trade_date=partition.value, fields=fields)
-
-        pdf = with_retry(call, retries=int(self.options.get("retries", "3")))
-        if len(pdf) == 0:
-            return
-        # one vectorized Arrow batch per partition — no per-row Python
-        arrow_schema = pa.schema(
-            [
-                (f.name, pa.float64() if isinstance(f.dataType, T.DoubleType) else pa.string())
-                for f in self.schema_.fields
-            ]
-        )
-        yield pa.RecordBatch.from_pandas(pdf[fields], schema=arrow_schema, preserve_index=False)
+        if self.mode == "by_key":
+            query = {"ts_code": partition.value, "start_date": self._start, "end_date": self._end}
+        else:
+            query = {"trade_date": partition.value}
+        yield from _fetch_arrow(self.options, self.table, self.schema_, query)
 
 
 class AShareApiStreamReader(DataSourceStreamReader):
@@ -326,26 +330,9 @@ class AShareApiStreamReader(DataSourceStreamReader):
         return [_KeyPartition(d) for d in days]
 
     def read(self, partition: _KeyPartition) -> "Iterator":
-        import pyarrow as pa
-
-        client = FixtureApiClient(
-            self.options["fixture_dir"],
-            log_calls=self.options.get("log_calls", "false") == "true",
+        yield from _fetch_arrow(
+            self.options, self.table, self.schema_, {"trade_date": partition.value}
         )
-        fields = [f.name for f in self.schema_.fields]
-        pdf = with_retry(
-            lambda: client.fetch(self.table, trade_date=partition.value, fields=fields),
-            retries=int(self.options.get("retries", "3")),
-        )
-        if len(pdf) == 0:
-            return
-        arrow_schema = pa.schema(
-            [
-                (f.name, pa.float64() if isinstance(f.dataType, T.DoubleType) else pa.string())
-                for f in self.schema_.fields
-            ]
-        )
-        yield pa.RecordBatch.from_pandas(pdf[fields], schema=arrow_schema, preserve_index=False)
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the stream checkpoint

@@ -33,6 +33,7 @@ deliberate — every catalog query rounds its float outputs through
 engine sides, so floats are expected BIT-exact; a ulp difference is
 a real finding, not noise.
 """
+import hashlib
 import json
 import math
 import os
@@ -112,6 +113,21 @@ def canon(v):
     if isinstance(v, bool):
         return str(int(v))
     return str(v)
+
+
+def canonical(cols, rows):
+    """``(cols, rows)`` in the order-free form the oracle comparison
+    uses: columns sorted by name, every value through :func:`canon`,
+    rows sorted."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return [cols[i] for i in order], sorted(tuple(canon(r[i]) for i in order) for r in rows)
+
+
+def result_hash(cols, rows):
+    """sha256 of :func:`canonical` — equal for two results that hold
+    the same rows, whatever their row or column order, so two sweeps
+    compare without re-running the oracles."""
+    return hashlib.sha256(json.dumps(canonical(cols, rows)).encode()).hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -373,6 +389,7 @@ def main() -> None:
             continue
         scols, srows = result
         rec["rows"] = len(srows)
+        rec["sha256"] = result_hash(scols, srows)
         if name not in oracles:
             rec["status"] = "rows-only"
             out.write(json.dumps(rec) + "\n")
@@ -401,15 +418,12 @@ def main() -> None:
             rec["why"] = msg[:300]
             out.write(json.dumps(rec) + "\n")
             continue
-        so = sorted(range(len(scols)), key=lambda i: scols[i])
-        do = sorted(range(len(dcols)), key=lambda i: dcols[i])
-        sc = sorted(tuple(canon(r[i]) for i in so) for r in srows)
-        dc = sorted(tuple(canon(r[i]) for i in do) for r in drows)
-        if sorted(scols) == sorted(dcols) and sc == dc:
+        sc, dc = canonical(scols, srows), canonical(dcols, drows)
+        if sc == dc:
             rec["status"] = "exact"
         else:
             rec["status"] = "MISMATCH"
-            rec["why"] = {"cols": [sorted(scols), sorted(dcols)], "n": [len(sc), len(dc)]}
+            rec["why"] = {"cols": [sc[0], dc[0]], "n": [len(sc[1]), len(dc[1])]}
         out.write(json.dumps(rec) + "\n")
     print("SWEEP DONE")
 

@@ -164,6 +164,37 @@ def test_token_bucket_throttles():
     assert elapsed >= 0.04  # 5 refills at 100/s ≥ 50ms minus jitter slack
 
 
+def test_stream_read_acquires_named_bucket(fixture_dir, monkeypatch):
+    """A stream micro-batch's per-date fetch goes through the same
+    rate limiter as a batch scan: each call takes a token from the
+    named ``api:<table>`` bucket, sized by the ``rate``/``burst``
+    options (R3)."""
+    d, pdfs = fixture_dir
+    made, acquired = [], []
+
+    class Spy:
+        def __init__(self, name):
+            self.name = name
+
+        def acquire(self):
+            acquired.append(self.name)
+
+    def named(cls, name, rate, capacity):
+        made.append((name, rate, capacity))
+        return Spy(name)
+
+    monkeypatch.setattr(TokenBucket, "named", classmethod(named))
+    reader = api_source.AShareApiStreamReader(
+        api_source.TABLE_SCHEMAS["daily"],
+        {"table": "daily", "fixture_dir": d, "start_date": "00000000", "rate": "5", "burst": "2"},
+    )
+    day = sorted(pdfs["daily"]["trade_date"].unique())[0]
+    [batch] = list(reader.read(api_source._KeyPartition(day)))
+    assert made == [("api:daily", 5.0, 2.0)]
+    assert acquired == ["api:daily"]
+    assert batch.num_rows == int((pdfs["daily"]["trade_date"] == day).sum())
+
+
 def test_stream_reader_incremental_exactly_once(registered, fixture_dir, tmp_path):
     """The streaming access path: offsets are trade dates; run 1
     processes everything after start_date, appending new dates to the

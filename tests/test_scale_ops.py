@@ -4,7 +4,9 @@ asserting RESULT equivalence and PLAN shape."""
 
 from __future__ import annotations
 
+import contextlib
 import os
+import re
 
 import pytest
 
@@ -172,6 +174,28 @@ def test_write_native_cluster_by_sorts_row_groups(spark, tmp_path):
         assert codes == sorted(codes), path
 
 
+@contextlib.contextmanager
+def _no_count_job(spark):
+    """Fail any ``DataFrame.count()`` inside the block: the hot-bucket
+    guard must count its dropped rows on its pin's own job."""
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+
+    def refuse(self):
+        raise AssertionError("the hot-bucket guard ran a count() job")
+
+    real, frame.count = frame.count, refuse
+    try:
+        yield
+    finally:
+        frame.count = real
+
+
+def _logged_drop(caplog) -> int:
+    """The row count in the guard's one drop warning."""
+    [n] = [int(m) for r in caplog.records for m in re.findall(r"dropping (\d+)", r.getMessage())]
+    return n
+
+
 def test_hot_shingle_bucket_cap_bounds_pair_expansion(spark, caplog):
     """A stop-shingle shared by every doc must NOT expand to O(N²)
     pairs when the cap is set: the hot bucket is dropped (and logged)
@@ -188,11 +212,12 @@ def test_hot_shingle_bucket_cap_bounds_pair_expansion(spark, caplog):
     uncapped = _bucket_pairs(df, "doc_id").count()
     assert uncapped == n * (n - 1) // 2 + 1
 
-    with caplog.at_level(logging.WARNING):
+    with caplog.at_level(logging.WARNING), _no_count_job(spark):
         capped = _bucket_pairs(df, "doc_id", max_bucket=10)
-        got = {(r.a, r.b) for r in capped.collect()}
+    got = {(r.a, r.b) for r in capped.collect()}
     assert got == {(1, 2)}  # hot bucket gone, small bucket survives
     assert any("hot bucket" in r.message for r in caplog.records)
+    assert _logged_drop(caplog) == 1  # the one HOT bucket row of the grouped frame
 
 
 def test_pair_jaccard_cap_drops_stop_shingle_intersections(spark):
@@ -290,15 +315,19 @@ def test_lsh_incremental_candidates_cap_filters_before_bucket_join(spark, caplog
     uncapped = D.lsh_incremental_candidates(bands, new_bands).count()
     assert uncapped == 29 + 1  # doc 29 × standing 0..28, plus (100, 101)
 
-    with caplog.at_level(logging.WARNING):
-        capped = {
-            (r.a, r.b)
-            for r in D.lsh_incremental_candidates(
-                bands, new_bands, max_bucket=10
-            ).collect()
-        }
+    with caplog.at_level(logging.WARNING), _no_count_job(spark):
+        capped_df = D.lsh_incremental_candidates(bands, new_bands, max_bucket=10)
+    capped = {(r.a, r.b) for r in capped_df.collect()}
     assert capped == {(100, 101)}
     assert any("hot band bucket" in r.message for r in caplog.records)
+    # dropped: every corpus band row in a bucket doc 29 touches (its 2
+    # bands, 30 members each); doc 101's buckets hold 2 members
+    band_rows = bands.collect()
+    touched = {r.bucket for r in band_rows if r.doc_id in (29, 101)}
+    size = {b: sum(r.bucket == b for r in band_rows) for b in touched}
+    assert _logged_drop(caplog) == sum(
+        1 for r in band_rows if r.bucket in touched and size[r.bucket] > 10
+    ) == 60
 
 
 def test_salted_join_wins_where_aqe_skew_split_cannot_apply(spark):

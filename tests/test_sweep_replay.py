@@ -179,3 +179,25 @@ def test_retry_double_failure_records_spark_error():
     assert rec["status"] == "spark-error"
     assert rec["retries"] == 1
     assert "ValueError: boom" in rec["why"]
+
+
+def test_result_hash_ignores_order_and_sees_values():
+    """A sweep row's sha256 is of the canonical result (columns sorted
+    by name, values through canon, rows sorted), so two runs compare by
+    hash: row and column order do not change it; a NULL turned into the
+    string '~', a float's last bit, a changed string, a dropped row and
+    a renamed column do."""
+    cols, rows = ["b", "a"], [(2.5, "x"), (None, "y"), (True, "z")]
+    h = sweep.result_hash(cols, rows)
+    assert h == sweep.result_hash(cols, rows[::-1])
+    assert h == sweep.result_hash(["a", "b"], [(a, b) for b, a in rows])
+    assert len(h) == 64 and int(h, 16) >= 0
+    changed = [
+        [(2.5, "x"), ("~", "y"), (True, "z")],
+        [(2.5000000000000004, "x"), (None, "y"), (True, "z")],
+        [(2.5, "x"), (None, "y"), (True, "w")],
+        [(2.5, "x"), (None, "y")],
+    ]
+    for other in changed:
+        assert sweep.result_hash(cols, other) != h, other
+    assert sweep.result_hash(["b", "c"], rows) != h  # a renamed column
