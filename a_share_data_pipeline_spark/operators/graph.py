@@ -157,10 +157,9 @@ def pagerank(
     edges: DataFrame,
     damping: float = 0.85,
     iters: int = 3,
-    round_to: int = 6,
 ) -> DataFrame:
     """PageRank over a directed edge list (src, dst), fixed iteration
-    count, ranks rounded to ``round_to`` decimals EVERY round.
+    count, ranks rounded to ``SCORE_DIGITS`` decimals EVERY round.
 
     The per-round rounding is part of the operator contract, not
     cosmetics: it re-synchronizes float state across engines (the
@@ -193,7 +192,7 @@ def pagerank(
       contribution divides rank/outdeg PER EDGE, the same expression
       the oracle's unrolled CTEs evaluate.
     """
-    return _rank_chain(edges, F.lit(1.0), F.lit(1.0 - damping), damping, iters, round_to)
+    return _rank_chain(edges, F.lit(1.0), F.lit(1.0 - damping), damping, iters)
 
 
 def personalized_pagerank(
@@ -201,7 +200,6 @@ def personalized_pagerank(
     seeds: list[str],
     damping: float = 0.85,
     iters: int = 3,
-    round_to: int = 6,
 ) -> DataFrame:
     """Personalized PageRank: teleport mass lands ONLY on ``seeds``
     (r' = (1-d)·1[seed] + d·Σ r/outdeg; r0 = the teleport vector), so
@@ -219,17 +217,17 @@ def personalized_pagerank(
     is_seed = F.col("node").isin(*seeds)
     r0 = F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0))
     teleport = F.when(is_seed, F.lit(1.0 - damping)).otherwise(F.lit(0.0))
-    return _rank_chain(edges, r0, teleport, damping, iters, round_to)
+    return _rank_chain(edges, r0, teleport, damping, iters)
 
 
 def _rank_chain(
-    edges: DataFrame, r0: Column, teleport: Column, damping: float, iters: int, round_to: int
+    edges: DataFrame, r0: Column, teleport: Column, damping: float, iters: int
 ) -> DataFrame:
     """The PageRank iteration both variants share: ranks start at
     ``r0`` and each round sets r' = teleport + d·Σ r/outdeg (both
     columns are expressions over ``node``), rounded every round. The
     scale design is documented on :func:`pagerank`."""
-    from ..functions.rounding import dround
+    from ..functions.rounding import SCORE_DIGITS, dround
 
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -263,7 +261,7 @@ def _rank_chain(
             "node",
             dround(
                 teleport + F.lit(damping) * F.coalesce("inflow", F.lit(0.0)),
-                round_to,
+                SCORE_DIGITS,
             ).alias("rank"),
         )
         if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:

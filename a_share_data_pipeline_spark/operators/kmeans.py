@@ -24,18 +24,10 @@ cannot flip an assignment. Empty clusters drop out (both sides).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _round_half_away(x: float, n: int = 6) -> float:
-    """DuckDB ROUND semantics (binary half-away-from-zero) on a double."""
-    s = 10.0**n
-    if x < 0:
-        return -(math.floor((-x) * s + 0.5) / s)
-    return math.floor(x * s + 0.5) / s
+from ..functions.rounding import SCORE_DIGITS, dround, dround_py
 
 
 def assign_clusters(
@@ -54,7 +46,6 @@ def assign_clusters(
     fold body, and that compile time dominates each Lloyd round at
     bench scale.
     """
-    from ..functions.rounding import dround
     from .common import const_array2d
 
     # k×d per-element literal nodes tax driver-side analysis/codegen
@@ -68,7 +59,7 @@ def assign_clusters(
         sq = F.zip_with(v, c, lambda x, y: (x - y) * (x - y))
         d = F.aggregate(sq, F.lit(0.0), lambda acc, s: acc + s)
         return F.struct(
-            dround(d, 6).alias("d"),
+            dround(d, SCORE_DIGITS).alias("d"),
             F.element_at(cid_arr, (i + F.lit(1)).cast("int")).alias("c"),
         )
 
@@ -98,7 +89,7 @@ def update_centroids(
     )
     by_cluster: dict[int, dict[int, float]] = {}
     for r in rows:
-        by_cluster.setdefault(r["cluster"], {})[r["pos"]] = _round_half_away(r["m"])
+        by_cluster.setdefault(r["cluster"], {})[r["pos"]] = dround_py(r["m"], SCORE_DIGITS)
     return sorted(
         (cid, [dims[p] for p in sorted(dims)]) for cid, dims in by_cluster.items()
     )
@@ -116,7 +107,7 @@ def init_centroids(
         .limit(k)
         .collect()
     )
-    return [(i, [_round_half_away(x) for x in r["v"]]) for i, r in enumerate(rows)]
+    return [(i, [dround_py(x, SCORE_DIGITS) for x in r["v"]]) for i, r in enumerate(rows)]
 
 
 def kmeans_assignments(

@@ -19,7 +19,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.hashing import LSH_PLANES, lsh_planes
-from ..functions.rounding import dround
+from ..functions.rounding import SCORE_DIGITS, dround, dround_py
 from ..session import pin
 
 # banded sign-LSH shape for embedding near-dup candidate generation:
@@ -55,7 +55,7 @@ def cosine(a: Column | str, b: Column | str) -> Column:
 
 
 def brute_force_topk(
-    vectors: DataFrame, queries: DataFrame, k: int = 5, round_to: int = 6
+    vectors: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
     """Exact cosine top-k. `vectors`: (c_id, cv); `queries`: (q_id, qv).
 
@@ -72,7 +72,7 @@ def brute_force_topk(
     scored = pairs.select(
         "q_id",
         "c_id",
-        dround(dot("qv", "cv") / (F.col("qn") * F.col("cn")), round_to).alias("cos"),
+        dround(dot("qv", "cv") / (F.col("qn") * F.col("cn")), SCORE_DIGITS).alias("cos"),
     )
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
@@ -107,7 +107,6 @@ def ivf_assign(
     id_col: str = "c_id",
     vec_col: str = "cv",
     nprobe: int = 1,
-    round_to: int = 6,
 ) -> DataFrame:
     """IVF coarse quantization: attach the `nprobe` nearest centroid
     cells to each vector (nprobe=1 ≡ cell assignment).
@@ -118,7 +117,7 @@ def ivf_assign(
     id as tiebreak so assignment is engine-independent (the DuckDB
     oracle reproduces it exactly)."""
     scored = vectors.crossJoin(F.broadcast(centroids)).withColumn(
-        "__sim", dround(dot(vec_col, "ce"), round_to)
+        "__sim", dround(dot(vec_col, "ce"), SCORE_DIGITS)
     )
     w = W.partitionBy(id_col).orderBy(F.col("__sim").desc(), F.col("cell"))
     return (
@@ -134,24 +133,23 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 3,
     nprobe: int = 2,
-    round_to: int = 6,
 ) -> DataFrame:
     """IVF ANN: vectors are bucketed by nearest centroid ONCE (at scale:
     precomputed at write time and stored as a partition/cluster column);
     each query probes its `nprobe` nearest cells and runs exact cosine
     only against those cells' members — the inverted-file analog of the
     sign-LSH path, with recall tuned by nprobe instead of plane count."""
-    va = ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1, round_to=round_to).withColumn(
+    va = ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1).withColumn(
         "cn", norm("cv")
     )
-    qa = ivf_assign(queries, centroids, "q_id", "qv", nprobe=nprobe, round_to=round_to).withColumn(
+    qa = ivf_assign(queries, centroids, "q_id", "qv", nprobe=nprobe).withColumn(
         "qn", norm("qv")
     )
     pairs = va.join(F.broadcast(qa), "cell").filter(F.col("c_id") != F.col("q_id"))
     scored = pairs.select(
         "q_id",
         "c_id",
-        dround(dot("qv", "cv") / (F.col("qn") * F.col("cn")), round_to).alias("cos"),
+        dround(dot("qv", "cv") / (F.col("qn") * F.col("cn")), SCORE_DIGITS).alias("cos"),
     )
     # no dedup needed: each candidate lives in exactly ONE cell
     # (nprobe=1 assignment), so a (q_id, c_id) pair matches at most once
@@ -167,12 +165,12 @@ def l2sq(a: Column | str, b: Column | str) -> Column:
     )
 
 
-def _fixed_point(c: Column, round_to: int) -> Column:
-    """Round to `round_to` decimals then scale to an INTEGER — partial
+def _fixed_point(c: Column) -> Column:
+    """Round to SCORE_DIGITS decimals then scale to an INTEGER — partial
     distances become longs, so the cross-partition SUM is exact integer
     arithmetic and can never drift with aggregation order (what lets
     the DuckDB oracle reproduce ADC distances bit-for-bit)."""
-    return F.round(dround(c, round_to) * F.lit(float(10**round_to)), 0).cast("long")
+    return F.round(dround(c, SCORE_DIGITS) * F.lit(float(10**SCORE_DIGITS)), 0).cast("long")
 
 
 def pq_codebooks(
@@ -183,7 +181,6 @@ def pq_codebooks(
     k: int = 16,
     d: int = 64,
     refine_iters: int = 0,
-    round_to: int = 6,
 ) -> DataFrame:
     """PQ codebooks: subspace `mi`'s codes start as the `mi`-th
     subvectors of the first `k` vectors by id (the same deterministic-
@@ -192,7 +189,7 @@ def pq_codebooks(
     (vector, subspace) to its nearest code and ONE (m, code, dim)-keyed
     partial-aggregated shuffle computes the new means (all m subspaces
     train in the same two jobs; per-round driver collect is m·k·d_sub
-    doubles, independent of table size). Means round to `round_to`
+    doubles, independent of table size). Means round to SCORE_DIGITS
     decimals so the trained codebook is as engine-deterministic as the
     init. Output: (m, code, sub) — m·k rows, tiny at any scale →
     broadcast."""
@@ -211,12 +208,6 @@ def pq_codebooks(
     ).select("m", "code", "sub")
     if not refine_iters:
         return cb
-    import math
-
-    def _round6(x: float) -> float:
-        s = 10.0**round_to
-        return -(math.floor((-x) * s + 0.5) / s) if x < 0 else math.floor(x * s + 0.5) / s
-
     spark = vectors.sparkSession
     sub = vectors.select(
         id_col,
@@ -232,7 +223,7 @@ def pq_codebooks(
         prev: dict[tuple[int, int], list[float]] = {
             (r["m"], r["code"]): list(r["sub"]) for r in cb.collect()
         }
-        enc = pq_encode(vectors, cb, id_col, vec_col, m=m, d=d, round_to=round_to)
+        enc = pq_encode(vectors, cb, id_col, vec_col, m=m, d=d)
         rows = (
             enc.join(sub, [id_col, "m"])
             .select("m", "code", F.posexplode("vsub").alias("pos", "x"))
@@ -242,7 +233,8 @@ def pq_codebooks(
         )
         by_mc: dict[tuple[int, int], dict[int, float]] = {}
         for r in rows:
-            by_mc.setdefault((r["m"], r["code"]), {})[r["pos"]] = _round6(r["mean"])
+            mean = dround_py(r["mean"], SCORE_DIGITS)
+            by_mc.setdefault((r["m"], r["code"]), {})[r["pos"]] = mean
         data = [
             (
                 mi,
@@ -264,7 +256,6 @@ def pq_encode(
     vec_col: str = "cv",
     m: int = 8,
     d: int = 64,
-    round_to: int = 6,
 ) -> DataFrame:
     """PQ encoding: per vector and subspace, the nearest code (rounded
     L2, code id tiebreak). Map-only against the broadcast codebook —
@@ -278,7 +269,7 @@ def pq_encode(
         ).alias("m", "vsub"),
     )
     scored = sub.join(F.broadcast(codebook), "m").withColumn(
-        "__d", _fixed_point(l2sq("vsub", "sub"), round_to)
+        "__d", _fixed_point(l2sq("vsub", "sub"))
     )
     w = W.partitionBy(id_col, "m").orderBy("__d", "code")
     return (
@@ -295,7 +286,6 @@ def pq_adc_topk(
     m: int = 8,
     n_codes: int = 16,
     d: int = 64,
-    round_to: int = 6,
     refine_iters: int = 0,
 ) -> DataFrame:
     """PQ ANN via asymmetric distance computation: candidates live as
@@ -313,7 +303,7 @@ def pq_adc_topk(
     codebook = pq_codebooks(
         vectors, "c_id", "cv", m=m, k=n_codes, d=d, refine_iters=refine_iters
     )
-    encoded = pq_encode(vectors, codebook, "c_id", "cv", m=m, d=d, round_to=round_to)
+    encoded = pq_encode(vectors, codebook, "c_id", "cv", m=m, d=d)
     qsub = queries.select(
         "q_id",
         F.posexplode(
@@ -321,7 +311,7 @@ def pq_adc_topk(
         ).alias("m", "qsub"),
     )
     dtable = qsub.join(F.broadcast(codebook), "m").select(
-        "q_id", "m", "code", _fixed_point(l2sq("qsub", "sub"), round_to).alias("pd")
+        "q_id", "m", "code", _fixed_point(l2sq("qsub", "sub")).alias("pd")
     )
     scored = (
         encoded.join(F.broadcast(dtable), ["m", "code"])
@@ -336,7 +326,9 @@ def pq_adc_topk(
         .select(
             "q_id",
             "c_id",
-            dround(F.col("__adist") / F.lit(float(10**round_to)), round_to).alias("adist"),
+            dround(F.col("__adist") / F.lit(float(10**SCORE_DIGITS)), SCORE_DIGITS).alias(
+                "adist"
+            ),
             "rnk",
         )
     )
@@ -351,7 +343,6 @@ def ivf_pq_topk(
     n_codes: int = 16,
     d: int = 64,
     nprobe: int = 2,
-    round_to: int = 6,
     refine_iters: int = 0,
 ) -> DataFrame:
     """IVF-PQ: the production billion-vector shape — IVF restricts
@@ -369,14 +360,14 @@ def ivf_pq_topk(
     codebook = pq_codebooks(
         vectors, "c_id", "cv", m=m, k=n_codes, d=d, refine_iters=refine_iters
     )
-    cells = ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1, round_to=round_to).select(
+    cells = ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1).select(
         "c_id", "cell"
     )
-    encoded = pq_encode(vectors, codebook, "c_id", "cv", m=m, d=d, round_to=round_to).join(
+    encoded = pq_encode(vectors, codebook, "c_id", "cv", m=m, d=d).join(
         cells, "c_id"
     )
     qcells = ivf_assign(
-        queries, centroids, "q_id", "qv", nprobe=nprobe, round_to=round_to
+        queries, centroids, "q_id", "qv", nprobe=nprobe
     ).select("q_id", "cell")
     qsub = queries.select(
         "q_id",
@@ -386,7 +377,7 @@ def ivf_pq_topk(
     )
     dtable = (
         qsub.join(F.broadcast(codebook), "m")
-        .select("q_id", "m", "code", _fixed_point(l2sq("qsub", "sub"), round_to).alias("pd"))
+        .select("q_id", "m", "code", _fixed_point(l2sq("qsub", "sub")).alias("pd"))
         .join(F.broadcast(qcells), "q_id")  # one dtable row set per probed cell
     )
     scored = (
@@ -402,7 +393,9 @@ def ivf_pq_topk(
         .select(
             "q_id",
             "c_id",
-            dround(F.col("__adist") / F.lit(float(10**round_to)), round_to).alias("adist"),
+            dround(F.col("__adist") / F.lit(float(10**SCORE_DIGITS)), SCORE_DIGITS).alias(
+                "adist"
+            ),
             "rnk",
         )
     )
@@ -450,7 +443,7 @@ def banded_lsh_pairs(
     return _bucket_pairs(buckets, id_col, max_bucket=max_bucket).distinct()
 
 
-def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 3, round_to: int = 6) -> DataFrame:
+def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
     """ANN: exact cosine restricted to same-LSH-bucket candidates.
     Norms precomputed per side (see brute_force_topk)."""
     vb = vectors.withColumn("bucket", lsh_bucket("cv")).withColumn("cn", norm("cv"))
@@ -459,7 +452,7 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 3, round_to: int =
     scored = pairs.select(
         "q_id",
         "c_id",
-        dround(dot("qv", "cv") / (F.col("qn") * F.col("cn")), round_to).alias("cos"),
+        dround(dot("qv", "cv") / (F.col("qn") * F.col("cn")), SCORE_DIGITS).alias("cos"),
     )
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
@@ -505,7 +498,6 @@ def rp_rerank_topk(
     queries: DataFrame,
     coarse_m: int = 10,
     k: int = 3,
-    round_to: int = 6,
 ) -> DataFrame:
     """Coarse-then-exact top-k: rank ALL candidates by cosine in the
     RP_DIM projected space (cheap scan), keep the coarse_m best per
@@ -540,7 +532,9 @@ def rp_rerank_topk(
         .select(
             "q_id",
             "c_id",
-            dround(dot("qr", "cr") / (F.col("qrn") * F.col("crn")), round_to).alias("ccos"),
+            dround(dot("qr", "cr") / (F.col("qrn") * F.col("crn")), SCORE_DIGITS).alias(
+                "ccos"
+            ),
         )
     )
     cw = W.partitionBy("q_id").orderBy(F.col("ccos").desc(), F.col("c_id"))
@@ -557,7 +551,7 @@ def rp_rerank_topk(
         .select(
             "q_id",
             "c_id",
-            dround(dot("qv", "cv") / (F.col("qn") * norm("cv")), round_to).alias("cos"),
+            dround(dot("qv", "cv") / (F.col("qn") * norm("cv")), SCORE_DIGITS).alias("cos"),
         )
     )
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))

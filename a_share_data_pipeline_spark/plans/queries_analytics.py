@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.rounding import dround
+from ..functions.rounding import dround, iln
 from ..operators import dedup as D
 from ..session import pin, scratch_dir
 from ..sources import load_table
@@ -4580,9 +4580,6 @@ FROM cls
 def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer")
 
-    def iln8(col: F.Column) -> F.Column:
-        return dround(F.log(col) * 100000000, 0).cast("bigint")
-
     cells = cust.groupBy(
         "c_nationkey",
         "c_mktsegment",
@@ -4592,9 +4589,9 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cs").cast("bigint").alias("n"),
         F.count(F.lit(1)).cast("bigint").alias("distinct_l"),
         F.max("cs").cast("bigint").alias("r1"),
-        F.sum(F.col("cs") * iln8(F.col("cs"))).cast("bigint").alias("slnl"),
+        F.sum(F.col("cs") * iln(F.col("cs"))).cast("bigint").alias("slnl"),
     )
-    hs = F.col("n") * iln8(F.col("n")) - F.col("slnl")
+    hs = F.col("n") * iln(F.col("n")) - F.col("slnl")
     return cls.select(
         "c_nationkey",
         "c_mktsegment",
@@ -4904,13 +4901,14 @@ def dp_laplace_noise_1e8(df: DataFrame, cell: str, eps: int = _DP_EPS) -> DataFr
             F.lit(4294967296) - F.abs(F.lit(2) * hv - F.lit(4294967296)), F.lit(1)
         ),
     )
-    return staged.withColumn(
-        "noise_1e8",
-        F.expr(
-            f"(__dp_sgn * ({_DP_ILN_2_32} - "
-            f"CAST(round(ln(__dp_m) * 100000000, 0) AS BIGINT))) div {eps}"
-        ),
-    ).drop("__dp_sgn", "__dp_m")
+    return (
+        staged.withColumn("__dp_iln", iln("__dp_m"))
+        .withColumn(
+            "noise_1e8",
+            F.expr(f"(__dp_sgn * ({_DP_ILN_2_32} - __dp_iln)) div {eps}"),
+        )
+        .drop("__dp_sgn", "__dp_m", "__dp_iln")
+    )
 
 
 def dp_release_counts(noised: DataFrame, count_col: str = "true_n") -> DataFrame:
@@ -5170,13 +5168,7 @@ def events_survival_greenwood(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_risk",
         F.when((F.col("d") == 0) | (F.col("d") == F.col("n_risk")), F.lit(0))
         .otherwise(
-            dround(
-                F.log(
-                    (F.col("n_risk") - F.col("d")) * F.lit(1.0) / F.col("n_risk")
-                )
-                * 100000000,
-                0,
-            ).cast("bigint")
+            iln((F.col("n_risk") - F.col("d")) * F.lit(1.0) / F.col("n_risk"))
         )
         .alias("lfac"),
         F.when(F.col("d") == F.col("n_risk"), F.lit(0.0))

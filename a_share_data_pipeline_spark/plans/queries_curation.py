@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..operators import curation as CU
 from ..operators import text as TX
-from ..functions.rounding import dround
+from ..functions.rounding import dround, iln
 from ..operators.text import LANG_MARKERS
 from ..session import pin
 from ..sources import load_table
@@ -1040,16 +1040,13 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("cr").cast("bigint").alias("r_tot"),
     )
 
-    def iln8(col: F.Column) -> F.Column:
-        return dround(F.log(col) * 100000000, 0).cast("bigint")
-
     w = btab.crossJoin(F.broadcast(tot)).select(
         "bucket",
         (
-            iln8(F.col("ct") + 1)
-            - iln8(F.col("t_tot") + _DSIR_BUCKETS)
-            - iln8(F.col("cr") + 1)
-            + iln8(F.col("r_tot") + _DSIR_BUCKETS)
+            iln(F.col("ct") + 1)
+            - iln(F.col("t_tot") + _DSIR_BUCKETS)
+            - iln(F.col("cr") + 1)
+            + iln(F.col("r_tot") + _DSIR_BUCKETS)
         ).alias("wgt"),
     )
     scored = (

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.rounding import dround
+from ..functions.rounding import dround, iln
 from ..session import pin
 from ..sources import load_table
 from .catalog import register
@@ -593,9 +593,6 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail = cnt.groupBy("wb").agg(F.sum("c_ab").alias("tb"))
     tot = cnt.agg(F.sum("c_ab").alias("nb"))
 
-    def iln8(col: "F.Column") -> "F.Column":
-        return dround(F.log(col) * 100000000, 0).cast("bigint")
-
     return (
         cnt.filter(F.col("c_ab") >= _PMI_MIN_COUNT)
         .join(F.broadcast(head), "wa")
@@ -610,8 +607,8 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("nb").cast("bigint").alias("n_bigrams"),
             dround(
                 (
-                    iln8(F.col("c_ab") * F.col("nb"))
-                    - iln8(F.col("ha") * F.col("tb"))
+                    iln(F.col("c_ab") * F.col("nb"))
+                    - iln(F.col("ha") * F.col("tb"))
                 )
                 / F.lit(100000000.0),
                 6,

@@ -20,7 +20,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.ordering import ORDKEY_SQL, ordkey
-from ..functions.rounding import dround
+from ..functions.rounding import dround, iln
 from ..session import pin
 from ..sources import load_table
 from .catalog import register
@@ -1105,9 +1105,6 @@ def events_volatility_gk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("l") > 0) & (F.col("o") > 0))
     )
 
-    def iln(col: F.Column) -> F.Column:
-        return dround(F.log(col) * 100000000, 0).cast("bigint")
-
     lns = bars.select(
         "event_type",
         (iln(F.col("h")) - iln(F.col("l"))).alias("d_hl"),
@@ -1674,9 +1671,9 @@ FROM v
 def events_variance_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir).filter(F.col("close_c") > 0)
     wo = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
+    ln_c = iln("close_c")
     ret = daily.select(
-        "event_type", "day", (iln - F.lag(iln).over(wo)).alias("r")
+        "event_type", "day", (ln_c - F.lag(ln_c).over(wo)).alias("r")
     ).filter(F.col("r").isNotNull())
     wv = wo.rowsBetween(-(_VR_K - 1), 0)
     rk = ret.select(
@@ -1811,12 +1808,12 @@ FROM pivoted WHERE rs7 > 0 AND rs28 > 0
 def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir).filter(F.col("close_c") > 0)
     wo = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
+    ln_c = iln("close_c")
     ret = (
         daily.select(
             "event_type",
             "day",
-            (iln - F.lag(iln).over(wo)).alias("r"),
+            (ln_c - F.lag(ln_c).over(wo)).alias("r"),
             F.row_number().over(wo).alias("rn"),
         )
         .filter(F.col("r").isNotNull())
@@ -1889,7 +1886,6 @@ def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("n") == 28, F.col("rs_avg"))).alias("rs28_raw"),
         F.sum("b").cast("bigint").alias("n_blocks"),
     )
-    y = lambda c: dround(F.log(c) * 100000000, 0).cast("bigint")  # noqa: E731
     return pivoted.filter((F.col("rs7_raw") > 0) & (F.col("rs28_raw") > 0)).select(
         "event_type",
         "n_blocks",
@@ -1897,7 +1893,7 @@ def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
         dround(F.col("rs14_raw"), 6).alias("rs14"),
         dround(F.col("rs28_raw"), 6).alias("rs28"),
         dround(
-            (y(F.col("rs28_raw")) - y(F.col("rs7_raw"))).cast("double")
+            (iln(F.col("rs28_raw")) - iln(F.col("rs7_raw"))).cast("double")
             / F.lit(_HURST_DEN),
             6,
         ).alias("hurst"),
@@ -1973,10 +1969,10 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day)
 def events_ewma_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir).filter(F.col("close_c") > 0)
     wo = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
+    ln_c = iln("close_c")
     r2s = (
         daily.select(
-            "event_type", "day", (iln - F.lag(iln).over(wo)).alias("r")
+            "event_type", "day", (ln_c - F.lag(ln_c).over(wo)).alias("r")
         )
         .filter(F.col("r").isNotNull())
         .select(
@@ -2194,9 +2190,9 @@ def events_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("close_c") > 0)
     )
     wo = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
+    ln_c = iln("close_c")
     ret = daily2.select(
-        "event_type", "dv_c", (iln - F.lag(iln).over(wo)).alias("r")
+        "event_type", "dv_c", (ln_c - F.lag(ln_c).over(wo)).alias("r")
     ).filter(F.col("r").isNotNull() & (F.col("dv_c") > 0))
     ratio = ret.select(
         "event_type",
@@ -2277,8 +2273,8 @@ FROM fd WHERE oldest IS NOT NULL
 def events_frac_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir).filter(F.col("close_c") > 0)
     wo = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
-    lns = daily.select("event_type", "day", iln.alias("x"))
+    ln_c = iln("close_c")
+    lns = daily.select("event_type", "day", ln_c.alias("x"))
     fd = None
     for k, wk in enumerate(_fd_weights()):
         term = F.lag("x", k).over(wo).cast("double") * F.lit(wk)
@@ -2401,9 +2397,9 @@ def events_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("close_c") > 0)
     )
     wd = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
+    ln_c = iln("close_c")
     ret = daily2.select(
-        "event_type", "q", (iln - F.lag(iln).over(wd)).alias("r")
+        "event_type", "q", (ln_c - F.lag(ln_c).over(wd)).alias("r")
     ).filter(F.col("r").isNotNull())
     d38 = "decimal(38,0)"
     s = ret.groupBy("event_type").agg(
@@ -2494,9 +2490,9 @@ WHERE n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
 def events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir).filter(F.col("close_c") > 0)
     wo = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
+    ln_c = iln("close_c")
     ret = daily.select(
-        "event_type", "day", (iln - F.lag(iln).over(wo)).alias("r")
+        "event_type", "day", (ln_c - F.lag(ln_c).over(wo)).alias("r")
     ).filter(F.col("r").isNotNull())
     v = ret.filter(F.col("event_type") == "view").select("day", F.col("r").alias("rv"))
     p = ret.filter(F.col("event_type") == "purchase").select(
@@ -2682,9 +2678,9 @@ FROM s WHERE c + d + tx > 0 AND c + d + ty > 0
 def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = _daily_close(spark, sf_dir).filter(F.col("close_c") > 0)
     wo = W.partitionBy("event_type").orderBy("day")
-    iln = dround(F.log("close_c") * 100000000, 0).cast("bigint")
+    ln_c = iln("close_c")
     ret = daily.select(
-        "event_type", "day", (iln - F.lag(iln).over(wo)).alias("r")
+        "event_type", "day", (ln_c - F.lag(ln_c).over(wo)).alias("r")
     ).filter(F.col("r").isNotNull())
     v = ret.filter(F.col("event_type") == "view").select("day", F.col("r").alias("x"))
     p = ret.filter(F.col("event_type") == "purchase").select(

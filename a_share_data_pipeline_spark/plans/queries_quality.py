@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.rounding import dround
+from ..functions.rounding import dround, iln
 from ..session import pin
 from ..sources import load_table
 from .catalog import register
@@ -238,7 +238,6 @@ SELECT (SELECT COUNT(*) FROM truthj) AS n_truth,
     ),
 )
 def dedup_lsh_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.hashing import MINHASH_BAND_SIZE, MINHASH_SEEDS  # noqa: F401
     from ..operators import dedup as D
     from .queries_llm import _JACCARD_MAX_BUCKET
 
@@ -365,9 +364,6 @@ def profile_information_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = long.groupBy("feature", "bin", "label").agg(
         F.count(F.lit(1)).alias("c")
     )
-
-    def iln(col: "F.Column") -> "F.Column":
-        return dround(F.log(col) * 100000000, 0).cast("bigint")
 
     binc = cell.groupBy("feature", "bin").agg(
         F.sum("c").alias("nb"),
@@ -1444,9 +1440,6 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def iln5(col: "F.Column") -> "F.Column":
-        return dround(F.log(col) * 100000, 0).cast("bigint")
-
     tot = rev.agg(
         F.sum("x").alias("s"),
         F.count(F.lit(1)).alias("n"),
@@ -1459,7 +1452,7 @@ def agg_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         "s",
         "iln_mu",
-        (F.col("x") * (iln5(F.col("x")) - F.col("iln_mu"))).alias("tx"),
+        (F.col("x") * (iln(F.col("x"), 5) - F.col("iln_mu"))).alias("tx"),
     )
     grp = terms.groupBy("n_name").agg(
         F.sum("x").alias("sg"),
@@ -2466,20 +2459,17 @@ def text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = cnt.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
 
-    def iln8(col: "F.Column") -> "F.Column":
-        return dround(F.log(col) * 100000000, 0).cast("bigint")
-
-    mix = iln8(F.col("ca") * F.col("nb") + F.col("cb") * F.col("na"))
+    mix = iln(F.col("ca") * F.col("nb") + F.col("cb") * F.col("na"))
     terms = cnt.crossJoin(F.broadcast(tot)).select(
         F.when(
             F.col("ca") > 0,
-            F.col("ca") * (iln8(F.lit(2.0) * F.col("ca") * F.col("nb")) - mix),
+            F.col("ca") * (iln(F.lit(2.0) * F.col("ca") * F.col("nb")) - mix),
         )
         .otherwise(0)
         .alias("ta"),
         F.when(
             F.col("cb") > 0,
-            F.col("cb") * (iln8(F.lit(2.0) * F.col("cb") * F.col("na")) - mix),
+            F.col("cb") * (iln(F.lit(2.0) * F.col("cb") * F.col("na")) - mix),
         )
         .otherwise(0)
         .alias("tb"),

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.rounding import dround
+from ..functions.rounding import dround, iln
 from ..sources import load_table
 from .catalog import register
 
@@ -414,7 +414,6 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = tf.select("freq", F.row_number().over(wr).alias("rnk")).filter(
         F.col("rnk") <= _ZIPF_K
     )
-    iln = lambda c: dround(F.log(c) * _ZIPF_SCALE, 0).cast("bigint")  # noqa: E731
     pts = ranked.select(iln(F.col("rnk")).alias("x"), iln(F.col("freq")).alias("y"))
     c19 = lambda c: F.col(c).cast("decimal(19,0)")  # noqa: E731
     s = pts.agg(

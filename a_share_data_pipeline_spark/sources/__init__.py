@@ -1,3 +1,3 @@
-from .readers import load_table, load_tables, register_views
+from .readers import load_table
 
-__all__ = ["load_table", "load_tables", "register_views"]
+__all__ = ["load_table"]

@@ -13,8 +13,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ..schemas import TESTDATA_TABLES
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one driver testdata table. Parquet scan → Catalyst pushes
@@ -56,16 +54,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # events.ts as yet another physical type
             raise ValueError(f"unexpected events.ts dtype {ts_type}")
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for the SQL surface."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType, **options) -> DataFrame:

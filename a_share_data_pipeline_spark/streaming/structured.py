@@ -42,12 +42,11 @@ def read_file_stream(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """File-source stream over a landing directory — the streaming
-    analog of the reference's 'new CSV appeared' model."""
-    reader = spark.readStream.format(fmt).schema(schema)
+    """Parquet file-source stream over a landing directory — the
+    streaming analog of the reference's 'new CSV appeared' model."""
+    reader = spark.readStream.format("parquet").schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
@@ -123,7 +122,7 @@ RUNNING_STATE_SCHEMA = "n_events bigint, sum_value double"
 RUNNING_OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
 
 
-def running_totals_stateful(events: DataFrame, timeout_ms: int | None = None) -> DataFrame:
+def running_totals_stateful(events: DataFrame) -> DataFrame:
     """Custom stateful operator (§2.10 UDF surface): per-user running
     totals via applyInPandasWithState — the arbitrary-state API the
     reference's watermark file is a degenerate form of.

@@ -72,8 +72,6 @@ REPRESENTATIVES = [
     "graph_label_propagation",  # iterative semi-supervised labeling
     "feature_pca_power",      # integer-grid Gram + power iteration
     "geo_grid_knn",           # 9-cell spatial probe join
-    # (dedup_jaccard_prefix moved INTO the r10 window — its series
-    # continues on the headline record as a CORE_WINDOW name)
     "dedup_content_chunking", # positional-explode CDC chunker
     "stats_permutation_test", # ×100 md5-resample fan-out
     "rec_user_topn",          # user-key pair expansion (item CF)
@@ -169,8 +167,8 @@ def _canary_scan(spark, sf_dir):
 # run FIRST and LAST around the main loop; min of 2 reps each side
 CANARIES = {"iter": _canary_iter, "scan": _canary_scan}
 
-# The previous (round-6) 87-query headline minus the new frozen set:
-# still benchable, separately recorded, never on the driver record.
+# Benchable queries off the headline: separately recorded in
+# BENCH_DETAIL_EXTENDED.json, never on the driver record.
 EXTENDED = [
     "agg_pricing_summary",
     "join_top_orders",
@@ -191,22 +189,15 @@ EXTENDED = [
     "curation_pack_sequences",
     "sample_stratified",
     "profile_expectations",
-    # (events_funnel / events_retention / join_bloom_prune moved INTO
-    # the r9 window — their series continue on the headline record)
     "text_winnow_fingerprint",
     "dedup_winnow_pairs",
     "profile_skew_report",
-    # (sql_recursive_cte moved INTO the r11 window — its series
-    # continues on the headline record)
     "json_variant",
     "events_ema",
     "agg_quantile_sketch",
     "events_kdj",
     "graph_bfs_hops",
     "dedup_containment",
-    # (events_attribution / profile_distribution_drift moved INTO the
-    # r10 window, events_multires_rollup INTO the r12 window — their
-    # series continue on the headline record)
     "skyline_pareto",
     "graph_sssp_weighted",
     "stats_bootstrap_ci",
@@ -214,50 +205,34 @@ EXTENDED = [
     "events_window_funnel",
     "graph_kcore",
     "dedup_lsh_quality",
-    # round-7 heavy newcomers (extended tier; never on the driver record)
-    # (cdc_time_travel and geo_dbscan_grid moved INTO the r8 window)
     "graph_clustering_coeff",
-    # r8 rotation: the five rotated-out window names keep their
-    # round-over-round series here (driver-green history stands)
     "dedup_keep_canonical",
     "sim_cosine_topk",
     "dedup_incremental",
     "curation_pii_redact",
     "json_extract",
-    # r8 wave newcomers with non-trivial cost shapes (start their
-    # series now; the cheap sub-2s wave rows stay off the record)
-    # (stream_scd2_apply moved INTO the r11 window — its series
-    # continues on the headline record)
     "graph_closeness_sampled",
     "curation_dsir_importance",
-    # (source_txn_log_snapshot moved INTO the r10 window — its series
-    # continues on the headline record)
-    # r9 rotation: the five rotated-out window names keep their
-    # round-over-round series here (driver-green history stands)
     "agg_approx_distinct",
     "join_full_outer",
     "events_tumbling",
     "udf_pandas_scalar",
     "sql_in_subquery",
-    # r10 rotation: ditto for the five r10 rotated-out names
     "cdc_apply",
     "rollup_incremental",
     "scalar_string",
     "source_jsonl",
     "layout_zorder",
-    # r11 rotation: ditto for the five r11 rotated-out names
     "stats_benjamini_hochberg",
     "curation_model_filter",
     "agg_moments_merge",
     "cdc_time_travel",
     "events_macd",
-    # r12 rotation: ditto for the five r12 rotated-out names
     "join_range",
     "agg_grouping_sets",
     "set_ops",
     "dedup_exact",
     "events_retention",
-    # r13 rotation: ditto for the five r13 rotated-out names
     "stream_stream_join",
     "events_funnel",
     "profile_distribution_drift",

@@ -1493,6 +1493,103 @@ def test_tick_order_key_built_only_in_ordering_py():
     assert owner and rel == owner[0] == "functions/ordering.py" and line in owner[1], (sites, owner)
 
 
+def test_integer_ln_built_only_in_rounding_py():
+    """``functions/rounding.iln`` is the package's one Spark-side
+    integer-ln grid and ``dround_py`` its one driver-side rounder.
+    Outside ``functions/rounding.py`` no ``dround(F.log(x) * 10^k, 0)``
+    is built (a difference of logs rounded once, as in
+    ``agg_theil_decomposition``, is a different expression), no
+    ``F.expr`` string rounds an ``ln(``, no ``math.floor(… + 0.5)``
+    rounds on the driver, and no operator takes ``round_to``."""
+    import ast
+    import re
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    def is_call(node, attr):
+        return isinstance(node, ast.Call) and getattr(node.func, "attr", None) == attr
+
+    def log_times_scale(arg):
+        return any(
+            isinstance(n, ast.BinOp)
+            and isinstance(n.op, ast.Mult)
+            and (is_call(n.left, "log") or is_call(n.right, "log"))
+            for n in ast.walk(arg)
+        )
+
+    root = Path(pkg.__file__).parent
+    sites, owners = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.FunctionDef) and node.name == "iln":
+                owners.append(rel)
+            if rel == "functions/rounding.py" or not isinstance(node, ast.Call):
+                continue
+            text = ast.unparse(node)
+            if (
+                getattr(node.func, "id", None) == "dround"
+                and text.endswith(", 0)")
+                and log_times_scale(node.args[0])
+            ) or (
+                is_call(node, "expr") and re.search(r"round\s*\(\s*ln\s*\(", text, re.I)
+            ) or re.fullmatch(r"math\.floor\(.* \+ 0\.5\)", text):
+                sites.append((rel, node.lineno, text[:60]))
+        if rel.startswith("operators/") and "round_to" in src:
+            sites.append((rel, 0, "round_to"))
+    assert (owners, sites) == (["functions/rounding.py"], [])
+
+
+_ROUND_CASES = [
+    (2.5, 0),
+    (-2.5, 0),
+    (1.0000005, 6),
+    (-1.0000005, 6),
+    (152741.235, 2),
+    (-152741.235, 2),
+    (1.005, 2),
+    (0.125, 2),
+    (0.1234565, 6),
+    (-0.0000005, 6),
+]
+
+
+@pytest.mark.parametrize("x, n", _ROUND_CASES)
+def test_grid_rounders_match_duckdb(spark, x, n):
+    """The driver-side ``dround_py`` (k-means centroids, PQ codebooks)
+    equals Spark-side ``dround`` and DuckDB ``ROUND(x, n)`` bit for bit
+    on ties and their neighbours (152741.235 is where Spark's own
+    ``round`` differs), and for x > 0 ``iln(x, digits)`` equals
+    DuckDB's ``CAST(ROUND(LN(x) * 10^digits, 0) AS BIGINT)`` on both
+    grids."""
+    import duckdb
+
+    from a_share_data_pipeline_spark.functions.rounding import dround, dround_py, iln
+
+    con = duckdb.connect()
+    try:
+        duck_round = con.execute(f"SELECT ROUND(?::DOUBLE, {n})", [x]).fetchone()[0]
+        duck_iln = (
+            con.execute(
+                "SELECT CAST(ROUND(LN(?::DOUBLE) * 10^8, 0) AS BIGINT),"
+                " CAST(ROUND(LN(?::DOUBLE) * 10^5, 0) AS BIGINT)",
+                [x, x],
+            ).fetchone()
+            if x > 0
+            else (None, None)
+        )
+    finally:
+        con.close()
+    df = spark.createDataFrame([(x,)], "x double")
+    row = df.select(
+        dround("x", n).alias("r"), iln("x", 8).alias("l8"), iln("x", 5).alias("l5")
+    ).first()
+    assert repr(dround_py(x, n)) == repr(row["r"]) == repr(duck_round), (x, n)
+    assert (row["l8"], row["l5"]) == duck_iln, (x, row)
+
+
 def test_pin_counts_rows_and_restores_job_description(spark, monkeypatch):
     """``pin`` observes its metrics on the pin's own job (0 rows for a
     0-partition frame and for a filter-to-empty one), names the job

@@ -23,10 +23,6 @@ import pytest
 import sweep
 from a_share_data_pipeline_spark.plans.catalog import registry
 
-# Round-14 tiering (VERDICT r13 item 2): replay-lane adjudication re-runs recursive oracles + union-find per query — slow tier,
-# excluded from the default driver-gate run (see pytest.ini).
-pytestmark = pytest.mark.slow
-
 REPLAY_NAMES = sorted(sweep.REPLAY)
 
 
@@ -47,6 +43,8 @@ def _spark_rows(spark, sf, name):
     return [c.lower() for c in df.columns], [tuple(r) for r in df.collect()]
 
 
+# slow tier: re-runs the recursive oracle and the union-find per query
+@pytest.mark.slow
 @pytest.mark.parametrize("name", REPLAY_NAMES)
 def test_replay_matches_spark_and_direct_oracle(spark, sf_smoke, duck, name):
     scols, srows = _spark_rows(spark, sf_smoke, name)
@@ -62,6 +60,8 @@ def test_replay_matches_spark_and_direct_oracle(spark, sf_smoke, duck, name):
     assert ok2, f"replay lane disagrees with the direct oracle for {name}"
 
 
+# slow tier: re-runs the recursive oracle and the union-find per query
+@pytest.mark.slow
 @pytest.mark.parametrize("name", REPLAY_NAMES)
 def test_replay_compare_is_load_bearing(spark, sf_smoke, duck, name):
     scols, srows = _spark_rows(spark, sf_smoke, name)
