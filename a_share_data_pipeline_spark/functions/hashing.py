@@ -23,7 +23,7 @@ LSH_DIM = 64  # embedding dimensionality in testdata
 LSH_N_PLANES = 8
 
 
-def lsh_planes(dim: int = LSH_DIM, n_planes: int = LSH_N_PLANES) -> list[list[float]]:
+def lsh_planes(n_planes: int = LSH_N_PLANES) -> list[list[float]]:
     """Deterministic pseudo-random hyperplanes in [-1, 1).
 
     Pure integer congruence (Knuth multiplicative constants) then an
@@ -32,7 +32,7 @@ def lsh_planes(dim: int = LSH_DIM, n_planes: int = LSH_N_PLANES) -> list[list[fl
     into the Spark plan and the SQL text from this single function.
     """
     return [
-        [(((i * 2654435761 + j * 40503 + 12345) % 2000) / 1000.0) - 1.0 for i in range(dim)]
+        [(((i * 2654435761 + j * 40503 + 12345) % 2000) / 1000.0) - 1.0 for i in range(LSH_DIM)]
         for j in range(n_planes)
     ]
 

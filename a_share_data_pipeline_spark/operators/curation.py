@@ -43,6 +43,8 @@ MIN_STOP_HITS = 1
 TOP_WORD_FRAC_MAX = 0.20  # most frequent word may cover <= 20% of doc
 DUP_BIGRAM_FRAC_MAX = 0.50  # bigrams occurring 2+ times may cover <= 50%
 
+DECON_N = 5  # decontamination matches on shared word 5-grams
+
 
 def _word_grams(text_col: str, n: int) -> Column:
     """NON-distinct word n-grams (repetition needs multiplicities).
@@ -65,32 +67,32 @@ def _word_grams(text_col: str, n: int) -> Column:
     )
 
 
-def repetition_signals(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def repetition_signals(df: DataFrame) -> DataFrame:
     """Per-doc repetition metrics: fraction of the doc covered by its
     most frequent word, and fraction covered by bigrams that occur more
     than once — the Gopher repetition-removal signals."""
-    df = _spread(df, id_col)
-    words = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("g"))
-    wc = words.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c"))
-    word_sig = wc.groupBy(id_col).agg(
+    df = _spread(df, "doc_id")
+    words = df.select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("g"))
+    wc = words.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
+    word_sig = wc.groupBy("doc_id").agg(
         F.sum("c").alias("n_words"),
         (F.max("c") / F.sum("c")).alias("top_word_frac"),
     )
-    bigrams = df.select(id_col, F.explode(_word_grams(text_col, 2)).alias("g"))
-    bc = bigrams.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c"))
-    bigram_sig = bc.groupBy(id_col).agg(
+    bigrams = df.select("doc_id", F.explode(_word_grams("text", 2)).alias("g"))
+    bc = bigrams.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
+    bigram_sig = bc.groupBy("doc_id").agg(
         (
             F.sum(F.when(F.col("c") > 1, F.col("c")).otherwise(F.lit(0))) / F.sum("c")
         ).alias("dup_bigram_frac")
     )
-    out = word_sig.join(bigram_sig, id_col, "left")
+    out = word_sig.join(bigram_sig, "doc_id", "left")
     # threshold the ROUNDED fractions — the emitted columns and the
     # DuckDB oracle both carry ROUND(...,6), so gating on the raw values
     # could contradict them for a doc landing within 5e-7 of a threshold
     top_r = dround("top_word_frac", 6)
     dup_r = dround(F.coalesce("dup_bigram_frac", F.lit(0.0)), 6)
     return out.select(
-        id_col,
+        "doc_id",
         "n_words",
         top_r.alias("top_word_frac"),
         dup_r.alias("dup_bigram_frac"),
@@ -100,17 +102,17 @@ def repetition_signals(df: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def quality_gates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_gates(df: DataFrame) -> DataFrame:
     """Gopher-style composite quality gate — every signal a per-row
     expression (map-only, zero shuffle): word-count bounds, mean word
     length bounds, symbol ratio, minimum stopword hits."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n_words = F.size(toks)
-    nonspace = F.length(F.replace(F.col(text_col), F.lit(" "), F.lit("")))
+    nonspace = F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
     mean_wl = nonspace / n_words
-    symbols = F.regexp_count(F.col(text_col), F.lit("[^a-zA-Z0-9 ]"))
-    symbol_ratio = symbols / F.length(F.col(text_col))
-    stop_hits = marker_count(text_col, LANG_MARKERS["en"])
+    symbols = F.regexp_count(F.col("text"), F.lit("[^a-zA-Z0-9 ]"))
+    symbol_ratio = symbols / F.length(F.col("text"))
+    stop_hits = marker_count("text", LANG_MARKERS["en"])
     gates = {
         "gate_word_count": (n_words >= MIN_WORDS) & (n_words <= MAX_WORDS),
         "gate_word_len": (mean_wl >= MIN_MEAN_WORD_LEN) & (mean_wl <= MAX_MEAN_WORD_LEN),
@@ -121,7 +123,7 @@ def quality_gates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     for g in gates.values():
         keep = g if keep is None else keep & g
     return df.select(
-        id_col,
+        "doc_id",
         n_words.cast("long").alias("n_words"),
         dround(mean_wl, 4).alias("mean_word_len"),
         dround(symbol_ratio, 6).alias("symbol_ratio"),
@@ -131,15 +133,9 @@ def quality_gates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    n: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def decontaminate(corpus: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus docs sharing any word
-    n-gram with the benchmark (eval-set) docs.
+    DECON_N-gram with the benchmark (eval-set) docs.
 
     The benchmark's distinct gram set is broadcast (eval sets are MBs
     vs TB corpora); the corpus side stays a distinct-gram explode +
@@ -148,10 +144,10 @@ def decontaminate(
     from .dedup import word_shingles_col
 
     bench_grams = (
-        benchmark.select(F.explode(word_shingles_col(text_col, n)).alias("g")).distinct()
+        benchmark.select(F.explode(word_shingles_col(DECON_N)).alias("g")).distinct()
     )
-    corpus_grams = _spread(corpus, id_col).select(
-        id_col, F.explode(word_shingles_col(text_col, n)).alias("g")
+    corpus_grams = _spread(corpus, "doc_id").select(
+        "doc_id", F.explode(word_shingles_col(DECON_N)).alias("g")
     )
     # the gram set feeds BOTH the per-doc totals and the hit join —
     # materialize it once instead of re-running the explode lineage
@@ -162,16 +158,16 @@ def decontaminate(
     # unpersist() that no caller of a lazily-returned plan can safely
     # place.
     corpus_grams = corpus_grams.localCheckpoint(eager=False)
-    per_doc = corpus_grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
+    per_doc = corpus_grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     hits = (
         corpus_grams.join(F.broadcast(bench_grams), "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
     return (
-        hits.join(per_doc, id_col)
+        hits.join(per_doc, "doc_id")
         .select(
-            id_col,
+            "doc_id",
             "n_hits",
             "n_grams",
             dround(F.col("n_hits") / F.col("n_grams"), 6).alias("hit_frac"),
@@ -179,35 +175,29 @@ def decontaminate(
     )
 
 
-def pack_sequences(
-    df: DataFrame,
-    context_len: int,
-    shard_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Concat-and-chunk sequence packing: within each shard, documents
-    are laid out in id order and the token stream is cut into
+def pack_sequences(df: DataFrame, context_len: int) -> DataFrame:
+    """Concat-and-chunk sequence packing: within each shard (`source`),
+    documents are laid out in `doc_id` order and the token stream is cut into
     `context_len`-token windows. Emits each doc's start offset, the
     window (bin) it starts in, and whether it straddles a boundary.
 
     One window exchange on the shard key; everything after the cumsum
     is arithmetic. Per-shard (not global) ordering is the scale form —
     a global ORDER BY would serialize the corpus through one task."""
-    n_tokens = F.size(F.split(F.col(text_col), " "))
-    w = W.partitionBy(shard_col).orderBy(id_col).rowsBetween(W.unboundedPreceding, -1)
+    n_tokens = F.size(F.split(F.col("text"), " "))
+    w = W.partitionBy("source").orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
     start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
-    out = df.select(shard_col, id_col, n_tokens.alias("n_tokens")).select(
-        shard_col,
-        id_col,
+    out = df.select("source", "doc_id", n_tokens.alias("n_tokens")).select(
+        "source",
+        "doc_id",
         "n_tokens",
         start.alias("start_tok"),
     )
     bin_id = F.floor(F.col("start_tok") / context_len)
     end_bin = F.floor((F.col("start_tok") + F.col("n_tokens") - 1) / context_len)
     return out.select(
-        shard_col,
-        id_col,
+        "source",
+        "doc_id",
         "n_tokens",
         "start_tok",
         bin_id.cast("long").alias("bin_id"),
@@ -226,7 +216,7 @@ PII_PATTERNS: tuple[tuple[str, str, str], ...] = (
 )
 
 
-def redact_pii(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """PII scrubbing — the curation step every published pipeline runs
     before training: emails, IPv4 addresses, and international phone
     numbers replaced with typed placeholder tokens.
@@ -235,8 +225,8 @@ def redact_pii(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     codegen); each pattern's hit count is taken on the text state it
     actually sees (sequential semantics: the email pass runs first, so
     an address inside an email never double-counts as a phone)."""
-    cols = [F.col(c) for c in df.columns if c != text_col]
-    red = F.col(text_col)
+    cols = [F.col(c) for c in df.columns if c != "text"]
+    red = F.col("text")
     counts = []
     for name, pat, token in PII_PATTERNS:
         counts.append(F.regexp_count(red, F.lit(pat)).cast("long").alias(f"n_{name}"))
@@ -244,13 +234,7 @@ def redact_pii(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     return df.select(*cols, *counts, red.alias("text_redacted"))
 
 
-def chunk_documents(
-    df: DataFrame,
-    chunk_len: int = 64,
-    overlap: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_documents(df: DataFrame, chunk_len: int = 64, overlap: int = 16) -> DataFrame:
     """Sliding-window document chunking with overlap — the RAG /
     long-context prep step (pack_sequences cuts a concatenated token
     stream at hard boundaries; this keeps each doc intact and emits
@@ -263,7 +247,7 @@ def chunk_documents(
     explode-parallelism repartition, so at 100 TB chunking rides the
     same scan as the rest of the per-doc pipeline."""
     stride = chunk_len - overlap
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     # ceil((n - overlap) / stride), floored at 1 — double division is
     # exact for any realistic token count (integers < 2^52)
@@ -271,15 +255,15 @@ def chunk_documents(
         F.lit(1).cast("long"),
         F.floor((n - overlap + stride - 1) / F.lit(float(stride))),
     )
-    fanned = _spread(df, id_col).select(
-        id_col,
+    fanned = _spread(df, "doc_id").select(
+        "doc_id",
         toks.alias("__toks"),
         n.alias("__n"),
         F.explode(F.sequence(F.lit(0).cast("long"), n_chunks - 1)).alias("chunk_idx"),
     )
     start = F.col("chunk_idx") * stride
     return fanned.select(
-        id_col,
+        "doc_id",
         F.col("chunk_idx").cast("long").alias("chunk_idx"),
         start.cast("long").alias("start_tok"),
         F.least(F.lit(chunk_len).cast("long"), F.col("__n") - start).alias("n_chunk_tokens"),
@@ -287,13 +271,7 @@ def chunk_documents(
     )
 
 
-def dedup_lines(
-    df: DataFrame,
-    seg_tokens: int = 16,
-    min_count: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_lines(df: DataFrame, seg_tokens: int = 16, min_count: int = 3) -> DataFrame:
     """Corpus-level line dedup (the C4 / RefinedWeb boilerplate-removal
     step): split every document into lines, drop each line that occurs
     ``min_count``+ times ACROSS the corpus (navigation chrome, cookie
@@ -310,17 +288,17 @@ def dedup_lines(
     the segments; reassembly is ONE per-doc aggregation of (idx, seg)
     structs — array_sort + filter + concat_ws, no window."""
     stride = seg_tokens
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     n_segs = F.greatest(
         F.lit(1).cast("long"), F.floor((n + stride - 1) / F.lit(float(stride)))
     )
-    segs = _spread(df, id_col).select(
-        id_col,
+    segs = _spread(df, "doc_id").select(
+        "doc_id",
         toks.alias("__toks"),
         F.explode(F.sequence(F.lit(0).cast("long"), n_segs - 1)).alias("seg_idx"),
     ).select(
-        id_col,
+        "doc_id",
         "seg_idx",
         F.concat_ws(
             " ", F.slice("__toks", (F.col("seg_idx") * stride + 1).cast("int"), stride)
@@ -333,7 +311,7 @@ def dedup_lines(
         .select("fp", F.lit(True).alias("__hot"))
     )
     flagged = segs.join(F.broadcast(hot), "fp", "left").select(
-        id_col,
+        "doc_id",
         "seg_idx",
         "seg",
         F.coalesce("__hot", F.lit(False)).alias("is_hot"),
@@ -341,7 +319,7 @@ def dedup_lines(
     rows = F.array_sort(
         F.collect_list(F.struct("seg_idx", "seg", "is_hot"))
     )
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_lines"),
         F.sum(F.col("is_hot").cast("long")).alias("n_removed"),
         F.concat_ws(
@@ -358,21 +336,20 @@ def mixture_rates(
     weights: dict[str, float],
     default_weight: float,
     budget_docs: Column,
-    group_col: str = "source",
 ) -> DataFrame:
     """Per-group keep-rates that shape a corpus toward a target mixture:
     group g with weight w_g receives rate = min(1, budget·w_g / n_g).
 
-    `counts` is the tiny per-group count frame (one partial-aggregated
+    `counts` is the tiny per-group (`source`, n) count frame (one partial-aggregated
     shuffle over a handful of keys); the returned frame is rates-only —
     broadcast it against the corpus and filter with a deterministic
     hash fraction for a map-only, RNG-free downsample. Rates round to
     9 decimals so an oracle engine reproduces the comparison exactly."""
     w = F.lit(float(default_weight))
     for g, wg in weights.items():
-        w = F.when(F.col(group_col) == g, F.lit(float(wg))).otherwise(w)
+        w = F.when(F.col("source") == g, F.lit(float(wg))).otherwise(w)
     rate = F.least(F.lit(1.0), dround(budget_docs * w / F.col("n"), 9))
-    return counts.select(group_col, rate.alias("keep_rate"))
+    return counts.select("source", rate.alias("keep_rate"))
 
 
 COMPRESSION_SCHEMA = "doc_id long, n_bytes long, comp_bytes long, comp_ratio double"

@@ -30,8 +30,15 @@ from .common import spread as _spread
 
 _LOG = logging.getLogger(__name__)
 
+# Substring dedup: SUBSTR_WIN-token windows, every SUBSTR_STRIDE tokens
+# for the stats (disjoint for removal); a window is duplicated when it
+# occurs in SUBSTR_MIN_DOCS or more distinct documents.
+SUBSTR_WIN = 16
+SUBSTR_STRIDE = 8
+SUBSTR_MIN_DOCS = 2
 
-def word_shingles_col(text_col: str = "text", n: int = 3) -> "F.Column":
+
+def word_shingles_col(n: int = 3) -> "F.Column":
     """`array<string>` of distinct word n-grams as a Column expression.
 
     The token array is LET-BOUND through a single-element transform so
@@ -50,14 +57,12 @@ def word_shingles_col(text_col: str = "text", n: int = 3) -> "F.Column":
         ).otherwise(F.array().cast("array<string>"))
 
     return F.element_at(
-        F.transform(F.array(F.split(F.col(text_col), " ")), build), 1
+        F.transform(F.array(F.split(F.col("text"), " ")), build), 1
     )
 
 
-def exploded_shingles(
-    df: DataFrame, id_col: str = "doc_id", spread: bool = True
-) -> DataFrame:
-    """(id, shingle) pairs, distinct per doc.
+def exploded_shingles(df: DataFrame, spread: bool = True) -> DataFrame:
+    """(doc_id, shingle) pairs, distinct per doc.
 
     Repartitions the input first (common.spread): document tables often
     arrive in a handful of file splits, and the explode fans out
@@ -69,18 +74,16 @@ def exploded_shingles(
     anyway.
     """
     if spread:
-        df = _spread(df, id_col)
+        df = _spread(df, "doc_id")
     # explode the EXPRESSION, not a withColumn alias: exploding a named
     # column makes Catalyst infer `size(c)>0 AND c IS NOT NULL`,
     # substitute the full shingle expression into it, and push that
     # below the exchange — evaluating the array construction 3× per
     # row on the pre-repartition (often single) partition
-    return df.select(id_col, F.explode(word_shingles_col()).alias("shingle"))
+    return df.select("doc_id", F.explode(word_shingles_col()).alias("shingle"))
 
 
-def minhash_signatures(
-    shingled: DataFrame, id_col: str = "doc_id", with_counts: bool = False
-) -> DataFrame:
+def minhash_signatures(shingled: DataFrame, with_counts: bool = False) -> DataFrame:
     """k min-hashes per doc: h_i = min(md5(i || '|' || shingle)) over the
     HEX STRING order — a uniform permutation family reproducible in SQL.
 
@@ -93,7 +96,7 @@ def minhash_signatures(
     ]
     if with_counts:
         aggs.append(F.count(F.lit(1)).alias("n_sh"))
-    return shingled.groupBy(id_col).agg(*aggs)
+    return shingled.groupBy("doc_id").agg(*aggs)
 
 
 def _drop_hot_buckets(df: DataFrame, size: "F.Column", max_bucket: int, unit: str) -> DataFrame:
@@ -155,8 +158,8 @@ def _bucket_pairs(
     )
 
 
-def band_buckets(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(id, bucket) rows: one bucket per LSH band, via a single
+def band_buckets(signatures: DataFrame) -> DataFrame:
+    """(doc_id, bucket) rows: one bucket per LSH band, via a single
     posexplode of the band-hash array (a union-per-band shape would
     make Catalyst execute the upstream aggregation once per band)."""
     n_bands = len(MINHASH_SEEDS) // MINHASH_BAND_SIZE
@@ -168,22 +171,19 @@ def band_buckets(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
         for b in range(n_bands)
     ]
     return signatures.select(
-        F.col(id_col), F.posexplode(F.array(*band_cols)).alias("band", "band_hash")
-    ).select(id_col, F.concat_ws("#", F.col("band"), F.col("band_hash")).alias("bucket"))
+        F.col("doc_id"), F.posexplode(F.array(*band_cols)).alias("band", "band_hash")
+    ).select("doc_id", F.concat_ws("#", F.col("band"), F.col("band_hash")).alias("bucket"))
 
 
-def lsh_band_candidates(
-    signatures: DataFrame, id_col: str = "doc_id", max_bucket: int | None = None
-) -> DataFrame:
+def lsh_band_candidates(signatures: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """Candidate pairs (a < b) sharing any band bucket — one pass over
     the signatures, then bucket-pair expansion."""
-    return _bucket_pairs(band_buckets(signatures, id_col), id_col, max_bucket=max_bucket).distinct()
+    return _bucket_pairs(band_buckets(signatures), "doc_id", max_bucket=max_bucket).distinct()
 
 
 def lsh_incremental_candidates(
     bands: DataFrame,
     new_bands: DataFrame,
-    id_col: str = "doc_id",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Incremental-corpus candidates: pairs sharing a band bucket where
@@ -220,13 +220,13 @@ def lsh_incremental_candidates(
             max_bucket,
             "row(s) of hot band buckets touched by this batch",
         ).drop("__bn")
-    n = new_bands.select(F.col(id_col).alias("__n_id"), "bucket")
+    n = new_bands.select(F.col("doc_id").alias("__n_id"), "bucket")
     pairs = (
         bands.join(F.broadcast(n), "bucket")
-        .filter(F.col("__n_id") != F.col(id_col))
+        .filter(F.col("__n_id") != F.col("doc_id"))
         .select(
-            F.least("__n_id", id_col).alias("a"),
-            F.greatest("__n_id", id_col).alias("b"),
+            F.least("__n_id", "doc_id").alias("a"),
+            F.greatest("__n_id", "doc_id").alias("b"),
         )
     )
     return pairs.distinct()
@@ -279,9 +279,10 @@ def pair_overlap(
 ) -> DataFrame:
     """(a, b, n_inter, n_a, n_b) per doc pair sharing >= ``min_overlap``
     shingles — the shared core every set-resemblance measure divides
-    from (:func:`pair_jaccard` and :func:`pair_containment` are thin
-    ratio selections over this output). Every pair sharing a shingle is
-    considered; candidate pairs are verified by :func:`verify_pairs`.
+    from (:func:`pair_jaccard` is a thin ratio selection over this
+    output; containment callers pick their directional ratio from it).
+    Every pair sharing a shingle is considered; candidate pairs are
+    verified by :func:`verify_pairs`.
 
     `counts` (doc_id, n_sh) can be supplied by a caller that already
     aggregated the shingle set (minhash_signatures with_counts=True).
@@ -334,53 +335,29 @@ def pair_jaccard(
     )
 
 
-def pair_containment(
-    shingled: DataFrame, min_overlap: int = 1, max_bucket: int | None = None
-) -> DataFrame:
-    """Asymmetric shingle CONTAINMENT per doc pair: |A∩B| relative to
-    each side's own shingle-set size — the excerpt/quote/sub-document
-    signal Jaccard dilutes away (a short doc fully contained in a long
-    one has containment 1.0 on its side but near-zero Jaccard, so a
-    Jaccard threshold never finds it; Broder 1997 separates the two
-    resemblance measures for exactly this reason).
-
-    Thin selection over :func:`pair_overlap` — same bucketed single-
-    aggregation pair expansion and hot-bucket cap, returning
-    (a, b, n_inter, n_a, n_b) so the caller picks the directional
-    ratio(s) it needs."""
-    return pair_overlap(shingled, min_overlap=min_overlap, max_bucket=max_bucket)
-
-
-def substring_dup_stats(
-    df: DataFrame,
-    win_tokens: int = 16,
-    stride: int = 8,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def substring_dup_stats(df: DataFrame) -> DataFrame:
     """Substring-level duplication stats (the suffix-array exact-
     substring dedup of Lee et al., approximated with rolling windows):
-    fingerprint every ``win_tokens``-token window at ``stride`` offsets,
+    fingerprint every SUBSTR_WIN-token window at SUBSTR_STRIDE offsets,
     and count per doc how many of its windows also occur in >=
-    ``min_docs`` - 1 OTHER documents — the cross-document duplicated-
+    SUBSTR_MIN_DOCS - 1 OTHER documents — the cross-document duplicated-
     span signal line dedup misses when boilerplate is not segment-
     aligned. Only FULL windows fingerprint (a 3-token tail is not a
     16-token substring); docs shorter than the window report 0 windows.
 
-    Scale shape: window explode fans out n/stride per doc (shuffles on
-    md5 keys); the duplicated-fingerprint set is distinct-doc-counted
+    Scale shape: window explode fans out n/SUBSTR_STRIDE per doc
+    (shuffles on md5 keys); the duplicated-fingerprint set is distinct-doc-counted
     in one partial-aggregated groupBy and broadcasts back (duplicated
     text is small vs the corpus); per-doc rollup is one aggregation."""
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     n_wins = F.when(
-        n >= win_tokens,
-        F.floor((n - win_tokens) / F.lit(float(stride))).cast("long") + 1,
+        n >= SUBSTR_WIN,
+        F.floor((n - SUBSTR_WIN) / F.lit(float(SUBSTR_STRIDE))).cast("long") + 1,
     ).otherwise(F.lit(0).cast("long"))
-    base = _spread(df.select(F.col(id_col), toks.alias("__toks"), n_wins.alias("__w")), id_col)
+    base = _spread(df.select(F.col("doc_id"), toks.alias("__toks"), n_wins.alias("__w")), "doc_id")
     wins = base.select(
-        id_col,
+        "doc_id",
         F.explode(
             F.when(
                 F.col("__w") > 0,
@@ -389,22 +366,23 @@ def substring_dup_stats(
         ).alias("wi"),
         F.col("__toks"),
     ).select(
-        id_col,
+        "doc_id",
         F.md5(
             F.concat_ws(
-                " ", F.slice("__toks", (F.col("wi") * stride + 1).cast("int"), win_tokens)
+                " ",
+                F.slice("__toks", (F.col("wi") * SUBSTR_STRIDE + 1).cast("int"), SUBSTR_WIN),
             )
         ).alias("fp"),
     )
     hot = (
         wins.groupBy("fp")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .agg(F.count_distinct(F.col("doc_id")).alias("nd"))
+        .filter(F.col("nd") >= SUBSTR_MIN_DOCS)
         .select("fp", F.lit(True).alias("__hot"))
     )
     per = (
         wins.join(F.broadcast(hot), "fp", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_windows"),
             F.sum(F.coalesce(F.col("__hot"), F.lit(False)).cast("long")).alias("n_dup"),
@@ -413,10 +391,10 @@ def substring_dup_stats(
     from ..functions.rounding import dround
 
     return (
-        df.select(id_col)
-        .join(per, id_col, "left")
+        df.select("doc_id")
+        .join(per, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_windows", F.lit(0)).cast("long").alias("n_windows"),
             F.coalesce("n_dup", F.lit(0)).cast("long").alias("n_dup"),
             dround(
@@ -429,24 +407,18 @@ def substring_dup_stats(
     )
 
 
-def remove_dup_substrings(
-    df: DataFrame,
-    win_tokens: int = 16,
-    min_docs: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def remove_dup_substrings(df: DataFrame) -> DataFrame:
     """Span REMOVAL companion to ``substring_dup_stats`` — the actual
     Lee et al. exact-substring dedup outcome: cut each doc into
-    DISJOINT ``win_tokens``-token windows (tail remainder kept as a
+    DISJOINT SUBSTR_WIN-token windows (tail remainder kept as a
     short final window), drop every window whose fingerprint occurs in
-    >= ``min_docs`` DISTINCT documents, and reassemble the survivors in
+    >= SUBSTR_MIN_DOCS DISTINCT documents, and reassemble the survivors in
     order. Stats use overlapping windows (stride < win) for detection
     sensitivity; removal uses disjoint windows so dropping one
     duplicated span never deletes tokens a neighboring clean span still
     owns, and a fully-clean doc reassembles byte-identical.
 
-    Only FULL ``win_tokens``-token windows are removal candidates: a
+    Only FULL SUBSTR_WIN-token windows are removal candidates: a
     short tail window is a handful of tokens that collides across
     unrelated documents by chance (measured on the synthetic corpus),
     which is why Lee et al. impose a minimum duplicated-span length —
@@ -458,22 +430,22 @@ def remove_dup_substrings(
     text — MBs vs a TB corpus) and broadcasts back; reassembly is ONE
     per-doc aggregation of (idx, seg) structs — array_sort + filter +
     concat_ws, no window function."""
-    stride = win_tokens
-    toks = F.split(F.col(text_col), " ")
+    stride = SUBSTR_WIN
+    toks = F.split(F.col("text"), " ")
     n = F.size(toks)
     n_wins = F.greatest(
         F.lit(1).cast("long"), F.floor((n + stride - 1) / F.lit(float(stride)))
     )
     wins = (
-        _spread(df, id_col)
+        _spread(df, "doc_id")
         .select(
-            id_col,
+            "doc_id",
             toks.alias("__toks"),
             n.alias("__n"),
             F.explode(F.sequence(F.lit(0).cast("long"), n_wins - 1)).alias("wi"),
         )
         .select(
-            id_col,
+            "doc_id",
             "wi",
             (F.col("wi") * stride + stride <= F.col("__n")).alias("is_full"),
             F.concat_ws(
@@ -488,15 +460,15 @@ def remove_dup_substrings(
     hot = (
         wins.filter("is_full")
         .groupBy("fp")
-        .agg(F.count_distinct(F.col(id_col)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
+        .agg(F.count_distinct(F.col("doc_id")).alias("nd"))
+        .filter(F.col("nd") >= SUBSTR_MIN_DOCS)
         .select("fp", F.lit(True).alias("__hot"))
     )
     flagged = wins.join(F.broadcast(hot), "fp", "left").select(
-        id_col, "wi", "seg", F.coalesce("__hot", F.lit(False)).alias("is_hot")
+        "doc_id", "wi", "seg", F.coalesce("__hot", F.lit(False)).alias("is_hot")
     )
     rows = F.array_sort(F.collect_list(F.struct("wi", "seg", "is_hot")))
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_windows"),
         F.sum(F.col("is_hot").cast("long")).alias("n_removed"),
         F.concat_ws(
@@ -506,7 +478,7 @@ def remove_dup_substrings(
     )
 
 
-def simhash16(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def simhash16(df: DataFrame) -> DataFrame:
     """16-bit SimHash over distinct tokens, md5-derived bits.
 
     bit_j(token) = bit (j%4) of hex digit (j//4) of md5(token); the
@@ -514,7 +486,7 @@ def simhash16(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     Pure integer expression tree → identical in Spark and DuckDB.
     """
     tok = df.select(
-        id_col, F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("w")
+        "doc_id", F.explode(F.array_distinct(F.split(F.col("text"), " "))).alias("w")
     ).withColumn("hx", F.md5(F.col("w")))
     # hex digit d (0-based) of the md5, as an int 0..15
     digit_val = lambda d: F.conv(F.substring("hx", 1 + d, 1), 16, 10).cast("int")  # noqa: E731
@@ -523,9 +495,9 @@ def simhash16(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
         d, b = j // 4, j % 4
         bit = F.shiftright(digit_val(d), b).bitwiseAND(F.lit(1))
         aggs.append(F.sum(bit * 2 - 1).alias(f"s{j}"))
-    sums = tok.groupBy(id_col).agg(*aggs)
+    sums = tok.groupBy("doc_id").agg(*aggs)
     simhash = None
     for j in range(16):
         term = F.when(F.col(f"s{j}") > 0, F.lit(2**j)).otherwise(F.lit(0))
         simhash = term if simhash is None else simhash + term
-    return sums.select(id_col, simhash.cast("long").alias("simhash"))
+    return sums.select("doc_id", simhash.cast("long").alias("simhash"))

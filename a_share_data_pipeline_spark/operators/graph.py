@@ -45,12 +45,24 @@ from pyspark.sql.types import StructField, StructType
 
 from ..session import pin
 
-# pagerank/personalized_pagerank: cut the single-use rank chain's
-# lineage every N unrolled rounds. Small fixed iteration counts (the
-# catalog's 3) pipeline as one checkpoint-free job; a caller-supplied
-# large ``iters`` no longer builds a join tower whose Catalyst
-# analysis cost grows superlinearly with depth.
+# sssp: cut the round chain's lineage every N unrolled rounds, so a
+# caller-supplied large ``max_rounds`` builds no join tower whose
+# Catalyst analysis cost grows superlinearly with depth.
 _CHECKPOINT_EVERY = 8
+
+# PageRank runs RANK_ITERS rounds at DAMPING. personalized_pagerank
+# damps by 6/7, not 0.85: PPR's early rounds are SPARSE — each rank is
+# an exact small rational (seed mass / outdeg products), and with
+# d = 17/20 those rationals terminate in decimal and can sit exactly
+# ON the ROUND(_,6) half-way grid, where 1-ulp noise flips the side
+# per engine (observed: one node at 0.0584375). A factor of 7 in the
+# damping denominator makes every weight product non-terminating —
+# the events_macd alpha argument applied to graph state.
+# label_propagation runs LPA_ITERS rounds.
+DAMPING = 0.85
+PPR_DAMPING = 6.0 / 7.0
+RANK_ITERS = 3
+LPA_ITERS = 3
 
 # connected_components: edges one kernel task labels. The task holds
 # its partition as NumPy arrays (the Arrow input, both id columns,
@@ -153,13 +165,9 @@ def _hash_min(stars: DataFrame) -> DataFrame:
             return labels
 
 
-def pagerank(
-    edges: DataFrame,
-    damping: float = 0.85,
-    iters: int = 3,
-) -> DataFrame:
-    """PageRank over a directed edge list (src, dst), fixed iteration
-    count, ranks rounded to ``SCORE_DIGITS`` decimals EVERY round.
+def pagerank(edges: DataFrame) -> DataFrame:
+    """PageRank over a directed edge list (src, dst), RANK_ITERS rounds
+    at DAMPING, ranks rounded to ``SCORE_DIGITS`` decimals EVERY round.
 
     The per-round rounding is part of the operator contract, not
     cosmetics: it re-synchronizes float state across engines (the
@@ -180,31 +188,22 @@ def pagerank(
       and because ranks_i feeds ranks_{i+1} exactly once, lineage is
       a simple chain: no recompute fan-out, no per-round checkpoint,
       the whole unrolled iteration runs as ONE job with full stage
-      pipelining. (A fixed small iteration count needs no
-      per-round checkpoint. For large ``iters`` the loop cuts lineage
-      every ``_CHECKPOINT_EVERY`` rounds — without the guard the unrolled
-      join tower's Catalyst analysis cost grows superlinearly with
-      caller-supplied ``iters``; with it, plan depth is bounded while
-      small-iters callers still pay zero checkpoints.)
+      pipelining (RANK_ITERS rounds need no per-round checkpoint).
     - the simple-citation formulation r' = (1-d) + d·Σ r/outdeg is
       used (no dangling-mass redistribution): sinks absorb rank,
       sources hold (1-d) — deterministic and oracle-matched; the
       contribution divides rank/outdeg PER EDGE, the same expression
       the oracle's unrolled CTEs evaluate.
     """
-    return _rank_chain(edges, F.lit(1.0), F.lit(1.0 - damping), damping, iters)
+    return _rank_chain(edges, F.lit(1.0), F.lit(1.0 - DAMPING), DAMPING)
 
 
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: list[str],
-    damping: float = 0.85,
-    iters: int = 3,
-) -> DataFrame:
+def personalized_pagerank(edges: DataFrame, seeds: list[str]) -> DataFrame:
     """Personalized PageRank: teleport mass lands ONLY on ``seeds``
-    (r' = (1-d)·1[seed] + d·Σ r/outdeg; r0 = the teleport vector), so
-    rank concentrates in the seeds' neighborhoods — the recommendation
-    / similarity-expansion variant of :func:`pagerank`. Unnormalized
+    (r' = (1-d)·1[seed] + d·Σ r/outdeg with d = PPR_DAMPING; r0 = the
+    teleport vector), so rank concentrates in the seeds' neighborhoods
+    — the recommendation / similarity-expansion variant of
+    :func:`pagerank`. Unnormalized
     teleport (1 per seed, not 1/|S|) — deterministic and mirrored in
     the oracle; relative ordering is unaffected.
 
@@ -216,15 +215,13 @@ def personalized_pagerank(
     """
     is_seed = F.col("node").isin(*seeds)
     r0 = F.when(is_seed, F.lit(1.0)).otherwise(F.lit(0.0))
-    teleport = F.when(is_seed, F.lit(1.0 - damping)).otherwise(F.lit(0.0))
-    return _rank_chain(edges, r0, teleport, damping, iters)
+    teleport = F.when(is_seed, F.lit(1.0 - PPR_DAMPING)).otherwise(F.lit(0.0))
+    return _rank_chain(edges, r0, teleport, PPR_DAMPING)
 
 
-def _rank_chain(
-    edges: DataFrame, r0: Column, teleport: Column, damping: float, iters: int
-) -> DataFrame:
+def _rank_chain(edges: DataFrame, r0: Column, teleport: Column, damping: float) -> DataFrame:
     """The PageRank iteration both variants share: ranks start at
-    ``r0`` and each round sets r' = teleport + d·Σ r/outdeg (both
+    ``r0`` and each of RANK_ITERS rounds sets r' = teleport + d·Σ r/outdeg (both
     columns are expressions over ``node``), rounded every round. The
     scale design is documented on :func:`pagerank`."""
     from ..functions.rounding import SCORE_DIGITS, dround
@@ -247,7 +244,7 @@ def _rank_chain(
         .select("src", "dst", "outdeg")
     )
     ranks = nodes_od.select("node", r0.alias("rank"))
-    for i in range(iters):
+    for _ in range(RANK_ITERS):
         inflow = (
             edges_w.join(ranks, edges_w["src"] == ranks["node"])
             .select(
@@ -264,8 +261,6 @@ def _rank_chain(
                 SCORE_DIGITS,
             ).alias("rank"),
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            ranks = pin(ranks)
     return ranks.select("node", "rank")
 
 
@@ -289,16 +284,14 @@ def _symmetrize(edges: DataFrame, dedup: bool = True) -> DataFrame:
     return pin(sym)
 
 
-def label_propagation(
-    edges: DataFrame, iters: int = 3, edges_dedup: bool = True
-) -> DataFrame:
+def label_propagation(edges: DataFrame, edges_dedup: bool = True) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007) over an UNDIRECTED edge list: every node starts with its
     own id as label; each round every node adopts the most frequent
     label among its neighbors, ties broken by the LARGEST label — a
     deterministic variant (classic LPA tie-breaks randomly; a random
     tie-break cannot be oracle-verified and is irreproducible across
-    cluster sizes). Fixed ``iters`` rounds, no convergence test, so
+    cluster sizes). Fixed LPA_ITERS rounds, no convergence test, so
     the unrolled plan matches the oracle's unrolled CTEs exactly.
 
     Node ids MUST be non-negative BIGINTs below 2**33 — at corpus
@@ -318,9 +311,8 @@ def label_propagation(
     Scale shape: each round is one O(E) join (labels onto edges) +
     one partial-aggregated count shuffle keyed on (node, label) +
     one hash-aggregated per-node max. Label state is a single-use
-    chain like pagerank's rank state — no per-round materialization,
-    lineage cut every _CHECKPOINT_EVERY rounds for large caller-
-    supplied ``iters``. Communities differ from connected_components:
+    chain like pagerank's rank state — no per-round materialization.
+    Communities differ from connected_components:
     CC merges everything reachable; LPA keeps densely-connected
     cores separate when a bridge node's neighbor majority points
     elsewhere."""
@@ -342,7 +334,7 @@ def label_propagation(
         .distinct()
         .select("node", F.col("node").alias("lbl"))
     )
-    for i in range(iters):
+    for _ in range(LPA_ITERS):
         nbr = sym.join(labels, sym["src"] == labels["node"]).select(
             F.col("dst").alias("node"), "lbl"
         )
@@ -360,8 +352,6 @@ def label_propagation(
             .agg(F.max(F.col("cnt") * shift + F.col("lbl")).alias("key"))
             .select("node", F.pmod(F.col("key"), shift).alias("lbl"))
         )
-        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
-            labels = pin(labels)
     return labels
 
 

@@ -29,14 +29,15 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import SCORE_DIGITS, dround, dround_py
 
+LLOYD_ROUNDS = 2  # Lloyd rounds before kmeans_assignments' final assignment
+
 
 def assign_clusters(
     vectors: DataFrame,
     centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, vec, cluster, rd): nearest centroid per row, map-only.
+    """(vec_id, vec, cluster, rd): nearest centroid per row, map-only.
 
     argmin via array_min over (rounded distance, cluster id) structs —
     deterministic under distance ties. The centroids enter as ONE 2-D
@@ -65,20 +66,18 @@ def assign_clusters(
 
     best = F.array_min(F.transform(cent_arr, score))
     v = vectors.select(
-        F.col(id_col),
+        F.col("vec_id"),
         F.col(vec_col).cast("array<double>").alias(vec_col),
     )
     return v.select(
-        id_col,
+        "vec_id",
         vec_col,
         best["c"].alias("cluster"),
         best["d"].alias("rd"),
     )
 
 
-def update_centroids(
-    assigned: DataFrame, vec_col: str = "embedding"
-) -> list[tuple[int, list[float]]]:
+def update_centroids(assigned: DataFrame, vec_col: str) -> list[tuple[int, list[float]]]:
     """New centroids = per-(cluster, dim) mean; one k*d-group shuffle,
     k*d-row collect. Rounded to 6 decimals (cross-engine stability)."""
     rows = (
@@ -96,36 +95,32 @@ def update_centroids(
 
 
 def init_centroids(
-    vectors: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
+    vectors: DataFrame,
+    k: int,
+    vec_col: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
     """Deterministic init: the k lowest-id vectors, cluster ids 0..k-1.
     (Production would use k-means|| — init choice is orthogonal to the
     distributed iteration structure being exercised here.)"""
     rows = (
-        vectors.select(id_col, F.col(vec_col).cast("array<double>").alias("v"))
-        .orderBy(id_col)
+        vectors.select("vec_id", F.col(vec_col).cast("array<double>").alias("v"))
+        .orderBy("vec_id")
         .limit(k)
         .collect()
     )
     return [(i, [dround_py(x, SCORE_DIGITS) for x in r["v"]]) for i, r in enumerate(rows)]
 
 
-def kmeans_assignments(
-    vectors: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Run `iters` Lloyd rounds then a final assignment; returns
-    (id, cluster, rd). Empty clusters drop out between rounds."""
+def kmeans_assignments(vectors: DataFrame, k: int = 8, vec_col: str = "embedding") -> DataFrame:
+    """Run LLOYD_ROUNDS Lloyd rounds then a final assignment; returns
+    (vec_id, cluster, rd). Empty clusters drop out between rounds."""
     # Each round re-scans the input. Measured at bench scale the scan
     # is NOT the cost (codegen compile of the k×d literal plans is), so
     # no persist here; at 100 TB wrap `vectors` in
     # .persist(StorageLevel.MEMORY_AND_DISK) at the call site — the
     # iteration structure is unchanged.
-    cents = init_centroids(vectors, k, id_col, vec_col)
-    for _ in range(iters):
-        assigned = assign_clusters(vectors, cents, id_col, vec_col)
+    cents = init_centroids(vectors, k, vec_col)
+    for _ in range(LLOYD_ROUNDS):
+        assigned = assign_clusters(vectors, cents, vec_col)
         cents = update_centroids(assigned, vec_col)
-    return assign_clusters(vectors, cents, id_col, vec_col).select(id_col, "cluster", "rd")
+    return assign_clusters(vectors, cents, vec_col).select("vec_id", "cluster", "rd")

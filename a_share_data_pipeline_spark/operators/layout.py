@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ZORDER_COL = "__zorder"
+ZORDER_BITS = 8  # Morton bits per column
+ZORDER_FILES = 16  # files zorder_write rewrites a table into
 
 
 def _input_file_bytes(df: DataFrame) -> int:
@@ -44,27 +46,28 @@ def _input_file_bytes(df: DataFrame) -> int:
     return total
 
 
-def zorder_key(df: DataFrame, cols: list[str], bits: int = 8) -> DataFrame:
+def zorder_key(df: DataFrame, cols: list[str]) -> DataFrame:
     """Attach the Morton key for `cols` (numeric; cast to double for
-    range scaling). `bits` per column; bits·len(cols) must fit a long.
+    range scaling). ZORDER_BITS per column; ZORDER_BITS·len(cols) must
+    fit a long.
 
     The min/max bounds come from one tiny aggregation job; at 100 TB
     use table-level statistics instead — only the literals change."""
-    if bits * len(cols) > 62:
-        raise ValueError("bits * len(cols) must fit in a signed long")
+    if ZORDER_BITS * len(cols) > 62:
+        raise ValueError("ZORDER_BITS * len(cols) must fit in a signed long")
     stats = df.agg(
         *[F.min(F.col(c).cast("double")).alias(f"mn_{j}") for j, c in enumerate(cols)],
         *[F.max(F.col(c).cast("double")).alias(f"mx_{j}") for j, c in enumerate(cols)],
     ).first()
     scaled: list[Column] = []
-    top = (1 << bits) - 1
+    top = (1 << ZORDER_BITS) - 1
     for j, c in enumerate(cols):
         mn, mx = stats[f"mn_{j}"], stats[f"mx_{j}"]
         rng = (mx - mn) if (mx is not None and mx > mn) else 1.0
-        b = F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(rng) * (1 << bits))
+        b = F.floor((F.col(c).cast("double") - F.lit(mn)) / F.lit(rng) * (1 << ZORDER_BITS))
         scaled.append(F.greatest(F.least(b, F.lit(top)), F.lit(0)).cast("long"))
     key: Column | None = None
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         for j, b in enumerate(scaled):
             bit = F.shiftright(b, i).bitwiseAND(F.lit(1))
             term = bit * F.lit(1 << (i * len(scaled) + j))
@@ -77,7 +80,6 @@ def compact_files(
     dst_path: str,
     target_bytes: int = 128 << 20,
     sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> int:
     """Small-file compaction (the lakehouse OPTIMIZE shape): rewrite a
     fragmented table as ceil(table_bytes / target_bytes) files.
@@ -107,26 +109,19 @@ def compact_files(
         out = df.repartitionByRange(n, F.col(sort_col)).sortWithinPartitions(sort_col)
     else:
         out = df.repartition(n)
-    out.write.mode(mode).parquet(dst_path)
+    out.write.mode("overwrite").parquet(dst_path)
     return n
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 8,
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Rewrite `df` as `n_files` z-clustered parquet files: range-
+def zorder_write(df: DataFrame, path: str, cols: list[str]) -> None:
+    """Rewrite `df` as ZORDER_FILES z-clustered parquet files: range-
     partition on the Morton key (contiguous key ranges per file), sort
     within each task, drop the key before writing."""
-    keyed = zorder_key(df, cols, bits)
+    keyed = zorder_key(df, cols)
     (
-        keyed.repartitionByRange(n_files, ZORDER_COL)
+        keyed.repartitionByRange(ZORDER_FILES, ZORDER_COL)
         .sortWithinPartitions(ZORDER_COL)
         .drop(ZORDER_COL)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )

@@ -25,6 +25,18 @@ from pyspark.sql import types as T
 if TYPE_CHECKING:
     import pandas as pd
 
+# Every lane reads `payload` keyed by `doc_id` (documents_as_binary's
+# shape) and emits `doc_id`. Frame geometry: up to MAX_FRAMES frames of
+# FRAME_BYTES at byte offsets 0, FRAME_STRIDE, …; the audio lane reads
+# back-to-back VAD_FRAME_BYTES frames; thumbnails are RESIZE_BYTES.
+FRAME_BYTES = 64
+FRAME_STRIDE = 256
+MAX_FRAMES = 4
+VAD_FRAME_BYTES = 256
+RESIZE_BYTES = 64
+VAD_THRESHOLD = 500_000  # frame energy Σ (b−128)² above which it is voiced
+SHOT_THRESHOLD = 1800  # frame-to-frame L1 distance above which a cut fires
+
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -50,17 +62,17 @@ def _fake_features(payload: bytes) -> tuple[int, str, int]:
     return len(payload), payload[:8].hex().upper(), len(payload) % 640
 
 
-def extract_features(binary_df: DataFrame, id_col: str = "doc_id", bin_col: str = "payload") -> DataFrame:
+def extract_features(binary_df: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over a binary column."""
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         for pdf in batches:
-            feats = [_fake_features(b) for b in pdf[bin_col]]
+            feats = [_fake_features(b) for b in pdf["payload"]]
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].astype("int64"),
+                    "doc_id": pdf["doc_id"].astype("int64"),
                     "n_bytes": [f[0] for f in feats],
                     "head_hex": [f[1] for f in feats],
                     "fake_width": [f[2] for f in feats],
@@ -88,17 +100,11 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def sample_frames(
-    binary_df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "payload",
-    frame_bytes: int = 64,
-    stride: int = 256,
-    max_frames: int = 4,
-) -> DataFrame:
+def sample_frames(binary_df: DataFrame) -> DataFrame:
     """Frame sampling over a binary column (the video-keyframe analog):
-    emit up to `max_frames` chunks of `frame_bytes` at byte offsets
-    0, stride, 2*stride, … — one input row fans out to N output rows.
+    emit up to MAX_FRAMES chunks of FRAME_BYTES at byte offsets
+    0, FRAME_STRIDE, 2*FRAME_STRIDE, … — one input row fans out to N
+    output rows.
 
     A real decoder would seek keyframes; the byte-offset sampler is the
     deterministic stand-in (real_decode above is the marked stub), and
@@ -112,13 +118,13 @@ def sample_frames(
 
         for pdf in batches:
             ids, idxs, frames, lens = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col], strict=True):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"], strict=True):
                 buf = bytes(payload)
-                for i in range(max_frames):
-                    off = i * stride
+                for i in range(MAX_FRAMES):
+                    off = i * FRAME_STRIDE
                     if off >= len(buf):
                         break
-                    chunk = buf[off : off + frame_bytes]
+                    chunk = buf[off : off + FRAME_BYTES]
                     ids.append(int(doc_id))
                     idxs.append(i)
                     frames.append(chunk)
@@ -140,14 +146,9 @@ RESIZE_SCHEMA = T.StructType(
 )
 
 
-def resize_payload(
-    binary_df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "payload",
-    out_bytes: int = 64,
-) -> DataFrame:
+def resize_payload(binary_df: DataFrame) -> DataFrame:
     """Resize-to-fixed-shape over a binary column (the image-thumbnail
-    analog): every payload becomes exactly `out_bytes` bytes —
+    analog): every payload becomes exactly RESIZE_BYTES bytes —
     truncated or zero-padded. A real implementation decodes, scales
     and re-encodes (real_decode above is the marked stub); the
     crop-or-pad is the deterministic stand-in, and the Spark shape is
@@ -160,9 +161,9 @@ def resize_payload(
 
         for pdf in batches:
             ids, origs, hexes = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col], strict=True):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"], strict=True):
                 buf = bytes(payload)
-                resized = buf[:out_bytes].ljust(out_bytes, b"\x00")
+                resized = buf[:RESIZE_BYTES].ljust(RESIZE_BYTES, b"\x00")
                 ids.append(int(doc_id))
                 origs.append(len(buf))
                 hexes.append(resized.hex().upper())
@@ -170,7 +171,7 @@ def resize_payload(
                 {
                     "doc_id": pd.Series(ids, dtype="int64"),
                     "orig_bytes": pd.Series(origs, dtype="int64"),
-                    "out_len": pd.Series([out_bytes] * len(ids), dtype="int64"),
+                    "out_len": pd.Series([RESIZE_BYTES] * len(ids), dtype="int64"),
                     "resized_hex": hexes,
                 }
             )
@@ -189,18 +190,11 @@ VAD_SCHEMA = T.StructType(
 )
 
 
-def vad_frames(
-    binary_df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "payload",
-    frame_bytes: int = 256,
-    max_frames: int = 4,
-    threshold: int = 500_000,
-) -> DataFrame:
+def vad_frames(binary_df: DataFrame) -> DataFrame:
     """Voice-activity detection over a binary column (the audio
     analog of sample_frames): payload bytes read as 8-bit PCM centered
-    at 128, per-frame energy = Σ (b−128)², voiced = energy above the
-    threshold. A real implementation decodes the container first
+    at 128, per-frame energy = Σ (b−128)², voiced = energy above
+    VAD_THRESHOLD. A real implementation decodes the container first
     (real_decode above is the marked stub); interpreting the raw bytes
     as samples is the deterministic stand-in, and the Spark shape is
     the real thing — Arrow-batched mapInPandas, 1→N frame fan-out
@@ -213,12 +207,12 @@ def vad_frames(
 
         for pdf in batches:
             ids, fis, ns, es, vs = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col], strict=True):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"], strict=True):
                 buf = np.frombuffer(bytes(payload), dtype=np.uint8).astype(
                     np.int64
                 )
-                for fi in range(max_frames):
-                    fr = buf[fi * frame_bytes : (fi + 1) * frame_bytes]
+                for fi in range(MAX_FRAMES):
+                    fr = buf[fi * VAD_FRAME_BYTES : (fi + 1) * VAD_FRAME_BYTES]
                     if len(fr) == 0:
                         break
                     e = int(((fr - 128) ** 2).sum())
@@ -226,7 +220,7 @@ def vad_frames(
                     fis.append(fi)
                     ns.append(len(fr))
                     es.append(e)
-                    vs.append(e > threshold)
+                    vs.append(e > VAD_THRESHOLD)
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(ids, dtype="int64"),
@@ -250,19 +244,11 @@ SHOT_SCHEMA = T.StructType(
 )
 
 
-def shot_boundaries(
-    binary_df: DataFrame,
-    id_col: str = "doc_id",
-    bin_col: str = "payload",
-    frame_bytes: int = 64,
-    stride: int = 256,
-    max_frames: int = 4,
-    threshold: int = 1800,
-) -> DataFrame:
+def shot_boundaries(binary_df: DataFrame) -> DataFrame:
     """Shot-boundary detection over a binary column (the video-cut
     analog, pairing with sample_frames' keyframe lane): consecutive
     sampled frames compare by L1 byte distance Σ|b−b'| (exact
-    integer), a cut fires above the threshold. Same honest-stub
+    integer), a cut fires above SHOT_THRESHOLD. Same honest-stub
     contract as the other multimodal lanes — real decode is stubbed,
     the Arrow-batched mapInPandas plumbing, numpy int64 math and
     1→N-1 pair fan-out are the production shape."""
@@ -273,14 +259,14 @@ def shot_boundaries(
 
         for pdf in batches:
             ids, bis, des, cuts = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[bin_col], strict=True):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"], strict=True):
                 buf = np.frombuffer(bytes(payload), dtype=np.uint8).astype(
                     np.int64
                 )
                 frames = []
-                for fi in range(max_frames):
-                    fr = buf[fi * stride : fi * stride + frame_bytes]
-                    if len(fr) < frame_bytes:
+                for fi in range(MAX_FRAMES):
+                    fr = buf[fi * FRAME_STRIDE : fi * FRAME_STRIDE + FRAME_BYTES]
+                    if len(fr) < FRAME_BYTES:
                         break
                     frames.append(fr)
                 for bi, (a, b) in enumerate(zip(frames, frames[1:])):
@@ -288,7 +274,7 @@ def shot_boundaries(
                     ids.append(int(doc_id))
                     bis.append(bi)
                     des.append(de)
-                    cuts.append(de > threshold)
+                    cuts.append(de > SHOT_THRESHOLD)
             yield pd.DataFrame(
                 {
                     "doc_id": pd.Series(ids, dtype="int64"),

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.hashing import LSH_PLANES, lsh_planes
+from ..functions.hashing import LSH_DIM, LSH_PLANES, lsh_planes
 from ..functions.rounding import SCORE_DIGITS, dround, dround_py
 from ..session import pin
 
@@ -31,10 +31,18 @@ from ..session import pin
 NEARDUP_BANDS = 8
 NEARDUP_BAND_PLANES = 8
 
+# ANN shape: top-3 neighbours; IVF queries probe their 2 nearest cells;
+# PQ splits each LSH_DIM-dim vector into 8 subspaces of 16 codes each.
+ANN_K = 3
+IVF_NPROBE = 2
+PQ_M = 8
+PQ_CODES = 16
+PQ_SUB = LSH_DIM // PQ_M
 
-def as_double_vec(col: str | Column, alias: str = "v") -> Column:
+
+def as_double_vec(col: str | Column) -> Column:
     c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: x.cast("double")).alias(alias)
+    return F.transform(c, lambda x: x.cast("double")).alias("v")
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -127,22 +135,16 @@ def ivf_assign(
     )
 
 
-def ivf_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    k: int = 3,
-    nprobe: int = 2,
-) -> DataFrame:
+def ivf_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame) -> DataFrame:
     """IVF ANN: vectors are bucketed by nearest centroid ONCE (at scale:
     precomputed at write time and stored as a partition/cluster column);
-    each query probes its `nprobe` nearest cells and runs exact cosine
+    each query probes its IVF_NPROBE nearest cells and runs exact cosine
     only against those cells' members — the inverted-file analog of the
     sign-LSH path, with recall tuned by nprobe instead of plane count."""
     va = ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1).withColumn(
         "cn", norm("cv")
     )
-    qa = ivf_assign(queries, centroids, "q_id", "qv", nprobe=nprobe).withColumn(
+    qa = ivf_assign(queries, centroids, "q_id", "qv", nprobe=IVF_NPROBE).withColumn(
         "qn", norm("qv")
     )
     pairs = va.join(F.broadcast(qa), "cell").filter(F.col("c_id") != F.col("q_id"))
@@ -154,7 +156,7 @@ def ivf_topk(
     # no dedup needed: each candidate lives in exactly ONE cell
     # (nprobe=1 assignment), so a (q_id, c_id) pair matches at most once
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= ANN_K)
 
 
 def l2sq(a: Column | str, b: Column | str) -> Column:
@@ -173,48 +175,40 @@ def _fixed_point(c: Column) -> Column:
     return F.round(dround(c, SCORE_DIGITS) * F.lit(float(10**SCORE_DIGITS)), 0).cast("long")
 
 
-def pq_codebooks(
-    vectors: DataFrame,
-    id_col: str = "c_id",
-    vec_col: str = "cv",
-    m: int = 8,
-    k: int = 16,
-    d: int = 64,
-    refine_iters: int = 0,
-) -> DataFrame:
-    """PQ codebooks: subspace `mi`'s codes start as the `mi`-th
-    subvectors of the first `k` vectors by id (the same deterministic-
-    quantizer convention as ivf_topk's centroids); `refine_iters` Lloyd
-    rounds train them — per round, ONE encode pass assigns every
-    (vector, subspace) to its nearest code and ONE (m, code, dim)-keyed
-    partial-aggregated shuffle computes the new means (all m subspaces
-    train in the same two jobs; per-round driver collect is m·k·d_sub
-    doubles, independent of table size). Means round to SCORE_DIGITS
+def _subvectors(vec_col: str) -> Column:
+    """``(m, sub)`` rows, one per PQ subspace: the PQ_SUB-wide slices of
+    ``vec_col``, to be selected through ``posexplode``."""
+    return F.posexplode(
+        F.array(*[F.slice(vec_col, mi * PQ_SUB + 1, PQ_SUB) for mi in range(PQ_M)])
+    )
+
+
+def pq_codebooks(vectors: DataFrame, refine_iters: int = 0) -> DataFrame:
+    """PQ codebooks over `vectors` (c_id, cv): subspace `mi`'s codes
+    start as the `mi`-th subvectors of the first PQ_CODES vectors by id
+    (the same deterministic-quantizer convention as ivf_topk's
+    centroids); `refine_iters` Lloyd rounds train them — per round, ONE
+    encode pass assigns every (vector, subspace) to its nearest code
+    and ONE (m, code, dim)-keyed partial-aggregated shuffle computes the
+    new means (all PQ_M subspaces train in the same two jobs; per-round
+    driver collect is m·k·d_sub doubles, independent of table size). Means round to SCORE_DIGITS
     decimals so the trained codebook is as engine-deterministic as the
     init. Output: (m, code, sub) — m·k rows, tiny at any scale →
     broadcast."""
-    d_sub = d // m
-    base = vectors.orderBy(id_col).limit(k)
+    base = vectors.orderBy("c_id").limit(PQ_CODES)
     # global (unpartitioned) window: intentional and bounded — it runs
-    # over the limit(k) frame above, i.e. at most k=16 rows on one task,
-    # never the vector table. (Source of the benign "No Partition
+    # over the limit(PQ_CODES) frame above, i.e. at most 16 rows on one
+    # task, never the vector table. (Source of the benign "No Partition
     # Defined" WindowExec log line.)
     coded = base.withColumn(
         "code",
-        F.row_number().over(W.orderBy(id_col)).cast("int") - 1,
+        F.row_number().over(W.orderBy("c_id")).cast("int") - 1,
     )
-    cb = coded.select(
-        "code", F.posexplode(F.array(*[F.slice(vec_col, mi * d_sub + 1, d_sub) for mi in range(m)])).alias("m", "sub")
-    ).select("m", "code", "sub")
+    cb = coded.select("code", _subvectors("cv").alias("m", "sub")).select("m", "code", "sub")
     if not refine_iters:
         return cb
     spark = vectors.sparkSession
-    sub = vectors.select(
-        id_col,
-        F.posexplode(
-            F.array(*[F.slice(vec_col, mi * d_sub + 1, d_sub) for mi in range(m)])
-        ).alias("m", "vsub"),
-    )
+    sub = vectors.select("c_id", _subvectors("cv").alias("m", "vsub"))
     for _ in range(refine_iters):
         # previous codebook state, m·k rows — a code that receives ZERO
         # assignments this round keeps its previous centroid (standard
@@ -223,9 +217,9 @@ def pq_codebooks(
         prev: dict[tuple[int, int], list[float]] = {
             (r["m"], r["code"]): list(r["sub"]) for r in cb.collect()
         }
-        enc = pq_encode(vectors, cb, id_col, vec_col, m=m, d=d)
+        enc = pq_encode(vectors, cb)
         rows = (
-            enc.join(sub, [id_col, "m"])
+            enc.join(sub, ["c_id", "m"])
             .select("m", "code", F.posexplode("vsub").alias("pos", "x"))
             .groupBy("m", "code", "pos")
             .agg(F.avg("x").alias("mean"))
@@ -249,33 +243,21 @@ def pq_codebooks(
     return cb
 
 
-def pq_encode(
-    vectors: DataFrame,
-    codebook: DataFrame,
-    id_col: str = "c_id",
-    vec_col: str = "cv",
-    m: int = 8,
-    d: int = 64,
-) -> DataFrame:
-    """PQ encoding: per vector and subspace, the nearest code (rounded
-    L2, code id tiebreak). Map-only against the broadcast codebook —
-    at scale this runs at write time and the 8-byte code row replaces
-    the 256-byte float vector (32× compression here)."""
-    d_sub = d // m
-    sub = vectors.select(
-        id_col,
-        F.posexplode(
-            F.array(*[F.slice(vec_col, mi * d_sub + 1, d_sub) for mi in range(m)])
-        ).alias("m", "vsub"),
-    )
+def pq_encode(vectors: DataFrame, codebook: DataFrame) -> DataFrame:
+    """PQ encoding of `vectors` (c_id, cv): per vector and subspace, the
+    nearest code (rounded L2, code id tiebreak). Map-only against the
+    broadcast codebook — at scale this runs at write time and the
+    8-byte code row replaces the 256-byte float vector (32× compression
+    here)."""
+    sub = vectors.select("c_id", _subvectors("cv").alias("m", "vsub"))
     scored = sub.join(F.broadcast(codebook), "m").withColumn(
         "__d", _fixed_point(l2sq("vsub", "sub"))
     )
-    w = W.partitionBy(id_col, "m").orderBy("__d", "code")
+    w = W.partitionBy("c_id", "m").orderBy("__d", "code")
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select(id_col, "m", "code")
+        .select("c_id", "m", "code")
     )
 
 
@@ -283,33 +265,22 @@ def pq_adc_topk(
     vectors: DataFrame,
     queries: DataFrame,
     k: int = 3,
-    m: int = 8,
-    n_codes: int = 16,
-    d: int = 64,
     refine_iters: int = 0,
 ) -> DataFrame:
     """PQ ANN via asymmetric distance computation: candidates live as
-    m-byte PQ codes; each query precomputes an (m × n_codes) partial-
-    distance table against the codebook, and the approximate distance
-    of a candidate is a table-lookup SUM over its codes — no candidate
-    vector is ever touched at query time.
+    PQ_M-byte PQ codes; each query precomputes an (PQ_M × PQ_CODES)
+    partial-distance table against the codebook, and the approximate
+    distance of a candidate is a table-lookup SUM over its codes — no
+    candidate vector is ever touched at query time.
 
     Scale shape: encode is write-time and map-only; the per-query
-    distance table is q·m·n_codes rows (KBs) → broadcast; the query-
+    distance table is q·PQ_M·PQ_CODES rows (KBs) → broadcast; the query-
     time join is codes ⋈ table on (m, code) followed by one partial-
     aggregated (q_id, c_id) sum. Distances are fixed-point longs, so
     the sum is exact and engine-independent."""
-    d_sub = d // m
-    codebook = pq_codebooks(
-        vectors, "c_id", "cv", m=m, k=n_codes, d=d, refine_iters=refine_iters
-    )
-    encoded = pq_encode(vectors, codebook, "c_id", "cv", m=m, d=d)
-    qsub = queries.select(
-        "q_id",
-        F.posexplode(
-            F.array(*[F.slice("qv", mi * d_sub + 1, d_sub) for mi in range(m)])
-        ).alias("m", "qsub"),
-    )
+    codebook = pq_codebooks(vectors, refine_iters=refine_iters)
+    encoded = pq_encode(vectors, codebook)
+    qsub = queries.select("q_id", _subvectors("qv").alias("m", "qsub"))
     dtable = qsub.join(F.broadcast(codebook), "m").select(
         "q_id", "m", "code", _fixed_point(l2sq("qsub", "sub")).alias("pd")
     )
@@ -334,20 +305,10 @@ def pq_adc_topk(
     )
 
 
-def ivf_pq_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    k: int = 3,
-    m: int = 8,
-    n_codes: int = 16,
-    d: int = 64,
-    nprobe: int = 2,
-    refine_iters: int = 0,
-) -> DataFrame:
+def ivf_pq_topk(vectors: DataFrame, queries: DataFrame, centroids: DataFrame) -> DataFrame:
     """IVF-PQ: the production billion-vector shape — IVF restricts
-    WHICH candidates are scored (each query probes `nprobe` cells), PQ
-    decides HOW they are scored (ADC over m-byte codes, candidate
+    WHICH candidates are scored (each query probes IVF_NPROBE cells), PQ
+    decides HOW they are scored (ADC over PQ_M-byte codes, candidate
     vectors never touched at query time).
 
     Write-time: cell assignment + PQ encoding, both map-only against
@@ -356,25 +317,15 @@ def ivf_pq_topk(
     probed cells' code rows, one partial-aggregated (q, c) integer sum.
     Memory per candidate and bytes scanned per query both drop by the
     compression factor versus plain IVF."""
-    d_sub = d // m
-    codebook = pq_codebooks(
-        vectors, "c_id", "cv", m=m, k=n_codes, d=d, refine_iters=refine_iters
-    )
+    codebook = pq_codebooks(vectors)
     cells = ivf_assign(vectors, centroids, "c_id", "cv", nprobe=1).select(
         "c_id", "cell"
     )
-    encoded = pq_encode(vectors, codebook, "c_id", "cv", m=m, d=d).join(
-        cells, "c_id"
-    )
+    encoded = pq_encode(vectors, codebook).join(cells, "c_id")
     qcells = ivf_assign(
-        queries, centroids, "q_id", "qv", nprobe=nprobe
+        queries, centroids, "q_id", "qv", nprobe=IVF_NPROBE
     ).select("q_id", "cell")
-    qsub = queries.select(
-        "q_id",
-        F.posexplode(
-            F.array(*[F.slice("qv", mi * d_sub + 1, d_sub) for mi in range(m)])
-        ).alias("m", "qsub"),
-    )
+    qsub = queries.select("q_id", _subvectors("qv").alias("m", "qsub"))
     dtable = (
         qsub.join(F.broadcast(codebook), "m")
         .select("q_id", "m", "code", _fixed_point(l2sq("qsub", "sub")).alias("pd"))
@@ -389,7 +340,7 @@ def ivf_pq_topk(
     w = W.partitionBy("q_id").orderBy("__adist", "c_id")
     return (
         scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
+        .filter(F.col("rnk") <= ANN_K)
         .select(
             "q_id",
             "c_id",
@@ -401,20 +352,13 @@ def ivf_pq_topk(
     )
 
 
-def banded_lsh_pairs(
-    vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-    n_bands: int = NEARDUP_BANDS,
-    band_size: int = NEARDUP_BAND_PLANES,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Candidate pairs (a < b) of vectors colliding in ANY sign-LSH band
-    — the OR-amplified construction (MinHash-LSH's shape applied to
-    random hyperplanes), replacing an all-pairs product for embedding
-    near-dup detection.
+def banded_lsh_pairs(vectors: DataFrame, max_bucket: int | None = None) -> DataFrame:
+    """Candidate pairs (a < b) of `vectors` (vec_id, v) colliding in ANY
+    sign-LSH band — the OR-amplified construction (MinHash-LSH's shape
+    applied to random hyperplanes), replacing an all-pairs product for
+    embedding near-dup detection.
 
-    Each vector computes n_bands·band_size plane dots in ONE map-only
+    Each vector computes NEARDUP_BANDS·NEARDUP_BAND_PLANES plane dots in ONE map-only
     pass (each dot evaluated exactly once: the per-band fold walks only
     that band's slice of the single 2-D plane literal), posexplodes its
     band hashes, and pairs form through dedup._bucket_pairs — including
@@ -423,13 +367,14 @@ def banded_lsh_pairs(
     from .common import const_array2d
     from .dedup import _bucket_pairs
 
-    planes = lsh_planes(n_planes=n_bands * band_size)
+    band_size = NEARDUP_BAND_PLANES
+    planes = lsh_planes(n_planes=NEARDUP_BANDS * band_size)
     # 64 planes × 64 dims = 4096 per-element nodes if built as nested
     # CreateArray — the single folded literal keeps the plan walkable
     planes_lit = const_array2d(planes)
-    v = F.col(vec_col)
+    v = F.col("v")
     band_hashes = F.transform(
-        F.sequence(F.lit(0), F.lit(n_bands - 1)),
+        F.sequence(F.lit(0), F.lit(NEARDUP_BANDS - 1)),
         lambda b: F.aggregate(
             F.slice(planes_lit, b * band_size + 1, band_size),
             F.lit(0).cast("long"),
@@ -438,12 +383,12 @@ def banded_lsh_pairs(
         ),
     )
     buckets = vectors.select(
-        F.col(id_col), F.posexplode(band_hashes).alias("band", "h")
-    ).select(id_col, F.concat_ws("#", F.col("band"), F.col("h")).alias("bucket"))
-    return _bucket_pairs(buckets, id_col, max_bucket=max_bucket).distinct()
+        F.col("vec_id"), F.posexplode(band_hashes).alias("band", "h")
+    ).select("vec_id", F.concat_ws("#", F.col("band"), F.col("h")).alias("bucket"))
+    return _bucket_pairs(buckets, "vec_id", max_bucket=max_bucket).distinct()
 
 
-def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
+def lsh_topk(vectors: DataFrame, queries: DataFrame) -> DataFrame:
     """ANN: exact cosine restricted to same-LSH-bucket candidates.
     Norms precomputed per side (see brute_force_topk)."""
     vb = vectors.withColumn("bucket", lsh_bucket("cv")).withColumn("cn", norm("cv"))
@@ -455,25 +400,26 @@ def lsh_topk(vectors: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
         dround(dot("qv", "cv") / (F.col("qn") * F.col("cn")), SCORE_DIGITS).alias("cos"),
     )
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return scored.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= ANN_K)
 
 
 # Johnson–Lindenstrauss random projection: 64 → 16 dims. Ranking by
 # cosine in the projected space approximately preserves the full-space
 # ranking (JL lemma), so a coarse candidate scan costs dim/RP_DIM = 4×
 # less arithmetic and shuffles 4× fewer bytes per vector; the exact
-# re-rank touches only coarse_m candidates per query. At 100 TB this is
+# re-rank touches only RP_COARSE candidates per query. At 100 TB this is
 # the standard prefix of an ANN pipeline (project → coarse → re-rank),
 # composable with IVF (project inside each probed cell).
 RP_DIM = 16
+RP_COARSE = 10  # coarse candidates per query that the exact re-rank sees
 
 
-def random_project(vec_col: str | Column, n_out: int = RP_DIM) -> Column:
-    """Map-only JL projection: array of dot(v, plane_j) for n_out
+def random_project(vec_col: str | Column) -> Column:
+    """Map-only JL projection: array of dot(v, plane_j) for RP_DIM
     deterministic integer-derived planes (functions/hashing.py — the
     same literals are inlined into the DuckDB oracle, so both engines
     compute bit-identical projections). No scaling factor: cosine is
-    scale-invariant, so 1/sqrt(n_out) would cancel anyway.
+    scale-invariant, so 1/sqrt(RP_DIM) would cancel anyway.
 
     The 16×64 plane matrix enters the plan as ONE constant-folded
     literal (from_json over a literal string — ConstantFolding
@@ -489,25 +435,20 @@ def random_project(vec_col: str | Column, n_out: int = RP_DIM) -> Column:
     from .common import const_array2d
 
     v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    planes = lsh_planes(n_planes=n_out)
+    planes = lsh_planes(n_planes=RP_DIM)
     return F.transform(const_array2d(planes), lambda p: dot(v, p))
 
 
-def rp_rerank_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    coarse_m: int = 10,
-    k: int = 3,
-) -> DataFrame:
+def rp_rerank_topk(vectors: DataFrame, queries: DataFrame) -> DataFrame:
     """Coarse-then-exact top-k: rank ALL candidates by cosine in the
-    RP_DIM projected space (cheap scan), keep the coarse_m best per
+    RP_DIM projected space (cheap scan), keep the RP_COARSE best per
     query, then exact-cosine re-rank only those in the full space.
 
     `vectors`: (c_id, cv); `queries`: (q_id, qv) — queries are tiny and
     broadcast twice (projected for the coarse scan, full for the
     re-rank); the big side is never shuffled: coarse scoring is
     map-only against the broadcast, and the re-rank joins the
-    coarse_m·|queries| candidate ids back to `vectors` via one
+    RP_COARSE·|queries| candidate ids back to `vectors` via one
     broadcast hash join. Both rankings order by the ROUNDED cosine
     with c_id tiebreak (engine-independent, see brute_force_topk).
 
@@ -540,10 +481,10 @@ def rp_rerank_topk(
     cw = W.partitionBy("q_id").orderBy(F.col("ccos").desc(), F.col("c_id"))
     cand = (
         coarse.withColumn("crn", F.row_number().over(cw))
-        .filter(F.col("crn") <= coarse_m)
+        .filter(F.col("crn") <= RP_COARSE)
         .select("q_id", "c_id")
     )
-    # candidates are coarse_m·|queries| rows → broadcast them into the
+    # candidates are RP_COARSE·|queries| rows → broadcast them into the
     # big vector table; queries' full vectors broadcast once more
     exact = (
         vectors.join(F.broadcast(cand), "c_id")
@@ -555,4 +496,4 @@ def rp_rerank_topk(
         )
     )
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id"))
-    return exact.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= k)
+    return exact.withColumn("rnk", F.row_number().over(w)).filter(F.col("rnk") <= ANN_K)

@@ -5,7 +5,7 @@ Why hand-built sketches in a Spark engine that has runtime filtering
 and ``count_min_sketch``? Two reasons:
 
 - **Bounded driver state by construction.** The Bloom build collects at
-  most ``m_bits/64`` aggregated words (8 KiB for the default 2^16-bit
+  most ``BLOOM_M_BITS/64`` aggregated words (8 KiB for its 2^16-bit
   filter) no matter how many keys feed it — the collect is O(m), a
   constant, never O(keys). That is the property that makes the
   pattern usable when the build side is 10^9 keys: the raw key set is
@@ -41,19 +41,19 @@ BLOOM_SEEDS: tuple[int, ...] = (0x51, 0x52, 0x53)
 BLOOM_M_BITS = 1 << 16  # 65536 bits = 1024 longs = 8 KiB
 
 
-def bloom_build(keys: DataFrame, key_col: str, m_bits: int = BLOOM_M_BITS) -> list[int]:
+def bloom_build(keys: DataFrame, key_col: str) -> list[int]:
     """Aggregate a Bloom bitset over ``keys[key_col]``.
 
     One shuffle of (word_index, partial-OR) pairs — the partial
-    aggregation ORs map-side, so at most ``m_bits/64`` rows per task
+    aggregation ORs map-side, so at most ``BLOOM_M_BITS/64`` rows per task
     reach the exchange regardless of input size — then a collect
-    bounded at ``m_bits/64`` rows. Returns the dense word list.
+    bounded at ``BLOOM_M_BITS/64`` rows. Returns the dense word list.
     """
-    n_words = m_bits // 64
+    n_words = BLOOM_M_BITS // 64
     seeds = F.array(*[F.lit(s) for s in BLOOM_SEEDS])
     pos = keys.select(
         F.col(key_col).alias("k"), F.explode(seeds).alias("s")
-    ).select(F.pmod(F.xxhash64("k", "s"), F.lit(m_bits)).alias("pos"))
+    ).select(F.pmod(F.xxhash64("k", "s"), F.lit(BLOOM_M_BITS)).alias("pos"))
     words = (
         pos.select(
             (F.col("pos") / 64).cast("int").alias("w"),
@@ -69,9 +69,7 @@ def bloom_build(keys: DataFrame, key_col: str, m_bits: int = BLOOM_M_BITS) -> li
     return dense
 
 
-def bloom_might_contain(
-    df: DataFrame, key_col: str, words: list[int], m_bits: int = BLOOM_M_BITS
-) -> DataFrame:
+def bloom_might_contain(df: DataFrame, key_col: str, words: list[int]) -> DataFrame:
     """Filter ``df`` to rows whose ``key_col`` MIGHT be in the filter.
 
     Map-only: the bitset rides the plan as one array<bigint> literal
@@ -85,7 +83,7 @@ def bloom_might_contain(
     conds: list[Column] = []
     for i, s in enumerate(BLOOM_SEEDS):
         probed = probed.withColumn(
-            f"_bp{i}", F.pmod(F.xxhash64(F.col(key_col), F.lit(s)), F.lit(m_bits))
+            f"_bp{i}", F.pmod(F.xxhash64(F.col(key_col), F.lit(s)), F.lit(BLOOM_M_BITS))
         )
         word = F.element_at("_bloom_words", (F.col(f"_bp{i}") / 64).cast("int") + 1)
         probed = probed.withColumn(f"_bw{i}", word)

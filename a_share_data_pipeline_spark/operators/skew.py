@@ -40,13 +40,12 @@ def salted_join(
     keys: list[str],
     how: str = "inner",
     salt_buckets: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """Equi-join with the big side's hot keys spread over salt buckets."""
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
     salted_big = big.withColumn(
-        SALT_COL, F.floor(F.rand(seed) * salt_buckets).cast("int")
+        SALT_COL, F.floor(F.rand(42) * salt_buckets).cast("int")
     )
     salts = F.array(*[F.lit(i) for i in range(salt_buckets)])
     salted_small = small.withColumn(SALT_COL, F.explode(salts))

@@ -43,12 +43,12 @@ def marker_count(text_col: str, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, is_marker))
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Rule-based language ID: CJK chars → zh, else argmax of marker
     stopword counts (fixed priority tie-break), else 'und'."""
-    out = df.withColumn("cjk_n", F.regexp_count(F.col(text_col), F.lit(CJK_PATTERN)))
+    out = df.withColumn("cjk_n", F.regexp_count(F.col("text"), F.lit(CJK_PATTERN)))
     for lang, markers in LANG_MARKERS.items():
-        out = out.withColumn(f"{lang}_n", marker_count(text_col, markers))
+        out = out.withColumn(f"{lang}_n", marker_count("text", markers))
     pred = F.when(F.col("cjk_n") > 0, F.lit("zh"))
     for i, lang in enumerate(LANG_PRIORITY):
         cond = F.col(f"{lang}_n") > 0
@@ -60,15 +60,15 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return out.withColumn("pred_lang", pred.otherwise(F.lit("und")))
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + a linear
     quality score (rational arithmetic only — oracle-reproducible)."""
-    toks = _tokens(text_col)
+    toks = _tokens("text")
     n_tokens = F.size(toks)
-    n_chars = F.length(F.col(text_col))
-    nonspace = F.length(F.replace(F.col(text_col), F.lit(" "), F.lit("")))
-    punct_n = F.regexp_count(F.col(text_col), F.lit("[.,!?;:]"))
-    stop_n = marker_count(text_col, LANG_MARKERS["en"])
+    n_chars = F.length(F.col("text"))
+    nonspace = F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
+    punct_n = F.regexp_count(F.col("text"), F.lit("[.,!?;:]"))
+    stop_n = marker_count("text", LANG_MARKERS["en"])
     return (
         df.withColumn("n_tokens", n_tokens.cast("long"))
         .withColumn("n_chars_m", n_chars.cast("long"))
@@ -91,16 +91,16 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("ws_tokens", F.size(_tokens(text_col)).cast("long")).withColumn(
-        "bpe_tokens", F.regexp_count(F.col(text_col), F.lit(BPE_PATTERN)).cast("long")
+def token_counts(df: DataFrame) -> DataFrame:
+    return df.withColumn("ws_tokens", F.size(_tokens("text")).cast("long")).withColumn(
+        "bpe_tokens", F.regexp_count(F.col("text"), F.lit(BPE_PATTERN)).cast("long")
     )
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """64-bit document fingerprint: md5 prefix of the whitespace- and
     case-normalized text (reference-free analog of a rolling hash)."""
-    normalized = F.lower(F.trim(F.regexp_replace(F.col(text_col), " +", " ")))
+    normalized = F.lower(F.trim(F.regexp_replace(F.col("text"), " +", " ")))
     return df.withColumn("fp", F.substring(F.md5(normalized), 1, 16))
 
 
@@ -115,7 +115,7 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
 LM_VOCAB_K = 1000
 
 
-def unigram_nll(df: DataFrame, text_col: str = "text", vocab_k: int = LM_VOCAB_K) -> DataFrame:
+def unigram_nll(df: DataFrame) -> DataFrame:
     """Per-doc (doc_id, n_tokens, nll_per_token): two aggregation passes
     over one tokenization.
 
@@ -127,9 +127,9 @@ def unigram_nll(df: DataFrame, text_col: str = "text", vocab_k: int = LM_VOCAB_K
     re-joins tokens to the broadcast head (left join, OOV → null) and
     aggregates per doc. nll_per_token = log2(N) - avg(log2(count_w)),
     with count_w = 0.5 for OOV."""
-    tok = df.select("doc_id", F.explode(_tokens(text_col)).alias("w"))
+    tok = df.select("doc_id", F.explode(_tokens("text")).alias("w"))
     counts = tok.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
-    vocab = counts.orderBy(F.col("n").desc(), "w").limit(vocab_k)
+    vocab = counts.orderBy(F.col("n").desc(), "w").limit(LM_VOCAB_K)
     total = counts.agg(F.sum("n").alias("nn"))
     per_doc = (
         tok.join(F.broadcast(vocab), "w", "left")
@@ -158,10 +158,8 @@ WINNOW_K = 3
 WINNOW_W = 4
 
 
-def _winnow_selected(
-    df: DataFrame, id_col: str, text_col: str, k: int, w: int
-) -> DataFrame:
-    """(id, __npos, __wins): per-doc array of position-encoded window
+def _winnow_selected(df: DataFrame) -> DataFrame:
+    """(doc_id, __npos, __wins): per-doc array of position-encoded window
     minima (``md5hex || lpad(10^8 - pos)``), built entirely map-side —
     one transform emits the shingle hashes, a second slides the
     w-slice/array_min window over the array. Shared by the summary
@@ -178,7 +176,8 @@ def _winnow_selected(
     24 ms/doc at m≈52, 500× the let-bound form; HOF lambdas do not
     enter whole-stage codegen, which is why the blowup is invisible
     in small fixtures)."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    k, w = WINNOW_K, WINNOW_W
+    toks = F.split(F.lower(F.col("text")), " ")
     npos = F.size(toks) - k + 1
     big = 100000000
     enc_arr = F.transform(
@@ -198,17 +197,11 @@ def _winnow_selected(
         ),
         1,
     )
-    return df.filter(npos >= w).select(id_col, npos.alias("__npos"), wins.alias("__wins"))
+    return df.filter(npos >= w).select("doc_id", npos.alias("__npos"), wins.alias("__wins"))
 
 
-def winnow_fp_rows(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
-    """(id, fp) rows: the DISTINCT winnowing fingerprint HASHES per doc
+def winnow_fp_rows(df: DataFrame) -> DataFrame:
+    """(doc_id, fp) rows: the DISTINCT winnowing fingerprint HASHES per doc
     (position encoding stripped — cross-doc matching compares content
     hashes, not positions). This is the posting-list form a
     candidate-pair matcher or overlap index consumes.
@@ -226,39 +219,33 @@ def winnow_fp_rows(
     like dedup.exploded_shingles."""
     from .common import spread as _spread
 
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = F.split(F.lower(F.col("text")), " ")
     base = (
-        _spread(df, id_col)
-        .select(id_col, toks.alias("__toks"), (F.size(toks) - k + 1).alias("__npos"))
-        .filter(F.col("__npos") >= w)
+        _spread(df, "doc_id")
+        .select("doc_id", toks.alias("__toks"), (F.size(toks) - WINNOW_K + 1).alias("__npos"))
+        .filter(F.col("__npos") >= WINNOW_W)
     )
     pos = base.select(
-        id_col, "__npos", "__toks",
+        "doc_id", "__npos", "__toks",
         F.explode(F.sequence(F.lit(1), F.col("__npos"))).alias("pos"),
     )
     big = 100000000
     enc = pos.select(
-        id_col, "__npos", "pos",
+        "doc_id", "__npos", "pos",
         F.concat(
-            F.md5(F.concat_ws(" ", F.slice("__toks", F.col("pos"), k))),
+            F.md5(F.concat_ws(" ", F.slice("__toks", F.col("pos"), WINNOW_K))),
             F.lpad((F.lit(big) - F.col("pos")).cast("string"), 8, "0"),
         ).alias("enc"),
     )
-    wspec = Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, w - 1)
+    wspec = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
     wins = enc.withColumn("wmin", F.min("enc").over(wspec)).filter(
-        F.col("pos") <= F.col("__npos") - (w - 1)
+        F.col("pos") <= F.col("__npos") - (WINNOW_W - 1)
     )
-    return wins.select(id_col, F.substring("wmin", 1, 32).alias("fp")).distinct()
+    return wins.select("doc_id", F.substring("wmin", 1, 32).alias("fp")).distinct()
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-) -> DataFrame:
-    """Per-doc winnowing summary: (id, n_grams, n_fp, min_fp,
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
+    """Per-doc winnowing summary: (doc_id, n_grams, n_fp, min_fp,
     fp_checksum).
 
     Entirely map-only — ZERO exchanges (plan-gated). The whole
@@ -277,10 +264,10 @@ def winnow_fingerprints(
     output keeps ~2/(w+1) of the hashes — the set a plagiarism/overlap
     index would store.
     """
-    base = _winnow_selected(df, id_col, text_col, k, w)
+    base = _winnow_selected(df)
     fps = F.array_distinct(F.col("__wins"))
     return base.select(
-        id_col,
+        "doc_id",
         F.col("__npos").cast("long").alias("n_grams"),
         F.size(fps).cast("long").alias("n_fp"),
         F.array_min(F.transform(fps, lambda s: F.substring(s, 1, 32))).alias("min_fp"),

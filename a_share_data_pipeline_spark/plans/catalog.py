@@ -208,11 +208,11 @@ def verification_tiers(repo_root: str | None = None) -> dict[str, list[str]]:
     return tiers
 
 
-def tiers_markdown(repo_root: str | None = None) -> str:
+def tiers_markdown() -> str:
     """The generated verification-tier block COVERAGE.md carries
     (pinned by tests/test_scale_ops.py). States the true split instead
     of claiming the 50-entry window covers everything."""
-    t = verification_tiers(repo_root)
+    t = verification_tiers()
     lines = [
         f"Verification tiers (generated from `CORE_WINDOW` ∪ the committed "
         f"`CORRECTNESS_r*.json` history via `catalog.verification_tiers()`): "

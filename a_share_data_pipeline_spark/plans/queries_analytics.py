@@ -113,10 +113,10 @@ def _decode_sql(col: str) -> str:
     )
 
 
-def _lpa_sql(iters: int = 3) -> str:
+def _lpa_sql() -> str:
     rounds = []
     prev = "l0"
-    for i in range(1, iters + 1):
+    for i in (1, 2, 3):
         rounds.append(f"""
 l{i} AS (
   SELECT dst AS node,
@@ -278,11 +278,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _mod_rounds(iters: int = 3) -> str:
+def _mod_rounds() -> str:
     rounds = []
     prev = "l0"
-    for i in range(1, iters + 1):
-        mat = " MATERIALIZED" if i == iters else ""
+    for i in (1, 2, 3):
+        mat = " MATERIALIZED" if i == 3 else ""
         rounds.append(f"""
 l{i} AS{mat} (
   SELECT dst AS node,
@@ -461,11 +461,11 @@ _BFS_SEEDS = ("c1", "c2", "c3", "c4", "c5")
 _BFS_HOPS = 3
 
 
-def _bfs_sql(max_hops: int = _BFS_HOPS) -> str:
+def _bfs_sql() -> str:
     seeds = ", ".join(f"'{s}'" for s in _BFS_SEEDS)
     rounds = []
     prev = "d0"
-    for i in range(1, max_hops + 1):
+    for i in range(1, _BFS_HOPS + 1):
         rounds.append(f"""
 d{i} AS (
   SELECT n.node,
@@ -757,7 +757,7 @@ WHERE CAST(n_inter AS DOUBLE) / LEAST(ca.n_sh, cb.n_sh) >= {_CONT_THRESHOLD!r}
         "Jaccard ~0.5, under every near-dup threshold. Same bucketed "
         "machinery as dedup_ngram_jaccard (shared-shingle pair "
         "expansion, 1000-doc hot-bucket cap, min-overlap 3 prune) via "
-        "operators/dedup.pair_containment; the 'contained' column "
+        "operators/dedup.pair_overlap; the 'contained' column "
         "names the smaller side. Deterministic excerpt fixture "
         "augmentation on both engines keeps the query non-vacuous on "
         "the synthetic corpus (the _LINE_AUG pattern)"
@@ -778,7 +778,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     aug = docs.select("doc_id", "text").unionByName(ex)
-    pairs = D.pair_containment(
+    pairs = D.pair_overlap(
         D.exploded_shingles(aug),
         min_overlap=_CONT_MIN_OVERLAP,
         max_bucket=_CONT_MAX_BUCKET,
@@ -2698,11 +2698,11 @@ _SSSP_SEEDS = ("c1", "c2", "c3")
 _SSSP_ROUNDS = 3
 
 
-def _sssp_sql(max_rounds: int = _SSSP_ROUNDS) -> str:
+def _sssp_sql() -> str:
     seeds = ", ".join(f"'{s}'" for s in _SSSP_SEEDS)
     rounds = []
     prev = "d0"
-    for i in range(1, max_rounds + 1):
+    for i in range(1, _SSSP_ROUNDS + 1):
         rounds.append(f"""
 d{i} AS (
   SELECT n.node,
@@ -4872,7 +4872,7 @@ _DP_ILN_2_32 = 2218070978
 _DP_EPS = 1  # epsilon (sensitivity-1 count histogram)
 
 
-def dp_laplace_noise_1e8(df: DataFrame, cell: str, eps: int = _DP_EPS) -> DataFrame:
+def dp_laplace_noise_1e8(df: DataFrame, cell: str) -> DataFrame:
     """Adds `noise_1e8`: Laplace(1/ε) noise in 1e-8 units for a
     sensitivity-1 count cell, inverted from a uniform via the
     integer-ln device — sign·(iln(2³²) − iln(m))/ε where m folds the
@@ -4905,13 +4905,13 @@ def dp_laplace_noise_1e8(df: DataFrame, cell: str, eps: int = _DP_EPS) -> DataFr
         staged.withColumn("__dp_iln", iln("__dp_m"))
         .withColumn(
             "noise_1e8",
-            F.expr(f"(__dp_sgn * ({_DP_ILN_2_32} - __dp_iln)) div {eps}"),
+            F.expr(f"(__dp_sgn * ({_DP_ILN_2_32} - __dp_iln)) div {_DP_EPS}"),
         )
         .drop("__dp_sgn", "__dp_m", "__dp_iln")
     )
 
 
-def dp_release_counts(noised: DataFrame, count_col: str = "true_n") -> DataFrame:
+def dp_release_counts(noised: DataFrame) -> DataFrame:
     """The release step: integer-truncate the 1e-8 noise onto the raw
     count and clamp at zero (post-processing — the one property of the
     release the oracle CAN check, and the reason a negative noised
@@ -4919,7 +4919,7 @@ def dp_release_counts(noised: DataFrame, count_col: str = "true_n") -> DataFrame
     return noised.withColumn(
         "released_n",
         F.greatest(
-            F.col(count_col) + F.expr("noise_1e8 div 100000000"), F.lit(0)
+            F.col("true_n") + F.expr("noise_1e8 div 100000000"), F.lit(0)
         ).cast("bigint"),
     )
 
@@ -4980,7 +4980,7 @@ def privacy_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = cust.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
-    noised = dp_laplace_noise_1e8(h, cell="segment", eps=_DP_EPS)
+    noised = dp_laplace_noise_1e8(h, cell="segment")
     return dp_release_counts(noised).select(
         "segment", "true_n", "noise_1e8", "released_n"
     )

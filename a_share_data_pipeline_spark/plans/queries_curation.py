@@ -127,7 +127,7 @@ def curation_quality_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Benchmark decontamination (n-gram overlap vs a broadcast eval set)
 # ---------------------------------------------------------------------------
 
-_DECON_N = 5
+_DECON_N = CU.DECON_N
 _BENCH_MOD = 97  # deterministic eval-set stand-in: doc_id % 97 == 0
 
 _DECON_SQL = f"""
@@ -167,7 +167,7 @@ def curation_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
     corpus = docs.filter(F.col("doc_id") % _BENCH_MOD != 0)
-    return CU.decontaminate(corpus, bench, n=_DECON_N)
+    return CU.decontaminate(corpus, bench)
 
 
 # ---------------------------------------------------------------------------
@@ -1123,10 +1123,10 @@ def curation_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
     corpus = docs.filter(F.col("doc_id") % _BENCH_MOD != 0)
     bench_grams = bench.select(
-        F.explode(word_shingles_col("text", _DECON_N)).alias("g")
+        F.explode(word_shingles_col(_DECON_N)).alias("g")
     ).distinct()
     corpus_grams = corpus.select(
-        "doc_id", F.explode(word_shingles_col("text", _DECON_N)).alias("g")
+        "doc_id", F.explode(word_shingles_col(_DECON_N)).alias("g")
     ).localCheckpoint(eager=False)
     words = SK.bloom_build(bench_grams, "g")
     cand = SK.bloom_might_contain(corpus_grams, "g", words)

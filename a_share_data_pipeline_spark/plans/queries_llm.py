@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.hashing import LSH_PLANES, MINHASH_BAND_SIZE, MINHASH_SEEDS
+from ..functions.hashing import LSH_DIM, LSH_PLANES, MINHASH_BAND_SIZE, MINHASH_SEEDS
 from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
@@ -402,7 +402,7 @@ WHERE list_dot_product(ea.v, eb2.v)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb_augmented(
         load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", SIM.as_double_vec("embedding", "v")
+            "vec_id", SIM.as_double_vec("embedding")
         )
     )
     cand = SIM.banded_lsh_pairs(emb, max_bucket=_JACCARD_MAX_BUCKET)
@@ -441,7 +441,7 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 5
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
@@ -487,13 +487,13 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 3
 )
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-    out = SIM.lsh_topk(vectors, queries, k=3)
+    out = SIM.lsh_topk(vectors, queries)
     return out.select("q_id", "c_id", "cos", F.col("rnk").cast("long").alias("rnk"))
 
 
@@ -791,7 +791,7 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 3
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
@@ -800,7 +800,7 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-    out = SIM.ivf_topk(vectors, queries, centroids, k=3, nprobe=2)
+    out = SIM.ivf_topk(vectors, queries, centroids)
     return out.select("q_id", "c_id", "cos", F.col("rnk").cast("long").alias("rnk"))
 
 
@@ -863,7 +863,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_ann_index_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
@@ -964,13 +964,13 @@ FROM r WHERE rnk <= 3
 )
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 24)).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
-    return SIM.pq_adc_topk(vectors, queries, k=3, m=8, n_codes=16, d=64)
+    return SIM.pq_adc_topk(vectors, queries, k=3)
 
 
 # ---------------------------------------------------------------------------
@@ -1155,7 +1155,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _kmeans_ctes(k: int, iters: int, d: int = 64, src: str = "embeddings") -> str:
+def _kmeans_ctes(k: int, iters: int, src: str = "embeddings") -> str:
     """Unroll `iters` Lloyd rounds as chained CTEs — computes the same
     rounded distances/centroids as operators/kmeans.py. Ends with
     `asg AS (SELECT vec_id, cluster, rd ...)`, the final assignment,
@@ -1163,7 +1163,7 @@ def _kmeans_ctes(k: int, iters: int, d: int = 64, src: str = "embeddings") -> st
     the cluster labels. ``src`` names the (vec_id, embedding) relation
     to cluster — dedup_semantic points it at the augmented CTE."""
     diff = "(CAST(e.embedding[i] AS DOUBLE) - c.cvec[i])"
-    dist = f"list_sum(list_transform(range(1, {d + 1}), i -> {diff} * {diff}))"
+    dist = f"list_sum(list_transform(range(1, {LSH_DIM + 1}), i -> {diff} * {diff}))"
     parts = [
         f"""c0 AS (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
@@ -1182,7 +1182,7 @@ def _kmeans_ctes(k: int, iters: int, d: int = 64, src: str = "embeddings") -> st
 a{t} AS (SELECT vec_id, embedding, cid AS cluster FROM d{t} WHERE rn = 1),
 u{t} AS (
   SELECT cluster, i, AVG(CAST(embedding[i + 1] AS DOUBLE)) AS m
-  FROM a{t}, range({d}) t(i) GROUP BY cluster, i
+  FROM a{t}, range({LSH_DIM}) t(i) GROUP BY cluster, i
 ),
 c{t + 1} AS (SELECT cluster AS cid, list(ROUND(m, 6) ORDER BY i) AS cvec
              FROM u{t} GROUP BY cluster)"""
@@ -1199,8 +1199,8 @@ asg AS (SELECT vec_id, cid AS cluster, rd FROM df WHERE rn = 1)"""
     return ",\n".join(parts)
 
 
-def _kmeans_oracle(k: int, iters: int, d: int = 64) -> str:
-    return "WITH " + _kmeans_ctes(k, iters, d) + "\nSELECT vec_id, cluster, rd FROM asg"
+def _kmeans_oracle(k: int, iters: int) -> str:
+    return "WITH " + _kmeans_ctes(k, iters) + "\nSELECT vec_id, cluster, rd FROM asg"
 
 
 @register(
@@ -1218,7 +1218,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_assignments
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_assignments(emb, k=8, iters=2)
+    return kmeans_assignments(emb, k=8)
 
 
 # ---------------------------------------------------------------------------
@@ -1306,7 +1306,7 @@ FROM documents d LEFT JOIN per ON per.doc_id = d.doc_id
 def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     aug = docs.select("doc_id", F.expr(_SUBSTR_AUG_SPARK).alias("text"))
-    return D.substring_dup_stats(aug, win_tokens=16, stride=8, min_docs=2)
+    return D.substring_dup_stats(aug)
 
 
 # Removal variant: disjoint 16-token windows, so the augmentation pads
@@ -1371,7 +1371,7 @@ FROM flagged GROUP BY doc_id
 def dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     aug = docs.select("doc_id", F.expr(_SUBSTR_AUG16_SPARK).alias("text"))
-    return D.remove_dup_substrings(aug, win_tokens=16, min_docs=2)
+    return D.remove_dup_substrings(aug)
 
 
 # ---------------------------------------------------------------------------
@@ -1379,12 +1379,12 @@ def dedup_substring_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _semantic_sql(k: int = 8, iters: int = 2) -> str:
+def _semantic_sql() -> str:
     return f"""
 WITH eu AS (
   {_emb_aug_sql("embedding")}
 ),
-{_kmeans_ctes(k, iters, src="eu")},
+{_kmeans_ctes(8, 2, src="eu")},
 ok AS (SELECT cluster FROM asg GROUP BY cluster
        HAVING COUNT(*) <= {_JACCARD_MAX_BUCKET}),
 pv AS (
@@ -1430,10 +1430,10 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb_augmented(
         load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", SIM.as_double_vec("embedding", "v")
+            "vec_id", SIM.as_double_vec("embedding")
         )
     ).localCheckpoint(eager=False)  # feeds every Lloyd round AND the verify
-    asg = kmeans_assignments(emb, k=8, iters=2, vec_col="v").select(
+    asg = kmeans_assignments(emb, k=8, vec_col="v").select(
         "vec_id", "cluster"
     )
     pairs = D._bucket_pairs(
@@ -1534,7 +1534,7 @@ FROM r WHERE rnk <= 3
 )
 def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
@@ -1543,9 +1543,7 @@ def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter((F.col("vec_id") >= 24) & (F.col("vec_id") < 32)).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
-    return SIM.ivf_pq_topk(
-        vectors, queries, centroids, k=3, m=8, n_codes=16, d=64, nprobe=2
-    )
+    return SIM.ivf_pq_topk(vectors, queries, centroids)
 
 
 # ---------------------------------------------------------------------------
@@ -1607,13 +1605,13 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 3
 )
 def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-    out = SIM.rp_rerank_topk(vectors, queries, coarse_m=10, k=3)
+    out = SIM.rp_rerank_topk(vectors, queries)
     return out.select("q_id", "c_id", "cos", F.col("rnk").cast("long").alias("rnk"))
 
 
@@ -1646,14 +1644,14 @@ GROUP BY t.q_id
 )
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     truth = SIM.brute_force_topk(vectors, queries, k=3).select("q_id", "c_id")
-    ann = SIM.lsh_topk(vectors, queries, k=3).select("q_id", "c_id", F.lit(1).alias("hit"))
+    ann = SIM.lsh_topk(vectors, queries).select("q_id", "c_id", F.lit(1).alias("hit"))
     return (
         truth.join(F.broadcast(ann), ["q_id", "c_id"], "left")
         .groupBy("q_id")
@@ -1695,7 +1693,7 @@ FROM d, tot
 )
 def text_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return TX.unigram_nll(docs, vocab_k=TX.LM_VOCAB_K)
+    return TX.unigram_nll(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -1802,7 +1800,7 @@ FROM documents
 )
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return MM.resize_payload(MM.documents_as_binary(docs), out_bytes=64)
+    return MM.resize_payload(MM.documents_as_binary(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -2113,7 +2111,7 @@ SELECT qid, cand, rel, CAST(rnk AS BIGINT) AS rnk FROM {prev}
 )
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     qs = emb.filter(F.col("vec_id").isin(*_MMR_QUERIES)).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
@@ -2319,7 +2317,7 @@ def sample_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_VAD_THRESHOLD = 500_000
+_VAD_THRESHOLD = MM.VAD_THRESHOLD
 
 _VAD_SQL = f"""
 WITH p AS (
@@ -2375,9 +2373,7 @@ FROM s GROUP BY doc_id, frame_idx, len
 )
 def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return MM.vad_frames(
-        MM.documents_as_binary(docs), threshold=_VAD_THRESHOLD
-    )
+    return MM.vad_frames(MM.documents_as_binary(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -2443,7 +2439,7 @@ GROUP BY f.q_id
 )
 def embedding_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     emb = pin(emb)  # consumers: full + truncated lanes
     queries = emb.filter(F.col("vec_id") < 8).select(
@@ -2605,7 +2601,7 @@ def multimodal_crossmodal_retrieval(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_SHOT_THRESHOLD = 1800
+_SHOT_THRESHOLD = MM.SHOT_THRESHOLD
 
 _SHOT_SQL = f"""
 WITH p AS (
@@ -2657,6 +2653,4 @@ FROM d
 )
 def multimodal_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return MM.shot_boundaries(
-        MM.documents_as_binary(docs), threshold=_SHOT_THRESHOLD
-    )
+    return MM.shot_boundaries(MM.documents_as_binary(docs))

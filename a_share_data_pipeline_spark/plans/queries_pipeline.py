@@ -14,6 +14,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.asof import as_of_join
+from ..operators.graph import PPR_DAMPING
 from ..session import clone_session, scratch_dir, set_width, volume_width
 from ..sources import load_table
 from ..streaming import structured as ST
@@ -342,7 +343,7 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_totalprice", "o_orderdate"
     )
     path = scratch_dir(spark, "layout_zorder")
-    zorder_write(orders, path, ["o_custkey", "o_totalprice"], bits=8, n_files=16)
+    zorder_write(orders, path, ["o_custkey", "o_totalprice"])
     back = spark.read.parquet(path)
     return back.filter(
         F.col("o_custkey").between(100, 300) & (F.col("o_totalprice") > 150000)
@@ -430,7 +431,7 @@ GROUP BY 1, 2
 @register("events_tumbling", _TUMBLE_SQL, doc="tumbling 1h window aggregation (T5); streaming twin: stream_tumbling")
 def events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    return _tumble_out(ST.tumbling_counts(ev, width="1 hour"))
+    return _tumble_out(ST.tumbling_counts(ev))
 
 
 def _tumble_out(counts: DataFrame) -> DataFrame:
@@ -1467,7 +1468,7 @@ def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _rank_sql(d: float, seeds: tuple[str, ...] = (), iters: int = 3) -> str:
+def _rank_sql(d: float, seeds: tuple[str, ...] = ()) -> str:
     """The unrolled PageRank oracle; with ``seeds`` it is personalized
     PageRank — teleport and r0 mass go to the seeds only, and only
     pr > 0 is emitted."""
@@ -1483,7 +1484,7 @@ def _rank_sql(d: float, seeds: tuple[str, ...] = (), iters: int = 3) -> str:
         sep, teleport, r0, where = " ", f"{1.0 - d:.2f}", "1.0", ""
     rounds = []
     prev = "r0"
-    for i in range(1, iters + 1):
+    for i in (1, 2, 3):
         rounds.append(f"""
 r{i} AS (
   SELECT s.node, s.outdeg,{sep}ROUND({teleport} + {d!r} * COALESCE(i.inflow, 0), 6) AS pr
@@ -1543,7 +1544,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = clone_session(spark)
     ie = purchase_iedges(work, sf_dir)
     set_width(work, volume_width(work, ie.count()))
-    pr = pagerank(ie, damping=0.85, iters=3)
+    pr = pagerank(ie)
     return pr.select(
         decode_purchase_node("node").alias("node"), F.col("rank").alias("pr")
     )
@@ -1693,7 +1694,7 @@ def search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = lex_raw.select("doc_id", F.row_number().over(w_lex).alias("r_lex"))
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("q"))
     scored = (
@@ -2379,19 +2380,11 @@ def events_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _PPR_SEEDS = ("c1", "c2", "c3", "c4", "c5")
-# damping 6/7, not 0.85: PPR's early rounds are SPARSE — each rank is
-# an exact small rational (seed mass / outdeg products), and with
-# d = 17/20 those rationals terminate in decimal and can sit exactly
-# ON the ROUND(_,6) half-way grid, where 1-ulp noise flips the side
-# per engine (observed: one node at 0.0584375). A factor of 7 in the
-# damping denominator makes every weight product non-terminating —
-# the events_macd alpha argument applied to graph state.
-_PPR_D = 6.0 / 7.0
 
 
 @register(
     "graph_pagerank_personalized",
-    _rank_sql(_PPR_D, _PPR_SEEDS),
+    _rank_sql(PPR_DAMPING, _PPR_SEEDS),
     doc=(
         "personalized PageRank — teleport mass restricted to a seed "
         "set (r' = (1-d)·1[seed] + d·Σ r/outdeg, r0 = the teleport "
@@ -2414,9 +2407,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .queries_analytics import decode_purchase_node, purchase_iedges
 
     iseeds = [2 * int(s[1:]) for s in _PPR_SEEDS]
-    pr = personalized_pagerank(
-        purchase_iedges(spark, sf_dir), seeds=iseeds, damping=_PPR_D, iters=3
-    )
+    pr = personalized_pagerank(purchase_iedges(spark, sf_dir), seeds=iseeds)
     return pr.filter(F.col("rank") > 0).select(
         decode_purchase_node("node").alias("node"), F.col("rank").alias("pr")
     )

@@ -104,7 +104,7 @@ def _final_emission(updates: DataFrame, *keys: str) -> DataFrame:
 def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ckpt, ev = _land_events(spark, sf_dir, "stream_tumbling")
     stream = ST.read_file_stream(spark, path, ev.schema)
-    res = ST.tumbling_counts(stream, width="1 hour", watermark="2 hours")
+    res = ST.tumbling_counts(stream, watermark="2 hours")
     return _tumble_out(_run_to_table(res, "complete", ckpt))
 
 
@@ -171,7 +171,7 @@ GROUP BY user_id, sid
 def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, ckpt, ev = _land_events(spark, sf_dir, "stream_sessionize")
     stream = ST.read_file_stream(spark, path, ev.schema)
-    res = ST.session_aggregate(stream, gap="30 minutes", watermark="2 hours")
+    res = ST.session_aggregate(stream, watermark="2 hours")
     out = _run_to_table(res, "complete", ckpt)
     return out.select(
         "user_id",
@@ -887,13 +887,12 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(root, "out")
 
     def sink(b: DataFrame, _bid: int) -> None:
-        if not b.isEmpty():
-            b.write.mode("append").parquet(out)
+        # an empty batch appends one empty part file, which reads as 0 rows
+        b.write.mode("append").parquet(out)
 
     def run_cycle() -> None:
         res = ST.tumbling_counts(
             ST.read_file_stream(spark, land, ev.schema),
-            width="1 hour",
             watermark=f"{_LATE_DELAY_DAYS} days",
         )
         ST.run_available_now(res, ckpt, sink, output_mode="update")

@@ -47,9 +47,8 @@ class DimCache:
         self._entries[key] = _Entry(df=df, fetched_at=now)
         return df
 
-    def invalidate(self, key: str | None = None) -> None:
-        keys = [key] if key is not None else list(self._entries)
-        for k in keys:
-            e = self._entries.pop(k, None)
-            if e is not None:
-                e.df.unpersist()
+    def invalidate(self) -> None:
+        """Drop (and unpersist) every snapshot; the next get reloads."""
+        for e in self._entries.values():
+            e.df.unpersist()
+        self._entries.clear()

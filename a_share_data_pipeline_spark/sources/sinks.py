@@ -187,7 +187,6 @@ def write_native(
     df: DataFrame,
     path: str,
     mode: str = "append",
-    partition_by: tuple[str, ...] = ("date",),
     cluster_by: tuple[str, ...] = (),
 ) -> None:
     """The scale path: Parquet partitioned by date. Incremental readers
@@ -207,21 +206,16 @@ def write_native(
     an at-least-once foreachBatch sink into an effectively-exactly-once
     one."""
     if cluster_by:
-        # prefix with the partition columns: the dynamic-partition writer
-        # requires an ordering on them and would re-sort (unstably,
+        # prefix with the partition column: the dynamic-partition writer
+        # requires an ordering on it and would re-sort (unstably,
         # destroying the clustering) unless the input already satisfies it
-        df = df.sortWithinPartitions(*partition_by, *cluster_by)
+        df = df.sortWithinPartitions("date", *cluster_by)
     if mode == "overwrite_partitions":
-        if not partition_by:
-            raise ValueError("overwrite_partitions requires partition_by")
         df.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
-        ).partitionBy(*partition_by).parquet(path)
+        ).partitionBy("date").parquet(path)
         return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    df.write.mode(mode).partitionBy("date").parquet(path)
 
 
 class Publisher:

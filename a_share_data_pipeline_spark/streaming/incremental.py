@@ -65,12 +65,9 @@ class WatermarkStore:
         os.replace(tmp, self.path)  # atomic advance
 
 
-def delta_slice(source: DataFrame, ts_col: str, watermark, end=None) -> DataFrame:
-    """Partition-pruned incremental slice: rows with ts in (wm, end]."""
-    out = source.filter(F.col(ts_col) > F.lit(watermark))
-    if end is not None:
-        out = out.filter(F.col(ts_col) <= F.lit(end))
-    return out
+def delta_slice(source: DataFrame, ts_col: str, watermark) -> DataFrame:
+    """Partition-pruned incremental slice: rows with ts after the watermark."""
+    return source.filter(F.col(ts_col) > F.lit(watermark))
 
 
 def merge_increment(

@@ -52,14 +52,12 @@ def read_file_stream(
     return reader.load(path)
 
 
-def tumbling_counts(
-    events: DataFrame, width: str = "10 minutes", watermark: str = "30 minutes"
-) -> DataFrame:
-    """T5: tumbling event-time window; late rows beyond `watermark` are
+def tumbling_counts(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+    """T5: tumbling 1-hour event-time window; late rows beyond `watermark` are
     dropped, within it they update their window's aggregate."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width).alias("win"), "event_type")
+        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),
@@ -74,17 +72,12 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    width: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """T5: sliding (hopping) window — each row lands in width/slide
-    overlapping windows."""
+def sliding_counts(events: DataFrame, watermark: str = "30 minutes") -> DataFrame:
+    """T5: sliding (hopping) 2-hour window every hour — each row lands
+    in 2 overlapping windows."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width, slide).alias("win"), "event_type")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("win.start").alias("win_start"),
@@ -95,15 +88,13 @@ def sliding_counts(
     )
 
 
-def session_aggregate(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour"
-) -> DataFrame:
-    """T5: gap-based session windows per user via the built-in
+def session_aggregate(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """T5: 30-minute-gap session windows per user via the built-in
     session_window — state merging happens in the JVM state store, no
     Python in the loop."""
     return (
         events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("sess"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sum_value"),

@@ -273,10 +273,42 @@ def _replay_geo_dbscan_grid(con, srows, scols):
     return rows == got, {"cand": len(cand), "rows": len(rows)}
 
 
+def _replay_graph_clustering_coeff(con, srows, scols):
+    """Triangles counted in Python over the oracle's degree-capped
+    ``pairs`` (ka < kb), each once in its low->high orientation as the
+    oracle's wedge join counts it; compares the integer columns of the
+    top ``_CC_TOP``."""
+    from a_share_data_pipeline_spark.plans.queries_profile import _CC_SQL, _CC_TOP
+
+    pairs = con.execute(
+        _prefix(_CC_SQL, "deg AS (", "SELECT ka, kb FROM pairs")
+    ).fetchall()
+    up, deg, tri = {}, {}, {}
+    for a, b in pairs:
+        up.setdefault(a, set()).add(b)
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    for a, b in pairs:
+        for c in up[a] & up.get(b, set()):
+            for n in (a, b, c):
+                tri[n] = tri.get(n, 0) + 1
+    cc = [
+        (n, d, tri.get(n, 0), (2 * tri.get(n, 0) * 1000000000) // (d * (d - 1)))
+        for n, d in deg.items()
+        if d >= 2
+    ]
+    top = sorted(cc, key=lambda r: (-r[3], r[0]))[:_CC_TOP]
+    expect = sorted(r + (len(cc),) for r in top)
+    idx = [scols.index(c) for c in ("node", "degree", "tri_cnt", "cc_u", "n_nodes")]
+    got = sorted(tuple(r[i] for i in idx) for r in srows)
+    return expect == got, {"pairs": len(pairs), "rows": len(expect)}
+
+
 REPLAY = {
     "er_resolve": _replay_er_resolve,
     "graph_cc_incremental": _replay_graph_cc_incremental,
     "geo_dbscan_grid": _replay_geo_dbscan_grid,
+    "graph_clustering_coeff": _replay_graph_clustering_coeff,
 }
 
 

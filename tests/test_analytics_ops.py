@@ -30,7 +30,7 @@ def test_label_propagation_separates_two_bridged_cliques(spark):
     e = _iedges(
         spark, [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6), (3, 4)]
     )
-    got = {r.node: r.lbl for r in label_propagation(e, iters=3).collect()}
+    got = {r.node: r.lbl for r in label_propagation(e).collect()}
     assert got == {1: 4, 2: 4, 3: 4, 4: 6, 5: 6, 6: 6}
 
 
@@ -71,7 +71,7 @@ def test_pair_containment_prefix_doc_is_fully_contained(spark):
     the excerpt signal the containment operator exists for."""
     from a_share_data_pipeline_spark.operators.dedup import (
         exploded_shingles,
-        pair_containment,
+        pair_overlap,
     )
 
     words = [f"w{i}" for i in range(20)]
@@ -79,7 +79,7 @@ def test_pair_containment_prefix_doc_is_fully_contained(spark):
         [(1, " ".join(words)), (2, " ".join(words[:10]))],
         "doc_id long, text string",
     )
-    [row] = pair_containment(exploded_shingles(docs), min_overlap=3).collect()
+    [row] = pair_overlap(exploded_shingles(docs), min_overlap=3).collect()
     assert (row.a, row.b) == (1, 2)
     assert row.n_a == 18 and row.n_b == 8 and row.n_inter == 8
     assert row.n_inter / min(row.n_a, row.n_b) == 1.0
@@ -4436,11 +4436,11 @@ def test_bloom_decontaminate_matches_exact_stage(spark):
     docs = load_table(spark, sf, "documents")
     bench_grams = (
         docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
-        .select(F.explode(word_shingles_col("text", _DECON_N)).alias("g"))
+        .select(F.explode(word_shingles_col(_DECON_N)).alias("g"))
         .distinct()
     )
     corpus_grams = docs.filter(F.col("doc_id") % _BENCH_MOD != 0).select(
-        "doc_id", F.explode(word_shingles_col("text", _DECON_N)).alias("g")
+        "doc_id", F.explode(word_shingles_col(_DECON_N)).alias("g")
     )
     words = SK.bloom_build(bench_grams, "g")
     n_total = corpus_grams.count()

@@ -153,8 +153,8 @@ def test_kmeans_deterministic_and_total(spark):
     rng = np.random.RandomState(42)
     rows = [(int(i), [float(x) for x in rng.randn(8)]) for i in range(50)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a1 = {r.vec_id: (r.cluster, r.rd) for r in kmeans_assignments(df, k=4, iters=2).collect()}
-    a2 = {r.vec_id: (r.cluster, r.rd) for r in kmeans_assignments(df, k=4, iters=2).collect()}
+    a1 = {r.vec_id: (r.cluster, r.rd) for r in kmeans_assignments(df, k=4).collect()}
+    a2 = {r.vec_id: (r.cluster, r.rd) for r in kmeans_assignments(df, k=4).collect()}
     assert a1 == a2  # deterministic across runs
     assert set(a1) == set(range(50))  # every vector assigned
     assert {c for c, _ in a1.values()} <= set(range(4))

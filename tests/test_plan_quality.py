@@ -385,7 +385,7 @@ def test_ann_index_scan_prunes_partitions(spark, tmp_path):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")

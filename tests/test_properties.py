@@ -197,7 +197,7 @@ def test_pack_sequences_invariants(spark, docs):
 
     rows = [(i % 2, i, " ".join(ws)) for i, ws in enumerate(docs)]
     df = spark.createDataFrame(rows, "source int, doc_id long, text string")
-    out = pack_sequences(df, context_len=16, shard_col="source").collect()
+    out = pack_sequences(df, context_len=16).collect()
     by_shard: dict[int, list] = {}
     for r in sorted(out, key=lambda r: (r.source, r.doc_id)):
         by_shard.setdefault(r.source, []).append(r)
@@ -915,7 +915,7 @@ def test_label_propagation_translation_invariant(spark, edges):
         )
         return {
             r.node - off: r.lbl - off
-            for r in label_propagation(df, iters=3).collect()
+            for r in label_propagation(df).collect()
         }
 
     assert run(0) == run(1000)

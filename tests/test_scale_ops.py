@@ -131,7 +131,7 @@ def test_native_sink_partition_pruning(spark, tmp_path):
 
     ev = load_table(spark, SF, "events").withColumn("date", F.to_date("ts"))
     out = str(tmp_path / "events_table")
-    write_native(ev, out, mode="overwrite", partition_by=("date",))
+    write_native(ev, out, mode="overwrite")
     parts = [p for p in os.listdir(out) if p.startswith("date=")]
     assert len(parts) > 1
 
@@ -161,7 +161,7 @@ def test_write_native_cluster_by_sorts_row_groups(spark, tmp_path):
         F.col("id").cast("double").alias("v"),
     )
     out = str(tmp_path / "clustered")
-    write_native(df, out, partition_by=("date",), cluster_by=("code",))
+    write_native(df, out, cluster_by=("code",))
     files = [
         os.path.join(dp, f)
         for dp, _, fs in os.walk(out)
@@ -424,7 +424,7 @@ def test_zorder_write_tightens_stats_on_both_columns(spark, tmp_path):
         return spans
 
     z_out = str(tmp_path / "zordered")
-    zorder_write(orders, z_out, ["o_custkey", "o_totalprice"], bits=8, n_files=16)
+    zorder_write(orders, z_out, ["o_custkey", "o_totalprice"])
     base_out = str(tmp_path / "hashed")
     orders.repartition(16).write.parquet(base_out)
 
@@ -452,7 +452,7 @@ def test_ann_paths_recall_against_brute_force(spark):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
@@ -479,10 +479,10 @@ def test_ann_paths_recall_against_brute_force(spark):
             total += len(want)
         return hits / total
 
-    lsh = topk_sets(SIM.lsh_topk(vectors, queries, k=3), "cos")
-    ivf = topk_sets(SIM.ivf_topk(vectors, queries, centroids, k=3, nprobe=2), "cos")
-    pq = topk_sets(SIM.pq_adc_topk(vectors, queries, k=3, m=8, n_codes=16, d=64), "adist")
-    ivfpq = topk_sets(SIM.ivf_pq_topk(vectors, queries, centroids, k=3, nprobe=2), "adist")
+    lsh = topk_sets(SIM.lsh_topk(vectors, queries), "cos")
+    ivf = topk_sets(SIM.ivf_topk(vectors, queries, centroids), "cos")
+    pq = topk_sets(SIM.pq_adc_topk(vectors, queries, k=3), "adist")
+    ivfpq = topk_sets(SIM.ivf_pq_topk(vectors, queries, centroids), "adist")
 
     # floors chosen from the fixture's measured behavior (lsh 0.375,
     # ivf@nprobe2 0.542, pq 0.125, ivf-pq 0.125) with slack: the point
@@ -1045,7 +1045,7 @@ def test_pq_codebook_training_improves_recall(spark):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
@@ -1082,7 +1082,7 @@ def test_ivf_pq_consistent_with_pq_and_cell_restricted(spark):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding", "v")
+        "vec_id", SIM.as_double_vec("embedding")
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
@@ -1095,7 +1095,7 @@ def test_ivf_pq_consistent_with_pq_and_cell_restricted(spark):
         (r.q_id, r.c_id): r.adist
         for r in SIM.pq_adc_topk(vectors, queries, k=100).collect()
     }
-    ivfpq = SIM.ivf_pq_topk(vectors, queries, centroids, k=3, nprobe=2).collect()
+    ivfpq = SIM.ivf_pq_topk(vectors, queries, centroids).collect()
     assert ivfpq
     per_q: dict[int, int] = {}
     for r in ivfpq:
@@ -1437,19 +1437,22 @@ def test_sample_negatives_never_plans_cartesian(spark):
 def test_eager_pins_only_in_session_pin():
     """``session.pin`` is the package's one eager materialization: the
     only eager ``localCheckpoint`` call (``eager=True`` or no argument)
-    is inside it, and the lazy ``eager=False`` pins number exactly 4."""
+    is inside it, the lazy ``eager=False`` pins number exactly 4, and
+    no ``isEmpty()`` runs a second job over a frame."""
     import ast
     from pathlib import Path
 
     import a_share_data_pipeline_spark as pkg
 
     root = Path(pkg.__file__).parent
-    eager, lazy, helper = [], [], None
+    eager, lazy, empties, helper = [], [], [], None
     for path in sorted(root.rglob("*.py")):
         rel = path.relative_to(root).as_posix()
         for node in ast.walk(ast.parse(path.read_text())):
             if isinstance(node, ast.FunctionDef) and node.name == "pin" and rel == "session.py":
                 helper = range(node.lineno, node.end_lineno + 1)
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "isEmpty":
+                empties.append((rel, node.lineno))
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
@@ -1461,6 +1464,62 @@ def test_eager_pins_only_in_session_pin():
     assert len(eager) == 1, eager
     assert helper and eager[0][0] == "session.py" and eager[0][1] in helper, (eager, helper)
     assert len(lazy) == 4, lazy
+    assert empties == [], empties
+
+
+def test_every_default_is_varied_by_a_caller():
+    """Every defaulted parameter of a package function is passed, at one
+    or more call sites in the package, ``tests/``, ``bench.py``,
+    ``sweep.py``, ``job_probe.py`` or ``perfbench/``, a value whose
+    source text differs from its default (a variable counts as
+    differing). An option no caller varies is a constant: write it as
+    one. Calls match by name (``f(...)``, ``x.f(...)``, a class name for
+    ``__init__``). Only ``get_spark`` is exempt: harnesses outside the
+    repo call it."""
+    import ast
+    from collections import defaultdict
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    repo = root.parent
+    files = [*root.rglob("*.py"), *(repo / "tests").glob("*.py"), *(repo / "perfbench").glob("*.py")]
+    files += [repo / f for f in ("bench.py", "sweep.py", "job_probe.py")]
+    defs, calls = [], defaultdict(list)
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.ClassDef):
+                for fn in node.body:
+                    fn.owner = node.name  # ast.walk reaches a class before its body
+            if isinstance(node, ast.FunctionDef) and root in path.parents:
+                defs.append((path.relative_to(root).as_posix(), node))
+            if isinstance(node, ast.Call):
+                calls[getattr(node.func, "id", None) or getattr(node.func, "attr", None)].append(node)
+
+    def varies(call, fn, i, arg, default):
+        if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
+            return True
+        vals = [k.value for k in call.keywords if k.arg == arg]
+        if i is not None:
+            bound = hasattr(fn, "owner") and (isinstance(call.func, ast.Attribute) or fn.name == "__init__")
+            vals += call.args[i - bound : i - bound + 1] if i >= bound else []
+        return any(ast.unparse(v) != ast.unparse(default) for v in vals)
+
+    unvaried = []
+    for rel, fn in defs:
+        if fn.name == "get_spark":
+            continue
+        a = fn.args
+        pos = [p.arg for p in a.posonlyargs + a.args]
+        params = list(zip(pos[len(pos) - len(a.defaults) :], a.defaults))
+        params += [(p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+        callee = fn.owner if fn.name == "__init__" else fn.name
+        for arg, default in params:
+            i = pos.index(arg) if arg in pos else None
+            if not any(varies(c, fn, i, arg, default) for c in calls[callee]):
+                unvaried.append(f"{rel}:{fn.name}({arg}={ast.unparse(default)})")
+    assert unvaried == [], f"{len(unvaried)} defaults no caller varies:\n" + "\n".join(unvaried)
 
 
 def test_tick_order_key_built_only_in_ordering_py():

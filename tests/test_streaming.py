@@ -36,10 +36,10 @@ def _memory_df(spark, name):
 def test_tumbling_stream_matches_batch(spark, events_landing, tmp_path):
     path, schema, ev_batch = events_landing
     stream = ST.read_file_stream(spark, path, schema)
-    result = ST.tumbling_counts(stream, width="1 hour", watermark="2 hours")
+    result = ST.tumbling_counts(stream, watermark="2 hours")
     ST.run_available_now(result, str(tmp_path / "ckpt"), "tumb", output_mode="complete")
     got = {tuple(r) for r in _memory_df(spark, "tumb").collect()}
-    want = {tuple(r) for r in ST.tumbling_counts(ev_batch, width="1 hour").collect()}
+    want = {tuple(r) for r in ST.tumbling_counts(ev_batch).collect()}
     assert got == want
     assert len(got) > 0
 
@@ -47,10 +47,10 @@ def test_tumbling_stream_matches_batch(spark, events_landing, tmp_path):
 def test_sliding_stream_matches_batch(spark, events_landing, tmp_path):
     path, schema, ev_batch = events_landing
     stream = ST.read_file_stream(spark, path, schema)
-    result = ST.sliding_counts(stream, width="2 hours", slide="1 hour", watermark="2 hours")
+    result = ST.sliding_counts(stream, watermark="2 hours")
     ST.run_available_now(result, str(tmp_path / "ckpt"), "slide", output_mode="complete")
     got = {tuple(r) for r in _memory_df(spark, "slide").collect()}
-    want = {tuple(r) for r in ST.sliding_counts(ev_batch, width="2 hours", slide="1 hour").collect()}
+    want = {tuple(r) for r in ST.sliding_counts(ev_batch).collect()}
     assert got == want
     # every event lands in 2 overlapping windows → sliding rows ≥ tumbling rows
     assert len(got) > 0
@@ -59,10 +59,10 @@ def test_sliding_stream_matches_batch(spark, events_landing, tmp_path):
 def test_session_stream_matches_batch(spark, events_landing, tmp_path):
     path, schema, ev_batch = events_landing
     stream = ST.read_file_stream(spark, path, schema)
-    result = ST.session_aggregate(stream, gap="30 minutes", watermark="2 hours")
+    result = ST.session_aggregate(stream, watermark="2 hours")
     ST.run_available_now(result, str(tmp_path / "ckpt"), "sess", output_mode="complete")
     got = {tuple(r) for r in _memory_df(spark, "sess").collect()}
-    want = {tuple(r) for r in ST.session_aggregate(ev_batch, gap="30 minutes").collect()}
+    want = {tuple(r) for r in ST.session_aggregate(ev_batch).collect()}
     assert got == want
     assert len(got) > 0
 
