@@ -92,20 +92,23 @@ def delta_flow(
     date-range filter on each fact scan — at scale this is static
     partition pruning to exactly the pending date partitions.
 
-    The delta is evaluated ONCE (one ``pin``, which also counts its
-    rows): the empty check, the staging append, the publish and the
-    returned frame all see the same rows, even from a nondeterministic
-    source.
+    The delta is evaluated ONCE, in one ``pin``, and the staged lines
+    ride the pin: its own job also collects every row's CSV line
+    (``sinks.csv_line``), joined into one string. The empty check, the staging append, the
+    publish and the returned frame all see the same rows, even from a
+    nondeterministic source. The driver holds the whole delta, which
+    its date window bounds.
 
-    The publish splices bytes, not rows, in the driver: no Spark job
-    runs after the staging append. The old published file's header is
+    No Spark job runs after the pin. The flow appends the lines to the
+    staging file itself (header once) and splices the same bytes into
+    the publish, in the driver. The old published file's header is
     checked against CANONICAL (a mismatch raises before upload, so the
     watermark stays put), and the new file is the old lines followed by
-    the delta's lines, read back from the staging file. A segment index
-    (SEGMENTS_FILE) beside the published file tells `sinks.splice_csv`
-    which leading bytes no merge can touch; those are copied as they
-    are, the rest filtered line by line. The file is uploaded before
-    its index and both before the watermark.
+    the delta's lines. A segment index (SEGMENTS_FILE) beside the
+    published file tells `sinks.splice_csv` which leading bytes no
+    merge can touch; those are copied as they are, the rest filtered
+    line by line. The file is uploaded before its index and both before
+    the watermark.
 
     mode='compat' (default) keeps reference semantics on purpose:
     published = old UNION ALL new with NO dedup (U1 — a crash rerun
@@ -152,15 +155,14 @@ def delta_flow(
             stock_basic,
             mode="delta",  # inner dim join doubles as the main-board filter (J3)
         ),
-        rows=F.count(F.lit(1)),
+        lines=F.concat_ws("\n", F.collect_list(sinks.csv_line())),
     )
-    if seen["rows"] == 0:  # P6: no new rows → no publish, no advance
+    if not seen["lines"]:  # P6: no new rows → no publish, no advance
         return None
 
-    offset = sinks.append_csv(delta, staging_path)  # local delta CSV, ref :101-107
-    with open(staging_path, "rb") as f:
-        f.seek(offset)
-        delta_lines = f.read()
+    header = ",".join(CANONICAL.fieldNames())
+    delta_lines = (seen["lines"] + "\n").encode()
+    sinks.append_lines(delta_lines, staging_path, header)  # local delta CSV, ref :101-107
 
     old = index = None
     if publisher.exists(PRICES_FILE):
@@ -173,7 +175,6 @@ def delta_flow(
         segments_local = os.path.join(tmp, SEGMENTS_FILE)
         # compat: U1 bag union, nothing dropped; merge: delta keys replace old lines
         replace_after = slack_from.isoformat() if mode == "merge" else None
-        header = ",".join(CANONICAL.fieldNames())
         index = sinks.splice_csv(old, index, delta_lines, published_local, header, replace_after)
         with open(segments_local, "w") as f:
             json.dump(index, f)

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import CANONICAL
 
@@ -68,16 +69,19 @@ def enrich_dim(fact: DataFrame, stock_dim: DataFrame, mode: str = "backfill") ->
 
 def to_canonical(df: DataFrame) -> DataFrame:
     """P3+F1: rename, cast wire-format yyyyMMdd strings to dates, and
-    project in the reference's column order (FIXTURES.md §A6)."""
-    out = df
-    for src, dst in RENAME_MAP.items():
-        out = out.withColumnRenamed(src, dst)
-    out = (
-        out.withColumn("date", F.to_date(F.col("trade_date"), "yyyyMMdd"))
-        .withColumn("list_date", F.to_date(F.col("list_date"), "yyyyMMdd"))
-        .withColumnRenamed("ts_code", "code")
-    )
-    return out.select(*[f.name for f in CANONICAL.fields])
+    project in the reference's column order (FIXTURES.md §A6).
+
+    One projection from SQL text: each DataFrame call is a py4j round
+    trip plus an analysis of the plan, and every delta cycle builds
+    this plan anew."""
+    source = {dst: src for src, dst in {**RENAME_MAP, **KEY_RENAME}.items()}
+    cols = []
+    for f in CANONICAL.fields:
+        col = f"`{source.get(f.name, f.name)}`"
+        if isinstance(f.dataType, T.DateType):
+            col = f"to_date({col}, 'yyyyMMdd')"
+        cols.append(f"{col} AS `{f.name}`")
+    return df.selectExpr(*cols)
 
 
 def assemble_canonical(
@@ -106,13 +110,11 @@ def assemble_canonical(
         # (market/delta_non_fq_daily_kline.py:84 'continue') — so the
         # anchor keeps only dates present in BOTH secondary facts.
         # Backfill keeps such rows with null limit/basic columns (the
-        # reference's outer concat does too). The date sets are tiny
-        # relative to the facts → broadcast semi-join, no extra shuffle.
-        present = (
-            stk_limit.select("trade_date")
-            .distinct()
-            .join(daily_basic.select("trade_date").distinct(), "trade_date")
-        )
-        daily = daily.join(F.broadcast(present), "trade_date", "left_semi")
+        # reference's outer concat does too). One broadcast semi-join per
+        # fact keeps a date present in both: the semi-join build ignores
+        # duplicate keys and the date window bounds it, so no shuffle
+        # and no distinct runs.
+        for fact in (stk_limit, daily_basic):
+            daily = daily.join(F.broadcast(fact.select("trade_date")), "trade_date", "left_semi")
     fact = join_facts(daily, stk_limit, daily_basic)
     return to_canonical(enrich_dim(fact, dim, mode))

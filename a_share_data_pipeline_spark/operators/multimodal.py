@@ -50,32 +50,28 @@ FEATURE_SCHEMA = T.StructType(
 def real_decode(payload: bytes) -> dict:
     """Placeholder for a real media decoder (PIL / torchaudio / ffmpeg).
 
-    Not available in this environment — the deterministic fake below
-    stands in; swap this out where the libs exist.
+    Not available in this environment — the deterministic fake in
+    `extract_features` stands in; swap this out where the libs exist.
     """
     raise NotImplementedError("media decode libs are not installed in this container")
 
 
-def _fake_features(payload: bytes) -> tuple[int, str, int]:
-    # deterministic stand-in for decode: byte length, 8-byte header hex,
-    # and a pseudo "width" derived from the size
-    return len(payload), payload[:8].hex().upper(), len(payload) % 640
-
-
 def extract_features(binary_df: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over a binary column."""
+    """Arrow-batched feature extraction over a binary column. The
+    features are a deterministic stand-in for decode: byte length,
+    8-byte header hex, and a pseudo "width" derived from the size."""
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         for pdf in batches:
-            feats = [_fake_features(b) for b in pdf["payload"]]
+            payload = pdf["payload"]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": [f[0] for f in feats],
-                    "head_hex": [f[1] for f in feats],
-                    "fake_width": [f[2] for f in feats],
+                    "n_bytes": [len(b) for b in payload],
+                    "head_hex": [b[:8].hex().upper() for b in payload],
+                    "fake_width": [len(b) % 640 for b in payload],
                 }
             )
 

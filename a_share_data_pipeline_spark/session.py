@@ -34,8 +34,13 @@ is the calling function (``<module>.<qualname>``), so the event log
 splits any query into named phases with no per-site name. A question
 about the pinned frame (its row count, a moved-label count) is an
 ``observe`` metric that rides the pin's own job, never a second
-``count()``/``isEmpty()`` job. A lazy ``localCheckpoint(eager=False)``
-submits no job, so it stays inline.
+``count()``/``isEmpty()`` job. Rows that a driver-side write needs
+ride the pin the same way when a window bounds them:
+``flows.delta_flow`` collects the delta's CSV lines, joined into one
+string, on its pin instead of running a write job after it.
+The scheduler applies a result task's metrics once, so a retried task
+adds no duplicates. A lazy ``localCheckpoint(eager=False)`` submits no
+job, so it stays inline.
 
 Scratch: a query that writes its own files (stream landings and
 checkpoints, interchange round-trips, stored indexes, layout tables)
@@ -128,7 +133,13 @@ def pin(df: DataFrame, **metrics: Column):
     caller's name as the job description; the thread's previous
     description is restored after. With ``metrics`` (name=aggregate
     column, e.g. ``rows=F.count(F.lit(1))``) the aggregates are
-    observed on the same job and ``(frame, {name: value})`` returns."""
+    observed on the same job and ``(frame, {name: value})`` returns.
+
+    Each value crosses from the JVM as py4j converts it: a number or a
+    string comes back as one, an array would stay a JVM object. The
+    public ``Observation.get`` pickles the row instead, and py4j
+    decodes those bytes one at a time in Python, slow for the few
+    hundred KB of a delta's lines."""
     caller = sys._getframe(1)
     sc = df.sparkSession.sparkContext
     prior = sc.getLocalProperty("spark.job.description")
@@ -138,7 +149,10 @@ def pin(df: DataFrame, **metrics: Column):
             seen = Observation()
             df = df.observe(seen, *(col.alias(name) for name, col in metrics.items()))
         pinned = df.localCheckpoint(eager=True)
-        return (pinned, seen.get) if metrics else pinned
+        if not metrics:
+            return pinned
+        row = seen._jo.getRow()
+        return pinned, {name: row.get(i) for i, name in enumerate(metrics)}
     finally:
         sc.setLocalProperty("spark.job.description", prior)
 

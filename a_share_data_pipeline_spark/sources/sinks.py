@@ -12,7 +12,7 @@ Reference semantics being reproduced:
       part of the engine; modeled as a `Publisher` protocol, implemented
       by a local dir that stands in for the hub repo.
 
-The compat sinks write text lines: `csv_lines` renders rows with the
+The compat sinks write text lines: `csv_line` renders a row with the
 CSV writer's own generator and options, so a line written once can be
 passed through a later rewrite unparsed. The delta publish
 (`flows.delta_flow`) is such a rewrite, done by `splice_csv` in the
@@ -20,15 +20,19 @@ driver without a Spark job: the published file is a sequence of
 segments (the backfill, then one tail per cycle), and a segment index
 records each segment's byte offset and max date. Segments no merge can
 touch are copied byte for byte, the later ones are filtered line by
-line on their `code,date` prefix, and the delta's lines (read back from
-the staging append) go last. Once the index describes the file, only
-the lines a merge can reach are parsed (O(delta)); the rest is a byte
-copy plus the sha256 that checks the index. Without a valid index every
-line is parsed, in one pass.
+line on their `code,date` prefix, and the delta's lines go last. Those
+lines were collected on the delta's own pin; `append_lines` stages the
+same bytes. Once the index describes the file, only the lines a merge
+can reach are parsed (O(delta)); the rest is a byte copy plus the
+sha256 that checks the index. Without a valid index every line is
+parsed, in one pass.
 
 Scale note: the compat sinks intentionally produce ONE file because the
-reference's contract is one canonical CSV; they stream partition files
-driver-side without collecting rows into memory. The native sink is the
+reference's contract is one canonical CSV. `append_csv` and
+`overwrite_csv` (the backfill and calendar writes, whose input is the
+whole history) stream partition files driver-side without collecting
+rows into memory; only `append_lines` takes bytes the driver already
+holds, a delta bounded by its date window. The native sink is the
 100 TB path: Parquet partitioned by `date` (partition pruning on the
 incremental read path), append/overwrite via Spark's committer.
 """
@@ -42,7 +46,7 @@ import os
 import shutil
 import tempfile
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 CSV_OPTS = {
@@ -55,16 +59,20 @@ CSV_OPTS = {
 }
 
 
+def csv_line() -> Column:
+    """A row, every column in order, as one headerless CSV line,
+    rendered by the same generator and options as Spark's CSV writer."""
+    return F.to_csv(F.struct(F.col("*")), CSV_OPTS)
+
+
 def csv_lines(df: DataFrame) -> DataFrame:
-    """df's rows as headerless CSV lines (one `value` column), rendered
-    by the same generator and options as Spark's CSV writer."""
-    return df.select(F.to_csv(F.struct(*df.columns), CSV_OPTS).alias("value"))
+    """df's rows as headerless CSV lines (one `value` column)."""
+    return df.select(csv_line().alias("value"))
 
 
-def _write_lines(lines: DataFrame, path: str, mode: str, header: str | None) -> int:
+def _write_lines(lines: DataFrame, path: str, mode: str, header: str | None) -> None:
     """Write text lines as part-files in a temp dir beside `path`, then
-    copy their bytes into `path` in part order (no driver collect).
-    Returns the byte offset in `path` where the lines start."""
+    copy their bytes into `path` in part order (no driver collect)."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     with tempfile.TemporaryDirectory(dir=os.path.dirname(path) or ".") as tmp:
         stage = os.path.join(tmp, "stage")
@@ -72,17 +80,14 @@ def _write_lines(lines: DataFrame, path: str, mode: str, header: str | None) -> 
         with open(path, mode + "b") as out:
             if header is not None:
                 out.write((header + "\n").encode())
-            start = out.tell()
             for p in sorted(glob.glob(os.path.join(stage, "part-*"))):
                 with open(p, "rb") as src:
                     shutil.copyfileobj(src, out)
-    return start
 
 
-def append_csv(df: DataFrame, path: str) -> int:
+def append_csv(df: DataFrame, path: str) -> None:
     """S9: append rows to ONE csv file; write the header only if the
-    file does not exist yet (reference header-once semantics). Returns
-    the byte offset where the appended lines start.
+    file does not exist yet (reference header-once semantics).
 
     Partition part-files are streamed into the target without a driver
     collect; ordering across partitions is unspecified, as in any
@@ -90,9 +95,19 @@ def append_csv(df: DataFrame, path: str) -> int:
     its order is an artifact of the driver loop, not a contract).
     """
     first_write = not os.path.exists(path)  # header_once predicate
-    return _write_lines(
-        csv_lines(df), path, "a", ",".join(df.columns) if first_write else None
-    )
+    _write_lines(csv_lines(df), path, "a", ",".join(df.columns) if first_write else None)
+
+
+def append_lines(data: bytes, path: str, header: str) -> None:
+    """S9 for lines the driver already holds (rendered by `csv_line`):
+    append `data` to `path`, writing `header` first only if the file
+    does not exist yet. No Spark job runs."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    first_write = not os.path.exists(path)  # header_once predicate
+    with open(path, "ab") as out:
+        if first_write:
+            out.write((header + "\n").encode())
+        out.write(data)
 
 
 def overwrite_csv(df: DataFrame, path: str) -> None:

@@ -2172,6 +2172,47 @@ def test_modularity_matches_python_replay(spark):
     assert abs(r.modularity - q) < 1e-6
 
 
+_FEATURES_SCRIPT = """
+import json, sys
+sys.path.insert(0, sys.argv[1])  # the driver's path only, as sweep.py sets it
+from a_share_data_pipeline_spark.operators import multimodal as MM
+from a_share_data_pipeline_spark.session import get_spark
+
+spark = get_spark("features-outside-the-repo")
+docs = spark.createDataFrame(
+    [(1, "hello world", "web"), (2, "", "news"), (3, "沪深" * 400, "web")],
+    "doc_id long, text string, source string",
+)
+rows = MM.extract_features(MM.documents_as_binary(docs)).collect()
+print(json.dumps(sorted([list(r) for r in rows])))
+"""
+
+
+def test_extract_features_needs_no_package_on_the_worker(tmp_path):
+    """Started outside the repo with the package on the driver's
+    sys.path only, `extract_features` still runs: its mapInPandas
+    function carries everything it calls, so the Python worker never
+    imports the package."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", _FEATURES_SCRIPT, root],
+        capture_output=True, text=True, cwd=tmp_path, env=env, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    want = [
+        [i, len(b), b[:8].hex().upper(), len(b) % 640]
+        for i, b in ((1, b"hello world"), (2, b""), (3, ("沪深" * 400).encode()))
+    ]
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == want
+
+
 def test_blockhash_finds_every_frame_identical_twin(spark):
     """Any truncated twin whose cut lands at/beyond the 256-char
     fingerprint frame is bit-identical inside the frame — the query

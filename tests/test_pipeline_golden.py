@@ -434,6 +434,80 @@ def test_delta_flow_pins_a_nondeterministic_delta(spark, fixture_sdfs, fixture_p
     assert sorted(_data_lines(pub.download(flows.PRICES_FILE))) == returned
 
 
+_PIN_RETRY_SCRIPT = """
+import datetime as dt, json, sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+from pyspark.sql import functions as F, types as T
+import fixtures_ashare as FX
+from a_share_data_pipeline_spark import flows, schemas
+from a_share_data_pipeline_spark.sources import sinks
+from a_share_data_pipeline_spark.streaming.incremental import WatermarkStore
+
+work = sys.argv[1]
+marks = work + "/marks"
+spark = SparkSession.builder.master("local[4,2]").config("spark.ui.enabled", "false").getOrCreate()
+cal, basic = FX.gen_trade_cal(), FX.gen_stock_basic()
+daily, limit, dbasic = FX.gen_facts(basic, cal)
+df = lambda pdf, schema: spark.createDataFrame(pdf, schema)  # noqa: E731
+seen = {}
+
+
+def pass_after_a_failure():
+    # past the first 100-row batch a Python UDF evaluates, so the
+    # failing attempt can pass rows on to the pin's metrics first
+    ctx = TaskContext.get()
+    n = seen[ctx.taskAttemptId()] = seen.get(ctx.taskAttemptId(), 0) + 1
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0 and n == 101:
+        with open(marks, "a") as f:
+            f.write("failed\\n")
+        raise RuntimeError("injected failure of attempt 0")
+    return True
+
+
+flaky = F.udf(pass_after_a_failure, T.BooleanType()).asNondeterministic()
+daily_sdf = df(daily, schemas.DAILY)
+wm = WatermarkStore(work + "/.wm")
+wm.write(dt.datetime.strptime(cal["cal_date"][5], "%Y%m%d").date())
+delta = flows.delta_flow(
+    spark, daily_sdf.filter(flaky()), df(limit, schemas.STK_LIMIT),
+    df(dbasic, schemas.DAILY_BASIC), df(basic, schemas.STOCK_BASIC),
+    work + "/delta.csv", sinks.LocalDirPublisher(work + "/hub"), wm,
+    dt.datetime.strptime(cal["cal_date"].iloc[-1], "%Y%m%d").date(),
+    calendar=df(cal, schemas.TRADE_CAL), mode="merge",
+)
+returned = [r.value for r in sinks.csv_lines(delta).collect()]
+print(json.dumps([daily_sdf.rdd.getNumPartitions(), returned]))
+"""
+
+
+def test_delta_pin_retry_stages_each_line_once(tmp_path):
+    """On local[4,2] a task may fail once: attempt 0 of partition 0 of
+    the delta pin's job raises at its 101st row, and the lines
+    collected on the pin still count that partition's rows once. The staged and published
+    lines equal the returned frame's, with no duplicates."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    tests = Path(__file__).resolve().parent
+    path = os.pathsep.join([str(tests.parent), str(tests), os.environ.get("PYTHONPATH", "")])
+    proc = subprocess.run(
+        [sys.executable, "-c", _PIN_RETRY_SCRIPT, str(tmp_path)],
+        capture_output=True, text=True, env=dict(os.environ, PYTHONPATH=path), timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    partitions, returned = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert partitions > 1
+    assert (tmp_path / "marks").read_text().count("failed") == 1
+    staged = _data_lines(tmp_path / "delta.csv")
+    assert len(returned) > 10
+    assert len(set(staged)) == len(staged)
+    assert sorted(staged) == sorted(returned)
+    assert sorted(_data_lines(tmp_path / "hub" / flows.PRICES_FILE)) == sorted(returned)
+
+
 def test_delta_flow_rejects_published_file_with_wrong_header(
     spark, fixture_sdfs, fixture_pdfs, tmp_path
 ):
@@ -489,6 +563,20 @@ def test_delta_skips_day_when_any_fact_empty(spark, fixture_sdfs, fixture_pdfs):
     kept = backfill.filter(F.col("date") == F.lit(gone))
     assert kept.count() > 0
     assert kept.filter(F.col("high_limit").isNotNull()).count() == 0
+
+
+def test_delta_assembly_plans_no_shuffle(fixture_sdfs):
+    """The delta keeps a date present in both secondary facts with one
+    broadcast semi-join per fact: the executed plan holds no
+    hash-partitioning Exchange (a distinct of the date sets and a join
+    of them would add two)."""
+    s = fixture_sdfs
+    delta = assembly.assemble_canonical(
+        s["daily"], s["limit"], s["dbasic"], s["stock_basic"], mode="delta"
+    )
+    delta.collect()
+    plan = delta._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning" not in plan, plan
 
 
 class _FailingPublisher(sinks.LocalDirPublisher):
@@ -708,9 +796,9 @@ def test_segment_index_stays_small(spark, fixture_sdfs, fixture_pdfs, tmp_path):
 def test_merge_publish_runs_no_spark_job(
     spark, fixture_sdfs, fixture_pdfs, tmp_path, monkeypatch
 ):
-    """After its pin returns, a merge delta_flow submits exactly one
-    Spark job — the delta's one render to the staging file; the publish
-    itself runs in the driver."""
+    """After its pin returns, a merge delta_flow submits no Spark job:
+    the delta's lines ride the pin, and the staging append and the
+    publish run in the driver."""
     cal_days = list(fixture_pdfs["cal"]["cal_date"])
     s = fixture_sdfs
     pub, wm = _backfilled_hub(spark, s, tmp_path, cal_days[14])
@@ -732,4 +820,4 @@ def test_merge_publish_runs_no_spark_job(
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("after-pin")) == 1
+    assert len(sc.statusTracker().getJobIdsForGroup("after-pin")) == 0
