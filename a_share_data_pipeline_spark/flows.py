@@ -18,8 +18,9 @@ the source), and the reference's 3-thread fetch barrier disappears —
 the three fact tables are three scans joined in one job, parallelism
 comes from partitioning, not threads.
 
-Sources arrive as a `TableSource` (sources/api_source.py) or plain
-DataFrames — the engine never knows whether rows came from Tushare,
+Sources arrive as plain DataFrames, read through the `ashare_api`
+data source (`AShareApiDataSource`, sources/api_source.py) or from
+parquet — the engine never knows whether rows came from Tushare,
 fixtures, or parquet.
 """
 

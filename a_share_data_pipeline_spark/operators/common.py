@@ -11,17 +11,12 @@ def spread(df: DataFrame, key: str) -> DataFrame:
     expansion would otherwise run with the input's file parallelism —
     often ONE task.
 
-    The target comes from ``spark.sql.shuffle.partitions``; non-numeric
-    values (AQE configs allow ``auto``) fall back to the cluster's
-    default parallelism instead of raising. The current-parallelism
+    The target is ``spark.sql.shuffle.partitions``, an integer (Spark
+    rejects any other value when it is set). The current-parallelism
     probe reads ``df.rdd`` — a driver-side plan-to-RDD conversion (no
     job), which assumes a classic (non-Connect) session like the rest
     of this package's plan gates."""
-    conf = df.sparkSession.conf.get("spark.sql.shuffle.partitions", None)
-    try:
-        target = int(conf)
-    except (TypeError, ValueError):
-        target = df.sparkSession.sparkContext.defaultParallelism
+    target = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.rdd.getNumPartitions() < target:
         df = df.repartition(target, key)
     return df

@@ -42,28 +42,29 @@ MIN_STOP_HITS = 1
 
 TOP_WORD_FRAC_MAX = 0.20  # most frequent word may cover <= 20% of doc
 DUP_BIGRAM_FRAC_MAX = 0.50  # bigrams occurring 2+ times may cover <= 50%
+DUP_GRAM_N = 2  # the repetition signal counts word bigrams
 
 DECON_N = 5  # decontamination matches on shared word 5-grams
 
 
-def _word_grams(text_col: str, n: int) -> Column:
-    """NON-distinct word n-grams (repetition needs multiplicities).
-    Guarded like dedup.word_shingles_col: F.sequence(1, 0) would emit a
+def _word_grams() -> Column:
+    """NON-distinct word DUP_GRAM_N-grams of ``text`` (repetition needs
+    multiplicities). Guarded like dedup.word_shingles_col: F.sequence(1, 0) would emit a
     DESCENDING [1, 0] for too-short docs, not an empty array. Token
     array let-bound like word_shingles_col (SCALE.md let-binding
     lesson)."""
 
     def build(toks: Column) -> Column:
-        idx = F.sequence(F.lit(1), F.size(toks) - (n - 1))
+        idx = F.sequence(F.lit(1), F.size(toks) - (DUP_GRAM_N - 1))
         gram = lambda i: F.concat_ws(  # noqa: E731
-            " ", *[F.element_at(toks, i + k) for k in range(n)]
+            " ", *[F.element_at(toks, i + k) for k in range(DUP_GRAM_N)]
         )
-        return F.when(F.size(toks) >= n, F.transform(idx, gram)).otherwise(
+        return F.when(F.size(toks) >= DUP_GRAM_N, F.transform(idx, gram)).otherwise(
             F.array().cast("array<string>")
         )
 
     return F.element_at(
-        F.transform(F.array(F.split(F.col(text_col), " ")), build), 1
+        F.transform(F.array(F.split(F.col("text"), " ")), build), 1
     )
 
 
@@ -78,7 +79,7 @@ def repetition_signals(df: DataFrame) -> DataFrame:
         F.sum("c").alias("n_words"),
         (F.max("c") / F.sum("c")).alias("top_word_frac"),
     )
-    bigrams = df.select("doc_id", F.explode(_word_grams("text", 2)).alias("g"))
+    bigrams = df.select("doc_id", F.explode(_word_grams()).alias("g"))
     bc = bigrams.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
     bigram_sig = bc.groupBy("doc_id").agg(
         (
@@ -112,7 +113,7 @@ def quality_gates(df: DataFrame) -> DataFrame:
     mean_wl = nonspace / n_words
     symbols = F.regexp_count(F.col("text"), F.lit("[^a-zA-Z0-9 ]"))
     symbol_ratio = symbols / F.length(F.col("text"))
-    stop_hits = marker_count("text", LANG_MARKERS["en"])
+    stop_hits = marker_count(LANG_MARKERS["en"])
     gates = {
         "gate_word_count": (n_words >= MIN_WORDS) & (n_words <= MAX_WORDS),
         "gate_word_len": (mean_wl >= MIN_MEAN_WORD_LEN) & (mean_wl <= MAX_MEAN_WORD_LEN),

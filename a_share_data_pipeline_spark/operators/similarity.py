@@ -40,9 +40,8 @@ PQ_CODES = 16
 PQ_SUB = LSH_DIM // PQ_M
 
 
-def as_double_vec(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: x.cast("double")).alias("v")
+def as_double_vec() -> Column:
+    return F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v")
 
 
 def dot(a: Column | str, b: Column | str) -> Column:

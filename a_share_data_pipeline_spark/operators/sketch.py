@@ -113,13 +113,14 @@ def _cms_bucket(seed: int, item: Column) -> Column:
     return F.substring(F.md5(F.concat(F.lit(f"{seed}|"), item)), 1, CMS_PREFIX_LEN)
 
 
-def cms_build(items: DataFrame, item_col: str) -> DataFrame:
-    """The sketch: (seed, bucket) → total count. At most d·w rows
-    (1024 default) regardless of input size; partial aggregation means
-    each task emits at most d·w partial rows into the one shuffle."""
+def cms_build(items: DataFrame) -> DataFrame:
+    """The sketch of ``items.term``: (seed, bucket) → total count. At
+    most d·w rows (1024 default) regardless of input size; partial
+    aggregation means each task emits at most d·w partial rows into the
+    one shuffle."""
     seeds = F.array(*[F.lit(s) for s in CMS_SEEDS])
     return (
-        items.select(F.col(item_col).alias("item"), F.explode(seeds).alias("seed"))
+        items.select(F.col("term").alias("item"), F.explode(seeds).alias("seed"))
         .select(
             "seed",
             F.substring(
@@ -133,8 +134,8 @@ def cms_build(items: DataFrame, item_col: str) -> DataFrame:
     )
 
 
-def cms_estimate(candidates: DataFrame, item_col: str, sketch: DataFrame) -> DataFrame:
-    """Point-estimate counts for ``candidates[item_col]``: min over the
+def cms_estimate(candidates: DataFrame, sketch: DataFrame) -> DataFrame:
+    """Point-estimate counts for ``candidates.term``: min over the
     d rows of the counter each row hashes the item into.
 
     The sketch is ≤ d·w rows → broadcast; the probe is a map-side
@@ -146,7 +147,7 @@ def cms_estimate(candidates: DataFrame, item_col: str, sketch: DataFrame) -> Dat
         row = sketch.filter(F.col("seed") == s).select(
             F.col("bucket").alias(f"_cb{s}"), F.col("cnt").alias(f"_ce{s}")
         )
-        out = out.withColumn(f"_cb{s}", _cms_bucket(s, F.col(item_col))).join(
+        out = out.withColumn(f"_cb{s}", _cms_bucket(s, F.col("term"))).join(
             F.broadcast(row), f"_cb{s}", "left"
         )
     est = F.least(*[F.coalesce(F.col(f"_ce{s}"), F.lit(0)) for s in CMS_SEEDS])

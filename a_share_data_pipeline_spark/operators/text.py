@@ -27,12 +27,12 @@ LANG_PRIORITY = ("en", "fr", "de", "es")
 CJK_PATTERN = "[一-鿿]"
 
 
-def _tokens(text_col: str) -> Column:
-    return F.split(F.col(text_col), " ")
+def _tokens() -> Column:
+    return F.split(F.col("text"), " ")
 
 
-def marker_count(text_col: str, markers: tuple[str, ...]) -> Column:
-    toks = _tokens(text_col)
+def marker_count(markers: tuple[str, ...]) -> Column:
+    toks = _tokens()
 
     def is_marker(x):  # OR chain — lambda runs JVM-side via F.filter
         out = x == F.lit(markers[0])
@@ -48,7 +48,7 @@ def lang_id(df: DataFrame) -> DataFrame:
     stopword counts (fixed priority tie-break), else 'und'."""
     out = df.withColumn("cjk_n", F.regexp_count(F.col("text"), F.lit(CJK_PATTERN)))
     for lang, markers in LANG_MARKERS.items():
-        out = out.withColumn(f"{lang}_n", marker_count("text", markers))
+        out = out.withColumn(f"{lang}_n", marker_count(markers))
     pred = F.when(F.col("cjk_n") > 0, F.lit("zh"))
     for i, lang in enumerate(LANG_PRIORITY):
         cond = F.col(f"{lang}_n") > 0
@@ -63,12 +63,12 @@ def lang_id(df: DataFrame) -> DataFrame:
 def quality_features(df: DataFrame) -> DataFrame:
     """Length / punctuation / stopword-ratio quality features + a linear
     quality score (rational arithmetic only — oracle-reproducible)."""
-    toks = _tokens("text")
+    toks = _tokens()
     n_tokens = F.size(toks)
     n_chars = F.length(F.col("text"))
     nonspace = F.length(F.replace(F.col("text"), F.lit(" "), F.lit("")))
     punct_n = F.regexp_count(F.col("text"), F.lit("[.,!?;:]"))
-    stop_n = marker_count("text", LANG_MARKERS["en"])
+    stop_n = marker_count(LANG_MARKERS["en"])
     return (
         df.withColumn("n_tokens", n_tokens.cast("long"))
         .withColumn("n_chars_m", n_chars.cast("long"))
@@ -92,7 +92,7 @@ BPE_PATTERN = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]"
 
 
 def token_counts(df: DataFrame) -> DataFrame:
-    return df.withColumn("ws_tokens", F.size(_tokens("text")).cast("long")).withColumn(
+    return df.withColumn("ws_tokens", F.size(_tokens()).cast("long")).withColumn(
         "bpe_tokens", F.regexp_count(F.col("text"), F.lit(BPE_PATTERN)).cast("long")
     )
 
@@ -127,7 +127,7 @@ def unigram_nll(df: DataFrame) -> DataFrame:
     re-joins tokens to the broadcast head (left join, OOV → null) and
     aggregates per doc. nll_per_token = log2(N) - avg(log2(count_w)),
     with count_w = 0.5 for OOV."""
-    tok = df.select("doc_id", F.explode(_tokens("text")).alias("w"))
+    tok = df.select("doc_id", F.explode(_tokens()).alias("w"))
     counts = tok.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     vocab = counts.orderBy(F.col("n").desc(), "w").limit(LM_VOCAB_K)
     total = counts.agg(F.sum("n").alias("nn"))

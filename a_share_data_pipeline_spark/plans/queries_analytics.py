@@ -28,7 +28,7 @@ from ..operators import dedup as D
 from ..session import pin, scratch_dir
 from ..sources import load_table
 from .catalog import register
-from .queries_market import _daily_close
+from .queries_market import _daily_avg, _daily_close, _daily_pair, _ticks
 
 # ---------------------------------------------------------------------------
 # Label propagation: community detection (the non-CC, non-rank graph family)
@@ -841,13 +841,8 @@ FROM s
     ),
 )
 def events_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(
-        dround(F.avg("value"), 6).alias("close"), F.count(F.lit(1)).alias("vol")
+    daily = _daily_avg(spark, sf_dir, F.count(F.lit(1)).alias("vol")).withColumnRenamed(
+        "v", "close"
     )
     w = W.partitionBy("event_type").orderBy("day")
     d = daily.select("*", F.lag("close").over(w).alias("pc"))
@@ -915,16 +910,12 @@ FROM tr_t
     ),
 )
 def events_atr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(
+    daily = _daily_avg(
+        spark,
+        sf_dir,
         dround(F.max("value"), 6).alias("high"),
         dround(F.min("value"), 6).alias("low"),
-        dround(F.avg("value"), 6).alias("close"),
-    )
+    ).select("event_type", "day", "high", "low", F.col("v").alias("close"))
     w = W.partitionBy("event_type").orderBy("day")
     d = daily.select("*", F.lag("close").over(w).alias("pc"))
     tr = F.when(F.col("pc").isNull(), F.col("high") - F.col("low")).otherwise(
@@ -1128,12 +1119,7 @@ FROM fit CROSS JOIN (SELECT unnest(range(1, {_FC_HORIZON + 1})) AS h) h
     ),
 )
 def forecast_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     idx = daily.select(
         "event_type",
         F.datediff(F.col("day"), F.lit("1970-01-01").cast("date")).alias("x"),
@@ -1372,12 +1358,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY v, day)
     ),
 )
 def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("v", "day")
     return daily.select(
         "event_type",
@@ -1435,12 +1416,7 @@ FROM dev d JOIN mad m ON m.event_type = d.event_type
     ),
 )
 def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     med = daily.groupBy("event_type").agg(
         dround(F.expr("percentile(v, 0.5)"), 6).alias("med")
     )
@@ -1498,17 +1474,7 @@ FROM daily
     ),
 )
 def window_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(F.date_trunc("day", "ts").cast("date").alias("day")).agg(
-        dround(F.avg(F.when(F.col("event_type") == "view", F.col("value"))), 6).alias(
-            "v_view"
-        ),
-        dround(
-            F.avg(F.when(F.col("event_type") == "purchase", F.col("value"))), 6
-        ).alias("v_purchase"),
-    )
+    daily = _daily_pair(spark, sf_dir)
     w = W.orderBy("day").rowsBetween(-13, 0)
     return daily.select(
         "day",
@@ -3511,9 +3477,7 @@ WHERE rnk <= 10 AND c.pairs > 0
     ),
 )
 def audit_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
+    ev = _ticks(spark, sf_dir)
     sides = ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0)).alias("n_view"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
@@ -4732,9 +4696,7 @@ aggregate(
     ),
 )
 def forecast_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
+    ev = _ticks(spark, sf_dir)
     daily = (
         ev.select(
             "event_type",
@@ -4872,14 +4834,14 @@ _DP_ILN_2_32 = 2218070978
 _DP_EPS = 1  # epsilon (sensitivity-1 count histogram)
 
 
-def dp_laplace_noise_1e8(df: DataFrame, cell: str) -> DataFrame:
+def dp_laplace_noise_1e8(df: DataFrame) -> DataFrame:
     """Adds `noise_1e8`: Laplace(1/ε) noise in 1e-8 units for a
-    sensitivity-1 count cell, inverted from a uniform via the
+    sensitivity-1 count cell keyed by `segment`, inverted from a uniform via the
     integer-ln device — sign·(iln(2³²) − iln(m))/ε where m folds the
     uniform onto (0, 2³²].
 
     SECURITY SEAM — NOT PRIVATE AS SHIPPED. The "uniform" here is
-    md5('dp|' || cell), a DETERMINISTIC function of the released cell
+    md5('dp|' || segment), a DETERMINISTIC function of the released cell
     key: reproducible on both engines (which is what the DuckDB oracle
     needs) and trivially re-computable by any adversary (which is what
     differential privacy forbids). A production deployment must swap
@@ -4891,7 +4853,7 @@ def dp_laplace_noise_1e8(df: DataFrame, cell: str) -> DataFrame:
     pinned by tests/test_analytics_ops.py::
     test_dp_release_clamp_is_load_bearing."""
     hv = F.conv(
-        F.substring(F.md5(F.concat(F.lit("dp|"), F.col(cell))), 1, 8), 16, 10
+        F.substring(F.md5(F.concat(F.lit("dp|"), F.col("segment"))), 1, 8), 16, 10
     ).cast("bigint")
     staged = df.withColumn(
         "__dp_sgn", F.when(F.lit(2) * hv - F.lit(4294967296) < 0, -1).otherwise(1)
@@ -4980,7 +4942,7 @@ def privacy_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = cust.groupBy(F.col("c_mktsegment").alias("segment")).agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
     )
-    noised = dp_laplace_noise_1e8(h, cell="segment")
+    noised = dp_laplace_noise_1e8(h)
     return dp_release_counts(noised).select(
         "segment", "true_n", "noise_1e8", "released_n"
     )

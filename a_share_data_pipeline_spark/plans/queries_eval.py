@@ -260,6 +260,24 @@ def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Scored user-days: the units every binary-classifier metric below ranks
+# ---------------------------------------------------------------------------
+
+
+def _scored_units(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(user_id, day, score, label): one unit per user-day, scored by
+    its non-purchase events and labelled 1 when it holds a purchase."""
+    return (
+        load_table(spark, sf_dir, "events")
+        .groupBy("user_id", F.col("ts").cast("date").alias("day"))
+        .agg(
+            F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0)).alias("score"),
+            F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias("label"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
 # Tie-aware AUC-ROC via the rank-sum identity (wave 16)
 # ---------------------------------------------------------------------------
 
@@ -312,15 +330,7 @@ FROM tot
     ),
 )
 def events_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    units = ev.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0)).alias(
-            "score"
-        ),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "label"
-        ),
-    )
+    units = _scored_units(spark, sf_dir)
     g = units.groupBy("score").agg(
         F.sum("label").alias("n1"),
         (F.count(F.lit(1)) - F.sum("label")).alias("n0"),
@@ -489,7 +499,7 @@ FROM z GROUP BY 1
         "computation, one hash aggregation, all integer"
     ),
 )
-def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
+def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     keyed = li.select(
         F.col("l_partkey").bitwiseAND(F.lit(_Z_MASK)).alias("p8"),
@@ -728,15 +738,7 @@ FROM g CROSS JOIN m
     ),
 )
 def events_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    units = ev.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0)).alias(
-            "score"
-        ),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "label"
-        ),
-    )
+    units = _scored_units(spark, sf_dir)
     g = units.groupBy("score").agg(
         F.count(F.lit(1)).alias("n"), F.sum("label").alias("pos")
     )
@@ -951,15 +953,7 @@ WHERE t.pos_total > 0
 def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events")
-    units = ev.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0)).alias(
-            "score"
-        ),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "label"
-        ),
-    )
+    units = _scored_units(spark, sf_dir)
     wo = W.orderBy(F.col("score").desc(), F.col("user_id"), F.col("day"))
     ranked = units.select(
         "label", F.ntile(_LIFT_BUCKETS).over(wo).alias("decile")
@@ -1048,15 +1042,7 @@ WHERE (tp + fp) * (tp + fn) > 0 AND (tn + fp) * (tn + fn) > 0
     ),
 )
 def ml_mcc_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    units = ev.groupBy("user_id", F.col("ts").cast("date").alias("day")).agg(
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0)).alias(
-            "score"
-        ),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
-            "label"
-        ),
-    )
+    units = _scored_units(spark, sf_dir)
     pred = F.col("score") < _MCC_THRESHOLD
     pos = F.col("label") == 1
     d38 = "decimal(38,0)"

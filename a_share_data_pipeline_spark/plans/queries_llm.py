@@ -16,6 +16,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import text as TX
+from ..operators.kmeans import LLOYD_ROUNDS
 from ..session import pin, scratch_dir
 from ..sources import load_table
 from ..functions.rounding import dround
@@ -309,6 +310,11 @@ def _emb_aug_sql(vec_alias: str = "v") -> str:
     )
 
 
+def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): every embedding as an array<double>."""
+    return load_table(spark, sf_dir, "embeddings").select("vec_id", SIM.as_double_vec())
+
+
 def _emb_augmented(emb: DataFrame) -> DataFrame:
     """Spark side of _emb_aug_sql. `emb`: (vec_id, v: array<double>).
 
@@ -400,11 +406,7 @@ WHERE list_dot_product(ea.v, eb2.v)
     ),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb_augmented(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", SIM.as_double_vec("embedding")
-        )
-    )
+    emb = _emb_augmented(_vectors(spark, sf_dir))
     cand = SIM.banded_lsh_pairs(emb, max_bucket=_JACCARD_MAX_BUCKET)
     # norms once per side (n arrays), not per pair — value identical
     a = emb.select(F.col("vec_id").alias("a"), F.col("v").alias("va"), SIM.norm("v").alias("na"))
@@ -440,9 +442,7 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 5
     doc="brute-force cosine top-5 for 8 query vectors (broadcast queries, JVM zip_with/aggregate dot)",
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
@@ -486,9 +486,7 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 3
     ),
 )
 def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
@@ -790,9 +788,7 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 3
     ),
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
     )
@@ -862,9 +858,7 @@ def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def sim_ann_index_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
     )
@@ -963,9 +957,7 @@ FROM r WHERE rnk <= 3
     ),
 )
 def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 24)).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
@@ -1155,8 +1147,13 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _kmeans_ctes(k: int, iters: int, src: str = "embeddings") -> str:
-    """Unroll `iters` Lloyd rounds as chained CTEs — computes the same
+# kmeans_embeddings and dedup_semantic cluster into the same 8 cells;
+# their oracles unroll the operator's own LLOYD_ROUNDS.
+_KMEANS_K = 8
+
+
+def _kmeans_ctes(src: str = "embeddings") -> str:
+    """Unroll LLOYD_ROUNDS Lloyd rounds as chained CTEs — computes the same
     rounded distances/centroids as operators/kmeans.py. Ends with
     `asg AS (SELECT vec_id, cluster, rd ...)`, the final assignment,
     so downstream oracles (kmeans_embeddings, dedup_semantic) build on
@@ -1168,10 +1165,10 @@ def _kmeans_ctes(k: int, iters: int, src: str = "embeddings") -> str:
         f"""c0 AS (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
          list_transform(embedding, x -> ROUND(CAST(x AS DOUBLE), 6)) AS cvec
-  FROM (SELECT vec_id, embedding FROM {src} ORDER BY vec_id LIMIT {k})
+  FROM (SELECT vec_id, embedding FROM {src} ORDER BY vec_id LIMIT {_KMEANS_K})
 )"""
     ]
-    for t in range(iters):
+    for t in range(LLOYD_ROUNDS):
         parts.append(
             f"""d{t} AS (
   SELECT e.vec_id, e.embedding, c.cid,
@@ -1192,20 +1189,19 @@ c{t + 1} AS (SELECT cluster AS cid, list(ROUND(m, 6) ORDER BY i) AS cvec
   SELECT e.vec_id, c.cid, ROUND({dist}, 6) AS rd,
          ROW_NUMBER() OVER (PARTITION BY e.vec_id
                             ORDER BY ROUND({dist}, 6), c.cid) AS rn
-  FROM {src} e CROSS JOIN c{iters} c
+  FROM {src} e CROSS JOIN c{LLOYD_ROUNDS} c
 ),
 asg AS (SELECT vec_id, cid AS cluster, rd FROM df WHERE rn = 1)"""
     )
     return ",\n".join(parts)
 
 
-def _kmeans_oracle(k: int, iters: int) -> str:
-    return "WITH " + _kmeans_ctes(k, iters) + "\nSELECT vec_id, cluster, rd FROM asg"
+_KMEANS_SQL = "WITH " + _kmeans_ctes() + "\nSELECT vec_id, cluster, rd FROM asg"
 
 
 @register(
     "kmeans_embeddings",
-    _kmeans_oracle(k=8, iters=2),
+    _KMEANS_SQL,
     doc=(
         "distributed k-means (operators/kmeans.py): centroids live on "
         "the driver and enter the plan as literal arrays, so assignment "
@@ -1218,7 +1214,7 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_assignments
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_assignments(emb, k=8)
+    return kmeans_assignments(emb, k=_KMEANS_K)
 
 
 # ---------------------------------------------------------------------------
@@ -1384,7 +1380,7 @@ def _semantic_sql() -> str:
 WITH eu AS (
   {_emb_aug_sql("embedding")}
 ),
-{_kmeans_ctes(8, 2, src="eu")},
+{_kmeans_ctes(src="eu")},
 ok AS (SELECT cluster FROM asg GROUP BY cluster
        HAVING COUNT(*) <= {_JACCARD_MAX_BUCKET}),
 pv AS (
@@ -1428,12 +1424,9 @@ FROM sc WHERE ROUND(cos, 6) >= 0.95
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.kmeans import kmeans_assignments
 
-    emb = _emb_augmented(
-        load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", SIM.as_double_vec("embedding")
-        )
-    ).localCheckpoint(eager=False)  # feeds every Lloyd round AND the verify
-    asg = kmeans_assignments(emb, k=8, vec_col="v").select(
+    # feeds every Lloyd round AND the verify
+    emb = _emb_augmented(_vectors(spark, sf_dir)).localCheckpoint(eager=False)
+    asg = kmeans_assignments(emb, k=_KMEANS_K, vec_col="v").select(
         "vec_id", "cluster"
     )
     pairs = D._bucket_pairs(
@@ -1533,9 +1526,7 @@ FROM r WHERE rnk <= 3
     ),
 )
 def sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
     )
@@ -1604,9 +1595,7 @@ SELECT q_id, c_id, cos, CAST(rnk AS BIGINT) AS rnk FROM r WHERE rnk <= 3
     ),
 )
 def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
@@ -1643,9 +1632,7 @@ GROUP BY t.q_id
     ),
 )
 def sim_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")
     )
@@ -2110,9 +2097,7 @@ SELECT qid, cand, rel, CAST(rnk AS BIGINT) AS rnk FROM {prev}
     ),
 )
 def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     qs = emb.filter(F.col("vec_id").isin(*_MMR_QUERIES)).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
@@ -2438,9 +2423,7 @@ GROUP BY f.q_id
     ),
 )
 def embedding_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     emb = pin(emb)  # consumers: full + truncated lanes
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("v").alias("qv")

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -26,7 +26,7 @@ from ..sources import load_table
 from .catalog import register
 
 # ---------------------------------------------------------------------------
-# shared frames: cents-priced ticks, daily closes, weekly OHLC
+# shared frames: cents-priced ticks, daily closes and averages, weekly OHLC
 # ---------------------------------------------------------------------------
 
 
@@ -64,6 +64,30 @@ def _daily_close(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", "day")
         .agg(F.max_by("close_c", "ordkey").alias("close_c"))
     )
+
+
+def _daily_avg(spark: SparkSession, sf_dir: str, *also: Column) -> DataFrame:
+    """(event_type, day, v): per-(type, day) average tick value on the
+    6-decimal grid, the series the kline indicators smooth; ``also``
+    adds aggregates over the same groups in the same shuffle."""
+    return (
+        _ticks(spark, sf_dir)
+        .groupBy("event_type", F.date_trunc("day", "ts").cast("date").alias("day"))
+        .agg(dround(F.avg("value"), 6).alias("v"), *also)
+    )
+
+
+def _daily_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, v_view, v_purchase): each day's view and purchase average
+    side by side on the 6-decimal grid, for the rolling two-series
+    statistics."""
+
+    def avg_of(kind: str) -> F.Column:
+        return dround(F.avg(F.when(F.col("event_type") == kind, F.col("value"))), 6)
+
+    return _ticks(spark, sf_dir).groupBy(
+        F.date_trunc("day", "ts").cast("date").alias("day")
+    ).agg(avg_of("view").alias("v_view"), avg_of("purchase").alias("v_purchase"))
 
 
 _WEEKLY_OHLC_SQL = f"""

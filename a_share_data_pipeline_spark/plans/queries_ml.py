@@ -1046,7 +1046,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as SIM
 
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding"), "label"
+        "vec_id", SIM.as_double_vec(), "label"
     )
     queries = emb.filter(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("q_id"),

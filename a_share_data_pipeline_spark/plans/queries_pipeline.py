@@ -18,10 +18,11 @@ from ..operators.graph import PPR_DAMPING
 from ..session import clone_session, scratch_dir, set_width, volume_width
 from ..sources import load_table
 from ..streaming import structured as ST
-from ..streaming.incremental import delta_slice, merge_increment
+from ..streaming.incremental import merge_increment
 from ..functions.ordering import ordkey
 from ..functions.rounding import dround
 from .catalog import register
+from .queries_market import _daily_avg, _daily_pair, _ticks
 
 # ---------------------------------------------------------------------------
 # Flagship: canonical wide-row assembly (J1+J2/J3+P3+P5 shape on testdata)
@@ -184,7 +185,7 @@ def incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sequence(F.lit("2024-01-01").cast("date"), F.lit("2024-01-30").cast("date"))
         ).alias("day")
     )
-    delta = delta_slice(ev, "ts", "2024-01-20 00:00:00")
+    delta = ev.filter(F.col("ts") > F.lit("2024-01-20 00:00:00"))
     per_day = delta.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.lit(1)).alias("n"),
         dround(F.sum("value"), 2).alias("vs"),
@@ -756,12 +757,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day
     ),
 )
 def events_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("day").rowsBetween(-6, 0)
     ma = F.avg("v").over(w)
     sd = F.stddev_samp("v").over(w)
@@ -819,12 +815,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day
     ),
 )
 def events_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     wo = W.partitionBy("event_type").orderBy("day")
     diffs = daily.select(
         "event_type", "day", "v", (F.col("v") - F.lag("v").over(wo)).alias("d")
@@ -1300,9 +1291,7 @@ GROUP BY event_type, week
     ),
 )
 def events_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
+    ev = _ticks(spark, sf_dir)
     keyed = ev.select(
         "event_type",
         F.date_trunc("week", "ts").cast("date").alias("week"),
@@ -1379,12 +1368,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day)
     ),
 )
 def events_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("day")
     ws = _ema_weights()
     # materialize each lag ONCE as a named column; building num/den
@@ -1443,17 +1427,7 @@ FROM daily
     ),
 )
 def window_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(F.date_trunc("day", "ts").cast("date").alias("day")).agg(
-        dround(F.avg(F.when(F.col("event_type") == "view", F.col("value"))), 6).alias(
-            "v_view"
-        ),
-        dround(
-            F.avg(F.when(F.col("event_type") == "purchase", F.col("value"))), 6
-        ).alias("v_purchase"),
-    )
+    daily = _daily_pair(spark, sf_dir)
     w = W.orderBy("day").rowsBetween(-6, 0)
     return daily.select(
         "day",
@@ -1683,6 +1657,7 @@ SELECT doc_id, rrf FROM fused ORDER BY rrf DESC, doc_id LIMIT {_RRF_OUT}
 )
 def search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import similarity as SIM
+    from .queries_llm import _vectors
     from .queries_sql import bm25_scores
 
     lex_raw = (
@@ -1693,9 +1668,7 @@ def search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_lex = W.orderBy(F.col("bm25").desc(), "doc_id")
     lex = lex_raw.select("doc_id", F.row_number().over(w_lex).alias("r_lex"))
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
-    )
+    emb = _vectors(spark, sf_dir)
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("q"))
     scored = (
         emb.filter(F.col("vec_id") != 0)
@@ -1804,12 +1777,7 @@ WINDOW w AS (PARTITION BY event_type ORDER BY day)
     ),
 )
 def events_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     w = W.partitionBy("event_type").orderBy("day")
 
     def wsum(prefix: str, ws: list[float]):
@@ -1929,9 +1897,7 @@ WINDOW w3 AS (PARTITION BY event_type ORDER BY day
     ),
 )
 def events_kdj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
+    ev = _ticks(spark, sf_dir)
     bars = (
         ev.select(
             "event_type",
@@ -2120,9 +2086,7 @@ LIMIT {_TREND_K}
     ),
 )
 def events_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
+    ev = _ticks(spark, sf_dir)
     daily = ev.groupBy(
         "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(dround(F.sum("value"), 2).alias("v"))
@@ -2192,12 +2156,7 @@ FROM season_t
     ),
 )
 def events_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("event_type").isin("view", "purchase")
-    )
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(dround(F.avg("value"), 6).alias("v"))
+    daily = _daily_avg(spark, sf_dir)
     w7 = W.partitionBy("event_type").orderBy("day").rowsBetween(-3, 3)
     trend_t = daily.select(
         "event_type",

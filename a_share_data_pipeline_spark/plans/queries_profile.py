@@ -684,10 +684,10 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("term")
     ).filter(F.col("term") != "")
-    sk = pin(SK.cms_build(toks, "term"))
+    sk = pin(SK.cms_build(toks))
     exact = toks.groupBy("term").agg(F.count(F.lit(1)).alias("exact_cnt"))
     cand = exact.orderBy(F.col("exact_cnt").desc(), "term").limit(15)
-    est = SK.cms_estimate(cand, "term", sk)
+    est = SK.cms_estimate(cand, sk)
     return est.select(
         "term",
         "exact_cnt",

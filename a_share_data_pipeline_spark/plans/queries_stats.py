@@ -20,7 +20,7 @@ from ..functions.rounding import dround
 from ..session import pin
 from ..sources import load_table
 from .catalog import register
-from .queries_market import _daily_close
+from .queries_market import _cents, _daily_close
 
 # ---------------------------------------------------------------------------
 # Welch's t-test: purchase vs click order values (wave 20)
@@ -1412,18 +1412,24 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # repeated-measures rank test completing the nonparametric family)
 # ---------------------------------------------------------------------------
 
+def _day_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(g, day, c): every event's type, day and int64 cents — the input
+    of the (type, day) cell aggregates of Friedman, Kruskal-Wallis and
+    Cochran's Q."""
+    return load_table(spark, sf_dir, "events").select(
+        F.col("event_type").alias("g"),
+        F.date_trunc("day", "ts").cast("date").alias("day"),
+        _cents().alias("c"),
+    )
+
+
 def _friedman_per_g(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(g, r2sum, n_blocks): doubled tie-averaged within-day rank sums
     over complete blocks — shared by the Friedman statistic and the
     Nemenyi post-hoc."""
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events")
-    cents = ev.select(
-        F.col("event_type").alias("g"),
-        F.date_trunc("day", "ts").cast("date").alias("day"),
-        dround(F.col("value") * 100, 0).cast("bigint").alias("c"),
-    )
+    cents = _day_cents(spark, sf_dir)
     cell = cents.groupBy("g", "day").agg(
         F.sum("c").cast("decimal(38,0)").alias("s"),
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
@@ -1684,12 +1690,7 @@ FROM h
 def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = load_table(spark, sf_dir, "events")
-    cents = ev.select(
-        F.col("event_type").alias("g"),
-        F.date_trunc("day", "ts").cast("date").alias("day"),
-        dround(F.col("value") * 100, 0).cast("bigint").alias("c"),
-    )
+    cents = _day_cents(spark, sf_dir)
     cell = cents.groupBy("g", "day").agg(
         (F.sum("c") * F.lit(1.0) / F.count(F.lit(1))).alias("m")
     )
@@ -1936,12 +1937,7 @@ FROM s
     ),
 )
 def stats_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    cents = ev.select(
-        F.col("event_type").alias("g"),
-        F.date_trunc("day", "ts").cast("date").alias("day"),
-        dround(F.col("value") * 100, 0).cast("bigint").alias("c"),
-    )
+    cents = _day_cents(spark, sf_dir)
     cell = cents.groupBy("g", "day").agg(
         F.sum("c").cast("decimal(38,0)").alias("s")
     )

@@ -56,8 +56,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType, **options) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """Reference-compat CSV read with a fixed schema (reference re-reads
     its own CSVs at market/delta_non_fq_daily_kline.py:138,149)."""
-    opts = {"header": "true", **options}
-    return spark.read.schema(schema).options(**opts).csv(path)
+    return spark.read.schema(schema).option("header", "true").csv(path)

@@ -65,11 +65,6 @@ class WatermarkStore:
         os.replace(tmp, self.path)  # atomic advance
 
 
-def delta_slice(source: DataFrame, ts_col: str, watermark) -> DataFrame:
-    """Partition-pruned incremental slice: rows with ts after the watermark."""
-    return source.filter(F.col(ts_col) > F.lit(watermark))
-
-
 def merge_increment(
     existing: DataFrame,
     delta: DataFrame,

@@ -257,7 +257,6 @@ def tws_available() -> bool:
 def stream_canonical_delta(
     spark: SparkSession,
     fixture_dir: str,
-    start_date: str,
     checkpoint_dir: str,
     out_dir: str,
 ) -> None:
@@ -297,7 +296,8 @@ def stream_canonical_delta(
             r = r.option(k, str(v))
         return r
 
-    daily_stream = opts(spark.readStream, "daily", start_date=start_date).load()
+    # start_date 00000000: the first batch takes every trade date
+    daily_stream = opts(spark.readStream, "daily", start_date="00000000").load()
 
     def process(batch_df, batch_id: int) -> None:
         dates = sorted(r[0] for r in batch_df.select("trade_date").distinct().collect())

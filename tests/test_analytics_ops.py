@@ -4721,7 +4721,7 @@ def test_dp_release_clamp_is_load_bearing(spark):
     cells = spark.createDataFrame(
         [(f"cell{i}", 1) for i in range(40)], "segment string, true_n bigint"
     )
-    rel = dp_release_counts(dp_laplace_noise_1e8(cells, cell="segment")).collect()
+    rel = dp_release_counts(dp_laplace_noise_1e8(cells)).collect()
     assert len(rel) == 40
 
     def trunc_step(n: int) -> int:  # SQL div truncates toward zero

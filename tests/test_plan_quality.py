@@ -385,7 +385,7 @@ def test_ann_index_scan_prunes_partitions(spark, tmp_path):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
+        "vec_id", SIM.as_double_vec()
     )
     centroids = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cell"), F.col("v").alias("ce")
@@ -486,10 +486,10 @@ def test_cms_never_undercounts_and_is_bounded(spark):
     toks = docs.select(
         F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("term")
     ).filter(F.col("term") != "")
-    sk = SK.cms_build(toks, "term")
+    sk = SK.cms_build(toks)
     assert sk.count() <= len(SK.CMS_SEEDS) * (16 ** SK.CMS_PREFIX_LEN)
     exact = toks.groupBy("term").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    est = SK.cms_estimate(exact, "term", sk)
+    est = SK.cms_estimate(exact, sk)
     assert est.filter(F.col("est_cnt") < F.col("exact_cnt")).count() == 0
 
 

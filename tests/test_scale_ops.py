@@ -452,7 +452,7 @@ def test_ann_paths_recall_against_brute_force(spark):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
+        "vec_id", SIM.as_double_vec()
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
@@ -1045,7 +1045,7 @@ def test_pq_codebook_training_improves_recall(spark):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
+        "vec_id", SIM.as_double_vec()
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
@@ -1082,7 +1082,7 @@ def test_ivf_pq_consistent_with_pq_and_cell_restricted(spark):
     from a_share_data_pipeline_spark.operators import similarity as SIM
 
     emb = load_table(spark, SF, "embeddings").select(
-        "vec_id", SIM.as_double_vec("embedding")
+        "vec_id", SIM.as_double_vec()
     )
     vectors = emb.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16)).select(
@@ -1472,8 +1472,9 @@ def test_every_default_is_varied_by_a_caller():
     or more call sites in the package, ``tests/``, ``bench.py``,
     ``sweep.py``, ``job_probe.py`` or ``perfbench/``, a value whose
     source text differs from its default (a variable counts as
-    differing). An option no caller varies is a constant: write it as
-    one. Calls match by name (``f(...)``, ``x.f(...)``, a class name for
+    differing), and every ``**kwargs`` parameter is filled by one or
+    more call sites. An option no caller varies is a constant: write it
+    as one. Calls match by name (``f(...)``, ``x.f(...)``, a class name for
     ``__init__``). Only ``get_spark`` is exempt: harnesses outside the
     repo call it."""
     import ast
@@ -1497,6 +1498,18 @@ def test_every_default_is_varied_by_a_caller():
             if isinstance(node, ast.Call):
                 calls[getattr(node.func, "id", None) or getattr(node.func, "attr", None)].append(node)
 
+    def fills(call, fn):
+        # a call that cannot bind fn's required parameters (pd.read_csv
+        # beside readers.read_csv) calls another function of that name
+        a, kws = fn.args, {k.arg for k in call.keywords}
+        pos = [p.arg for p in a.posonlyargs + a.args]
+        bound = hasattr(fn, "owner") and (isinstance(call.func, ast.Attribute) or fn.name == "__init__")
+        required = pos[len(call.args) + bound : len(pos) - len(a.defaults)]
+        required += [p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is None]
+        if None in kws or any(isinstance(x, ast.Starred) for x in call.args):
+            return True
+        return set(required) <= kws and bool(kws - set(pos) - {p.arg for p in a.kwonlyargs})
+
     def varies(call, fn, i, arg, default):
         if any(isinstance(a, ast.Starred) for a in call.args) or any(k.arg is None for k in call.keywords):
             return True
@@ -1515,6 +1528,8 @@ def test_every_default_is_varied_by_a_caller():
         params = list(zip(pos[len(pos) - len(a.defaults) :], a.defaults))
         params += [(p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
         callee = fn.owner if fn.name == "__init__" else fn.name
+        if a.kwarg and not any(fills(c, fn) for c in calls[callee]):
+            unvaried.append(f"{rel}:{fn.name}(**{a.kwarg.arg})")
         for arg, default in params:
             i = pos.index(arg) if arg in pos else None
             if not any(varies(c, fn, i, arg, default) for c in calls[callee]):
@@ -1599,6 +1614,68 @@ def test_integer_ln_built_only_in_rounding_py():
         if rel.startswith("operators/") and "round_to" in src:
             sites.append((rel, 0, "round_to"))
     assert (owners, sites) == (["functions/rounding.py"], [])
+
+
+def test_shared_input_frames_built_only_by_their_owners():
+    """Each shared input frame of the catalog has one builder in
+    ``plans/``: the view/purchase ticks ``queries_market._ticks``, their
+    6-decimal daily average ``queries_market._daily_avg`` and the
+    ``(vec_id, v)`` vectors ``queries_llm._vectors``. Anywhere else, no
+    ``load_table(..., "events")`` is filtered on ``isin("view",
+    "purchase")``, no ``dround(F.avg("value"), 6)`` is built, and no
+    ``load_table(..., "embeddings")`` selects exactly ``"vec_id"`` and
+    ``as_double_vec()``."""
+    import ast
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    def name(node):
+        return getattr(node.func, "attr", getattr(node.func, "id", None))
+
+    def calls(node, attr):
+        return isinstance(node, ast.Call) and name(node) == attr
+
+    def loads(node, table):
+        return calls(node, "load_table") and any(
+            isinstance(a, ast.Constant) and a.value == table for a in node.args
+        )
+
+    def frame(node):
+        if not isinstance(node, ast.Call):
+            return None
+        if name(node) in ("filter", "where") and loads(node.func.value, "events"):
+            if any(
+                calls(n, "isin") and [ast.unparse(a) for a in n.args] == ["'view'", "'purchase'"]
+                for a in node.args
+                for n in ast.walk(a)
+            ):
+                return "ticks"
+        if ast.unparse(node) == "dround(F.avg('value'), 6)":
+            return "daily_avg"
+        if name(node) == "select" and loads(node.func.value, "embeddings"):
+            if len(node.args) == 2 and ast.unparse(node.args[0]) == "'vec_id'":
+                if calls(node.args[1], "as_double_vec"):
+                    return "vectors"
+        return None
+
+    root = Path(pkg.__file__).parent / "plans"
+    sites = {}
+    for path in sorted(root.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                kind = frame(node)
+                if kind:
+                    where = (path.name, getattr(top, "name", None), node.lineno)
+                    sites.setdefault(kind, []).append(where)
+    owners = {
+        "ticks": ("queries_market.py", "_ticks"),
+        "daily_avg": ("queries_market.py", "_daily_avg"),
+        "vectors": ("queries_llm.py", "_vectors"),
+    }
+    assert {k: [s[:2] for s in v] for k, v in sites.items()} == {
+        k: [owner] for k, owner in owners.items()
+    }, sites
 
 
 _ROUND_CASES = [

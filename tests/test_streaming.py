@@ -252,18 +252,18 @@ def test_stream_canonical_delta_end_to_end(spark, tmp_path):
         return assembly.assemble_canonical(d, li, db, bs, mode="delta")
 
     land(head)
-    stream_canonical_delta(spark, src, start_date="00000000", checkpoint_dir=ckpt, out_dir=out)
+    stream_canonical_delta(spark, src, checkpoint_dir=ckpt, out_dir=out)
     want1 = batch_golden(head)
     got1 = spark.read.parquet(out).select(*want1.columns)
     assert sorted(map(tuple, got1.collect())) == sorted(map(tuple, want1.collect()))
 
     # rerun, nothing new upstream → no duplicates
-    stream_canonical_delta(spark, src, start_date="00000000", checkpoint_dir=ckpt, out_dir=out)
+    stream_canonical_delta(spark, src, checkpoint_dir=ckpt, out_dir=out)
     assert spark.read.parquet(out).count() == want1.count()
 
     # a new date arrives → only it is appended
     land(dates)
-    stream_canonical_delta(spark, src, start_date="00000000", checkpoint_dir=ckpt, out_dir=out)
+    stream_canonical_delta(spark, src, checkpoint_dir=ckpt, out_dir=out)
     want_all = batch_golden(dates)
     got3 = spark.read.parquet(out).select(*want_all.columns)
     assert sorted(map(tuple, got3.collect())) == sorted(map(tuple, want_all.collect()))
@@ -314,14 +314,14 @@ def test_stream_canonical_delta_full_replay_no_duplicates(spark, tmp_path):
 
     out = str(tmp_path / "out")
     stream_canonical_delta(
-        spark, src, start_date="00000000",
+        spark, src,
         checkpoint_dir=str(tmp_path / "ckpt1"), out_dir=out,
     )
     n1 = spark.read.parquet(out).count()
     assert n1 > 0
     # lost checkpoint → full replay of all dates into the same out dir
     stream_canonical_delta(
-        spark, src, start_date="00000000",
+        spark, src,
         checkpoint_dir=str(tmp_path / "ckpt2"), out_dir=out,
     )
     assert spark.read.parquet(out).count() == n1
