@@ -46,10 +46,10 @@ _REGISTRY: dict[str, Query] = {}
 # events_* batch queries).
 #
 # One line per window row below: the operator family the row
-# witnesses. How the window rotated to this membership (rounds 2-13)
-# and the queued next rotation are in git history and VERDICT.md; the
-# window and the bench headline membership stay frozen while rounds
-# compare query-for-query.
+# witnesses. How the window rotated to this membership and the queued
+# next rotation are in git history and VERDICT.md; the window and the
+# bench headline membership stay frozen so that runs compare
+# query-for-query.
 CORE_WINDOW: tuple[str, ...] = (
     "canonical_assembly",  # the reference's assembly shape (flagship)
     "agg_stats",  # stat + regression aggregates
@@ -148,9 +148,9 @@ def driver_history(repo_root: str | None = None) -> dict[str, list[int]]:
     """name → rounds in which the driver's CORRECTNESS record was fully
     green for it (rows+schema+hash, no err), read from the committed
     ``CORRECTNESS_r*.json`` files. This is the ground truth for the
-    "driver-verified" claim — generated, never hand-written (VERDICT r6
-    item 5: the hand-written 'window covers every §2.12 operator' claim
-    went stale as the catalog grew)."""
+    "driver-verified" claim — generated, never hand-written (a
+    hand-written 'window covers every §2.12 operator' claim goes stale
+    as the catalog grows)."""
     import glob
     import json
     import os
@@ -236,10 +236,9 @@ def tiers_markdown() -> str:
 
 def catalog_totals() -> dict[str, int]:
     """Live tier counts — the single source of truth for every doc
-    that states catalog totals (VERDICT r5: COVERAGE.md hand-wrote
-    '137 = 50 + 87' after the registry had grown to 177; generated
-    numbers cannot go stale). ``tests/test_scale_ops.py`` pins that
-    COVERAGE.md carries exactly :func:`totals_markdown`'s line."""
+    that states catalog totals (generated numbers cannot go stale).
+    ``tests/test_scale_ops.py`` pins that COVERAGE.md carries exactly
+    :func:`totals_markdown`'s line."""
     reg = registry()
     total = len(reg)
     core = len(CORE_WINDOW)

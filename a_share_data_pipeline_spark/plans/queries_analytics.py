@@ -1,20 +1,19 @@
-"""Round-6 analytics waves: capabilities, not witnesses.
+"""Analytics families: capabilities, not witnesses.
 
 Each query here adds an operator FAMILY the catalog did not have —
 community detection, shortest-path distance, multi-touch attribution,
 A/B significance testing, asymmetric containment dedup, OBV/ATR kline
 indicators, winsorized feature statistics, k-anonymity enforcement,
-linear trend forecasting, multi-resolution time downsampling; then
-(wave 2) HLL set-algebra, wide→long unpivot, distribution windows,
-MAD robust anomaly flags, rolling regression, the purged/embargoed
-temporal split; then (wave 3) gaps-and-islands streaks, cohort LTV
-curves, deterministic mode, the TVD distribution-drift monitor, the
-PPJoin-style prefix-filtered similarity join, bag set operations; and
-(wave 4) join incremental view maintenance and the referential-
-integrity audit. Every query keeps the repo's
-determinism discipline: integer arithmetic wherever a sum feeds a
-compare, dround() on every emitted double, unrolled-CTE oracles for
-the iterative operators.
+linear trend forecasting, multi-resolution time downsampling, HLL
+set-algebra, wide→long unpivot, distribution windows, MAD robust
+anomaly flags, rolling regression, the purged/embargoed temporal
+split, gaps-and-islands streaks, cohort LTV curves, deterministic
+mode, the TVD distribution-drift monitor, the PPJoin-style
+prefix-filtered similarity join, bag set operations, join incremental
+view maintenance and the referential-integrity audit. Every query
+keeps the repo's determinism discipline: integer arithmetic wherever a
+sum feeds a compare, dround() on every emitted double, unrolled-CTE
+oracles for the iterative operators.
 """
 
 from __future__ import annotations
@@ -28,7 +27,15 @@ from ..operators import dedup as D
 from ..session import pin, scratch_dir
 from ..sources import load_table
 from .catalog import register
-from .queries_market import _daily_avg, _daily_close, _daily_pair, _ticks
+from .queries_market import (
+    _DAILY_CLOSE_SQL,
+    _DAILY_PAIR_SQL,
+    _daily_avg,
+    _daily_avg_sql,
+    _daily_close,
+    _daily_pair,
+    _ticks,
+)
 
 # ---------------------------------------------------------------------------
 # Label propagation: community detection (the non-CC, non-rank graph family)
@@ -162,14 +169,11 @@ FROM {prev}
     ),
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round 14: the r13 measured-width clone was REVERTED here
-    (VERDICT r13 item 3). The r13 change rode one positive in-session
-    proxy series, but the driver's own r13 record read it +24% and
-    the round-14 fresh-subprocess interleaved A/B confirmed OLD wins
-    (OLD mins 2.869/3.137 vs clone 3.512/3.173 across two alternating
-    rounds — receipts in plans/r14/ab_receipts/). Consistent with the
-    r13 §6 rule: LPA's per-round (node,label)-count shuffle is
-    COMPUTE-bound (the count aggregate fans out per neighbor label),
+    """No measured-width clone here: a fresh-subprocess interleaved
+    A/B read the full width faster (mins 2.869/3.137 vs clone
+    3.512/3.173 across two alternating rounds — receipts in
+    plans/r14/ab_receipts/). LPA's per-round (node,label)-count shuffle
+    is COMPUTE-bound (the count aggregate fans out per neighbor label),
     not scheduling-floor-bound like CC's label frames, so trimming
     width only gives up CPU parallelism — plus the clone's extra
     eager count job. graph_pagerank keeps its clone (its A/B stands
@@ -184,7 +188,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 37: whole-graph structure metrics — degree assortativity and
+# Whole-graph structure metrics — degree assortativity and
 # community modularity (exact integer moments, one final division)
 # ---------------------------------------------------------------------------
 
@@ -513,7 +517,7 @@ SELECT node, CAST(hops AS INTEGER) AS hops FROM {prev} WHERE hops IS NOT NULL
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bfs_hops
 
-    # Measured-width clone deliberately NOT applied (round 13): the
+    # Measured-width clone deliberately NOT applied: the
     # applied-form NEW/OLD A/B read NEW min 3.97 vs OLD min 3.44 at
     # sf0.1 — the per-hop frontier⋈edges join is COMPUTE-bound, so a
     # volume-sized width trim costs CPU parallelism (the in-session
@@ -798,15 +802,11 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # OBV: on-balance volume (signed cumulative volume by close direction)
 # ---------------------------------------------------------------------------
 
-_OBV_SQL = """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts)::DATE AS day,
-         ROUND(AVG(value), 6) AS close, COUNT(*) AS vol
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+_OBV_SQL = f"""
+WITH {_daily_avg_sql("COUNT(*) AS vol")},
 d AS (
-  SELECT *, LAG(close) OVER (PARTITION BY event_type ORDER BY day) AS pc
+  SELECT event_type, day, v AS close, vol,
+         LAG(v) OVER (PARTITION BY event_type ORDER BY day) AS pc
   FROM daily
 ),
 s AS (
@@ -867,17 +867,11 @@ def events_obv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ATR: average true range (volatility beside Bollinger's band width)
 # ---------------------------------------------------------------------------
 
-_ATR_SQL = """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts)::DATE AS day,
-         ROUND(MAX(value), 6) AS high,
-         ROUND(MIN(value), 6) AS low,
-         ROUND(AVG(value), 6) AS close
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+_ATR_SQL = f"""
+WITH {_daily_avg_sql("ROUND(MAX(value), 6) AS high", "ROUND(MIN(value), 6) AS low")},
 d AS (
-  SELECT *, LAG(close) OVER (PARTITION BY event_type ORDER BY day) AS pc
+  SELECT event_type, day, high, low, v AS close,
+         LAG(v) OVER (PARTITION BY event_type ORDER BY day) AS pc
   FROM daily
 ),
 tr_t AS (
@@ -1076,12 +1070,7 @@ def privacy_generalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FC_HORIZON = 7
 
 _FC_SQL = f"""
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts)::DATE AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+WITH {_daily_avg_sql()},
 idx AS (
   SELECT event_type, date_diff('day', DATE '1970-01-01', day) AS x, v
   FROM daily
@@ -1215,7 +1204,7 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 2: sketch set-algebra, reshape, window distribution, robust stats,
+# Sketch set-algebra, reshape, window distribution, robust stats,
 # rolling regression, temporal split with embargo
 # ---------------------------------------------------------------------------
 
@@ -1326,13 +1315,8 @@ def reshape_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("day", "metric", F.col("n_raw").cast("bigint").alias("n"))
 
 
-_WDIST_SQL = """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts)::DATE AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-)
+_WDIST_SQL = f"""
+WITH {_daily_avg_sql()}
 SELECT event_type, day, v,
        ROUND(PERCENT_RANK() OVER w, 6) AS pct_rank,
        ROUND(CUME_DIST() OVER w, 6) AS cume,
@@ -1374,12 +1358,7 @@ _MAD_K = 3.0
 _MAD_SCALE = 1.4826  # consistency constant: MAD ≈ σ for a normal
 
 _MAD_SQL = f"""
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts)::DATE AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+WITH {_daily_avg_sql()},
 med AS (
   SELECT event_type, ROUND(quantile_cont(v, 0.5), 6) AS med
   FROM daily GROUP BY 1
@@ -1442,15 +1421,8 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BETA_SQL = """
-WITH daily AS (
-  SELECT date_trunc('day', ts)::DATE AS day,
-         ROUND(AVG(CASE WHEN event_type = 'view' THEN value END), 6) AS v_view,
-         ROUND(AVG(CASE WHEN event_type = 'purchase' THEN value END), 6)
-           AS v_purchase
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1
-)
+_BETA_SQL = f"""
+WITH {_DAILY_PAIR_SQL}
 SELECT day, v_view, v_purchase,
        ROUND(regr_slope(v_purchase, v_view) OVER (
          ORDER BY day ROWS BETWEEN 13 PRECEDING AND CURRENT ROW
@@ -1556,7 +1528,7 @@ def split_temporal_embargo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 3: gaps-and-islands streaks, cohort LTV curves, deterministic mode
+# Gaps-and-islands streaks, cohort LTV curves, deterministic mode
 # ---------------------------------------------------------------------------
 
 _STREAKS_SQL = """
@@ -1829,10 +1801,9 @@ FROM shifts
     ),
 )
 def profile_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    v = ev.filter(
-        F.col("event_type").isin("view", "purchase") & F.col("value").isNotNull()
-    ).select(F.date_trunc("day", "ts").cast("date").alias("day"), F.col("value").alias("val"))
+    v = _ticks(spark, sf_dir).filter(F.col("value").isNotNull()).select(
+        F.date_trunc("day", "ts").cast("date").alias("day"), F.col("value").alias("val")
+    )
     span = v.agg(
         F.min("day").alias("d0"),
         F.date_add(
@@ -1907,7 +1878,7 @@ def profile_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PF_T = 0.8  # Jaccard threshold the prefix guarantee is proven against
 
-# positional-filter integers (round 13): with t = p/q exactly, the
+# positional-filter integers: with t = p/q exactly, the
 # minimum overlap o of a qualifying pair satisfies o >= t·S/(1+t)
 # (S = n_a + n_b) ⇔ o·(p+q) >= p·S — integer-exact, no float ceil.
 # Fraction(str(0.8)) is 4/5, NOT the binary-float ratio.
@@ -2014,10 +1985,10 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     wp = W.partitionBy("doc_id").orderBy("df", "shingle")
     # counts joins as a PLAIN shuffle join, never broadcast: it is one
     # row per DOCUMENT, so broadcasting it ships the whole corpus to
-    # every executor — billions of rows at the 100 TB target (VERDICT
-    # r6 item 3). The row_number window two lines down shuffles on
-    # doc_id anyway, so the sort-merge join co-partitions for free and
-    # the broadcast bought nothing even locally.
+    # every executor — billions of rows at the 100 TB target. The
+    # row_number window two lines down shuffles on doc_id anyway, so the
+    # sort-merge join co-partitions for free and the broadcast bought
+    # nothing even locally.
     pref = (
         shingled.join(dfreq, "shingle")
         .join(counts, "doc_id")
@@ -2041,7 +2012,7 @@ def dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # production deployment re-adds the drop-and-log cap as a guard.
     # Pair expansion is _bucket_pairs' one-aggregation combinator shape,
     # inlined because each entry carries (rn, n_sh) for the POSITIONAL
-    # filter (PPJoin's second prune, round 13): for a pair with
+    # filter (PPJoin's second prune): for a pair with
     # J >= t, every shared shingle ranks at or after the FIRST shared
     # one in the global (df, shingle) order, and that first one is a
     # prefix-prefix collision (the prefix guarantee applied to it
@@ -2157,7 +2128,7 @@ def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 4: incremental view maintenance (join IVM) + referential integrity
+# Incremental view maintenance (join IVM) + referential integrity
 # ---------------------------------------------------------------------------
 
 # deterministic "late-arriving" splits: facts after the date cutoff are
@@ -2339,7 +2310,7 @@ def audit_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 5 — skyline, change-point, survival, apportionment, weighted SSSP,
+# Skyline, change-point, survival, apportionment, weighted SSSP,
 # rolling median: classic analytics families the catalog did not have.
 # ---------------------------------------------------------------------------
 
@@ -2797,7 +2768,7 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 6 — FD audit, median imputation, erasure cascade, bootstrap CI,
+# FD audit, median imputation, erasure cascade, bootstrap CI,
 # CDC time travel: data-quality / governance / inference families.
 # ---------------------------------------------------------------------------
 
@@ -3346,7 +3317,7 @@ def cdc_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 24: boolean retrieval over posting lists
+# Boolean retrieval over posting lists
 # ---------------------------------------------------------------------------
 
 _BOOL_ALL = ("data", "merge")  # every term required
@@ -3420,7 +3391,7 @@ def text_boolean_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 24: pre-join fan-out audit (cardinality-explosion estimator)
+# Pre-join fan-out audit (cardinality-explosion estimator)
 # ---------------------------------------------------------------------------
 
 _FANOUT_SQL = """
@@ -3515,7 +3486,7 @@ def audit_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 24: burst-episode detection (volume anomaly islands)
+# Burst-episode detection (volume anomaly islands)
 # ---------------------------------------------------------------------------
 
 _BURST_SQL = """
@@ -3642,7 +3613,7 @@ def events_burst_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 26: content-defined chunking dedup (the storage-dedup operator)
+# Content-defined chunking dedup (the storage-dedup operator)
 # ---------------------------------------------------------------------------
 
 # Fixture augmentation (the _LINE_AUG precedent): the synthetic corpus
@@ -3801,7 +3772,7 @@ def dedup_content_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 28: dynamic partition pruning witness
+# Dynamic partition pruning witness
 # ---------------------------------------------------------------------------
 
 _DPP_SQL = """
@@ -3868,7 +3839,7 @@ def layout_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 28: interpolated bigram LM scoring
+# Interpolated bigram LM scoring
 # ---------------------------------------------------------------------------
 
 _LM2_LAMBDA = 0.75  # interpolation weight on the bigram term
@@ -3964,7 +3935,7 @@ def text_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 28: Haar wavelet block transform
+# Haar wavelet block transform
 # ---------------------------------------------------------------------------
 
 _HAAR_PIV = ",\n         ".join(
@@ -3972,14 +3943,7 @@ _HAAR_PIV = ",\n         ".join(
 )
 
 _HAAR_SQL = f"""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT),
-                 lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-                 || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS close_c
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+WITH {_DAILY_CLOSE_SQL},
 slotted AS (
   SELECT event_type, day, close_c,
          date_diff('day', DATE '1970-01-01', day) // 8 AS blk,
@@ -4055,7 +4019,7 @@ def events_haar_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 29: interval union / coverage (merge overlapping intervals)
+# Interval union / coverage (merge overlapping intervals)
 # ---------------------------------------------------------------------------
 
 _COV_SQL = """
@@ -4152,7 +4116,7 @@ def events_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 29: suffix/prefix stitch detection (chunk-boundary artifacts)
+# Suffix/prefix stitch detection (chunk-boundary artifacts)
 # ---------------------------------------------------------------------------
 
 _STITCH_K = 8  # overlap length (tokens) that counts as a stitch joint
@@ -4301,7 +4265,7 @@ def dedup_suffix_prefix_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 32: incremental connected components (dynamic-graph IVM)
+# Incremental connected components (dynamic-graph IVM)
 # ---------------------------------------------------------------------------
 
 _CCI_CUTOFF = "1998-01-01"  # base = orders before; delta = on/after
@@ -4374,8 +4338,8 @@ def cc_incremental_labels(
     cutoff — the catalog query pins ``_CCI_CUTOFF``; the property test
     varies the cutoff (including empty-base and empty-delta splits)
     and asserts label equality with a one-shot full CC each time,
-    pinning the min-label composition argument at EVERY split, not one
-    (VERDICT r6 item 8). Runs on the caller's session."""
+    pinning the min-label composition argument at EVERY split, not one.
+    Runs on the caller's session."""
     from ..operators.graph import connected_components
 
     o = load_table(spark, sf_dir, "orders")
@@ -4430,7 +4394,7 @@ def cc_incremental_labels(
 
 
 # ---------------------------------------------------------------------------
-# Wave 33: bucketed co-join — the zero-shuffle sort-merge join
+# Bucketed co-join — the zero-shuffle sort-merge join
 # ---------------------------------------------------------------------------
 
 _BKJOIN_SQL = """
@@ -4492,7 +4456,7 @@ def join_bucketed_zero_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Entropy / recursive l-diversity (wave 61)
+# Entropy / recursive l-diversity
 # ---------------------------------------------------------------------------
 
 _LDIV_ILN2 = 69314718  # round(ln(2) * 1e8) — the entropy-l=2 bar
@@ -4571,7 +4535,7 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Holt-Winters additive forecast (wave 61)
+# Holt-Winters additive forecast
 # ---------------------------------------------------------------------------
 
 _HW_M = 7      # weekly season
@@ -4728,7 +4692,7 @@ def forecast_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sampled-source bounded-horizon closeness centrality (wave 62)
+# Sampled-source bounded-horizon closeness centrality
 # ---------------------------------------------------------------------------
 
 _CLOSE_SEEDS = ("c1", "c2", "c3", "c4", "c5")
@@ -4806,7 +4770,7 @@ GROUP BY seed
     ),
 )
 def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Measured-width clone deliberately NOT applied (round 13): the
+    # Measured-width clone deliberately NOT applied: the
     # applied-form NEW/OLD A/B read NEW min 4.80 vs OLD min 4.20 at
     # sf0.1 — the per-hop seed-frontier⋈edges joins are COMPUTE-bound
     # (5 seeds × symmetrized 1.17M-edge probe), so the width trim
@@ -4826,7 +4790,7 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DP-shaped histogram release (wave 69)
+# DP-shaped histogram release
 # ---------------------------------------------------------------------------
 
 # round(ln(2^32) * 1e8) — shared literal on both engines
@@ -4949,7 +4913,7 @@ def privacy_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Effective-diameter coverage curve (wave 70)
+# Effective-diameter coverage curve
 # ---------------------------------------------------------------------------
 
 
@@ -5021,7 +4985,7 @@ def graph_effective_diameter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Greenwood confidence band (wave 72): the KM curve with error bars
+# Greenwood confidence band: the KM curve with error bars
 # ---------------------------------------------------------------------------
 
 _GW_Z = 1.959964
@@ -5184,7 +5148,7 @@ def events_survival_greenwood(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Allen interval-algebra census (wave 73)
+# Allen interval-algebra census
 # ---------------------------------------------------------------------------
 
 _ALLEN_SQL = """

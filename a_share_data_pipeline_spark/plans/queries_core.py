@@ -1731,7 +1731,7 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 42: mergeable higher moments — re-aggregatable mean / variance /
+# Mergeable higher moments — re-aggregatable mean / variance /
 # skewness / kurtosis from per-shard integer power sums
 # ---------------------------------------------------------------------------
 
@@ -1869,7 +1869,7 @@ def agg_moments_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 55: trimmed mean — the classical robust location aggregate
+# Trimmed mean — the classical robust location aggregate
 # ---------------------------------------------------------------------------
 
 _TRIM_PCT_NUM = 1  # trim floor(n/10) from each tail (10%)

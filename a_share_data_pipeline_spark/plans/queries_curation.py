@@ -563,7 +563,7 @@ def curation_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 38: URL canonicalization dedup — the web-corpus identity rule
+# URL canonicalization dedup — the web-corpus identity rule
 # ---------------------------------------------------------------------------
 
 # Dirty-URL fixture: the corpus has no URLs, so both engines derive the
@@ -746,7 +746,7 @@ def dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 40: temperature-scaled mixture weights — the multilingual-corpus
+# Temperature-scaled mixture weights — the multilingual-corpus
 # rebalancing rule (alpha = 0.5 so the power is an exact sqrt)
 # ---------------------------------------------------------------------------
 
@@ -824,7 +824,7 @@ def curation_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 42: model-based quality filter apply — hashed-feature linear
+# Model-based quality filter apply — hashed-feature linear
 # scorer with literal integer weights (the fasttext/DCLM-style lane)
 # ---------------------------------------------------------------------------
 
@@ -923,7 +923,7 @@ def curation_model_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# DSIR importance resampling (wave 60)
+# DSIR importance resampling
 # ---------------------------------------------------------------------------
 
 _DSIR_BUCKETS = 256
@@ -1071,7 +1071,7 @@ def curation_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom-prefiltered decontamination (wave 66)
+# Bloom-prefiltered decontamination
 # ---------------------------------------------------------------------------
 
 _BLOOM_DECON_SQL = f"""

@@ -1,13 +1,11 @@
-"""Round-6 wave 16: evaluation and mining families — market-basket
-association rules (support/confidence/lift), NDCG@10 ranked-retrieval
-evaluation, the tie-aware rank-sum AUC-ROC, and MAD-based robust
-outlier flagging.
+"""Evaluation and mining families — market-basket association rules
+(support/confidence/lift), NDCG@10 ranked-retrieval evaluation, the
+tie-aware rank-sum AUC-ROC, and MAD-based robust outlier flagging.
 
-Same discipline as waves 5-15: every sum that feeds a compare or a
-hash is exact int64, every emitted double goes through ONE division
-(or one dround), anything "random" is md5 arithmetic reproducible on
-both engines, and every reduce happens BEFORE any window or join
-fan-out.
+Every sum that feeds a compare or a hash is exact int64, every emitted
+double goes through ONE division (or one dround), anything "random" is
+md5 arithmetic reproducible on both engines, and every reduce happens
+BEFORE any window or join fan-out.
 """
 
 from __future__ import annotations
@@ -24,7 +22,7 @@ from ..sources import load_table
 from .catalog import register
 
 # ---------------------------------------------------------------------------
-# Market-basket association rules over brand co-occurrence (wave 16)
+# Market-basket association rules over brand co-occurrence
 # ---------------------------------------------------------------------------
 
 # Relative minimum support: a pair must appear in >= 1% of baskets.
@@ -87,7 +85,7 @@ def assoc_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     items = pin(
         # no broadcast hint: part is SF-scaled — stats-based AQE
-        # decides from the projected size (VERDICT r7 item 5)
+        # decides from the projected size
         li.join(part, li.l_partkey == part.p_partkey)
         .select(F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item"))
         .distinct()
@@ -139,7 +137,7 @@ def assoc_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# NDCG@10 ranked-retrieval evaluation (wave 16)
+# NDCG@10 ranked-retrieval evaluation
 # ---------------------------------------------------------------------------
 
 _NDCG_K = 10
@@ -277,17 +275,22 @@ def _scored_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# Tie-aware AUC-ROC via the rank-sum identity (wave 16)
-# ---------------------------------------------------------------------------
-
-_AUC_SQL = """
-WITH units AS (
+# SQL twin of _scored_units: the `units` CTE (user_id, day, score, label)
+_UNITS_SQL = """
+units AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
          SUM(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END) AS score,
          MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS label
   FROM events GROUP BY 1, 2
-),
+)"""
+
+
+# ---------------------------------------------------------------------------
+# Tie-aware AUC-ROC via the rank-sum identity
+# ---------------------------------------------------------------------------
+
+_AUC_SQL = f"""
+WITH {_UNITS_SQL},
 g AS (
   SELECT score, SUM(label) AS n1, COUNT(*) - SUM(label) AS n0
   FROM units GROUP BY score
@@ -367,7 +370,7 @@ def events_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MAD-based robust outlier flags on the daily count series (wave 16)
+# MAD-based robust outlier flags on the daily count series
 # ---------------------------------------------------------------------------
 
 _MAD_SQL = """
@@ -452,7 +455,7 @@ def profile_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Z-order (Morton) clustering statistics (wave 17)
+# Z-order (Morton) clustering statistics
 # ---------------------------------------------------------------------------
 
 _Z_BITS = 8
@@ -529,7 +532,7 @@ def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bigram PMI collocations (wave 17)
+# Bigram PMI collocations
 # ---------------------------------------------------------------------------
 
 _PMI_MIN_COUNT = 5
@@ -628,7 +631,7 @@ def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Feature hashing (the hashing trick) (wave 17)
+# Feature hashing (the hashing trick)
 # ---------------------------------------------------------------------------
 
 _FH_DIM = 64
@@ -694,15 +697,11 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Probability calibration bins + integer-exact Brier score (wave 17)
+# Probability calibration bins + integer-exact Brier score
 # ---------------------------------------------------------------------------
 
-_CAL_SQL = """
-WITH units AS (
-  SELECT SUM(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END) AS score,
-         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS label
-  FROM events GROUP BY user_id, CAST(ts AS DATE)
-),
+_CAL_SQL = f"""
+WITH {_UNITS_SQL},
 g AS (
   SELECT score, COUNT(*) AS n, SUM(label) AS pos FROM units GROUP BY score
 ),
@@ -765,7 +764,7 @@ def events_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 48: mean average precision — the ranking-eval row beside NDCG/AUC
+# Mean average precision — the ranking-eval row beside NDCG/AUC
 # ---------------------------------------------------------------------------
 
 _AP_SCALE = 1000000000  # 1e-9 precision grid per ranked hit
@@ -889,18 +888,13 @@ def ml_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 52: decile lift & gains table — the campaign-targeting eval row
+# Decile lift & gains table — the campaign-targeting eval row
 # ---------------------------------------------------------------------------
 
 _LIFT_BUCKETS = 10
 
 _LIFT_SQL = f"""
-WITH units AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         SUM(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END) AS score,
-         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS label
-  FROM events GROUP BY 1, 2
-),
+WITH {_UNITS_SQL},
 ranked AS (
   SELECT label,
          ntile({_LIFT_BUCKETS}) OVER (ORDER BY score DESC, user_id, day)
@@ -991,19 +985,14 @@ def ml_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 57: Matthews correlation coefficient — the confusion-matrix
+# Matthews correlation coefficient — the confusion-matrix
 # summary robust to class imbalance
 # ---------------------------------------------------------------------------
 
 _MCC_THRESHOLD = 3  # predict "purchase day" when non-purchase activity < 3
 
 _MCC_SQL = f"""
-WITH units AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         SUM(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END) AS score,
-         MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS label
-  FROM events GROUP BY 1, 2
-),
+WITH {_UNITS_SQL},
 conf AS (
   SELECT
     SUM(CASE WHEN score < {_MCC_THRESHOLD} AND label = 1 THEN 1 ELSE 0 END)::HUGEINT AS tp,

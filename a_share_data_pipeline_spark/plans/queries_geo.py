@@ -1,14 +1,13 @@
-"""Round-6 wave 21: the geospatial family — grid-blocked k-nearest-
-neighbor search and neighborhood density, the blocking pattern every
-distributed spatial join reduces to (same shape as LSH banding: bucket
-by cell, probe only adjacent buckets, verify exactly inside the
-candidate set).
+"""The geospatial family — grid-blocked k-nearest-neighbor search and
+neighborhood density, the blocking pattern every distributed spatial
+join reduces to (same shape as LSH banding: bucket by cell, probe only
+adjacent buckets, verify exactly inside the candidate set).
 
 The corpus has no coordinates, so each customer gets a deterministic
-synthetic position from md5 arithmetic (the _PII_AUG /_emb_aug fixture-
-augmentation precedent: both engines derive the SAME rows before the
-operator under test). Positions are integer micro-units on a
-[0, 1e6)² plane — squared distances are exact int64, so candidate
+synthetic position from md5 arithmetic (the _PII_AUG /_emb_aug
+fixture-augmentation precedent: both engines derive the SAME rows
+before the operator under test). Positions are integer micro-units on
+a [0, 1e6)² plane — squared distances are exact int64, so candidate
 ranking never touches a float.
 """
 
@@ -85,7 +84,7 @@ _OFFSETS = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
 # cross-cell pair is probed by exactly one side (half-pair generation)
 _HALF_OFFSETS = [(0, 0), (0, 1), (1, -1), (1, 0), (1, 1)]
 
-# hot-cell salt guard (VERDICT r6 item 6): a cell with n points makes
+# hot-cell salt guard: a cell with n points makes
 # n×n candidate pairs land in ONE join task; above the cap the build
 # side splits into _N_SALTS sub-buckets and the probe side replicates
 # across them — same pairs, spread over _N_SALTS tasks. Salting (not
@@ -93,7 +92,7 @@ _HALF_OFFSETS = [(0, 0), (0, 1), (1, -1), (1, 0), (1, 1)]
 # knob for density is the cell edge, not candidate loss.
 _HOT_CELL_CAP = 1_000
 _N_SALTS = 8
-# kNN bound-participation cap (round 14): cells denser than this keep
+# kNN bound-participation cap: cells denser than this keep
 # the full window path instead of the within-cell bound self-join
 # (whose per-task block is n² — 256² = 65,536 rows, inside the salt
 # guard's design envelope). Purely a cost knob: it changes WHICH ids
@@ -119,12 +118,12 @@ def _grid_candidates(
     is pair-for-pair identical either way (property-tested), so the
     exhaustive SQL oracle is unchanged.
 
-    ``offsets`` (round 14) restricts the probe ring: the default is the
+    ``offsets`` restricts the probe ring: the default is the
     full half-neighborhood (_HALF_OFFSETS — all 3×3 pairs); ``[(0, 0)]``
     yields exactly the within-cell pairs (both directions, same salt
     guard) — the frame geo_grid_knn's upper-bound prune is built from.
 
-    ``cell_bound`` (round 14, geo_grid_knn only): an optional
+    ``cell_bound`` (geo_grid_knn only): an optional
     (cx, cy, ubc) frame — GRID-bounded, hence always legitimately
     broadcastable, exactly like ``hot`` — giving each cell an upper
     bound on every member point's _KNN-th-NN dist². When present, each
@@ -147,13 +146,13 @@ def _grid_candidates(
         F.col("cy").alias("pcy"),
         (F.col("n") > hot_cap).alias("is_hot"),
     )
-    # HALF-PAIR generation (r8): each unordered pair joins exactly once
+    # HALF-PAIR generation: each unordered pair joins exactly once
     # — same-cell pairs via the (0,0) probe with an id< filter,
     # cross-cell pairs from the lexicographically LOWER cell only (the
     # 4 upper-half offsets; Δ and -Δ are covered by exactly one side).
     # The directed view both geo consumers expect is restored by a
     # MAP-SIDE swap-explode after the join — never a union of two
-    # projections, which would re-execute the join (the r7
+    # projections, which would re-execute the join (the
     # triangle-corners lesson). Halves the probe fan-out (9→5 offsets)
     # and the join output.
     off = F.array(
@@ -324,10 +323,10 @@ WHERE rnk <= {_KNN}
 
 def _knn_cell_bound(cells: DataFrame) -> DataFrame:
     """(cx, cy, ubc) — a per-CELL upper bound on every member point's
-    _KNN-th-NN dist², for the map-side candidate prune (round 14,
-    guide §2.3; stage receipt in OPTIMIZATION_r14.md: the candidate
-    join was 0.87s, the row_number window over its 4.74M symmetrized
-    rows ~5s of geo_grid_knn's 5.9s).
+    _KNN-th-NN dist², for the map-side candidate prune (guide §2.3;
+    stage receipt in OPTIMIZATION_r14.md: the candidate join was 0.87s,
+    the row_number window over its 4.74M symmetrized rows ~5s of
+    geo_grid_knn's 5.9s).
 
     Derivation: within one cell of n points, every member has n−1
     in-cell neighbors, all of which are real candidates; its _KNN-th
@@ -396,7 +395,7 @@ def _knn_cell_bound(cells: DataFrame) -> DataFrame:
 )
 def geo_grid_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _cells(spark, sf_dir)
-    # Round-14 map-side bounded-candidate prune: the grid-bounded
+    # Map-side bounded-candidate prune: the grid-bounded
     # per-cell bound rides both sides of the half-pair join inside
     # _grid_candidates, so candidates that provably cannot reach the
     # top-_KNN die BEFORE the swap-explode and before any exchange of
@@ -479,7 +478,7 @@ def geo_cell_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 40: point-in-polygon — integer ray casting against a broadcast
+# Point-in-polygon — integer ray casting against a broadcast
 # polygon set (the second half of the spatial-join story: grid kNN is
 # point×point, this is point×region)
 # ---------------------------------------------------------------------------
@@ -629,7 +628,7 @@ def geo_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 50: grid-blocked DBSCAN — density-based spatial clustering, the
+# Grid-blocked DBSCAN — density-based spatial clustering, the
 # geo capstone composing the cell grid with connected components
 # ---------------------------------------------------------------------------
 

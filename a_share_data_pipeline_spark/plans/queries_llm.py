@@ -280,7 +280,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The synthetic embeddings are near-orthogonal (no >=0.95-cosine pair
 # exists at any sf), so a near-dup query over the raw table verifies
 # vacuously — 0 rows matching 0 rows proves nothing about the cosine or
-# LSH math (VERDICT r3 item 2). Both engines therefore append the SAME
+# LSH math. Both engines therefore append the SAME
 # deterministic near-duplicate vectors derived from existing rows
 # before pairing: every STRIDE-th vector is copied with a tiny per-dim
 # perturbation (0.001 · ((src_id + dim) % 7 - 3), ‖δ‖ ≈ 0.016 on unit
@@ -313,6 +313,10 @@ def _emb_aug_sql(vec_alias: str = "v") -> str:
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v): every embedding as an array<double>."""
     return load_table(spark, sf_dir, "embeddings").select("vec_id", SIM.as_double_vec())
+
+
+# SQL twin of _vectors: the `e` CTE (vec_id, v)
+_VECTORS_SQL = "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
 
 
 def _emb_augmented(emb: DataFrame) -> DataFrame:
@@ -420,8 +424,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Similarity search: brute-force top-k and sign-LSH ANN
 # ---------------------------------------------------------------------------
 
-_TOPK_SQL = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+_TOPK_SQL = f"""
+WITH {_VECTORS_SQL},
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
 s AS (
   SELECT q.q_id, c.vec_id AS c_id,
@@ -460,7 +464,7 @@ def _ann_sql() -> str:
         for j, p in enumerate(LSH_PLANES)
     )
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_VECTORS_SQL},
 eb AS (SELECT vec_id, v, {bucket_terms} AS bucket FROM e),
 q AS (SELECT vec_id AS q_id, v AS qv, bucket FROM eb WHERE vec_id < 8),
 s AS (
@@ -746,8 +750,8 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.extract_features(MM.documents_as_binary(docs))
 
 
-_IVF_SQL = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+_IVF_SQL = f"""
+WITH {_VECTORS_SQL},
 cent AS (SELECT vec_id AS cell, v AS ce FROM e WHERE vec_id < 8),
 va AS (
   SELECT vec_id AS c_id, v AS cv, cell,
@@ -898,7 +902,7 @@ _PQ_L2 = (
 )
 
 _PQ_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_VECTORS_SQL},
 coded AS (
   SELECT vec_id, v, CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS code
   FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 16)
@@ -1447,7 +1451,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _IVFPQ_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_VECTORS_SQL},
 cent AS (SELECT vec_id AS cell, v AS ce FROM e WHERE vec_id < 8),
 va AS (
   SELECT vec_id AS c_id, cell,
@@ -1552,7 +1556,7 @@ def _rp_sql() -> str:
         f"list_dot_product(v, {plane_literal(p)})" for p in lsh_planes(n_planes=SIM.RP_DIM)
     )
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_VECTORS_SQL},
 p AS (SELECT vec_id, v, [{proj}]::DOUBLE[] AS rv FROM e),
 q AS (SELECT vec_id AS q_id, v AS qv, rv AS qrv FROM p WHERE vec_id < 8),
 coarse AS (
@@ -1791,7 +1795,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 37: blockhash near-dup over binary payloads — the multimodal
+# Blockhash near-dup over binary payloads — the multimodal
 # half of the dedup story (simhash banding over a content-locality hash)
 # ---------------------------------------------------------------------------
 
@@ -2042,7 +2046,7 @@ sel{t} AS (
 selected{t} AS (SELECT * FROM {prev} UNION ALL SELECT * FROM sel{t})""")
         prev = f"selected{t}"
     return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_VECTORS_SQL},
 qs AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id IN ({qids})),
 relall AS (
   SELECT qs.qid, e.vec_id AS cand,
@@ -2362,14 +2366,14 @@ def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Matryoshka truncation quality (wave 65)
+# Matryoshka truncation quality
 # ---------------------------------------------------------------------------
 
 _MRL_DIM = 16
 _MRL_K = 5
 
 _MRL_SQL = f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+WITH {_VECTORS_SQL},
 q AS (SELECT vec_id AS q_id, v AS qv FROM e WHERE vec_id < 8),
 full_s AS (
   SELECT q.q_id, c.vec_id AS c_id,
@@ -2449,7 +2453,7 @@ def embedding_matryoshka_truncate(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# Cross-modal retrieval eval (wave 66)
+# Cross-modal retrieval eval
 # ---------------------------------------------------------------------------
 
 _XM_DIMS = 64

@@ -1,14 +1,14 @@
-"""Round-6 wave 18: completing the kline/market-indicator family the
-reference's domain (daily A-share bars, market/non_fq_daily_kline.py)
-sits in front of — VWAP/TWAP bars, Donchian channel + Williams %R
-position, floor-trader pivot points, the MA golden-cross signal, and
-the Sharpe ratio over weekly returns.
+"""The kline/market-indicator family the reference's domain (daily
+A-share bars, market/non_fq_daily_kline.py) sits in front of —
+VWAP/TWAP bars, Donchian channel + Williams %R position, floor-trader
+pivot points, the MA golden-cross signal, and the Sharpe ratio over
+weekly returns.
 
-Same discipline as waves 5-17: prices convert to exact int64 cents
-BEFORE any sum or compare, every emitted double goes through ONE
-division (or one dround), MA comparisons are integer cross-multiplies
-(no division at all), and every window runs over the already-reduced
-O(days·types) daily/weekly frame — never over raw ticks.
+Prices convert to exact int64 cents BEFORE any sum or compare, every
+emitted double goes through ONE division (or one dround), MA
+comparisons are integer cross-multiplies (no division at all), and
+every window runs over the already-reduced O(days·types) daily/weekly
+frame — never over raw ticks.
 """
 
 from __future__ import annotations
@@ -77,6 +77,17 @@ def _daily_avg(spark: SparkSession, sf_dir: str, *also: Column) -> DataFrame:
     )
 
 
+def _daily_avg_sql(*also: str) -> str:
+    """SQL twin of _daily_avg: the `daily` CTE (event_type, day, v, *also)."""
+    return f"""
+daily AS (
+  SELECT event_type, date_trunc('day', ts) AS day,
+         {", ".join(("ROUND(AVG(value), 6) AS v", *also))}
+  FROM events WHERE event_type IN ('view', 'purchase')
+  GROUP BY 1, 2
+)"""
+
+
 def _daily_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day, v_view, v_purchase): each day's view and purchase average
     side by side on the 6-decimal grid, for the rolling two-series
@@ -88,6 +99,17 @@ def _daily_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ticks(spark, sf_dir).groupBy(
         F.date_trunc("day", "ts").cast("date").alias("day")
     ).agg(avg_of("view").alias("v_view"), avg_of("purchase").alias("v_purchase"))
+
+
+# SQL twin of _daily_pair: the `daily` CTE (day, v_view, v_purchase)
+_DAILY_PAIR_SQL = """
+daily AS (
+  SELECT date_trunc('day', ts) AS day,
+         ROUND(AVG(CASE WHEN event_type = 'view' THEN value END), 6) AS v_view,
+         ROUND(AVG(CASE WHEN event_type = 'purchase' THEN value END), 6) AS v_purchase
+  FROM events WHERE event_type IN ('view', 'purchase')
+  GROUP BY 1
+)"""
 
 
 _WEEKLY_OHLC_SQL = f"""
@@ -120,7 +142,7 @@ def _weekly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# VWAP / TWAP weekly bars (wave 18)
+# VWAP / TWAP weekly bars
 # ---------------------------------------------------------------------------
 
 _VWAP_SQL = """
@@ -187,7 +209,7 @@ def events_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Donchian channel + Williams-%R position (wave 18)
+# Donchian channel + Williams-%R position
 # ---------------------------------------------------------------------------
 
 _DONCHIAN_SQL = f"""
@@ -257,7 +279,7 @@ def events_donchian(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Floor-trader pivot points from the prior week's bar (wave 18)
+# Floor-trader pivot points from the prior week's bar
 # ---------------------------------------------------------------------------
 
 _PIVOT_SQL = f"""
@@ -316,7 +338,7 @@ def events_pivot_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MA golden-cross / death-cross signal detection (wave 18)
+# MA golden-cross / death-cross signal detection
 # ---------------------------------------------------------------------------
 
 _CROSS_SQL = f"""
@@ -402,7 +424,7 @@ def events_golden_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Sharpe ratio over weekly returns (wave 18)
+# Sharpe ratio over weekly returns
 # ---------------------------------------------------------------------------
 
 _SQRT52 = math.sqrt(52.0)  # annualization for weekly bars; the SAME
@@ -466,7 +488,7 @@ def events_sharpe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Candlestick pattern detection (wave 26)
+# Candlestick pattern detection
 # ---------------------------------------------------------------------------
 
 _CANDLE_SQL = f"""
@@ -610,7 +632,7 @@ def events_candle_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Periodogram at fixed calendar frequencies (wave 30)
+# Periodogram at fixed calendar frequencies
 # ---------------------------------------------------------------------------
 
 _PG_P = 16  # cycle length (days); data-independent calendar grid
@@ -643,14 +665,7 @@ def _pg_sql() -> str:
         )
     union = "\n  UNION ALL".join(branches)
     return f"""
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT),
-                 lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-                 || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS close_c
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+WITH {_DAILY_CLOSE_SQL},
 slotted AS (
   SELECT event_type, close_c,
          date_diff('day', DATE '1970-01-01', day) % {_PG_P} AS slot
@@ -731,7 +746,7 @@ def events_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# LTTB-style downsampling (wave 31)
+# LTTB-style downsampling
 # ---------------------------------------------------------------------------
 
 _LTTB_BUCKET = 4  # days per bucket → ~4x downsample of the daily series
@@ -842,7 +857,7 @@ def events_lttb_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Theil-Sen robust trend (wave 34)
+# Theil-Sen robust trend
 # ---------------------------------------------------------------------------
 
 _TS_SQL = f"""
@@ -911,8 +926,8 @@ def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ORDER BY slope alone: ties among equal slopes rank arbitrarily,
     # but the emitted lower-median VALUE is deterministic because equal
-    # values are interchangeable across ranks (ADVICE r6 dropped the
-    # duplicated no-op second key that faked a unique tie-break)
+    # values are interchangeable across ranks (a second sort key would
+    # only fake a unique tie-break)
     w = W.partitionBy("event_type").orderBy("slope")
     wn = W.partitionBy("event_type")
     ranked = slopes.select(
@@ -939,7 +954,7 @@ def events_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 37: Mann-Kendall trend test — the significance companion of the
+# Mann-Kendall trend test — the significance companion of the
 # Theil-Sen slope (same bounded pair fan-out, exact integer S and
 # tie-corrected variance numerator, one float division + sqrt)
 # ---------------------------------------------------------------------------
@@ -1050,7 +1065,7 @@ def stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Garman-Klass range volatility (wave 36)
+# Garman-Klass range volatility
 # ---------------------------------------------------------------------------
 
 _GK_C2 = 2.0 * math.log(2.0) - 1.0  # 0.386294…, one shared literal
@@ -1153,7 +1168,7 @@ def events_volatility_gk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 40: dollar bars — information-driven bar resampling (de Prado):
+# Dollar bars — information-driven bar resampling (de Prado):
 # bars close on traded VALUE, not wall-clock, so volatile sessions get
 # more bars and quiet ones fewer
 # ---------------------------------------------------------------------------
@@ -1221,8 +1236,8 @@ def events_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Integer `div` on the bigint cumsum (matching the oracle's `//`):
     # double division loses exactness past 2^53 cumulative cents, so
-    # bar boundaries could diverge cross-engine at the 100 TB target
-    # (ADVICE r7). Both operands are non-negative, so truncating div
+    # bar boundaries could diverge cross-engine at the 100 TB target.
+    # Both operands are non-negative, so truncating div
     # == floor div.
     barred = ticks.select(
         "event_type",
@@ -1246,7 +1261,7 @@ def events_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 41: VPIN — order-flow toxicity over the dollar bars
+# VPIN — order-flow toxicity over the dollar bars
 # ---------------------------------------------------------------------------
 
 _VPIN_W = 5  # trailing bars per VPIN estimate
@@ -1367,7 +1382,7 @@ def events_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 43: Hodges-Lehmann pseudo-median — the robust location estimator
+# Hodges-Lehmann pseudo-median — the robust location estimator
 # (companion of theil_sen's robust slope and mann_kendall's trend test)
 # ---------------------------------------------------------------------------
 
@@ -1451,7 +1466,7 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 44: Roll implied spread + pairs-trading spread z-score — the
+# Roll implied spread + pairs-trading spread z-score — the
 # microstructure pair completing VPIN (toxicity), GK (volatility)
 # ---------------------------------------------------------------------------
 
@@ -1623,7 +1638,7 @@ def events_pairs_spread_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 45: variance-ratio random-walk test + Hurst exponent (R/S) — the
+# Variance-ratio random-walk test + Hurst exponent (R/S) — the
 # long-memory pair: is the close series a random walk, and how rough?
 # ---------------------------------------------------------------------------
 
@@ -1925,7 +1940,7 @@ def events_hurst_exponent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 47: EWMA volatility (RiskMetrics) + permutation entropy — the
+# EWMA volatility (RiskMetrics) + permutation entropy — the
 # smoothed-risk and complexity rows of the daily-series family
 # ---------------------------------------------------------------------------
 
@@ -2144,7 +2159,7 @@ def events_permutation_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 49: Amihud illiquidity — price impact per traded dollar, the
+# Amihud illiquidity — price impact per traded dollar, the
 # liquidity row completing the microstructure family
 # ---------------------------------------------------------------------------
 
@@ -2234,7 +2249,7 @@ def events_amihud_illiquidity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 51: fractional differentiation + Kyle's lambda — the de Prado
+# Fractional differentiation + Kyle's lambda — the de Prado
 # stationarity transform and the linear price-impact coefficient
 # ---------------------------------------------------------------------------
 
@@ -2451,7 +2466,7 @@ def events_kyle_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 53: lead-lag cross-correlation — which series moves first?
+# Lead-lag cross-correlation — which series moves first?
 # ---------------------------------------------------------------------------
 
 _CCF_MAX_LAG = 3
@@ -2564,7 +2579,7 @@ def events_cross_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 54: ulcer index — drawdown-depth risk (the stress complement of
+# Ulcer index — drawdown-depth risk (the stress complement of
 # volatility: how deep and how long underwater, not how wiggly)
 # ---------------------------------------------------------------------------
 
@@ -2643,7 +2658,7 @@ def events_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 56: Kendall tau-b — the concordance rank correlation between the
+# Kendall tau-b — the concordance rank correlation between the
 # two aligned daily return series
 # ---------------------------------------------------------------------------
 
@@ -2759,7 +2774,7 @@ def events_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 58: mean-reversion half-life + Ljung-Box — how fast does the
+# Mean-reversion half-life + Ljung-Box — how fast does the
 # pairs spread revert, and is the return series white noise at all?
 # ---------------------------------------------------------------------------
 
@@ -2949,7 +2964,7 @@ def events_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 59: Chow structural-break test + underwater duration — known-date
+# Chow structural-break test + underwater duration — known-date
 # regime check and the time dimension of drawdown risk
 # ---------------------------------------------------------------------------
 
@@ -3194,7 +3209,7 @@ def events_underwater_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Page-Hinkley drift detector (wave 63)
+# Page-Hinkley drift detector
 # ---------------------------------------------------------------------------
 
 _PH_DELTA = 50      # tolerance, cents
@@ -3292,7 +3307,7 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Shapley-value attribution (wave 67)
+# Shapley-value attribution
 # ---------------------------------------------------------------------------
 
 _SHAP_LOOKBACK_DAYS = 3

@@ -1,8 +1,7 @@
-"""Round-6 waves 23 + 25: ML primitives — the top principal component
-of the embedding covariance via power iteration (wave 23), and the
-supervised pair: categorical Naive Bayes train/apply and the
-decision-stump best-split search (wave 25), all fully deterministic
-across engines.
+"""ML primitives — the top principal component of the embedding
+covariance via power iteration, and the supervised pair: categorical
+Naive Bayes train/apply and the decision-stump best-split search, all
+fully deterministic across engines.
 
 PCA at corpus scale is a two-phase shape: (1) ONE data-sized pass
 builds the d×d Gram/covariance matrix (map-side products, the shuffle
@@ -10,10 +9,10 @@ carries d² rows — never the data), then (2) the iteration runs on the
 d²-row matrix frame alone. Floats never accumulate across rows:
 components quantize to integer micro-units up front, the covariance
 numerator n·Σqᵢqⱼ − SᵢSⱼ is exact 128-bit integer, and each power-
-iteration round re-normalizes the rank vector back onto an integer
-ppm grid (the PageRank/k-core integer-encode discipline) — so the
-only doubles are one fixed-shape ratio per matrix entry and per
-round, bit-identical on both engines.
+iteration round re-normalizes the rank vector back onto an integer ppm
+grid (the PageRank/k-core integer-encode discipline) — so the only
+doubles are one fixed-shape ratio per matrix entry and per round,
+bit-identical on both engines.
 """
 
 from __future__ import annotations
@@ -111,7 +110,7 @@ _PCA_SQL = _pca_sql()
 def _pca_gram_marg(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(gram, marg) for the PCA phase-1 pass.
 
-    Round-14 rewrite (guide §4.2 "hand whole batches to vectorized
+    Rewritten (guide §4.2 "hand whole batches to vectorized
     native code", §2.3 "aggregate before you shuffle"): the old shape
     double-posexploded n·d² rows (8.2M at sf0.1) through a JVM
     decimal-sum hash aggregate — measured 2.9s of the query's 4.9s.
@@ -129,7 +128,7 @@ def _pca_gram_marg(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     # would have to import this package (not guaranteed — the driver
     # adds the repo to sys.path at runtime, which workers never see)
     def _gram_partials(it):
-        """mapInArrow kernel for the Gram pass (round-14, guide §4.2): the
+        """mapInArrow kernel for the Gram pass (guide §4.2): the
         input is ONE int64 column ``qv`` (the JVM-quantized embedding — the
         exact same dround(x·1e6) values the old double-posexplode produced,
         so no float op ever happens in Python), and the output is one
@@ -227,7 +226,7 @@ def _pca_gram_marg(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     ),
 )
 def feature_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round-14 width-clone A/B (the graph_pagerank device): a d-derived
+    # width-clone A/B (the graph_pagerank device): a d-derived
     # trimmed-width clone for the post-gram iteration measured PARITY
     # in a quiet-window fresh-subprocess interleaved A/B (clone mins
     # 2.611/2.520 vs plain 2.553/2.781 — split rounds, inside noise;
@@ -235,10 +234,10 @@ def feature_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the simpler single-session form stays — with the Arrow gram the
     # iteration's 4096-row frames are no longer the dominant cost.
     emb = load_table(spark, sf_dir, "embeddings")
-    # round-14: Gram via the Arrow int64-matmul kernel — exact-integer
+    # Gram via the Arrow int64-matmul kernel — exact-integer
     # identical to the old n·d² double-posexplode + decimal aggregate
-    # (see _pca_gram_marg; the 128-bit overflow discipline from ADVICE
-    # r6 is preserved end-to-end: int64 per batch, Python int per task,
+    # (see _pca_gram_marg; the 128-bit overflow discipline is preserved
+    # end-to-end: int64 per batch, Python int per task,
     # decimal(26)→decimal(38) across tasks)
     gram, marg = _pca_gram_marg(emb)
     ma = marg.select(F.col("i"), F.col("s").alias("s_i"), F.col("n"))
@@ -303,7 +302,7 @@ def feature_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 25: Naive Bayes train + apply + confusion matrix
+# Naive Bayes train + apply + confusion matrix
 # ---------------------------------------------------------------------------
 
 _NB_CLASSES = ("A", "N", "R")  # fixed literal order: every cross-class
@@ -480,7 +479,7 @@ def ml_naive_bayes_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 25: decision stump — best Gini split on a literal threshold grid
+# Decision stump — best Gini split on a literal threshold grid
 # ---------------------------------------------------------------------------
 
 _STUMP_THRESHOLDS = tuple(range(10_000_00, 100_000_01, 10_000_00))  # cents:
@@ -575,7 +574,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 27: k-fold cross-validated stump selection
+# K-fold cross-validated stump selection
 # ---------------------------------------------------------------------------
 
 _CV_FOLDS = 5
@@ -741,7 +740,7 @@ def ml_stump_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 30: two-feature multiple regression via exact normal equations
+# Two-feature multiple regression via exact normal equations
 # ---------------------------------------------------------------------------
 
 _MR_SQL = """
@@ -872,7 +871,7 @@ def ml_multiple_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 31: farthest-first traversal (k-center seeding)
+# Farthest-first traversal (k-center seeding)
 # ---------------------------------------------------------------------------
 
 _KC_K = 4  # centers to pick (first = lowest vec_id, then 3 rounds)
@@ -981,7 +980,7 @@ def ml_kcenter_init(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 40: k-NN majority-vote classifier over embeddings
+# K-NN majority-vote classifier over embeddings
 # ---------------------------------------------------------------------------
 
 _KNN_K = 5
@@ -1063,7 +1062,7 @@ def ml_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # No broadcast hints on the label joins: refs is corpus-sized (90%
     # of the embeddings FACT table) and queries is SF-scaled too — the
-    # r6 dedup_jaccard_prefix lesson (forced fact-sized broadcasts ship
+    # dedup_jaccard_prefix lesson (forced fact-sized broadcasts ship
     # the corpus to every executor at scale). `top` (|queries|·k rows)
     # is the small side; AQE's stats-based planner picks the right
     # strategy per SF (queries_analytics.py policy). Plan-gated by

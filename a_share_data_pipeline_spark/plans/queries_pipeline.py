@@ -19,10 +19,10 @@ from ..session import clone_session, scratch_dir, set_width, volume_width
 from ..sources import load_table
 from ..streaming import structured as ST
 from ..streaming.incremental import merge_increment
-from ..functions.ordering import ordkey
+from ..functions.ordering import ORDKEY_SQL, ordkey
 from ..functions.rounding import dround
 from .catalog import register
-from .queries_market import _daily_avg, _daily_pair, _ticks
+from .queries_market import _DAILY_PAIR_SQL, _daily_avg, _daily_avg_sql, _daily_pair, _ticks
 
 # ---------------------------------------------------------------------------
 # Flagship: canonical wide-row assembly (J1+J2/J3+P3+P5 shape on testdata)
@@ -725,13 +725,8 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bollinger bands: rolling mean ± 2σ over the daily series (kline indicator)
 # ---------------------------------------------------------------------------
 
-_BOLL_SQL = """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-)
+_BOLL_SQL = f"""
+WITH {_daily_avg_sql()}
 SELECT event_type, day, v,
        ROUND(AVG(v) OVER w, 4) AS ma7,
        ROUND(AVG(v) OVER w + 2 * STDDEV_SAMP(v) OVER w, 4) AS upper,
@@ -776,13 +771,8 @@ def events_bollinger(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RSI (Cutler's variant): SMA-based relative strength over the daily series
 # ---------------------------------------------------------------------------
 
-_RSI_SQL = """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+_RSI_SQL = f"""
+WITH {_daily_avg_sql()},
 diffs AS (
   SELECT event_type, day, v,
          v - lag(v) OVER (PARTITION BY event_type ORDER BY day) AS d
@@ -1251,13 +1241,12 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # OHLC resample: the kline rollup (reference domain: daily → weekly bars)
 # ---------------------------------------------------------------------------
 
-_OHLC_SQL = """
+_OHLC_SQL = f"""
 WITH keyed AS (
   SELECT event_type,
          date_trunc('week', ts) AS week,
          value,
-         lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-           || lpad(CAST(event_id AS VARCHAR), 12, '0') AS ordkey
+         {ORDKEY_SQL} AS ordkey
   FROM events WHERE event_type IN ('view', 'purchase')
 )
 SELECT event_type, week,
@@ -1338,12 +1327,7 @@ def _ema_sql() -> str:
         for i, w in enumerate(ws)
     )
     return f"""
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-)
+WITH {_daily_avg_sql()}
 SELECT event_type, day, v,
        ROUND(({num}) / ({den}), 6) AS ema
 FROM daily
@@ -1396,14 +1380,8 @@ def events_ema(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Rolling correlation: aggregate-over-frame beyond sum/avg
 # ---------------------------------------------------------------------------
 
-_ROLL_CORR_SQL = """
-WITH daily AS (
-  SELECT date_trunc('day', ts) AS day,
-         ROUND(AVG(CASE WHEN event_type = 'view' THEN value END), 6) AS v_view,
-         ROUND(AVG(CASE WHEN event_type = 'purchase' THEN value END), 6) AS v_purchase
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1
-)
+_ROLL_CORR_SQL = f"""
+WITH {_DAILY_PAIR_SQL}
 SELECT day, v_view, v_purchase,
        ROUND(corr(v_view, v_purchase) OVER (
          ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW
@@ -1738,12 +1716,7 @@ def _macd_sql() -> str:
     snum, sden = _wsum_sql("v", _macd_weights(_MACD_SLOW_ALPHA, _MACD_LAGS))
     gnum, gden = _wsum_sql("dif", _macd_weights(_MACD_SIG_ALPHA, _MACD_SIG_LAGS))
     return f"""
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+WITH {_daily_avg_sql()},
 dif_t AS (
   SELECT event_type, day, v,
          ROUND(({fnum}) / ({fden}) - ({snum}) / ({sden}), 6) AS dif
@@ -1832,11 +1805,10 @@ def events_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
 # KDJ: the stochastic-oscillator kline indicator (SMA-smoothed variant)
 # ---------------------------------------------------------------------------
 
-_KDJ_SQL = """
+_KDJ_SQL = f"""
 WITH keyed AS (
   SELECT event_type, date_trunc('day', ts) AS day, value,
-         lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-           || lpad(CAST(event_id AS VARCHAR), 12, '0') AS ordkey
+         {ORDKEY_SQL} AS ordkey
   FROM events WHERE event_type IN ('view', 'purchase')
 ),
 bars AS (
@@ -2110,13 +2082,8 @@ def events_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Seasonal decomposition: trend / weekly-seasonal / residual split
 # ---------------------------------------------------------------------------
 
-_DECOMP_SQL = """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts)::DATE AS day,
-         ROUND(AVG(value), 6) AS v
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+_DECOMP_SQL = f"""
+WITH {_daily_avg_sql()},
 trend_t AS (
   SELECT event_type, day, v,
          CASE WHEN COUNT(*) OVER w7 = 7
@@ -2426,7 +2393,7 @@ def events_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 39: partitioned-layout write + pruned read — the Hive-layout
+# Partitioned-layout write + pruned read — the Hive-layout
 # contract as a driver-verifiable query
 # ---------------------------------------------------------------------------
 
@@ -2480,7 +2447,7 @@ def source_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 41: temporal referential-integrity audit — facts vs the SCD2
+# Temporal referential-integrity audit — facts vs the SCD2
 # dimension's validity timeline
 # ---------------------------------------------------------------------------
 
@@ -2558,7 +2525,7 @@ def audit_temporal_fk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Transaction-log snapshot read (wave 63): the lakehouse-format core
+# Transaction-log snapshot read: the lakehouse-format core
 # ---------------------------------------------------------------------------
 
 _TXN_SQL = """
@@ -2642,7 +2609,7 @@ def source_txn_log_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Partition-spec evolution read (wave 68)
+# Partition-spec evolution read
 # ---------------------------------------------------------------------------
 
 _PE_CUTOFF = "2024-01-16"  # mid-range of the 2024-01 fixture month

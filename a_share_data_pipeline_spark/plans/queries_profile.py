@@ -862,18 +862,25 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Blocked fuzzy join: the fact-scale form of record linkage
 # ---------------------------------------------------------------------------
 
-_FUZZY_BLOCKED_SQL = """
-WITH keyed AS (
+# SQL twin of join_fuzzy_blocked: the `fuzzy` CTE (key_a, key_b, dist)
+_FUZZY_SQL = """
+keyed AS (
   SELECT p_partkey, p_name,
          string_split(p_name, ' ')[1] || '|' ||
            CAST(CAST(FLOOR(length(p_name) / 4.0) AS BIGINT) AS VARCHAR) AS blk
   FROM part
-)
-SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
-       CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-FROM keyed a JOIN keyed b
-  ON a.blk = b.blk AND a.p_partkey < b.p_partkey
-WHERE levenshtein(a.p_name, b.p_name) <= 3
+),
+fuzzy AS (
+  SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
+         CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
+  FROM keyed a JOIN keyed b
+    ON a.blk = b.blk AND a.p_partkey < b.p_partkey
+  WHERE levenshtein(a.p_name, b.p_name) <= 3
+)"""
+
+_FUZZY_BLOCKED_SQL = f"""
+WITH {_FUZZY_SQL}
+SELECT key_a, key_b, dist FROM fuzzy
 """
 
 
@@ -1125,22 +1132,11 @@ def sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Entity resolution end-to-end: fuzzy pairs → components → canonical id
 # ---------------------------------------------------------------------------
 
-_ER_SQL = """
-WITH RECURSIVE keyed AS (
-  SELECT p_partkey, p_name,
-         string_split(p_name, ' ')[1] || '|' ||
-           CAST(CAST(FLOOR(length(p_name) / 4.0) AS BIGINT) AS VARCHAR) AS blk
-  FROM part
-),
-pairs AS (
-  SELECT a.p_partkey AS key_a, b.p_partkey AS key_b
-  FROM keyed a JOIN keyed b
-    ON a.blk = b.blk AND a.p_partkey < b.p_partkey
-  WHERE levenshtein(a.p_name, b.p_name) <= 3
-),
+_ER_SQL = f"""
+WITH RECURSIVE {_FUZZY_SQL},
 sym AS (
-  SELECT key_a AS src, key_b AS dst FROM pairs
-  UNION SELECT key_b, key_a FROM pairs
+  SELECT key_a AS src, key_b AS dst FROM fuzzy
+  UNION SELECT key_b, key_a FROM fuzzy
 ),
 reach AS (
   SELECT src AS node, dst AS r FROM sym
@@ -1202,29 +1198,49 @@ _TRI_MAX_DEGREE = 200  # hot-node guard: a d-degree node can close O(d^2)
 _TRI_TOP = 20
 
 
-_TRI_SQL = f"""
-WITH keyed AS (
-  SELECT p_partkey, p_name,
-         string_split(p_name, ' ')[1] || '|' ||
-           CAST(CAST(FLOOR(length(p_name) / 4.0) AS BIGINT) AS VARCHAR) AS blk
-  FROM part
-),
-rawpairs AS (
-  SELECT a.p_partkey AS ka, b.p_partkey AS kb
-  FROM keyed a JOIN keyed b ON a.blk = b.blk AND a.p_partkey < b.p_partkey
-  WHERE levenshtein(a.p_name, b.p_name) <= 3
-),
-deg AS (
+def _capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(ka, kb): the degree-capped match graph, every join_fuzzy_blocked
+    pair whose two parts each have at most ``_TRI_MAX_DEGREE`` matches,
+    so that no node opens more than O(cap^2) wedges."""
+    # eager checkpoint: the levenshtein block join is the dominant cost
+    # and BOTH the degree pass and the capped probe consume it — without
+    # materialization the fuzzy join executes twice (measured ~2x at
+    # sf0.1, where the 3.9M-pair raw graph is the whole query cost)
+    pairs_raw = pin(
+        join_fuzzy_blocked(spark, sf_dir)
+        .select(F.col("key_a").alias("ka"), F.col("key_b").alias("kb"))
+    )
+    deg0 = (
+        pairs_raw.select(F.col("ka").alias("node"))
+        .unionByName(pairs_raw.select(F.col("kb").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    ok = deg0.filter(F.col("d") <= _TRI_MAX_DEGREE).select("node")
+    return (
+        pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
+        .join(ok.withColumnRenamed("node", "kb"), "kb")
+        .select("ka", "kb")
+    )
+
+
+# SQL twin of _capped_pairs: the `pairs` CTE (ka, kb)
+_CAPPED_PAIRS_SQL = f"""{_FUZZY_SQL},
+rawpairs AS (SELECT key_a AS ka, key_b AS kb FROM fuzzy),
+deg0 AS (
   SELECT node, COUNT(*) AS d FROM (
     SELECT ka AS node FROM rawpairs UNION ALL SELECT kb FROM rawpairs
   ) GROUP BY node
 ),
-ok AS (SELECT node FROM deg WHERE d <= {_TRI_MAX_DEGREE}),
+ok AS (SELECT node FROM deg0 WHERE d <= {_TRI_MAX_DEGREE}),
 pairs AS (
   SELECT ka, kb FROM rawpairs
   JOIN ok oa ON oa.node = rawpairs.ka
   JOIN ok ob ON ob.node = rawpairs.kb
-),
+)"""
+
+_TRI_SQL = f"""
+WITH {_CAPPED_PAIRS_SQL},
 tri AS (
   SELECT e1.ka AS a, e1.kb AS b, e2.kb AS c
   FROM pairs e1
@@ -1267,27 +1283,7 @@ ORDER BY p.tri_cnt DESC, p.node LIMIT {_TRI_TOP}
     ),
 )
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # eager checkpoint: the levenshtein block join is the dominant cost
-    # and BOTH the degree pass and the capped probe consume it — without
-    # materialization the fuzzy join executes twice (measured ~2x at
-    # sf0.1, where the 3.9M-pair raw graph is the whole query cost)
-    pairs_raw = pin(
-        join_fuzzy_blocked(spark, sf_dir)
-        .select(F.col("key_a").alias("ka"), F.col("key_b").alias("kb"))
-    )
-    deg = (
-        pairs_raw.select(F.col("ka").alias("node"))
-        .unionByName(pairs_raw.select(F.col("kb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ok = deg.filter(F.col("d") <= _TRI_MAX_DEGREE).select("node")
-    pairs = pin(
-        pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
-        .join(ok.withColumnRenamed("node", "kb"), "kb")
-        .select("ka", "kb")
-        # three self-join consumers
-    )
+    pairs = pin(_capped_pairs(spark, sf_dir))  # three self-join consumers
     e1 = pairs.select(F.col("ka").alias("a"), F.col("kb").alias("b"))
     e2 = pairs.select(F.col("ka").alias("b"), F.col("kb").alias("c"))
     e3 = pairs.select(F.col("ka").alias("a"), F.col("kb").alias("c"))
@@ -1453,35 +1449,14 @@ def profile_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 46: local clustering coefficient — the per-node cohesion ratio
+# Local clustering coefficient — the per-node cohesion ratio
 # built on graph_triangles' capped similarity graph
 # ---------------------------------------------------------------------------
 
 _CC_TOP = 20
 
 _CC_SQL = f"""
-WITH keyed AS (
-  SELECT p_partkey, p_name,
-         string_split(p_name, ' ')[1] || '|' ||
-           CAST(CAST(FLOOR(length(p_name) / 4.0) AS BIGINT) AS VARCHAR) AS blk
-  FROM part
-),
-rawpairs AS (
-  SELECT a.p_partkey AS ka, b.p_partkey AS kb
-  FROM keyed a JOIN keyed b ON a.blk = b.blk AND a.p_partkey < b.p_partkey
-  WHERE levenshtein(a.p_name, b.p_name) <= 3
-),
-deg0 AS (
-  SELECT node, COUNT(*) AS d FROM (
-    SELECT ka AS node FROM rawpairs UNION ALL SELECT kb FROM rawpairs
-  ) GROUP BY node
-),
-ok AS (SELECT node FROM deg0 WHERE d <= {_TRI_MAX_DEGREE}),
-pairs AS (
-  SELECT ka, kb FROM rawpairs
-  JOIN ok oa ON oa.node = rawpairs.ka
-  JOIN ok ob ON ob.node = rawpairs.kb
-),
+WITH {_CAPPED_PAIRS_SQL},
 deg AS (
   SELECT node, COUNT(*)::BIGINT AS d FROM (
     SELECT ka AS node FROM pairs UNION ALL SELECT kb FROM pairs
@@ -1543,27 +1518,7 @@ ORDER BY cc.cc_u DESC, cc.node LIMIT {_CC_TOP}
     ).format(top=_CC_TOP),
 )
 def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # eager checkpoint: the levenshtein block join is the dominant cost
-    # and BOTH the degree pass and the capped probe consume it — without
-    # materialization the fuzzy join executes twice (measured ~2x at
-    # sf0.1, where the 3.9M-pair raw graph is the whole query cost)
-    pairs_raw = pin(
-        join_fuzzy_blocked(spark, sf_dir)
-        .select(F.col("key_a").alias("ka"), F.col("key_b").alias("kb"))
-    )
-    deg0 = (
-        pairs_raw.select(F.col("ka").alias("node"))
-        .unionByName(pairs_raw.select(F.col("kb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ok = deg0.filter(F.col("d") <= _TRI_MAX_DEGREE).select("node")
-    pairs = pin(
-        pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
-        .join(ok.withColumnRenamed("node", "kb"), "kb")
-        .select("ka", "kb")
-        # degree + three wedge consumers
-    )
+    pairs = pin(_capped_pairs(spark, sf_dir))  # degree + three wedge consumers
     deg = (
         pairs.select(F.col("ka").alias("node"))
         .unionByName(pairs.select(F.col("kb").alias("node")))
@@ -1622,35 +1577,14 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 54: two-hop reach — friends-of-friends audience size on the
+# Two-hop reach — friends-of-friends audience size on the
 # capped similarity graph
 # ---------------------------------------------------------------------------
 
 _REACH_TOP = 20
 
 _REACH_SQL = f"""
-WITH keyed AS (
-  SELECT p_partkey, p_name,
-         string_split(p_name, ' ')[1] || '|' ||
-           CAST(CAST(FLOOR(length(p_name) / 4.0) AS BIGINT) AS VARCHAR) AS blk
-  FROM part
-),
-rawpairs AS (
-  SELECT a.p_partkey AS ka, b.p_partkey AS kb
-  FROM keyed a JOIN keyed b ON a.blk = b.blk AND a.p_partkey < b.p_partkey
-  WHERE levenshtein(a.p_name, b.p_name) <= 3
-),
-deg0 AS (
-  SELECT node, COUNT(*) AS d FROM (
-    SELECT ka AS node FROM rawpairs UNION ALL SELECT kb FROM rawpairs
-  ) GROUP BY node
-),
-ok AS (SELECT node FROM deg0 WHERE d <= {_TRI_MAX_DEGREE}),
-pairs AS (
-  SELECT ka, kb FROM rawpairs
-  JOIN ok oa ON oa.node = rawpairs.ka
-  JOIN ok ob ON ob.node = rawpairs.kb
-),
+WITH {_CAPPED_PAIRS_SQL},
 adj AS (
   SELECT ka AS src, kb AS dst FROM pairs
   UNION ALL SELECT kb, ka FROM pairs
@@ -1700,26 +1634,7 @@ ORDER BY n_2hop DESC, node LIMIT {_REACH_TOP}
     ).format(top=_REACH_TOP),
 )
 def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # eager checkpoint: the levenshtein block join is the dominant cost
-    # and BOTH the degree pass and the capped probe consume it — without
-    # materialization the fuzzy join executes twice (measured ~2x at
-    # sf0.1, where the 3.9M-pair raw graph is the whole query cost)
-    pairs_raw = pin(
-        join_fuzzy_blocked(spark, sf_dir)
-        .select(F.col("key_a").alias("ka"), F.col("key_b").alias("kb"))
-    )
-    deg0 = (
-        pairs_raw.select(F.col("ka").alias("node"))
-        .unionByName(pairs_raw.select(F.col("kb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ok = deg0.filter(F.col("d") <= _TRI_MAX_DEGREE).select("node")
-    pairs = (
-        pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
-        .join(ok.withColumnRenamed("node", "kb"), "kb")
-        .select("ka", "kb")
-    )
+    pairs = _capped_pairs(spark, sf_dir)
     onehop = pin(
         pairs.select(F.col("ka").alias("src"), F.col("kb").alias("dst"))
         .unionByName(pairs.select(F.col("kb").alias("src"), F.col("ka").alias("dst")))
@@ -1765,7 +1680,7 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Mergeable bottom-k uniform sample (wave 60)
+# Mergeable bottom-k uniform sample
 # ---------------------------------------------------------------------------
 
 _BK_K = 32

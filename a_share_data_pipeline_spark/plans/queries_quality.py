@@ -1,20 +1,18 @@
-"""Round-6 waves 7-11: measurement, maintenance, and monitoring
-families — windowFunnel (per-occurrence maximal stage depth),
-retraction-aware rollup IVM with scoped min/max repair, LSH dedup
-quality (precision/recall vs the exhaustive truth), information-gain
-feature scoring, deterministic random-walk corpus sampling; (wave 8)
-bounded k-core peeling, the integer two-sample KS statistic,
-split-conformal prediction intervals, the seasonal-naive backtest,
-OOV-rate vocabulary coverage; (wave 9) relational division, the
-temporal anti-join, quantile normalization, the weighted median;
-(wave 10) Theil inequality decomposition and RFM segmentation;
-(wave 11) embedding centroid drift, the bot-regularity screen, and
-the corpus dedup report.
+"""Measurement, maintenance, and monitoring families — windowFunnel
+(per-occurrence maximal stage depth), retraction-aware rollup IVM with
+scoped min/max repair, LSH dedup quality (precision/recall vs the
+exhaustive truth), information-gain feature scoring, deterministic
+random-walk corpus sampling, bounded k-core peeling, the integer
+two-sample KS statistic, split-conformal prediction intervals, the
+seasonal-naive backtest, OOV-rate vocabulary coverage, relational
+division, the temporal anti-join, quantile normalization, the weighted
+median, Theil inequality decomposition and RFM segmentation, embedding
+centroid drift, the bot-regularity screen, and the corpus dedup
+report.
 
-Same discipline as the earlier waves: integer arithmetic wherever a
-sum feeds a compare, dround() on every emitted double, md5-integer
-draws for anything "random", unrolled-CTE oracles for the iterative
-shapes.
+Integer arithmetic wherever a sum feeds a compare, dround() on every
+emitted double, md5-integer draws for anything "random", unrolled-CTE
+oracles for the iterative shapes.
 """
 
 from __future__ import annotations
@@ -27,6 +25,7 @@ from ..functions.rounding import dround, iln
 from ..session import pin
 from ..sources import load_table
 from .catalog import register
+from .queries_profile import _CAPPED_PAIRS_SQL, _capped_pairs
 
 # ---------------------------------------------------------------------------
 # windowFunnel: maximal stage depth per funnel occurrence
@@ -711,7 +710,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per consumer, 2^rounds times by the last round.
     from .queries_analytics import decode_purchase_node, purchase_iedges
 
-    # Measured-width clone deliberately NOT applied (round 13): the
+    # Measured-width clone deliberately NOT applied: the
     # applied-form NEW/OLD A/B read NEW min 3.38 vs OLD min 2.55 at
     # sf0.1 — the per-round degree aggregate over the symmetrized
     # 1.17M-edge frame is COMPUTE-bound, so the width trim costs CPU
@@ -2567,7 +2566,7 @@ def events_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Autocorrelation function in exact n²-scaled integers (wave 15)
+# Autocorrelation function in exact n²-scaled integers
 # ---------------------------------------------------------------------------
 
 _ACF_MAX_LAG = 7
@@ -2670,7 +2669,7 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Leave-one-out target encoding (wave 15)
+# Leave-one-out target encoding
 # ---------------------------------------------------------------------------
 
 _TE_SQL = """
@@ -2746,36 +2745,13 @@ def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Link prediction: common-neighbor / Jaccard scores on non-edges (wave 15)
+# Link prediction: common-neighbor / Jaccard scores on non-edges
 # ---------------------------------------------------------------------------
 
-_LP_MAX_DEGREE = 200  # same hot-node guard as graph_triangles: a
-# d-degree node opens O(d^2) wedges
 _LP_TOP = 20
 
 _LP_SQL = f"""
-WITH keyed AS (
-  SELECT p_partkey, p_name,
-         string_split(p_name, ' ')[1] || '|' ||
-           CAST(CAST(FLOOR(length(p_name) / 4.0) AS BIGINT) AS VARCHAR) AS blk
-  FROM part
-),
-rawpairs AS (
-  SELECT a.p_partkey AS ka, b.p_partkey AS kb
-  FROM keyed a JOIN keyed b ON a.blk = b.blk AND a.p_partkey < b.p_partkey
-  WHERE levenshtein(a.p_name, b.p_name) <= 3
-),
-deg0 AS (
-  SELECT node, COUNT(*) AS d FROM (
-    SELECT ka AS node FROM rawpairs UNION ALL SELECT kb FROM rawpairs
-  ) GROUP BY node
-),
-ok AS (SELECT node FROM deg0 WHERE d <= {_LP_MAX_DEGREE}),
-pairs AS (
-  SELECT ka, kb FROM rawpairs
-  JOIN ok oa ON oa.node = rawpairs.ka
-  JOIN ok ob ON ob.node = rawpairs.kb
-),
+WITH {_CAPPED_PAIRS_SQL},
 adj AS (
   SELECT ka AS src, kb AS dst FROM pairs
   UNION ALL SELECT kb, ka FROM pairs
@@ -2825,25 +2801,8 @@ ORDER BY common_neighbors DESC, node_a, node_b LIMIT {_LP_TOP}
     ),
 )
 def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .queries_profile import join_fuzzy_blocked
-
-    pairs_raw = join_fuzzy_blocked(spark, sf_dir).select(
-        F.col("key_a").alias("ka"), F.col("key_b").alias("kb")
-    )
-    deg0 = (
-        pairs_raw.select(F.col("ka").alias("node"))
-        .unionByName(pairs_raw.select(F.col("kb").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ok = deg0.filter(F.col("d") <= _LP_MAX_DEGREE).select("node")
-    pairs = pin(
-        pairs_raw.join(ok.withColumnRenamed("node", "ka"), "ka")
-        .join(ok.withColumnRenamed("node", "kb"), "kb")
-        .select("ka", "kb")
-        # consumers: adj (×2 wedge sides),
-        # degree aggregate, anti-join probe
-    )
+    # consumers: adj (×2 wedge sides), degree aggregate, anti-join probe
+    pairs = pin(_capped_pairs(spark, sf_dir))
     adj = pairs.unionByName(
         pairs.select(F.col("kb").alias("ka"), F.col("ka").alias("kb"))
     )
@@ -2879,7 +2838,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Pairwise covariance/correlation matrix in exact integers (wave 15)
+# Pairwise covariance/correlation matrix in exact integers
 # ---------------------------------------------------------------------------
 
 _COV_SQL = """
@@ -2987,7 +2946,7 @@ def agg_covariance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 38: Cohen's kappa — chance-corrected rater agreement (declared
+# Cohen's kappa — chance-corrected rater agreement (declared
 # lang label vs the rule-based lang-id heuristic)
 # ---------------------------------------------------------------------------
 
@@ -3108,7 +3067,7 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# RAKE keyword extraction (wave 70)
+# RAKE keyword extraction
 # ---------------------------------------------------------------------------
 
 _RAKE_STOPS = ("the", "a", "of", "and", "is")

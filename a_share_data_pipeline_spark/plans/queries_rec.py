@@ -1,15 +1,15 @@
-"""Round-6 wave 19: the collaborative-filtering recommender family —
-the item-item cosine kNN graph and the user top-N scoring pass that
-consumes it. Together they are the classic two-stage batch recommender
-(Amazon-style item-based CF): an O(vocab²)-bounded model build, then a
-user-linear scoring join.
+"""The collaborative-filtering recommender family — the item-item cosine
+kNN graph and the user top-N scoring pass that consumes it. Together
+they are the classic two-stage batch recommender (Amazon-style
+item-based CF): an O(vocab²)-bounded model build, then a user-linear
+scoring join.
 
-Same discipline as waves 5-18: co-occurrence counts are exact int64,
-the cosine is ONE sqrt + ONE division over exact integer inputs
-(bit-identical doubles on both engines — no rounding needed before the
-order-by), user scores re-quantize to integer ppm BEFORE summation so
-the ranking compare is pure int64, and every fan-out is bounded by the
-brand vocabulary, never by data volume.
+Co-occurrence counts are exact int64, the cosine is ONE sqrt + ONE
+division over exact integer inputs (bit-identical doubles on both
+engines — no rounding needed before the order-by), user scores
+re-quantize to integer ppm BEFORE summation so the ranking compare is
+pure int64, and every fan-out is bounded by the brand vocabulary,
+never by data volume.
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ from ..sources import load_table
 from .catalog import register
 
 # ---------------------------------------------------------------------------
-# item-item cosine kNN graph (wave 19)
+# item-item cosine kNN graph
 # ---------------------------------------------------------------------------
 
 _TOPK_NEIGHBORS = 5
@@ -79,7 +79,7 @@ def _interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         # no broadcast hint: part is SF-scaled (200k rows/SF) — per the
         # repo's stats-based-AQE policy the planner decides from the
-        # projected 2-column size, not a forced hint (VERDICT r7 item 5)
+        # projected 2-column size, not a forced hint
         .join(part, li.l_partkey == part.p_partkey)
         .select(F.col("o_custkey").alias("user_id"), F.col("p_brand").alias("item"))
         .distinct()
@@ -88,7 +88,7 @@ def _interactions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _user_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(user_id, items) — each user's DISTINCT brand set as one sorted
-    array row (round 14, guide §2.3 "aggregate before you shuffle").
+    array row (guide §2.3 "aggregate before you shuffle").
 
     The brand vocabulary is FIXED (25 at any TPC-H scale), so the set
     is a bounded ≤25-element array: ONE collect_set aggregation —
@@ -104,7 +104,7 @@ def _user_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         # no broadcast hint: part is SF-scaled — same stats-based-AQE
-        # policy as _interactions (VERDICT r7 item 5)
+        # policy as _interactions
         .join(part, li.l_partkey == part.p_partkey)
         .select(F.col("o_custkey").alias("user_id"), F.col("p_brand").alias("item"))
     )
@@ -116,7 +116,7 @@ def _user_item_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _item_sims_from_sets(user_sets: DataFrame) -> DataFrame:
     """The identical item-item cosine graph computed from per-user
-    brand-set arrays instead of a user-key self-join (round 14): pair
+    brand-set arrays instead of a user-key self-join: pair
     instances explode MAP-SIDE from each ≤25-element array straight
     into the (item_a, item_b) partial aggregate — the 5.6M-row join
     output that previously crossed an exchange never exists as a
@@ -148,8 +148,8 @@ def _item_sims_from_sets(user_sets: DataFrame) -> DataFrame:
 
 
 def _item_sims(inter: DataFrame) -> DataFrame:
-    """The r13 join-based item-item cosine graph — RETAINED as the
-    measured-against reference for the round-14 set-based builder
+    """The join-based item-item cosine graph — RETAINED as the
+    measured-against reference for the set-based builder
     (the catalog queries all ride :func:`_item_sims_from_sets` now);
     `test_rec_set_based_sims_equal_join_based` pins the two builders
     row-for-row equal, so a regression in either shows as a diff.
@@ -199,7 +199,7 @@ def _item_sims(inter: DataFrame) -> DataFrame:
     ),
 )
 def rec_item_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # round 14: same set-based sims as rec_user_topn (identical exact
+    # same set-based sims as rec_user_topn (identical exact
     # counts, see _item_sims_from_sets) — the user-key self-join and
     # its shuffled 5.6M-row output are gone from this path too
     sims = _item_sims_from_sets(_user_item_sets(spark, sf_dir))
@@ -220,7 +220,7 @@ def rec_item_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# user top-N recommendations from the item graph (wave 19)
+# user top-N recommendations from the item graph
 # ---------------------------------------------------------------------------
 
 _TOPN_RECS = 3
@@ -277,7 +277,7 @@ WHERE rnk <= {_TOPN_RECS}
     ),
 )
 def rec_user_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-14 rewrite (guide §2.3/§2.4 — aggregate before the
+    """Rewritten (guide §2.3/§2.4 — aggregate before the
     shuffle, remove shuffles outright; A/B receipts in plans/r14/):
     the old shape shuffled a user-key self-join (~5.6M joined rows at
     sf0.1) for pair counts and a second scoring-frame exchange for the
@@ -320,7 +320,7 @@ def rec_user_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 56: beyond-accuracy metrics — intra-list diversity + catalog
+# Beyond-accuracy metrics — intra-list diversity + catalog
 # coverage over the top-N lists (the recsys-eval completion)
 # ---------------------------------------------------------------------------
 

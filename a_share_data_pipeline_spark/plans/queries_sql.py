@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import dround
 from ..sources import load_table
 from .catalog import register
+from .queries_llm import _VECTORS_SQL
 
 
 def _views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
@@ -814,10 +815,8 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scalar int8 quantization of embeddings (storage-side compression)
 # ---------------------------------------------------------------------------
 
-_QUANT_SQL = """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-),
+_QUANT_SQL = f"""
+WITH {_VECTORS_SQL},
 rng AS (
   SELECT vec_id, v, list_min(v) AS mn, list_max(v) AS mx,
          (list_max(v) - list_min(v)) / 255.0 AS sc

@@ -1,14 +1,13 @@
-"""Round-6 wave 20: classical-inference completion — Welch's unequal-
-variance t-test, one-way ANOVA (the k-group generalization), and an
-exact-arithmetic permutation test whose resamples are md5-derived and
-therefore reproducible on both engines.
+"""Classical inference — Welch's unequal-variance t-test, one-way ANOVA
+(the k-group generalization), and an exact-arithmetic permutation test
+whose resamples are md5-derived and therefore reproducible on both
+engines.
 
-Same discipline as waves 5-19: moments accumulate as exact integers
-(int64 cents; squares in decimal/hugeint so no SF ever wraps), pivots
-collapse per-group rows into COLUMNS so cross-group sums chain in a
-FIXED literal order (never a float fold over an aggregation), and the
-permutation-test comparison is a pure integer cross-multiply — the
-p-value never touches a float.
+Moments accumulate as exact integers (int64 cents; squares in
+decimal/hugeint so no SF ever wraps), pivots collapse per-group rows
+into COLUMNS so cross-group sums chain in a FIXED literal order (never
+a float fold over an aggregation), and the permutation-test comparison
+is a pure integer cross-multiply — the p-value never touches a float.
 """
 
 from __future__ import annotations
@@ -20,10 +19,10 @@ from ..functions.rounding import dround
 from ..session import pin
 from ..sources import load_table
 from .catalog import register
-from .queries_market import _cents, _daily_close
+from .queries_market import _DAILY_CLOSE_SQL, _cents, _daily_close
 
 # ---------------------------------------------------------------------------
-# Welch's t-test: purchase vs click order values (wave 20)
+# Welch's t-test: purchase vs click order values
 # ---------------------------------------------------------------------------
 
 _WELCH_SQL = """
@@ -136,7 +135,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# One-way ANOVA across all five event types (wave 20)
+# One-way ANOVA across all five event types
 # ---------------------------------------------------------------------------
 
 _TYPES = ("click", "error", "purchase", "signup", "view")  # fixed literal
@@ -247,7 +246,7 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Permutation test with md5-deterministic resamples (wave 20)
+# Permutation test with md5-deterministic resamples
 # ---------------------------------------------------------------------------
 
 _N_PERMS = 100
@@ -330,7 +329,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("o_s2"),
         F.sum(F.when(F.col("g") == "click", 1).otherwise(0)).cast(d38).alias("o_n2"),
     )
-    # round-14 per-task trim (guide §1.2 step 2 "per-task work";
+    # per-task trim (guide §1.2 step 2 "per-task work";
     # probe receipt in OPTIMIZATION_r14.md): the ×K fan-out itself is
     # cheap (0.18s) — the 3.2s was the per-fanned-row expression chain.
     # Two exact-equivalence rewrites, both pinned by
@@ -386,7 +385,7 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 27: SPRT — Wald's sequential probability ratio test
+# SPRT — Wald's sequential probability ratio test
 # ---------------------------------------------------------------------------
 
 import math as _math
@@ -479,18 +478,11 @@ def stats_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 35: Wald-Wolfowitz runs test (randomness diagnostic)
+# Wald-Wolfowitz runs test (randomness diagnostic)
 # ---------------------------------------------------------------------------
 
-_RUNS_SQL = """
-WITH daily AS (
-  SELECT event_type, CAST(date_trunc('day', ts) AS DATE) AS day,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT),
-                 lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-                 || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS close_c
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+_RUNS_SQL = f"""
+WITH {_DAILY_CLOSE_SQL},
 moves AS (
   SELECT event_type, day,
          CASE WHEN close_c > lag(close_c) OVER w THEN 1
@@ -582,7 +574,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 39: Poisson bootstrap — the single-pass, corpus-scale bootstrap
+# Poisson bootstrap — the single-pass, corpus-scale bootstrap
 # ---------------------------------------------------------------------------
 
 # Poisson(1) inverse-CDF thresholds on the 1e8 integer grid (cumulative
@@ -722,7 +714,7 @@ def stats_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 46: Benjamini-Hochberg FDR — multiple-testing control over the
+# Benjamini-Hochberg FDR — multiple-testing control over the
 # (event_type x iso-dow) z-test family
 # ---------------------------------------------------------------------------
 
@@ -909,7 +901,7 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 48: Brown-Forsythe variance-homogeneity test — ANOVA's machinery
+# Brown-Forsythe variance-homogeneity test — ANOVA's machinery
 # pointed at |x - median_g| (the robust Levene variant)
 # ---------------------------------------------------------------------------
 
@@ -1055,7 +1047,7 @@ def stats_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 49: Grubbs outlier statistic — the single-most-extreme-point
+# Grubbs outlier statistic — the single-most-extreme-point
 # test, per event-type group
 # ---------------------------------------------------------------------------
 
@@ -1161,7 +1153,7 @@ def stats_grubbs_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 52: Jarque-Bera normality test — skewness/kurtosis from exact
+# Jarque-Bera normality test — skewness/kurtosis from exact
 # power sums (the agg_moments_merge device pointed at inference)
 # ---------------------------------------------------------------------------
 
@@ -1287,19 +1279,12 @@ def stats_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 55: Wilcoxon signed-rank — the PAIRED robust test (view close vs
+# Wilcoxon signed-rank — the PAIRED robust test (view close vs
 # purchase close per day), completing mann_whitney's unpaired row
 # ---------------------------------------------------------------------------
 
-_WSR_SQL = """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         arg_max(CAST(ROUND(value * 100, 0) AS BIGINT),
-                 lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-                 || lpad(CAST(event_id AS VARCHAR), 12, '0')) AS close_c
-  FROM events WHERE event_type IN ('view', 'purchase')
-  GROUP BY 1, 2
-),
+_WSR_SQL = f"""
+WITH {_DAILY_CLOSE_SQL},
 paired AS (
   SELECT v.close_c - p.close_c AS d
   FROM (SELECT day, close_c FROM daily WHERE event_type = 'view') v
@@ -1408,7 +1393,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 57: Friedman test — k related samples blocked by day (the
+# Friedman test — k related samples blocked by day (the
 # repeated-measures rank test completing the nonparametric family)
 # ---------------------------------------------------------------------------
 
@@ -1421,6 +1406,15 @@ def _day_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("day", "ts").cast("date").alias("day"),
         _cents().alias("c"),
     )
+
+
+# SQL twin of _day_cents: the `cents` CTE (g, day, c)
+_DAY_CENTS_SQL = """
+cents AS (
+  SELECT event_type AS g, date_trunc('day', ts) AS day,
+         CAST(ROUND(value * 100, 0) AS BIGINT) AS c
+  FROM events
+)"""
 
 
 def _friedman_per_g(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1459,12 +1453,8 @@ def _friedman_per_g(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-_FRIEDMAN_SQL = """
-WITH cents AS (
-  SELECT event_type AS g, date_trunc('day', ts) AS day,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-),
+_FRIEDMAN_SQL = f"""
+WITH {_DAY_CENTS_SQL},
 cell AS (
   SELECT g, day, CAST(SUM(c) AS HUGEINT) AS s, COUNT(*)::HUGEINT AS n
   FROM cents GROUP BY 1, 2
@@ -1535,17 +1525,13 @@ def stats_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Nemenyi post-hoc (wave 65): which pairs differ, after Friedman fires
+# Nemenyi post-hoc: which pairs differ, after Friedman fires
 # ---------------------------------------------------------------------------
 
 _NEMENYI_Q05_K5 = "2.727774"  # studentized-range q(0.05, k=5, inf)/sqrt(2)
 
 _NEMENYI_SQL = f"""
-WITH cents AS (
-  SELECT event_type AS g, date_trunc('day', ts) AS day,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-),
+WITH {_DAY_CENTS_SQL},
 cell AS (
   SELECT g, day, CAST(SUM(c) AS HUGEINT) AS s, COUNT(*)::HUGEINT AS n
   FROM cents GROUP BY 1, 2
@@ -1624,15 +1610,11 @@ def stats_nemenyi_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Kruskal-Wallis (wave 67): the unpaired k-sample rank test
+# Kruskal-Wallis: the unpaired k-sample rank test
 # ---------------------------------------------------------------------------
 
-_KW_SQL = """
-WITH cents AS (
-  SELECT event_type AS g, date_trunc('day', ts) AS day,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-),
+_KW_SQL = f"""
+WITH {_DAY_CENTS_SQL},
 cell AS (
   SELECT g, day, SUM(c) * 1.0 / COUNT(*) AS m FROM cents GROUP BY 1, 2
 ),
@@ -1753,7 +1735,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Two-proportion power analysis (wave 68)
+# Two-proportion power analysis
 # ---------------------------------------------------------------------------
 
 _POW_MDES = ("0.01", "0.02", "0.05")  # absolute-lift grid, literal doubles
@@ -1877,15 +1859,11 @@ def stats_proportion_power(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cochran's Q (wave 71): k related binary treatments
+# Cochran's Q: k related binary treatments
 # ---------------------------------------------------------------------------
 
-_COCHRAN_SQL = """
-WITH cents AS (
-  SELECT event_type AS g, date_trunc('day', ts) AS day,
-         CAST(ROUND(value * 100, 0) AS BIGINT) AS c
-  FROM events
-),
+_COCHRAN_SQL = f"""
+WITH {_DAY_CENTS_SQL},
 cell AS (
   SELECT g, day, SUM(c)::HUGEINT AS s FROM cents GROUP BY 1, 2
 ),

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.ordering import ordkey
+from ..functions.ordering import ORDKEY_SQL, ordkey
 from ..functions.rounding import dround
 from ..session import clone_session, pin, scratch_dir, set_width
 from ..sources.readers import load_table
@@ -597,13 +597,12 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     return final.select("k", dround("price", 2).alias("price"), "status")
 
 
-_STREAM_OHLC_SQL = """
+_STREAM_OHLC_SQL = f"""
 WITH keyed AS (
   SELECT event_type,
          date_trunc('day', ts) AS day,
          value,
-         lpad(CAST(epoch_us(ts) AS VARCHAR), 20, '0')
-           || lpad(CAST(event_id AS VARCHAR), 12, '0') AS ordkey
+         {ORDKEY_SQL} AS ordkey
   FROM events WHERE event_type IN ('view', 'purchase')
 )
 SELECT event_type, day,
@@ -730,7 +729,7 @@ def stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming SCD2 maintenance (wave 64)
+# Streaming SCD2 maintenance
 # ---------------------------------------------------------------------------
 
 _SCD2_N_BUCKETS = 16
@@ -828,7 +827,7 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Watermark late-data audit (wave 72)
+# Watermark late-data audit
 # ---------------------------------------------------------------------------
 
 _LATE_CUT = "2024-01-16"

@@ -1,12 +1,11 @@
-"""Round-6 wave 22: text-analysis completion — readability profiling
-(the vowel-group syllable proxy + Flesch-style score) — plus the
-Spark-4 `GROUP BY ALL` / `ORDER BY ALL` SQL-surface row.
+"""Text-analysis completion — readability profiling (the vowel-group
+syllable proxy + Flesch-style score) — plus the Spark-4 `GROUP BY ALL`
+/ `ORDER BY ALL` SQL-surface row.
 
-Same discipline as waves 5-21: all per-doc counts are exact integers
-from one map-only expression pass (array HOFs, no Python), every
-emitted double is one division (or one fixed IEEE chain) from those
-integers, and corpus-level reduces happen on already-per-doc-reduced
-rows.
+All per-doc counts are exact integers from one map-only expression
+pass (array HOFs, no Python), every emitted double is one division (or
+one fixed IEEE chain) from those integers, and corpus-level reduces
+happen on already-per-doc-reduced rows.
 """
 
 from __future__ import annotations
@@ -19,7 +18,7 @@ from ..sources import load_table
 from .catalog import register
 
 # ---------------------------------------------------------------------------
-# Readability profile (wave 22)
+# Readability profile
 # ---------------------------------------------------------------------------
 
 _READ_SQL = """
@@ -105,7 +104,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# GROUP BY ALL / ORDER BY ALL (wave 22)
+# GROUP BY ALL / ORDER BY ALL
 # ---------------------------------------------------------------------------
 
 _GBA_SQL = """
@@ -152,7 +151,7 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SQL pipe syntax (wave 26)
+# SQL pipe syntax
 # ---------------------------------------------------------------------------
 
 _PIPE_ORACLE = """
@@ -199,7 +198,7 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# listagg / string_agg ordered aggregation (wave 31)
+# listagg / string_agg ordered aggregation
 # ---------------------------------------------------------------------------
 
 _LISTAGG_SQL = """
@@ -237,7 +236,7 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# XML surface: build → from_xml round-trip (wave 33)
+# XML surface: build → from_xml round-trip
 # ---------------------------------------------------------------------------
 
 _XML_SQL = """
@@ -288,7 +287,7 @@ def scalar_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# try_* error-safe expression lane (wave 34)
+# try_* error-safe expression lane
 # ---------------------------------------------------------------------------
 
 _TRY_SQL = """
@@ -340,7 +339,7 @@ def scalar_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Wave 43: Zipf-law fit — the rank-frequency power-law exponent of the
+# Zipf-law fit — the rank-frequency power-law exponent of the
 # corpus vocabulary (log-log OLS over the top-K tokens)
 # ---------------------------------------------------------------------------
 

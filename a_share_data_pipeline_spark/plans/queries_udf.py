@@ -185,13 +185,13 @@ WINDOW w AS (PARTITION BY o_custkey)
 
 
 # Grouped-map batching: applyInPandas pays a per-GROUP Arrow-slice +
-# pandas dispatch floor (~0.8ms/group measured r9 — an IDENTITY
+# pandas dispatch floor (~0.8ms/group measured — an IDENTITY
 # function over sf0.1's 15k customer groups costs ~12s while the
 # window-function equivalent runs in 0.4s). So the lane groups by a
 # COARSE deterministic bucket and computes the per-customer stats
 # inside each batch with one vectorized pandas groupby.transform —
 # identical output, ~bucket_count dispatches instead of ~|customers|
-# (measured r10: 12.7s → ~2.5s at sf0.1). At cluster scale this is
+# (measured: 12.7s → ~2.5s at sf0.1). At cluster scale this is
 # the standard grouped-map pattern: pick buckets ≫ cores for balance,
 # ≪ group count so the Python dispatch amortizes.
 _GM_BUCKETS = 3000

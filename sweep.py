@@ -195,7 +195,7 @@ def _replay_er_resolve(con, srows, scols):
     from a_share_data_pipeline_spark.plans.queries_profile import _ER_SQL
 
     pairs = con.execute(
-        _prefix(_ER_SQL, "sym AS (", "SELECT key_a, key_b FROM pairs")
+        _prefix(_ER_SQL, "sym AS (", "SELECT key_a, key_b FROM fuzzy")
     ).fetchall()
     comp = _uf_min_label(pairs)
     sizes = {}

@@ -27,3 +27,18 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_correct() -> str:
     return SF_CORRECT
+
+
+@pytest.fixture(scope="module")
+def duck(sf_smoke):
+    """One DuckDB connection with a view over each table at the smoke
+    scale factor, as the oracles read them."""
+    import duckdb
+
+    import sweep
+
+    con = duckdb.connect()
+    for t in sweep.TABLES.split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_smoke}/{t}.parquet')")
+    yield con
+    con.close()

@@ -1619,12 +1619,14 @@ def test_integer_ln_built_only_in_rounding_py():
 def test_shared_input_frames_built_only_by_their_owners():
     """Each shared input frame of the catalog has one builder in
     ``plans/``: the view/purchase ticks ``queries_market._ticks``, their
-    6-decimal daily average ``queries_market._daily_avg`` and the
-    ``(vec_id, v)`` vectors ``queries_llm._vectors``. Anywhere else, no
-    ``load_table(..., "events")`` is filtered on ``isin("view",
-    "purchase")``, no ``dround(F.avg("value"), 6)`` is built, and no
-    ``load_table(..., "embeddings")`` selects exactly ``"vec_id"`` and
-    ``as_double_vec()``."""
+    6-decimal daily average ``queries_market._daily_avg``, the
+    ``(vec_id, v)`` vectors ``queries_llm._vectors`` and the
+    degree-capped match graph ``queries_profile._capped_pairs``.
+    Anywhere else, no ``load_table(..., "events")`` (or a local name
+    bound to one) is filtered on ``isin("view", "purchase")``, no
+    ``dround(F.avg("value"), 6)`` is built, no ``load_table(...,
+    "embeddings")`` selects exactly ``"vec_id"`` and ``as_double_vec()``,
+    and nothing is compared with a ``*_MAX_DEGREE`` cap."""
     import ast
     from pathlib import Path
 
@@ -1641,10 +1643,17 @@ def test_shared_input_frames_built_only_by_their_owners():
             isinstance(a, ast.Constant) and a.value == table for a in node.args
         )
 
-    def frame(node):
+    def events(node, bound):
+        return loads(node, "events") or (isinstance(node, ast.Name) and node.id in bound)
+
+    def frame(node, bound):
+        if isinstance(node, ast.Compare):
+            if any(isinstance(c, ast.Name) and c.id.endswith("_MAX_DEGREE") for c in node.comparators):
+                return "capped_pairs"
+            return None
         if not isinstance(node, ast.Call):
             return None
-        if name(node) in ("filter", "where") and loads(node.func.value, "events"):
+        if name(node) in ("filter", "where") and events(node.func.value, bound):
             if any(
                 calls(n, "isin") and [ast.unparse(a) for a in n.args] == ["'view'", "'purchase'"]
                 for a in node.args
@@ -1663,8 +1672,15 @@ def test_shared_input_frames_built_only_by_their_owners():
     sites = {}
     for path in sorted(root.glob("*.py")):
         for top in ast.parse(path.read_text()).body:
+            bound = {
+                t.id
+                for n in ast.walk(top)
+                if isinstance(n, ast.Assign) and loads(n.value, "events")
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
             for node in ast.walk(top):
-                kind = frame(node)
+                kind = frame(node, bound)
                 if kind:
                     where = (path.name, getattr(top, "name", None), node.lineno)
                     sites.setdefault(kind, []).append(where)
@@ -1672,10 +1688,99 @@ def test_shared_input_frames_built_only_by_their_owners():
         "ticks": ("queries_market.py", "_ticks"),
         "daily_avg": ("queries_market.py", "_daily_avg"),
         "vectors": ("queries_llm.py", "_vectors"),
+        "capped_pairs": ("queries_profile.py", "_capped_pairs"),
     }
     assert {k: [s[:2] for s in v] for k, v in sites.items()} == {
         k: [owner] for k, owner in owners.items()
     }, sites
+
+
+def test_shared_sql_frames_spelled_only_by_their_owners():
+    """Each shared oracle input frame is spelled by one SQL twin, next
+    to its Spark builder: no string constant or f-string in the package
+    outside the owner holds the frame's defining fragment. An f-string's
+    placeholders read as ``{}``, so a composition of a twin is not a
+    copy. Named exceptions are different frames that share a fragment:
+    ``udf_arrow_grouped`` averages all events, not the view/purchase
+    ticks by day, and ``_MAP_SQL``'s units add a ``dow`` key.
+    (``queries_ml``'s ``(vec_id, v, label)`` vectors do not hold the
+    vectors fragment.)"""
+    import ast
+    from pathlib import Path
+
+    import a_share_data_pipeline_spark as pkg
+
+    owners = {
+        "ROUND(AVG(value), 6)": [
+            ("plans/queries_market.py", "_daily_avg_sql"),
+            ("plans/queries_udf.py", "_ARROW_GROUPED_SQL"),
+        ],
+        "embedding::DOUBLE[] AS v FROM embeddings": [("plans/queries_llm.py", "_VECTORS_SQL")],
+        "SUM(CASE WHEN event_type <> 'purchase'": [
+            ("plans/queries_eval.py", "_UNITS_SQL"),
+            ("plans/queries_eval.py", "_MAP_SQL"),
+        ],
+        "AS g, date_trunc('day', ts) AS day": [("plans/queries_stats.py", "_DAY_CENTS_SQL")],
+        "lpad(CAST(epoch_us(ts)": [("functions/ordering.py", "ORDKEY_SQL")],
+        "levenshtein(a.p_name, b.p_name) <= 3": [("plans/queries_profile.py", "_FUZZY_SQL")],
+    }
+
+    def text(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr):
+            return "".join(v.value if isinstance(v, ast.Constant) else "{}" for v in node.values)
+        return None
+
+    def top_name(top):
+        if isinstance(top, ast.Assign):
+            return top.targets[0].id
+        return getattr(top, "name", None)
+
+    root = Path(pkg.__file__).parent
+    sites = {fragment: set() for fragment in owners}
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                t = text(node)
+                for fragment in owners:
+                    if t and fragment in t:
+                        sites[fragment].add((rel, top_name(top)))
+    assert {k: sorted(v) for k, v in sites.items()} == {
+        k: sorted(v) for k, v in owners.items()
+    }, sites
+
+
+_TWINS = {
+    "daily_avg": ("queries_market", "_daily_avg", "_daily_avg_sql", "daily"),
+    "daily_pair": ("queries_market", "_daily_pair", "_DAILY_PAIR_SQL", "daily"),
+    "daily_close": ("queries_market", "_daily_close", "_DAILY_CLOSE_SQL", "daily"),
+    "vectors": ("queries_llm", "_vectors", "_VECTORS_SQL", "e"),
+    "units": ("queries_eval", "_scored_units", "_UNITS_SQL", "units"),
+    "day_cents": ("queries_stats", "_day_cents", "_DAY_CENTS_SQL", "cents"),
+    "capped_pairs": ("queries_profile", "_capped_pairs", "_CAPPED_PAIRS_SQL", "pairs"),
+}
+
+
+@pytest.mark.parametrize("frame", sorted(_TWINS))
+def test_sql_twins_match_their_spark_builders(spark, duck, frame):
+    """Each shared input frame's SQL twin holds the same rows as its
+    Spark builder (the oracles compose the twin where the queries call
+    the builder)."""
+    import importlib
+
+    import sweep
+
+    module, builder, twin, cte = _TWINS[frame]
+    mod = importlib.import_module(f"a_share_data_pipeline_spark.plans.{module}")
+    df = getattr(mod, builder)(spark, SF)
+    sql = getattr(mod, twin)
+    cur = duck.execute(f"WITH {sql() if callable(sql) else sql} SELECT * FROM {cte}")
+    dcols = [d[0].lower() for d in cur.description]
+    got = sweep.canonical([c.lower() for c in df.columns], [tuple(r) for r in df.collect()])
+    assert got[1], frame
+    assert got == sweep.canonical(dcols, cur.fetchall()), frame
 
 
 _ROUND_CASES = [

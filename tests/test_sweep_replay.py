@@ -17,25 +17,12 @@ affordable, we prove three things per replay query:
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 import sweep
 from a_share_data_pipeline_spark.plans.catalog import registry
 
 REPLAY_NAMES = sorted(sweep.REPLAY)
-
-
-@pytest.fixture(scope="module")
-def duck(sf_smoke):
-    con = duckdb.connect()
-    for t in sweep.TABLES.split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_smoke}/{t}.parquet')"
-        )
-    yield con
-    con.close()
 
 
 def _spark_rows(spark, sf, name):
